@@ -27,7 +27,8 @@ object Bench {
     // for correctness (Verify still oracle-checks it) and as the recall
     // yardstick for its bucketed sibling q39, which IS timed. A quadratic
     // plan has no business in a throughput contract meant to extrapolate to
-    // 100 TB — see tools/CrossoverBench for the measured q35/q39 crossover.
+    // 100 TB — see BENCHNOTES.md "q35 (exact all-pairs) vs q39
+    // (LSH-bucketed) cosine near-dup crossover" for the measured crossover.
     // q109v is q109's exact-distinct accuracy yardstick: a corpus-wide
     // exploded count_distinct, valid only at gate/validation scale —
     // timing it would measure exactly the cost the HLL sketch avoids.

@@ -794,69 +794,34 @@ object SparkEntry {
         .transform(cacheBeforeSort)
         .orderBy(col("doc_id"), col("fp"))),
 
-    // q59: PORTABLE MinHash-LSH near-dup — q23's banding pipeline on
-    // md5-base hashes + affine permutations mod 2^31-1 (overflow-free
-    // arithmetic DuckDB reproduces exactly), candidates verified by exact
-    // Jaccard on md5 shingle sets. The whole LSH pipeline — signature,
-    // banding, candidate join, verification — is oracle-checked; q23's
-    // splitmix64 kernel stays the production path.
-    "q59_minhash_portable" -> ((s, dir) => {
-      val (kSh, nH, bands, rpb) = (5, 32, 8, 4)
-      val docs = t(s, dir, "documents")
-      val sig = docs.select(col("doc_id"),
-          TextFunctions.minhashPortableSignature(col("text"), kSh, nH, 42L).as("sig"))
-        .where(size(col("sig")) > 0)
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws(",", slice(col("sig"), b * rpb + 1, rpb).cast("array<string>")).as("key"))
-      }
-      val banded = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band"), col("bk.key"))
-      val l = banded.alias("ml")
-      val r = banded.alias("mr")
-      // NOTE: deliberately NOT candidate-id-pruned like the production
-      // q23 path — at gate scales the persist+broadcast overhead costs
-      // more than the full-sets join saves (measured 3.1s -> 21s at
-      // sf0.1), and this VERIFICATION TWIN is documented gate-scale-only
-      // (BENCHNOTES round 7: its exact threshold-0.2 contract sits where
-      // an estimate prefilter would change oracle results)
-      val cands = l.join(r,
-          col("ml.band") === col("mr.band") && col("ml.key") === col("mr.key") &&
-            col("ml.doc_id") < col("mr.doc_id"))
-        .select(col("ml.doc_id").as("id_a"), col("mr.doc_id").as("id_b"))
-        .distinct()
-      val sets = docs.select(col("doc_id"),
-        TextFunctions.shingleHashSetPortable(col("text"), kSh).as("sh"))
-      cands.join(sets.alias("pa"), col("id_a") === col("pa.doc_id"))
-        .join(sets.alias("pb"), col("id_b") === col("pb.doc_id"))
-        .withColumn("jaccard", TextFunctions.jaccardSorted(col("pa.sh"), col("pb.sh")))
-        .where(col("jaccard") >= 0.2)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
+    // q59: PORTABLE MinHash-LSH near-dup — q23's operator
+    // (Dedup.minhashPairs, the body of nearDuplicatePairs) run on md5-base
+    // hashes + affine permutations mod 2^31-1 (overflow-free arithmetic
+    // DuckDB reproduces exactly), candidates verified by exact Jaccard on
+    // md5 shingle sets. Only the kernels differ from q23, so the oracle
+    // checks the production banding, hot-bucket guard, candidate
+    // checkpoint, id prune and verify. estFloor = 0.0 turns the estimate
+    // prefilter off: the 0.2 threshold sits where it would change results
+    // (BENCHNOTES round 7).
+    "q59_minhash_portable" -> ((s, dir) =>
+      Dedup.minhashPairs(t(s, dir, "documents"), "doc_id",
+          TextFunctions.minhashPortableSignature(col("text"), 5, 32, 42L),
+          TextFunctions.shingleHashSetPortable(col("text"), 5),
+          threshold = 0.2, bands = 8, rowsPerBand = 4, estFloor = 0.0,
+          maxBucketSize = 1000)
+        .orderBy(col("id_a"), col("id_b"))),
 
-    // q60: PORTABLE SimHash Hamming-ball near-dup — q24's block-LSH
-    // pipeline on a 60-bit md5-token SimHash DuckDB reproduces bit-for-bit
-    // (4 blocks x 15 bits; pigeonhole-complete for hamming <= 3)
-    "q60_simhash_portable" -> ((s, dir) => {
-      val sh = t(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.simhash60Portable(col("text")).as("sim"))
-      val blocks = sh.select(col("doc_id"), col("sim"),
-          explode(array((0 until 4).map(i =>
-            struct(lit(i).as("blk"),
-              shiftrightunsigned(col("sim"), i * 15).bitwiseAND(lit(32767L)).as("key"))): _*)).as("bk"))
-        .select(col("doc_id"), col("sim"), col("bk.blk"), col("bk.key"))
-      val l = blocks.alias("sl")
-      val r = blocks.alias("sr")
-      l.join(r,
-          col("sl.blk") === col("sr.blk") && col("sl.key") === col("sr.key") &&
-            col("sl.doc_id") < col("sr.doc_id"))
-        .select(col("sl.doc_id").as("id_a"), col("sr.doc_id").as("id_b"),
-          bit_count(col("sl.sim").bitwiseXOR(col("sr.sim"))).as("hamming"))
-        .distinct()
-        .where(col("hamming") <= 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
+    // q60: PORTABLE SimHash Hamming-ball near-dup — q24's operator
+    // (Dedup.hammingPairs64, block4 scheme) on a 60-bit md5-token SimHash
+    // DuckDB reproduces bit-for-bit. The oracle blocks on 4 x 15 bits,
+    // the operator on 4 x 16; both are pigeonhole-complete for
+    // hamming <= 3, so both yield every such pair.
+    "q60_simhash_portable" -> ((s, dir) =>
+      Dedup.hammingPairs64(
+          t(s, dir, "documents")
+            .select(col("doc_id"), TextFunctions.simhash60Portable(col("text")).as("sim")),
+          "doc_id", "sim", maxHamming = 3, blockScheme = "block4")
+        .orderBy(col("id_a"), col("id_b"))),
 
     // q61: benchmark decontamination (SURVEY+ L23) — docs with doc_id % 17
     // == 3 play the held-out benchmark; training docs sharing any distinct
@@ -1000,11 +965,13 @@ object SparkEntry {
     }),
 
     // q68: bigram-LM cross-entropy (SURVEY+ L32) — one conditioning level
-    // beyond q57: P(w2|w1) add-one smoothed from corpus bigram counts.
+    // beyond q57: P(w2|w1) add-one smoothed from corpus bigram counts
+    // (UnigramLm.ngramCrossEntropy at n = 2).
     "q68_bigram_xent" -> ((s, dir) =>
-      graft.text.UnigramLm.bigramCrossEntropy(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text")
-        .select(col("doc_id"), col("n_bigrams"), round(col("xent"), 6).as("xent"))
+      graft.text.UnigramLm.ngramCrossEntropy(
+        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", n = 2)
+        .select(col("doc_id"), col("n_ngrams").as("n_bigrams"),
+          round(col("xent"), 6).as("xent"))
         .orderBy(col("doc_id"))),
 
     // q70: cross-source corpus overlap via KMV sketches (SURVEY+ L34) —
@@ -1201,7 +1168,7 @@ object SparkEntry {
       t(s, dir, "documents")
         .groupBy(col("source"))
         .agg(graft.sketch.SpaceSaving.summary(
-          TextFunctions.wordBigrams(col("text")), 131072).as("sk"))
+          TextFunctions.wordNgramStream(col("text"), 2), 131072).as("sk"))
         .select(col("source"),
           posexplode(graft.sketch.SpaceSaving.topK(col("sk"), 10)))
         .select(col("source"), (col("pos") + 1).cast("long").as("rank"),
@@ -2139,16 +2106,17 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    // q117: TRIGRAM cross-entropy (SURVEY+ L77) — the q68 shape one
-    // conditioning level up: P(w3|w1 w2) with add-one smoothing, prefix
-    // counts c(w1 w2 ·) aggregated FROM the trigram counts, V from the
-    // same compiled tokenizer. Oracle replays the full double
-    // arithmetic (q68 pattern: exact-integer counts, identical cast/op
-    // order, round 6).
+    // q117: TRIGRAM cross-entropy (SURVEY+ L77) — q68's operator one
+    // conditioning level up (UnigramLm.ngramCrossEntropy at n = 3):
+    // P(w3|w1 w2) with add-one smoothing, prefix counts c(w1 w2 ·)
+    // aggregated FROM the trigram counts, V from the same compiled
+    // tokenizer. Oracle replays the full double arithmetic (q68 pattern:
+    // exact-integer counts, identical cast/op order, round 6).
     "q117_trigram_xent" -> ((s, dir) =>
-      graft.text.UnigramLm.trigramCrossEntropy(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text")
-        .select(col("doc_id"), col("n_trigrams"), round(col("xent"), 6).as("xent"))
+      graft.text.UnigramLm.ngramCrossEntropy(
+        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", n = 3)
+        .select(col("doc_id"), col("n_ngrams").as("n_trigrams"),
+          round(col("xent"), 6).as("xent"))
         .orderBy(col("doc_id"))),
 
     // q118: the q115 bucketing on the TRIGRAM score (ngramOrder = 3) —

@@ -22,24 +22,6 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** The candidate-pair prunes in [[nearDuplicatePairs]], [[jaccardPairs]]
-    * and [[containmentPairs]] persist their (id_a, id_b) candidate frame
-    * (read twice by the returned lazy plan) through the shared
-    * [[graft.etl.CacheTracker]] registry; see its scaladoc for the
-    * unpersist-after-materializing contract. Kept here as a delegate so
-    * dedup callers have the sweep next to the operators that need it.
-    */
-  private[graft] def persistTracked(df: DataFrame): DataFrame =
-    graft.etl.CacheTracker.persistTracked(df)
-  private[graft] def checkpointTracked(df: DataFrame): DataFrame =
-    graft.etl.CacheTracker.checkpointTracked(df)
-
-  /** Unpersist every tracked operator cache — delegates to
-    * [[graft.etl.CacheTracker.unpersistCaches]].
-    */
-  def unpersistCaches(blocking: Boolean = false): Unit =
-    graft.etl.CacheTracker.unpersistCaches(blocking)
-
   /** Drop rows whose `keys` tuple occurs more than `cap` times — the skew
     * guard for LSH-style candidate joins. The hot-key set is a partial-
     * aggregated groupBy (map-side combined, and tiny by construction: a key
@@ -79,20 +61,29 @@ object Dedup {
     // caseFold = true: Unicode simple case folding after NFC — case
     // variants in ANY script (and final-vs-medial sigma) dedupe
     // together; spec-verified tier (engine-divergent, no SQL twin)
-    val fp = TextFunctions.fingerprint(col(textCol), unicode, nfc, caseFold)
-    val key = coalesce(fp, concat(lit("__graft_null__:"), col(idCol).cast("string")))
+    val fp = TextFunctions.fingerprint(quoted(textCol), unicode, nfc, caseFold)
+    val key = coalesce(fp, concat(lit("__graft_null__:"), quoted(idCol).cast("string")))
     // min_by over the whole row, NOT a row_number window (r12): the
     // aggregate partial-merges duplicate groups MAP-SIDE, so the
     // exchange carries one candidate row per (fingerprint, map
     // partition) instead of every duplicate, and the per-partition sort
     // a window needs disappears (guide §2.3 "aggregate before you
-    // shuffle"). Same keep-smallest-id contract: idCol orders the
-    // min_by exactly as the window's ORDER BY did.
+    // shuffle"). Keep-smallest-id, nulls last: min_by skips rows whose
+    // ordering is NULL, so a bare idCol ordering would reduce a group
+    // whose ids are all null to one all-null row; the never-null
+    // (isnull(id), id) struct keeps a real row there and still picks
+    // the smallest non-null id everywhere else.
     val cols = df.columns.toSeq
     df.groupBy(key.as("__graft_fp"))
-      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__graft_row"))
-      .select(cols.map(c => col(s"__graft_row.`$c`").as(c)): _*)
+      .agg(min_by(struct(cols.map(quoted): _*),
+        struct(isnull(quoted(idCol)), quoted(idCol))).as("__graft_row"))
+      .select(cols.map(c => col("__graft_row").getField(c).as(c)): _*)
   }
+
+  /** A top-level column by its exact name: backtick-quoted, so a name
+    * holding a dot or a backtick is never parsed as a nested path.
+    */
+  private def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Duplicate-set sizes by fingerprint: (fingerprint, n_docs, min_id). */
   def exactGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
@@ -223,6 +214,7 @@ object Dedup {
     *    multi-KB shingle-SET arrays attach to exactly those ids (the
     *    candidate-id list broadcasts; the sets scan filters map-side).
     * Set `estFloor = 0.0` to disable the prefilter (exact legacy plan).
+    * Registers the candidate checkpoint with [[graft.etl.CacheTracker]].
     */
   def nearDuplicatePairs(
       df: DataFrame,
@@ -234,12 +226,36 @@ object Dedup {
       rowsPerBand: Int = 4,
       seed: Long = 42L,
       estFloor: Double = -1.0,
-      maxBucketSize: Int = 1000): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame =
+    minhashPairs(df, idCol,
+      TextFunctions.minhashSignature(col(textCol), shingleSize, bands * rowsPerBand, seed),
+      TextFunctions.shingleHashSet(col(textCol), shingleSize),
+      threshold, bands, rowsPerBand, estFloor, maxBucketSize)
+
+  /** The MinHash-LSH engine behind [[nearDuplicatePairs]], over ANY
+    * signature column and shingle-set column — the way [[hammingPairs64]]
+    * takes any 64-bit hash column — so the md5-derived portable kernels
+    * (q59) run the same banding, hot-bucket guard, estimate prefilter,
+    * candidate checkpoint, id prune and exact-Jaccard verify as the
+    * splitmix64 production kernels. `sig` is an array<long> of
+    * `bands * rowsPerBand` minhashes (rows with an empty signature drop
+    * out); `shingles` is the sorted distinct long set
+    * [[TextFunctions.jaccardSorted]] reads. Output (id_a, id_b, jaccard).
+    */
+  private[graft] def minhashPairs(
+      df: DataFrame,
+      idCol: String,
+      sig: Column,
+      shingles: Column,
+      threshold: Double,
+      bands: Int,
+      rowsPerBand: Int,
+      estFloor: Double,
+      maxBucketSize: Int): DataFrame = {
     val numHashes = bands * rowsPerBand
     val floor = if (estFloor < 0) threshold * 5.0 / 8.0 else estFloor
     val minMatches = math.ceil(floor * numHashes).toInt
-    val sigExpr = TextFunctions.minhashSignature(col(textCol), shingleSize, numHashes, seed)
-    val withSig = df.select(col(idCol).as("id"), sigExpr.as("sig"))
+    val withSig = df.select(col(idCol).as("id"), sig.as("sig"))
       .where(size(col("sig")) > 0)
     val bandKeys = explode(
       transform(sequence(lit(0), lit(bands - 1)), b =>
@@ -255,9 +271,9 @@ object Dedup {
       import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
       toCol(graft.functions.SigMatchCountExpr(toExpr(col("l.sig")), toExpr(col("r.sig"))))
     }
-    // persisted (tracked — see unpersistCaches): the candidate-id prune
-    // reads the survivors twice
-    val cands = checkpointTracked(l.join(r,
+    // checkpointed (tracked — see CacheTracker.unpersistCaches): the
+    // candidate-id prune reads the survivors twice
+    val cands = graft.etl.CacheTracker.checkpointTracked(l.join(r,
         col("l.band") === col("r.band") &&
           col("l.bucket") === col("r.bucket") &&
           col("l.id") < col("r.id"))
@@ -270,11 +286,16 @@ object Dedup {
     // sorted-distinct 64-bit shingle hashes: exact Jaccard by compiled
     // merge-intersect — candidate rows carry fixed-width hash arrays, never
     // the document text
-    val shingleSets = df.select(
-      col(idCol).as("id"),
-      TextFunctions.shingleHashSet(col(textCol), shingleSize).as("sh"))
+    val shingleSets = df.select(col(idCol).as("id"), shingles.as("sh"))
       .join(candIds, Seq("id"))
-    val a = shingleSets.alias("sa")
+    // sort-merge on the first verify join: when the candidate list is
+    // small enough to broadcast, AQE otherwise streams the shingle-set
+    // projection through a many-matches-per-id hash join, and codegen
+    // defers the set kernel into the match loop — recomputed once per
+    // CANDIDATE instead of once per doc (measured on q59 at sf0.1: a
+    // 13.5 s single-task stage; the merge join's shuffle materializes
+    // each set once)
+    val a = shingleSets.alias("sa").hint("merge")
     val b = shingleSets.alias("sb")
     cands
       .join(a, col("id_a") === col("sa.id"))
@@ -360,8 +381,8 @@ object Dedup {
     *
     * `blockScheme`: "block4" | "combo20" | "auto". Auto persists the
     * (id, hash) projection (8+8 bytes/row — tracked, see
-    * [[unpersistCaches]]), counts it, and routes to combo20 at
-    * n >= max(2^18, 4096 * maxBucketSize). The binding constraint is
+    * [[graft.etl.CacheTracker.unpersistCaches]]), counts it, and routes
+    * to combo20 at n >= max(2^18, 4096 * maxBucketSize). The binding constraint is
     * RECALL, not wall-clock: block4's spurious candidates are in-stage
     * integer compares (the hamming filter sits below the distinct), so
     * it stays FASTER than combo20's 5x-wider explode well past 5M rows
@@ -399,7 +420,7 @@ object Dedup {
         // measured ~0.2 s SLOWER on q111/q129 — the hash frame is read
         // exactly twice and the columnar cache read beats the row-format
         // checkpoint blocks)
-        val p = persistTracked(sh0)
+        val p = graft.etl.CacheTracker.persistTracked(sh0)
         val comboThreshold = math.max(1L << 18, 4096L * maxBucketSize)
         (p, if (p.count() >= comboThreshold) "combo20" else "block4")
       case s => (sh0, s)
@@ -619,10 +640,10 @@ object Dedup {
       .select(col(idCol), xxhash64(col("__b8s")).as("__b8"))
       .withColumn("__rk", row_number().over(wb))
       .where(col("__rk") <= blockCap).drop("__rk")
-    // persisted (tracked — see unpersistCaches): the candidate-id prune
-    // below reads the candidate set twice (the blocking self-join is the
-    // expensive half)
-    val cand = checkpointTracked(ex.alias("ja")
+    // checkpointed (tracked — see CacheTracker.unpersistCaches): the
+    // candidate-id prune below reads the candidate set twice (the
+    // blocking self-join is the expensive half)
+    val cand = graft.etl.CacheTracker.checkpointTracked(ex.alias("ja")
       .join(ex.alias("jb"),
         col("ja.__b8") === col("jb.__b8") &&
           col(s"ja.$idCol") < col(s"jb.$idCol"))
@@ -685,8 +706,8 @@ object Dedup {
       .select(col(idCol), xxhash64(col("__b8s")).as("__b8"))
       .withColumn("__rk", row_number().over(wb))
       .where(col("__rk") <= blockCap).drop("__rk")
-    // persisted (tracked — see unpersistCaches)
-    val cand = checkpointTracked(ex.alias("ca")
+    // checkpointed (tracked — see CacheTracker.unpersistCaches)
+    val cand = graft.etl.CacheTracker.checkpointTracked(ex.alias("ca")
       .join(ex.alias("cb"),
         col("ca.__b8") === col("cb.__b8") &&
           col(s"ca.$idCol") < col(s"cb.$idCol"))

@@ -54,13 +54,23 @@ object CacheTracker {
     val cp = df.localCheckpoint()
     cp.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => pendingRdds.add(lr.rdd)
-      case _ => ()
+      // an unregistered checkpoint's blocks would outlive every drain
+      case other => throw new IllegalStateException(
+        s"localCheckpoint did not yield a LogicalRDD leaf (got ${other.nodeName}); " +
+          "its blocks cannot be tracked for release")
     }
     cp
   }
 
   /** Unpersist every tracked cache created since the last call — see the
     * class doc for the call-after-materializing contract.
+    *
+    * A drained checkpoint is DESTROYED, not evicted: its frame is a
+    * LogicalRDD leaf with no lineage, so a frame kept across the drain
+    * (an operator result built before the call and materialized after
+    * it) fails on its next action instead of recomputing. Rebuild such
+    * frames after draining. Persisted (non-checkpoint) caches only
+    * downgrade to recomputation.
     */
   def unpersistCaches(blocking: Boolean = false): Unit = {
     var d = pendingCaches.poll()

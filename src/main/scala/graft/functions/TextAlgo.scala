@@ -736,25 +736,14 @@ object TextAlgo {
   }
 
   /** Lowercased-alnum tokens in order (non-distinct) — the tokenization
-    * shared with [[wordBigrams]] so LM vocabulary and bigram streams agree.
+    * shared with [[wordNgramStream]] so LM vocabulary and n-gram streams
+    * agree.
     */
   def asciiTokens(s: UTF8String): ArrayData = {
     val toks = asciiTokenize(s.toString)
     val out = new Array[AnyRef](toks.length)
     var j = 0
     while (j < toks.length) { out(j) = UTF8String.fromString(toks(j)); j += 1 }
-    ArrayData.toArrayData(out)
-  }
-
-  def wordBigrams(s: UTF8String, unicode: Boolean): ArrayData = {
-    val toks = if (unicode) unicodeTokenize(s.toString) else asciiTokenize(s.toString)
-    if (toks.length < 2) return ArrayData.toArrayData(Array.empty[UTF8String])
-    val out = new Array[AnyRef](toks.length - 1)
-    var j = 0
-    while (j < toks.length - 1) {
-      out(j) = UTF8String.fromString(toks(j) + " " + toks(j + 1))
-      j += 1
-    }
     ArrayData.toArrayData(out)
   }
 
@@ -803,8 +792,8 @@ object TextAlgo {
   }
 
   /** All consecutive space-joined word n-grams IN ORDER, non-distinct
-    * (same tokenization family as [[wordBigrams]]; n = 2 produces its
-    * exact output) — the map-side n-gram stream for higher-order LM
+    * (the [[asciiTokens]] / [[unicodeTokenize]] tokenization; n = 2 is
+    * the bigram stream) — the map-side n-gram stream for LM
     * estimation. Distinct-set semantics live in [[wordNgrams]]; this is
     * the occurrence stream. Space-joining is unambiguous because tokens
     * never contain spaces.
@@ -870,7 +859,7 @@ object TextAlgo {
   /** DSIR hashed feature-bucket stream: md5-60 mod `numBuckets` over the
     * unigrams then the consecutive bigrams of the alnum tokenization —
     * ONE tokenization and one MessageDigest per document, replacing the
-    * interpreted `transform(concat(asciiTokens, wordBigrams), md5…)`
+    * interpreted `transform(concat(asciiTokens, bigram stream), md5…)`
     * higher-order chain (CodegenFallback) with a single compiled pass.
     * Element order (unigrams first, then bigrams) and the md5-60 value
     * (first 15 hex digits = first-8-bytes >>> 4, [[md5Shingle60]]) are

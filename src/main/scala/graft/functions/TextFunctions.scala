@@ -72,20 +72,11 @@ object TextFunctions {
     toColC(WordChunksExpr(toExprC(c), n))
   }
 
-  /** All consecutive token bigrams (lowercased-alnum tokenization,
-    * non-distinct, one compiled pass — [[WordBigramsExpr]]).
-    * `unicode = true` pairs the multilingual-tier tokens instead
-    * ([[unicodeTokens]]) — CJK bigram LMs need real token pairs.
-    */
-  def wordBigrams(c: Column, unicode: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColB, expression => toExprB}
-    toColB(WordBigramsExpr(toExprB(c), unicode))
-  }
-
   /** All consecutive space-joined word n-grams IN ORDER, non-distinct
-    * ([[WordNgramStreamExpr]]; same tokenization family as
-    * [[wordBigrams]], which it reproduces at n = 2; [[wordNgrams]] is
-    * the distinct-set sibling) — the map-side stream for order-n LM
+    * ([[WordNgramStreamExpr]]; [[asciiTokens]] tokenization, or
+    * [[unicodeTokens]] with `unicode = true` — CJK bigram LMs need real
+    * token pairs; n = 2 is the bigram stream; [[wordNgrams]] is the
+    * distinct-set sibling) — the map-side stream for order-n LM
     * estimation.
     */
   def wordNgramStream(c: Column, n: Int, unicode: Boolean = false): Column = {
@@ -189,7 +180,7 @@ object TextFunctions {
     transform(sentences(masked), p => replace(p, lit(s), lit(".")))
   }
 
-  /** Lowercased-alnum tokens (same tokenization as [[wordBigrams]]). */
+  /** Lowercased-alnum tokens (same tokenization as [[wordNgramStream]]). */
   def asciiTokens(c: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColT, expression => toExprT}
     toColT(AsciiTokensExpr(toExprT(c)))

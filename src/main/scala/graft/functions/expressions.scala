@@ -330,8 +330,8 @@ case class WordChunksExpr(child: Expression, n: Int)
 }
 
 /** Lowercased-alnum tokens of a string column as array<string> (in order,
-  * non-distinct) — the SAME tokenization as [[WordBigramsExpr]], so
-  * vocabulary counts and bigram streams can never disagree.
+  * non-distinct) — the SAME tokenization as [[WordNgramStreamExpr]], so
+  * vocabulary counts and n-gram streams can never disagree.
   */
 case class AsciiTokensExpr(child: Expression)
     extends UnaryExpression {
@@ -365,24 +365,6 @@ case class UnicodeTokensExpr(child: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.TextAlgo.unicodeTokens($c)")
   override protected def withNewChildInternal(newChild: Expression): UnicodeTokensExpr =
-    copy(child = newChild)
-}
-
-/** All consecutive lowercased-alnum token bigrams as array<string> (in
-  * order, non-distinct) — map-side bigram stream for LM estimation.
-  */
-case class WordBigramsExpr(child: Expression, unicode: Boolean = false)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string column, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_bigrams"
-  override protected def nullSafeEval(input: Any): Any =
-    TextAlgo.wordBigrams(input.asInstanceOf[UTF8String], unicode)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextAlgo.wordBigrams($c, $unicode)")
-  override protected def withNewChildInternal(newChild: Expression): WordBigramsExpr =
     copy(child = newChild)
 }
 

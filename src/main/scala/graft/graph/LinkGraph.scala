@@ -145,7 +145,7 @@ object LinkGraph {
     * dominate long runs — stays bounded regardless of `iters`. Ranks
     * are integers, so checkpointing cannot perturb values (and
     * [[LinkGraphSpec]] proves bit-identity across cadences). Measured
-    * at iters=20 (tools/PageRankIterBench, sf10-derived graph): no
+    * at iters=20 (BENCHNOTES.md round 9, sf10-derived graph): no
     * checkpoint 47.8 s, every 10 28.0 s, every 5 ~21 s — that fixture
     * is plan-overhead-dominated, so smaller cadences keep winning
     * there; on a BILLION-node graph each checkpoint materializes the

@@ -131,7 +131,7 @@ object GraftFunctions {
     fd("graft_word_chunks", classOf[WordChunksExpr], 2)(a =>
       WordChunksExpr(a(0), intLit("graft_word_chunks", a, 1))),
     fd("graft_ascii_tokens", classOf[AsciiTokensExpr], 1)(a => AsciiTokensExpr(a(0))),
-    fd("graft_word_bigrams", classOf[WordBigramsExpr], 1)(a => WordBigramsExpr(a(0))),
+    fd("graft_word_bigrams", classOf[WordNgramStreamExpr], 1)(a => WordNgramStreamExpr(a(0), 2)),
     fd("graft_word_ngram_stream", classOf[WordNgramStreamExpr], 2)(a =>
       WordNgramStreamExpr(a(0), intLit("graft_word_ngram_stream", a, 1))),
     fd("graft_ngram_hash_pairs", classOf[NgramHashPairsExpr], 2)(a =>

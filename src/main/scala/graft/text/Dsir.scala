@@ -18,7 +18,7 @@ import graft.functions.TextFunctions
   * with add-1 smoothed bucket probabilities `p(b) = (count_b + 1) /
   * (total + B)`. Features are unigrams + consecutive bigrams of the
   * engine-wide lowercased-alnum tokenization (the compiled
-  * [[TextFunctions.asciiTokens]] / [[TextFunctions.wordBigrams]]
+  * [[TextFunctions.asciiTokens]] / [[TextFunctions.wordNgramStream]]
   * kernels); `bucket(f)` is the portable md5-60 hash mod `numBuckets`,
   * the same engine-replayable convention as the KMV sketch
   * ([[graft.sketch.Kmv.hash60]]).
@@ -51,7 +51,7 @@ object Dsir {
 
   /** Unigram + bigram feature stream of a text column (array<string>). */
   def features(text: Column): Column =
-    concat(TextFunctions.asciiTokens(text), TextFunctions.wordBigrams(text))
+    concat(TextFunctions.asciiTokens(text), TextFunctions.wordNgramStream(text, 2))
 
   /** Portable hash bucket per feature: md5-60 mod numBuckets (array<long>),
     * unigrams first then bigrams — ONE compiled pass

@@ -9,9 +9,9 @@ import graft.functions.TextFunctions
   * vocabulary construction, boilerplate discovery ("which phrases
   * dominate?"), and repetition auditing of a training corpus.
   *
-  * Plan: compiled map-side bigram kernel ([[TextFunctions.wordBigrams]] —
-  * non-distinct, `[a-z0-9]` tokens, the tokenization shared with the LM
-  * scorers) -> explode -> per-(doc, ngram) counts [shuffle 1, map-side
+  * Plan: compiled map-side n-gram stream at n = 2
+  * ([[TextFunctions.wordNgramStream]] — non-distinct, `[a-z0-9]` tokens,
+  * the tokenization shared with the LM scorers) -> explode -> per-(doc, ngram) counts [shuffle 1, map-side
   * combined] -> per-ngram totals + document frequency in ONE second agg
   * (`sum` + `count` over the distinct-by-construction first level, no
   * `countDistinct` expansion) -> global top-k by occurrences.
@@ -36,7 +36,7 @@ object NgramStats {
       k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     df.select(col(idCol).as("doc_id"),
-        explode(TextFunctions.wordBigrams(col(textCol))).as("bigram"))
+        explode(TextFunctions.wordNgramStream(col(textCol), 2)).as("bigram"))
       .groupBy(col("doc_id"), col("bigram"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("bigram"))

@@ -13,8 +13,8 @@ import graft.etl.Ranking
   * fluent; downstream mixes sample the tiers differently).
   *
   * Composition of two verified pieces: an n-gram cross-entropy score
-  * (`ngramOrder` 1/2/3 -> [[UnigramLm.crossEntropy]] /
-  * [[UnigramLm.bigramCrossEntropy]] / [[UnigramLm.trigramCrossEntropy]];
+  * (`ngramOrder` 1 -> [[UnigramLm.crossEntropy]], 2/3 ->
+  * [[UnigramLm.ngramCrossEntropy]];
   * CCNet proper uses a KenLM 5-gram — the trigram tier is the same
   * compiled-kernel shape two conditioning levels up from q57's
   * unigram) and [[Ranking.withGroupedNtile]] (exact per-language NTILE
@@ -98,10 +98,9 @@ object PerplexityBuckets {
       case (n, true, None) if n >= 2 =>
         UnigramLm.ngramCrossEntropyHashed(df, idCol, textCol, n, unicode)
           .withColumnRenamed("n_ngrams", "n_tokens")
-      case (2, false, None) => UnigramLm.bigramCrossEntropy(df, idCol, textCol, unicode)
-        .withColumnRenamed("n_bigrams", "n_tokens")
-      case (3, false, None) => UnigramLm.trigramCrossEntropy(df, idCol, textCol, unicode)
-        .withColumnRenamed("n_trigrams", "n_tokens")
+      case (n, false, None) if n == 2 || n == 3 =>
+        UnigramLm.ngramCrossEntropy(df, idCol, textCol, n, unicode)
+          .withColumnRenamed("n_ngrams", "n_tokens")
       case (o, _, _) => throw new IllegalArgumentException(
         s"exact-string tiers support ngramOrder 1, 2 or 3, got $o " +
           "(any n >= 2 via hashedLm or a pre-trained model)")

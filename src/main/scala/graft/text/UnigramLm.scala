@@ -65,99 +65,65 @@ object UnigramLm {
         (sum(col("tf") * -log(col("prob"))) / sum(col("tf"))).as("xent"))
   }
 
-  /** (doc_id, n_bigrams, xent): per-bigram cross-entropy under the
-    * corpus's add-one-smoothed BIGRAM model,
-    * `P(w2|w1) = (c(w1 w2) + 1) / (c(w1 ·) + V)` — one conditioning level
-    * beyond [[crossEntropy]], the shape CCNet's KenLM filter takes at
-    * n=5. Repetitive/templated text collapses toward its own transitions
-    * and scores near zero; shuffled-word noise scores near ln(V).
+  /** (doc_id, n_ngrams, xent): per-n-gram cross-entropy under the
+    * corpus's add-one-smoothed order-`n` model (n >= 2),
+    * `P(w_n | w_1..w_{n-1}) = (c(w_1..w_n) + 1) / (c(w_1..w_{n-1} ·) + V)`
+    * — n = 2 is the bigram tier (q68), n = 3 the trigram tier (q117), a
+    * step toward the 5-gram KenLM the CCNet recipe scores with (Wenzek
+    * et al. 2020). Repetitive/templated text collapses toward its own
+    * transitions and scores near zero; shuffled-word noise scores near
+    * ln(V). Exact integer counts and a replayable double expression are
+    * what the oracles replay.
     *
-    * Plan: a COMPILED map-side bigram kernel
-    * ([[graft.functions.WordBigramsExpr]] — the first cut shuffled the
-    * whole token stream through a per-doc lead window just to pair
-    * neighbors) -> bigram tf [shuffle on the uniform (doc, bigram) key] ->
-    * corpus bigram counts -> prefix counts aggregated FROM the bigram
-    * counts (one row per distinct bigram, not per occurrence) -> probs
-    * join back. V (the unigram vocabulary) and nothing else reaches the
-    * driver.
+    * Plan: compiled map-side n-gram kernel
+    * ([[graft.functions.WordNgramStreamExpr]] — the first bigram cut
+    * shuffled the whole token stream through a per-doc lead window just
+    * to pair neighbors) -> n-gram tf [shuffle on the uniform (doc, gram)
+    * key] -> corpus n-gram counts -> PREFIX counts aggregated from the
+    * n-gram counts (one row per distinct gram — `c(w_1..w_{n-1} ·)` is a
+    * sum over w_n, never a second corpus pass) -> probs join back. Only
+    * V reaches the driver. Tokens never contain spaces, so the first
+    * n-1 space-joined labels ARE the conditioning prefix.
     */
-  def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-      unicode: Boolean = false): DataFrame = {
-    val bigrams = df.select(col(idCol).as("doc_id"),
-      explode(graft.functions.TextFunctions.wordBigrams(col(textCol), unicode)).as("bg"))
-    val tf2 = bigrams.groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("tf"))
-    val c2 = tf2.groupBy(col("bg")).agg(sum(col("tf")).as("c2"))
-    val c1 = c2.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
-      .agg(sum(col("c2")).as("c1"))
-    // vocabulary from the SAME compiled tokenizer as the bigram stream —
-    // a lower()+regex V here could disagree with the kernel on characters
-    // whose Unicode lowercase is ASCII alnum (e.g. the Kelvin sign).
-    // Deliberately a SEPARATE action: folding V into the plan as a
-    // crossJoin(broadcast) scalar was measured slower at sf1 (r11 — the
-    // broadcast gate delayed the probs join more than the action cost).
-    val v = df.select(
-        explode(
-          if (unicode) graft.functions.TextFunctions.unicodeTokens(col(textCol))
-          else graft.functions.TextFunctions.asciiTokens(col(textCol))).as("term"))
-      .distinct().count()
-    val probs = c2.withColumn("w1", substring_index(col("bg"), " ", 1))
-      .join(c1, "w1")
-      .select(col("bg"),
-        ((col("c2") + lit(1)).cast("double") / (col("c1") + lit(v)).cast("double")).as("prob"))
-    tf2.join(probs, Seq("bg"))
+  def ngramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
+      n: Int, unicode: Boolean = false): DataFrame = {
+    require(n >= 2, s"n must be >= 2, got $n")
+    val grams = df.select(col(idCol).as("doc_id"),
+      explode(graft.functions.TextFunctions.wordNgramStream(col(textCol), n, unicode)).as("g"))
+    val tfn = grams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("tf"))
+    val cn = tfn.groupBy(col("g")).agg(sum(col("tf")).as("cn"))
+    val cp = cn.groupBy(substring_index(col("g"), " ", n - 1).as("p"))
+      .agg(sum(col("cn")).as("cp"))
+    val v = vocabularySize(df, textCol, unicode)
+    val probs = cn.withColumn("p", substring_index(col("g"), " ", n - 1))
+      .join(cp, "p")
+      .select(col("g"),
+        ((col("cn") + lit(1)).cast("double") / (col("cp") + lit(v)).cast("double")).as("prob"))
+    tfn.join(probs, Seq("g"))
       .groupBy(col("doc_id"))
       .agg(
-        sum(col("tf")).as("n_bigrams"),
+        sum(col("tf")).as("n_ngrams"),
         (sum(col("tf") * -log(col("prob"))) / sum(col("tf"))).as("xent"))
   }
 
-  /** (doc_id, n_trigrams, xent): per-trigram cross-entropy under the
-    * corpus's add-one-smoothed TRIGRAM model,
-    * `P(w3|w1 w2) = (c(w1 w2 w3) + 1) / (c(w1 w2 ·) + V)` — one
-    * conditioning level beyond [[bigramCrossEntropy]], a step closer to
-    * the 5-gram KenLM the CCNet recipe scores with (Wenzek et al. 2020)
-    * while keeping the exact-integer-counts + replayable-double
-    * discipline of the lower orders.
-    *
-    * Plan shape is the bigram tier's with n = 3: compiled map-side
-    * n-gram kernel ([[graft.functions.WordNgramStreamExpr]]) -> trigram tf
-    * [shuffle on the uniform (doc, trigram) key] -> corpus trigram
-    * counts -> PREFIX counts aggregated from the trigram counts (one
-    * row per distinct trigram — `c(w1 w2 ·) = sum over w3`, never a
-    * second corpus pass) -> probs join back. Only V reaches the driver.
+  /** V, the distinct-token count every order-n tier smooths with —
+    * counted with the SAME compiled tokenizer as the n-gram streams (a
+    * lower()+regex V could disagree with the kernels on characters whose
+    * Unicode lowercase is ASCII alnum, e.g. the Kelvin sign).
+    * Deliberately a SEPARATE action: folding V into the plan as a
+    * crossJoin(broadcast) scalar was measured slower at sf1 (r11 — the
+    * broadcast gate delayed the probs join more than the action cost).
     */
-  def trigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-      unicode: Boolean = false): DataFrame = {
-    val trigrams = df.select(col(idCol).as("doc_id"),
-      explode(graft.functions.TextFunctions.wordNgramStream(col(textCol), 3, unicode)).as("tg"))
-    val tf3 = trigrams.groupBy(col("doc_id"), col("tg")).agg(count(lit(1)).as("tf"))
-    val c3 = tf3.groupBy(col("tg")).agg(sum(col("tf")).as("c3"))
-    // tokens never contain spaces, so the first two space-joined labels
-    // ARE the conditioning prefix
-    val cp = c3.groupBy(substring_index(col("tg"), " ", 2).as("w12"))
-      .agg(sum(col("c3")).as("cp"))
-    // vocabulary from the SAME compiled tokenizer family as the n-gram
-    // stream (see bigramCrossEntropy for why a lower()+regex V here
-    // could disagree, and for why this stays a separate action)
-    val v = df.select(
+  private def vocabularySize(df: DataFrame, textCol: String, unicode: Boolean): Long =
+    df.select(
         explode(
           if (unicode) graft.functions.TextFunctions.unicodeTokens(col(textCol))
           else graft.functions.TextFunctions.asciiTokens(col(textCol))).as("term"))
       .distinct().count()
-    val probs = c3.withColumn("w12", substring_index(col("tg"), " ", 2))
-      .join(cp, "w12")
-      .select(col("tg"),
-        ((col("c3") + lit(1)).cast("double") / (col("cp") + lit(v)).cast("double")).as("prob"))
-    tf3.join(probs, Seq("tg"))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("tf")).as("n_trigrams"),
-        (sum(col("tf") * -log(col("prob"))) / sum(col("tf"))).as("xent"))
-  }
 
   /** The HASHED production tier of order-n cross-entropy (n >= 2): the
     * same add-one-smoothed `P(w_n | w_1..w_{n-1})` arithmetic as
-    * [[bigramCrossEntropy]]/[[trigramCrossEntropy]], but every exchange
+    * [[ngramCrossEntropy]], but every exchange
     * carries fixed-width 64-bit (gram, prefix) hashes instead of
     * space-joined strings ([[graft.functions.NgramHashPairsExpr]] —
     * the prefix hash is the chain state after n-1 tokens, emitted
@@ -184,14 +150,9 @@ object UnigramLm {
     // so first() is deterministic here
     val cn = tfn.groupBy(col("g")).agg(sum(col("tf")).as("cn"), first(col("p")).as("p"))
     val cp = cn.groupBy(col("p")).agg(sum(col("cn")).as("cp"))
-    // V from the exact tokenizer (a scalar; vocabulary-bounded distinct)
-    // so the smoothing denominator is identical to the exact tier's
-    // (a separate action on purpose — see bigramCrossEntropy, r11)
-    val v = df.select(
-        explode(
-          if (unicode) graft.functions.TextFunctions.unicodeTokens(col(textCol))
-          else graft.functions.TextFunctions.asciiTokens(col(textCol))).as("term"))
-      .distinct().count()
+    // V from the exact tokenizer, so the smoothing denominator is
+    // identical to the exact tier's
+    val v = vocabularySize(df, textCol, unicode)
     val probs = cn.join(cp, "p")
       .select(col("g"),
         ((col("cn") + lit(1)).cast("double") / (col("cp") + lit(v)).cast("double")).as("prob"))
@@ -257,11 +218,7 @@ object UnigramLm {
     // p (and gram) are pure functions of g (same gram -> same prefix
     // chain state / same string), so first() is deterministic here
     val cp = cn.groupBy(col("p")).agg(sum(col("cn")).as("cp"))
-    val v = df.select(
-        explode(
-          if (unicode) graft.functions.TextFunctions.unicodeTokens(col(textCol))
-          else graft.functions.TextFunctions.asciiTokens(col(textCol))).as("term"))
-      .distinct().count()
+    val v = vocabularySize(df, textCol, unicode)
     // unseen floor: an unobserved gram under an unobserved prefix —
     // the add-one model's 1 / V (prefix count 0)
     val unseen = 1.0 / v

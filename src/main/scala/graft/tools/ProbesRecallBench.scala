@@ -30,9 +30,10 @@ object ProbesRecallBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // clustered corpus (like CrossoverBench): real embedding corpora are
-    // clustered, which is exactly where sign-sketch recall is hard —
-    // near neighbors sit close to the same hyperplanes
+    // clustered corpus (like the q35/q39 crossover run in BENCHNOTES.md):
+    // real embedding corpora are clustered, which is exactly where
+    // sign-sketch recall is hard — near neighbors sit close to the same
+    // hyperplanes
     val rng = new scala.util.Random(42)
     val centers = Array.fill(20, dim)(rng.nextGaussian())
     val rows = (0 until n).map { i =>

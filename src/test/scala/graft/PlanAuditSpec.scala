@@ -95,6 +95,10 @@ class PlanAuditSpec extends SparkSpec {
       } catch {
         case e: Throwable =>
           failures += s"$name: plan construction failed: ${e.getMessage}"
+      } finally {
+        // eager plan builds (checkpoints, V counts) leave tracked blocks;
+        // release them per query so 138 builds never pile up in this JVM
+        graft.etl.CacheTracker.unpersistCaches(blocking = true)
       }
     }
     // guard against the walk itself going vacuous again: >50 queries must
@@ -102,5 +106,28 @@ class PlanAuditSpec extends SparkSpec {
     // per query; the real walk sees ~15)
     assert(walked > 500, s"plan walk saw only $walked nodes — traversal broken?")
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
+  test("q88 and q93 plan a single range exchange, kernel after it, and no cache") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val scanCols = spark.read.parquet(s"$sfDir/documents.parquet").columns.toSet
+    Seq("q88_html_extract", "q93_gzip_roundtrip").foreach { name =>
+      try {
+        val nodes = graft.tools.PlanWalk.collectAll(
+          SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+        // the explicit repartitionByRange satisfies the global sort's
+        // ordering, so the sort adds no exchange of its own — and its
+        // boundary sample reads the scan, never the kernel chain
+        val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.length === 1, s"$name: ${exchanges.length} exchanges")
+        assert(exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+          s"$name: the one exchange must range-partition")
+        assert(exchanges.head.child.output.map(_.name).toSet.subsetOf(scanCols),
+          s"$name: the kernel must run after the exchange, not before it")
+        assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), s"$name: cached scan")
+      } finally graft.etl.CacheTracker.unpersistCaches(blocking = true)
+    }
   }
 }

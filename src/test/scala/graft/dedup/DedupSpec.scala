@@ -73,6 +73,35 @@ class DedupSpec extends SparkSpec {
     assert(ids === Set(1L, 3L, 4L))
   }
 
+  test("exact dedup: a group whose ids are all null keeps a real row") {
+    import spark.implicits._
+    val df = Seq(
+      (None: Option[Long], "x y"), (None: Option[Long], "x y"),
+      (Some(2L), "x y z"), (None: Option[Long], "x y z")
+    ).toDF("doc_id", "text")
+    val rows = Dedup.exact(df, "text", "doc_id").collect()
+      .map(r => (Option(r.get(0)), r.getString(1))).toSet
+    // the all-null group keeps its text; a null id never beats a real one
+    assert(rows === Set((None, "x y"), (Some(2L), "x y z")))
+  }
+
+  Seq("a.b" -> "a dot", "a`b" -> "a backtick").foreach { case (name, what) =>
+    test(s"exact dedup: column names holding $what") {
+      import spark.implicits._
+      val df = Seq((1L, "same text", "p"), (2L, "same text", "q"), (3L, "other", "r"))
+        .toDF("doc_id", "text", name)
+      val out = Dedup.exact(df, "text", "doc_id")
+      assert(out.columns.toSeq === Seq("doc_id", "text", name))
+      val rows = out.collect().map(r => (r.getLong(0), r.getString(2))).toSet
+      assert(rows === Set((1L, "p"), (3L, "r")))
+      // the same name shape on the id and text columns themselves
+      val keyed = df.toDF(s"id$name", s"text$name", "v")
+      val ids = Dedup.exact(keyed, s"text$name", s"id$name")
+        .collect().map(_.getLong(0)).toSet
+      assert(ids === Set(1L, 3L))
+    }
+  }
+
   test("exactGroups reports duplicate-set sizes") {
     val g = Dedup.exactGroups(docs, "text", "doc_id").collect()
       .map(r => r.getLong(2) -> r.getLong(1)).toMap // keep_id -> n_docs
@@ -285,7 +314,7 @@ class DedupSpec extends SparkSpec {
     // baseline snapshot: other suites sharing this session may hold
     // their own (untracked) checkpoint blocks — only assert on what
     // THESE operators add and what the drain removes
-    Dedup.unpersistCaches(blocking = true)
+    graft.etl.CacheTracker.unpersistCaches(blocking = true)
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet
     // materialize all three caching operators (candidate frames are
     // tracked eager localCheckpoints since r12 — they register as
@@ -295,7 +324,7 @@ class DedupSpec extends SparkSpec {
     Dedup.nearDuplicatePairs(d, "text", "doc_id", threshold = 0.5, shingleSize = 2).collect()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- preexisting).nonEmpty,
       "the candidate checkpoints should hold blocks while pending")
-    Dedup.unpersistCaches(blocking = true)
+    graft.etl.CacheTracker.unpersistCaches(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty,
       "unpersistCaches must leave no session-lifetime cache entries behind")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- preexisting).isEmpty,

@@ -51,10 +51,12 @@ class GraftSqlSpec extends SparkSpec {
     val r = sql.sql(
       """SELECT
         |  graft_word_ngram_stream('A b a b', 2) AS st,
+        |  graft_word_bigrams('A b a b') AS wb,
         |  graft_ngram_hash_pairs('a b a b', 3) AS hp,
         |  graft_case_fold_simple('CAF\u00C9 stra\u00DFe \u03A3') AS cf
         |""".stripMargin).collect()(0)
     assert(r.getAs[scala.collection.Seq[String]]("st") === Seq("a b", "b a", "a b"))
+    assert(r.getAs[scala.collection.Seq[String]]("wb") === Seq("a b", "b a", "a b"))
     assert(r.getAs[String]("cf") === "caf\u00E9 stra\u00DFe \u03C3")
     val hp = r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("hp")
     assert(hp.length === 2)

@@ -124,7 +124,7 @@ class SearchLmSpec extends SparkSpec {
     // -> (a,b). c2(a,b)=3, c2(b,a)=1; c1(a)=3, c1(b)=1; V=2 (vocab {a,b})
     // p(b|a) = (3+1)/(3+2) = 0.8; p(a|b) = (1+1)/(1+2) = 2/3
     val docs = Seq((0L, "a b a b"), (1L, "a b")).toDF("id", "body")
-    val out = UnigramLm.bigramCrossEntropy(docs, "id", "body")
+    val out = UnigramLm.ngramCrossEntropy(docs, "id", "body", n = 2)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(out(0L)._1 === 3L)
     val want0 = (2 * -math.log(0.8) + 1 * -math.log(2.0 / 3)) / 3
@@ -139,7 +139,7 @@ class SearchLmSpec extends SparkSpec {
     // -> (a,b,a). c3(aba)=3, c3(bab)=1; cp(a b)=3, cp(b a)=1; V=2
     // p(a|a b) = (3+1)/(3+2) = 0.8; p(b|b a) = (1+1)/(1+2) = 2/3
     val docs = Seq((0L, "a b a b a"), (1L, "a b a")).toDF("id", "body")
-    val out = UnigramLm.trigramCrossEntropy(docs, "id", "body")
+    val out = UnigramLm.ngramCrossEntropy(docs, "id", "body", n = 3)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(out(0L)._1 === 3L)
     val want0 = (2 * -math.log(0.8) + 1 * -math.log(2.0 / 3)) / 3
@@ -147,12 +147,12 @@ class SearchLmSpec extends SparkSpec {
     assert(out(1L)._1 === 1L)
     assert(math.abs(out(1L)._2 - -math.log(0.8)) < 1e-12)
     // a doc with fewer than 3 tokens carries no trigram score
-    val short = UnigramLm.trigramCrossEntropy(
-      Seq((0L, "a b a"), (1L, "a b")).toDF("id", "body"), "id", "body")
+    val short = UnigramLm.ngramCrossEntropy(
+      Seq((0L, "a b a"), (1L, "a b")).toDF("id", "body"), "id", "body", n = 3)
     assert(short.collect().map(_.getLong(0)).toSet === Set(0L))
   }
 
-  test("hashed n-gram tier equals the exact-string tier (n=2 and n=3)") {
+  test("hashed n-gram tier equals the exact-string tier (n=2, 3 and 4)") {
     import spark.implicits._
     val rng = new scala.util.Random(17)
     val vocab = ('a' to 'p').map(_.toString)
@@ -160,17 +160,15 @@ class SearchLmSpec extends SparkSpec {
       (i.toLong, (0 until 3 + rng.nextInt(30))
         .map(_ => vocab(rng.nextInt(vocab.size))).mkString(" "))
     }.toDF("id", "body")
-    def rounded(df: org.apache.spark.sql.DataFrame, nCol: String) = df
-      .select(col("doc_id"), col(nCol), round(col("xent"), 9).as("x"))
+    def rounded(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("doc_id"), col("n_ngrams"), round(col("xent"), 9).as("x"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val exact3 = rounded(UnigramLm.trigramCrossEntropy(docs, "id", "body"), "n_trigrams")
-    val hash3 = rounded(
-      UnigramLm.ngramCrossEntropyHashed(docs, "id", "body", n = 3), "n_ngrams")
-    assert(hash3 === exact3)
-    val exact2 = rounded(UnigramLm.bigramCrossEntropy(docs, "id", "body"), "n_bigrams")
-    val hash2 = rounded(
-      UnigramLm.ngramCrossEntropyHashed(docs, "id", "body", n = 2), "n_ngrams")
-    assert(hash2 === exact2)
+    Seq(3, 2, 4).foreach { n =>
+      val exact = rounded(UnigramLm.ngramCrossEntropy(docs, "id", "body", n))
+      val hashed = rounded(UnigramLm.ngramCrossEntropyHashed(docs, "id", "body", n))
+      assert(exact.nonEmpty, s"n=$n")
+      assert(hashed === exact, s"n=$n")
+    }
   }
 
   test("pre-trained-model scoring: full model reproduces the hashed tier; pruning floors unseen") {
@@ -328,9 +326,16 @@ class SearchLmSpec extends SparkSpec {
     val texts = Seq("The quick brown-fox; jumps", "", "one", "a b c d")
     val got = texts.toDF("t").select(
         graft.functions.TextFunctions.wordNgramStream(col("t"), 2).as("s"),
-        graft.functions.TextFunctions.wordBigrams(col("t")).as("b"))
+        graft.functions.TextFunctions.asciiTokens(col("t")).as("toks"))
       .collect()
-    got.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
+    // the bigram kernel IS the n = 2 stream: consecutive token pairs of
+    // the shared tokenization
+    got.foreach { r =>
+      val pairs = r.getSeq[String](1).sliding(2).collect {
+        case Seq(a, b) => s"$a $b"
+      }.toSeq
+      assert(r.getSeq[String](0) === pairs)
+    }
   }
 
   test("bigram cross-entropy separates templated transitions from shuffled noise") {
@@ -340,7 +345,7 @@ class SearchLmSpec extends SparkSpec {
     val template = (0 until 40).map(i => vocab(i % 4)).mkString(" ")
     val docs = (0 until 20).map(i => (i.toLong, template)) :+
       (99L, (0 until 40).map(_ => vocab(rng.nextInt(vocab.size))).mkString(" "))
-    val out = UnigramLm.bigramCrossEntropy(docs.toDF("id", "body"), "id", "body")
+    val out = UnigramLm.ngramCrossEntropy(docs.toDF("id", "body"), "id", "body", n = 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out(99L) > out(0L) * 2,
       s"shuffled doc ${out(99L)} should far exceed templated ${out(0L)}")

@@ -138,7 +138,7 @@ class UnicodeTokensSpec extends SparkSpec {
     val uni = UnigramLm.crossEntropy(df, "doc_id", "text", unicode = true)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(uni(1L) < uni(2L), s"repetitive doc must score lower xent: $uni")
-    val bi = UnigramLm.bigramCrossEntropy(df, "doc_id", "text", unicode = true)
+    val bi = UnigramLm.ngramCrossEntropy(df, "doc_id", "text", n = 2, unicode = true)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(bi(1L) < bi(2L), s"repetitive doc must score lower bigram xent: $bi")
     // ascii tier: zero tokens -> empty results, silently (the documented
