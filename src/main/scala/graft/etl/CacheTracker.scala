@@ -1,6 +1,8 @@
 package graft.etl
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry for operator-internal caches.
@@ -34,8 +36,7 @@ object CacheTracker {
     p
   }
 
-  private val pendingRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]
+  private val pendingRdds = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]
 
   /** Eagerly `localCheckpoint` `df` and register the checkpointed blocks
     * for the [[unpersistCaches]] sweep. Use INSTEAD of [[persistTracked]]
@@ -52,14 +53,21 @@ object CacheTracker {
     */
   private[graft] def checkpointTracked(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
-    cp.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => pendingRdds.add(lr.rdd)
-      // an unregistered checkpoint's blocks would outlive every drain
-      case other => throw new IllegalStateException(
-        s"localCheckpoint did not yield a LogicalRDD leaf (got ${other.nodeName}); " +
-          "its blocks cannot be tracked for release")
-    }
+    pendingRdds.add(checkpointRdd(cp))
     cp
+  }
+
+  /** The RDD that holds a `localCheckpoint`ed frame's blocks: its
+    * LogicalRDD leaf. Unpersisting it releases the checkpoint, which a
+    * caller that owns the frame's whole lifetime can do itself instead of
+    * waiting for the [[unpersistCaches]] drain.
+    */
+  private[graft] def checkpointRdd(cp: DataFrame): RDD[_] = cp.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd
+    // an untracked checkpoint's blocks would outlive every release
+    case other => throw new IllegalStateException(
+      s"localCheckpoint did not yield a LogicalRDD leaf (got ${other.nodeName}); " +
+        "its blocks cannot be tracked for release")
   }
 
   /** Unpersist every tracked cache created since the last call — see the

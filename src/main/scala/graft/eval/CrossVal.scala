@@ -8,6 +8,7 @@ import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 
 import graft.core.DEMV
 import graft.data.DatasetSpec
+import graft.etl.CacheTracker
 import graft.metrics.{FairnessMetrics, GroupCondition, MetricsResult}
 
 /** One (fold, stop) evaluation record — the row shape of the reference's
@@ -128,10 +129,24 @@ object CrossVal {
   }
 
   /** E2 + E5 + E9: k-fold CV; `method` = "biased" (train as-is) or "demv"
-    * (balance the train folds first). Returns one MetricRow per fold.
+    * (balance the train folds first). Returns one MetricRow per fold and
+    * repetition, in fold order and then repetition order.
     *
     * The reference re-runs DEMV `repetitions` times per fold to average its
     * stochasticity (`utils.py:231-239`); we re-seed per repetition.
+    *
+    * Folds are independent, so `min(k, defaultParallelism)` of them run at
+    * once on driver threads named `crossval-fold-<i>` (the pattern of
+    * spark.ml's `CrossValidator` `parallelism` param): one fold is a dozen
+    * tiny jobs whose driver-side planning would otherwise leave the
+    * executors idle. The rows do not depend on the thread count. Each
+    * fold's jobs carry the description "CrossVal fold <fold>/<k>".
+    *
+    * Failure contract: once a fold throws, no further fold starts; the call
+    * waits for the folds in flight to finish, releases its cache and
+    * rethrows the first failing fold's own exception, unwrapped (e.g.
+    * DEMV's empty-cell `IllegalStateException`). No fold thread outlives
+    * the call.
     */
   def crossVal(
       spec: DatasetSpec,
@@ -143,60 +158,105 @@ object CrossVal {
       seed: Long = 2L): Seq[MetricRow] = {
     val labelCol = spec.label
     val featureCols = spec.df.columns.filterNot(_ == labelCol).toSeq
-    val allLabels = labelValues(spec.df, labelCol)
-    val numClasses = allLabels.length
     val folded = withFolds(spec.df, k, seed).cache()
+    val sc = spec.df.sparkSession.sparkContext
     try {
-      (0 until k).flatMap { fold =>
-        val test = folded.where(col("__fold") === fold).drop("__fold")
-        val trainBase = folded.where(col("__fold") =!= fold).drop("__fold")
-        (0 until repetitions).map { rep =>
-          // "eg"/"grid" are in-processing reductions (reference
-          // `generatemetrics.py:101-131`): the fair model IS the method, so
-          // they bypass the plain classifier pipeline. Both train a
-          // logistic learner internally (matching BASELINE.md's eg/grid
-          // rows); `classifier` is ignored for them.
-          val pred = method match {
-            case "eg" =>
-              val ens = Reductions.ExponentiatedGradient.fitEnsemble(
-                indexLabel(trainBase, labelCol, allLabels), featureCols, "__y",
-                spec.sensitiveVars, bound = 0.1, seed = seed + fold * 31 + rep)
-              mapPredictionBack(ens.transform(indexLabel(test, labelCol, allLabels)), allLabels)
-            case "grid" =>
-              val fitted = Reductions.GridSearch.fit(
-                indexLabel(trainBase, labelCol, allLabels), featureCols, "__y",
-                spec.sensitiveVars, spec.unprivGroup, bound = 0.1)
-              mapPredictionBack(fitted.transform(indexLabel(test, labelCol, allLabels)), allLabels)
-            case _ =>
-              val balanced = method match {
-                case "biased" => trainBase
-                case "demv" | "random" =>
-                  new DEMV(spec.sensitiveVars, stop = stop, seed = seed + fold * 31 + rep,
-                    shuffleOutput = false).fitTransform(trainBase, labelCol)
-                case "uniform" | "smote" | "adasyn" =>
-                  new DEMV(spec.sensitiveVars, stop = stop, seed = seed + fold * 31 + rep,
-                    shuffleOutput = false, strategy = method).fitTransform(trainBase, labelCol)
-                case other => throw new IllegalArgumentException(s"Unknown method '$other'")
-              }
-              // balancer output is a per-cell union plan; on wide datasets
-              // (adult: ~100 one-hot columns x 8 cells) Catalyst re-analysis
-              // of that tree per ml action dominates wall time (measured:
-              // minutes of pure driver plan-transform CPU). The fit
-              // materializes the frame anyway — truncate the lineage first.
-              val train = if (method == "biased") balanced else balanced.localCheckpoint()
-              val model = pipeline(classifier, featureCols, "__y", numClasses)
-                .fit(indexLabel(train, labelCol, allLabels))
-              mapPredictionBack(
-                model.transform(indexLabel(test, labelCol, allLabels)), allLabels)
-          }
-          val m = FairnessMetrics.compute(
-            pred, spec.sensitiveVars, GroupCondition(spec.unprivGroup),
-            "prediction", labelCol, spec.positiveLabel)
-          MetricRow(fold, stop, m.statisticalParity, m.equalizedOdds,
-            m.zeroOneLossDiff, m.disparateImpact, m.accuracy)
-        }
+      // this job fills `folded`'s cache (and any lazy checkpoint of
+      // spec.df) before the folds fork, so no two folds race to fill it
+      val allLabels = labelValues(folded, labelCol)
+      val numClasses = allLabels.length
+      def score(fold: Int, pred: DataFrame): MetricRow = {
+        val m = FairnessMetrics.compute(
+          pred, spec.sensitiveVars, GroupCondition(spec.unprivGroup),
+          "prediction", labelCol, spec.positiveLabel)
+        MetricRow(fold, stop, m.statisticalParity, m.equalizedOdds,
+          m.zeroOneLossDiff, m.disparateImpact, m.accuracy)
       }
+      inParallel(k, math.min(k, sc.defaultParallelism)) { fold =>
+        sc.setJobDescription(s"CrossVal fold $fold/$k")
+        try {
+          val test = folded.where(col("__fold") === fold).drop("__fold")
+          val trainBase = folded.where(col("__fold") =!= fold).drop("__fold")
+          (0 until repetitions).map { rep =>
+            // "eg"/"grid" are in-processing reductions (reference
+            // `generatemetrics.py:101-131`): the fair model IS the method, so
+            // they bypass the plain classifier pipeline. Both train a
+            // logistic learner internally (matching BASELINE.md's eg/grid
+            // rows); `classifier` is ignored for them.
+            method match {
+              case "eg" =>
+                val ens = Reductions.ExponentiatedGradient.fitEnsemble(
+                  indexLabel(trainBase, labelCol, allLabels), featureCols, "__y",
+                  spec.sensitiveVars, bound = 0.1, seed = seed + fold * 31 + rep)
+                score(fold, mapPredictionBack(
+                  ens.transform(indexLabel(test, labelCol, allLabels)), allLabels))
+              case "grid" =>
+                val fitted = Reductions.GridSearch.fit(
+                  indexLabel(trainBase, labelCol, allLabels), featureCols, "__y",
+                  spec.sensitiveVars, spec.unprivGroup, bound = 0.1)
+                score(fold, mapPredictionBack(
+                  fitted.transform(indexLabel(test, labelCol, allLabels)), allLabels))
+              case _ =>
+                val balanced = method match {
+                  case "biased" => trainBase
+                  case "demv" | "random" =>
+                    new DEMV(spec.sensitiveVars, stop = stop, seed = seed + fold * 31 + rep,
+                      shuffleOutput = false).fitTransform(trainBase, labelCol)
+                  case "uniform" | "smote" | "adasyn" =>
+                    new DEMV(spec.sensitiveVars, stop = stop, seed = seed + fold * 31 + rep,
+                      shuffleOutput = false, strategy = method).fitTransform(trainBase, labelCol)
+                  case other => throw new IllegalArgumentException(s"Unknown method '$other'")
+                }
+                def fitAndScore(train: DataFrame): MetricRow = {
+                  val model = pipeline(classifier, featureCols, "__y", numClasses)
+                    .fit(indexLabel(train, labelCol, allLabels))
+                  score(fold, mapPredictionBack(
+                    model.transform(indexLabel(test, labelCol, allLabels)), allLabels))
+                }
+                if (method == "biased") fitAndScore(balanced)
+                else {
+                  // balancer output is a per-cell union plan; on wide datasets
+                  // (adult: ~100 one-hot columns x 8 cells) Catalyst re-analysis
+                  // of that tree per ml action dominates wall time (measured:
+                  // minutes of pure driver plan-transform CPU). The fit
+                  // materializes the frame anyway — truncate the lineage first,
+                  // and release the checkpoint once the fold is scored.
+                  val train = balanced.localCheckpoint()
+                  val blocks = CacheTracker.checkpointRdd(train)
+                  try fitAndScore(train) finally blocks.unpersist()
+                }
+            }
+          }
+        } finally sc.setJobDescription(null)
+      }.flatten
     } finally folded.unpersist()
+  }
+
+  /** `body(0) .. body(n - 1)` on `threads` daemon threads made for this
+    * call, results in index order. A failure stops new indices from
+    * starting; the threads are joined before the first failure is
+    * rethrown.
+    */
+  private def inParallel[T](n: Int, threads: Int)(body: Int => T): Seq[T] = {
+    val results = new java.util.concurrent.ConcurrentHashMap[Int, T]()
+    val next = new java.util.concurrent.atomic.AtomicInteger()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val workers = (0 until threads).map { t =>
+      val w = new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < n && failure.get == null) {
+          try results.put(i, body(i))
+          catch { case e: Throwable => failure.compareAndSet(null, e) }
+          i = next.getAndIncrement()
+        }
+      }, s"crossval-fold-$t")
+      w.setDaemon(true)
+      w.start()
+      w
+    }
+    workers.foreach(_.join())
+    Option(failure.get).foreach(e => throw e)
+    (0 until n).map(results.get)
   }
 
   /** E6: convergence sweep — run `crossVal(method="demv")` for

@@ -1,7 +1,13 @@
 package graft.eval
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import graft.core.DEMV
 import graft.data.{DatasetSpec, Generator}
+import graft.etl.CacheTracker
+import graft.metrics.{FairnessMetrics, GroupCondition}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class CrossValSpec extends SparkSpec {
@@ -55,6 +61,88 @@ class CrossValSpec extends SparkSpec {
     val rows = CrossVal.crossVal(spec, "gradient", method = "biased", k = 2)
     assert(rows.length === 2)
     rows.foreach(r => assert(r.acc > 0.6))
+  }
+
+  private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def foldThreadsAlive: Seq[String] = Thread.getAllStackTraces.keySet.asScala.toSeq
+    .filter(t => t.getName.startsWith("crossval-fold-") && t.isAlive).map(_.getName)
+
+  /** crossVal's body for method "demv", one repetition, one fold at a
+    * time, through the same public functions.
+    */
+  private def replay(spec: DatasetSpec, k: Int, seed: Long): Seq[MetricRow] = {
+    val labelCol = spec.label
+    val featureCols = spec.df.columns.filterNot(_ == labelCol).toSeq
+    val allLabels = CrossVal.labelValues(spec.df, labelCol)
+    val folded = CrossVal.withFolds(spec.df, k, seed).cache()
+    try (0 until k).map { fold =>
+      val test = folded.where(col("__fold") === fold).drop("__fold")
+      val trainBase = folded.where(col("__fold") =!= fold).drop("__fold")
+      val train = new DEMV(spec.sensitiveVars, seed = seed + fold * 31, shuffleOutput = false)
+        .fitTransform(trainBase, labelCol).localCheckpoint()
+      try {
+        val model = CrossVal.pipeline("logistic", featureCols, "__y", allLabels.length)
+          .fit(CrossVal.indexLabel(train, labelCol, allLabels))
+        val pred = CrossVal.mapPredictionBack(
+          model.transform(CrossVal.indexLabel(test, labelCol, allLabels)), allLabels)
+        val m = FairnessMetrics.compute(pred, spec.sensitiveVars,
+          GroupCondition(spec.unprivGroup), "prediction", labelCol, spec.positiveLabel)
+        MetricRow(fold, 10000L, m.statisticalParity, m.equalizedOdds, m.zeroOneLossDiff,
+          m.disparateImpact, m.accuracy)
+      } finally CacheTracker.checkpointRdd(train).unpersist()
+    } finally folded.unpersist()
+  }
+
+  test("concurrent folds: same rows on every call and as a fold-at-a-time replay") {
+    val a = CrossVal.crossVal(spec, "logistic", method = "demv", k = 4, seed = 5)
+    val b = CrossVal.crossVal(spec, "logistic", method = "demv", k = 4, seed = 5)
+    assert(a.map(_.fold) === (0 until 4))
+    assert(a === b)
+    assert(a === replay(spec, 4, seed = 5))
+  }
+
+  test("demv CV releases its cache and every fold's training checkpoint") {
+    val before = persistentRdds
+    CrossVal.crossVal(spec, "logistic", method = "demv", k = 3)
+    assert(persistentRdds === before)
+  }
+
+  test("every fold labels its jobs with its fold number") {
+    val labels = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val tap = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    val want = (0 until 3).map(f => s"CrossVal fold $f/3").toSet
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      CrossVal.crossVal(spec, "logistic", method = "demv", k = 3)
+      // the listener bus is asynchronous
+      val deadline = System.currentTimeMillis() + 15000
+      while (!want.subsetOf(labels.asScala) && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+    } finally spark.sparkContext.removeSparkListener(tap)
+    assert(want.subsetOf(labels.asScala), s"job labels seen: ${labels.asScala.toSeq.sorted}")
+  }
+
+  test("a failing fold's own exception is rethrown and no fold thread outlives the call") {
+    // (s1 = 1, y = 1) holds one row, so the training fold without it has
+    // an empty DEMV cell
+    val base = spec.df.drop("s2")
+    val one = base.where(col("s1") === 1 && col("y") === 1).limit(1)
+    val df = base.where(!(col("s1") === 1 && col("y") === 1)).unionByName(one).localCheckpoint()
+    val lone = DatasetSpec(df, "y", 1, Seq("s1"), Map("s1" -> 0), 10)
+    try {
+      val before = persistentRdds
+      val e = intercept[IllegalStateException] {
+        CrossVal.crossVal(lone, "logistic", method = "demv", k = 2)
+      }
+      assert(e.getMessage.contains("(s1=1, y=1)"), e.getMessage)
+      assert(foldThreadsAlive.isEmpty, s"alive: $foldThreadsAlive")
+      assert(persistentRdds === before)
+    } finally CacheTracker.checkpointRdd(df).unpersist()
   }
 
   test("writeMetrics uses the reference naming contract") {
