@@ -1,18 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // SPARK_GRAFT_BENCH_ONLY: comma-separated query-name subset, for runs
     // against partial data dirs (e.g. the sf10 pair-finding decade, where
     // only documents+embeddings exist at that scale)
@@ -44,39 +34,25 @@ object Bench {
     // back-to-back timings of one query never share a transient stall.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // noop sink materializes every column (count() would let Spark
-      // prune the projection and under-measure the real work)
-      try {
+    val byPass = (1 to passes).map { _ =>
+      Harness.eachQuery(timedQueries) { (_, fn) =>
+        val t0 = System.nanoTime()
+        // noop sink materializes every column (count() would let Spark
+        // prune the projection and under-measure the real work)
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } catch {
-        case t: Throwable =>
+      }.map {
+        case (_, Right(sec)) => sec
+        case (name, Left(t)) =>
           // -1 sentinel: a broken query must not masquerade as a fast one
           System.err.println(s"BENCH FAIL $name: $t")
           t.printStackTrace()
           -1.0
-      } finally {
-        // Drop operator-internal caches BETWEEN queries (CacheTracker's
-        // documented long-lived-session contract): without this, pass 2
-        // of every caching query resolves against pass 1's still-live
-        // cache (CacheManager matches the identical re-built plan), so
-        // best-of-N records a warm in-memory read instead of the cold
-        // plan, and dozens of MEMORY_AND_DISK caches accumulate across
-        // the session (r11 measurement-integrity finding). Outside the
-        // timed window: cleanup is not the query's cost.
-        graft.etl.CacheTracker.unpersistCaches(blocking = true)
       }
     }
-    val ordered = timedQueries.toSeq.sortBy(_._1)
-    val byPass = (1 to passes).map { _ =>
-      ordered.map { case (name, fn) => timeOne(name, fn) }
-    }
-    val results = ordered.zipWithIndex.map { case ((name, _), i) =>
-      val ts = byPass.map(_(i))
+    val results = timedQueries.keys.toSeq.sorted.zip(byPass.transpose).map {
       // any failed pass poisons the query: report the sentinel, not a min
-      name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
+      case (name, ts) => name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
     }
     // 3-decimal per-query times: ms precision is all the best-of-N signal
     // carries, and it keeps the JSON line short enough that the summary

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.data.Export
@@ -42,27 +42,17 @@ object CurateCorpus {
       "usage: CurateCorpus <inDir> <outDir> [--min-quality q] [--chunk-words n] [--bench-mod m] [--ngram n] [--max-per-file n] [--max-per-source n]")
     val inDir = args(0)
     val outDir = args(1)
-    val known = Set("--min-quality", "--chunk-words", "--bench-mod", "--ngram", "--max-per-file", "--max-per-source", "--unicode")
-    val flagArgs = args.drop(2)
-    require(flagArgs.length % 2 == 0 && flagArgs.grouped(2).forall(p => known(p(0))),
-      s"unrecognized or value-less flag in ${flagArgs.mkString(" ")}; known: ${known.toSeq.sorted.mkString(", ")}")
-    def opt(flag: String, default: String): String =
-      args.sliding(2).collectFirst { case Array(`flag`, v) => v }.getOrElse(default)
-    val minQuality = opt("--min-quality", "0.7").toDouble
-    val chunkWords = opt("--chunk-words", "10").toInt
-    val benchMod = opt("--bench-mod", "17").toInt
-    val ngram = opt("--ngram", "5").toInt
-    val maxPerFile = opt("--max-per-file", "100000").toInt
-    val maxPerSource = opt("--max-per-source", "0").toInt
-    val unicode = opt("--unicode", "false").toBoolean
+    val flags = Cli.flags(args.toSeq.drop(2), Set("--min-quality", "--chunk-words", "--bench-mod",
+      "--ngram", "--max-per-file", "--max-per-source", "--unicode"))
+    val minQuality = flags.getOrElse("--min-quality", "0.7").toDouble
+    val chunkWords = flags.getOrElse("--chunk-words", "10").toInt
+    val benchMod = flags.getOrElse("--bench-mod", "17").toInt
+    val ngram = flags.getOrElse("--ngram", "5").toInt
+    val maxPerFile = flags.getOrElse("--max-per-file", "100000").toInt
+    val maxPerSource = flags.getOrElse("--max-per-source", "0").toInt
+    val unicode = flags.getOrElse("--unicode", "false").toBoolean
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-curate").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session()
     try {
       val docs = spark.read.parquet(s"$inDir/documents.parquet")
       val stats = run(docs, outDir, minQuality, chunkWords, benchMod, ngram, maxPerFile,

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.data.Datasets
 import graft.eval.ConfusionMatrices
 import graft.metrics.GroupCondition
@@ -18,6 +17,8 @@ import graft.metrics.GroupCondition
   * }}}
   */
 object GenerateCM {
+  private[cli] val valueFlags = Set("--classifier", "--data-dir", "--out-dir", "--folds")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GenerateCM <dataset> <debiaser> [--classifier c] [--data-dir d] [--out-dir o] [--folds k]")
     val dataset = args(0)
@@ -27,20 +28,13 @@ object GenerateCM {
     val knownDebiasers = Set("biased", "demv", "eg", "grid", "blackbox", "blackbox_eqodds")
     require(knownDebiasers.contains(debiaser),
       s"unknown debiaser '$debiaser'; expected one of ${knownDebiasers.toSeq.sorted.mkString(", ")}")
-    def opt(flag: String, default: String): String =
-      args.sliding(2).collectFirst { case Array(`flag`, v) => v }.getOrElse(default)
-    val classifier = opt("--classifier", "logistic")
-    val dataDir = opt("--data-dir", "data")
-    val outDir = opt("--out-dir", "confusionmatrices")
-    val folds = opt("--folds", "10").toInt
+    val flags = Cli.flags(args.toSeq.drop(2), valueFlags)
+    val classifier = flags.getOrElse("--classifier", "logistic")
+    val dataDir = flags.getOrElse("--data-dir", "data")
+    val outDir = flags.getOrElse("--out-dir", "confusionmatrices")
+    val folds = flags.getOrElse("--folds", "10").toInt
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session()
 
     // the reference's generatecm always loads with 2 features
     // (confusionmatrix.py:216)

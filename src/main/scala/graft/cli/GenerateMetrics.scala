@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.data.Datasets
 import graft.eval.CrossVal
 
@@ -20,46 +19,27 @@ import graft.eval.CrossVal
   * (the reference's naming contract, `generatemetrics.py:251-262`).
   */
 object GenerateMetrics {
+  private[cli] val valueFlags = Set("--classifier", "--data-dir", "--out-dir", "--folds", "--reps")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: GenerateMetrics <dataset> <method> <numberOfFeatures> [--classifier c] [--data-dir d] [--out-dir o] [--folds k] [--reps n] [--sweep]")
     val dataset = args(0)
     val method = args(1)
     val nFeatures = args(2).toInt
-    // reject typoed flags (same pattern as GenerateCM): a silently-ignored
-    // `--fold 5` would run with defaults and mislabel the artifact
-    val valueFlags = Set("--classifier", "--data-dir", "--out-dir", "--folds", "--reps")
-    locally {
-      val rest = args.drop(3)
-      var i = 0
-      while (i < rest.length) rest(i) match {
-        case "--sweep" => i += 1
-        case f if valueFlags(f) && i + 1 < rest.length => i += 2
-        case f => throw new IllegalArgumentException(
-          s"unrecognized or value-less flag '$f'; known: " +
-            (valueFlags + "--sweep").toSeq.sorted.mkString(", "))
-      }
-    }
-    def opt(flag: String, default: String): String =
-      args.sliding(2).collectFirst { case Array(`flag`, v) => v }.getOrElse(default)
-    val classifier = opt("--classifier", "logistic")
-    val dataDir = opt("--data-dir", "data")
-    val outDir = opt("--out-dir", "ris")
-    val folds = opt("--folds", "10").toInt
-    val reps = opt("--reps", "1").toInt
-    val sweep = args.contains("--sweep")
+    val flags = Cli.flags(args.toSeq.drop(3), valueFlags, switches = Set("--sweep"))
+    val classifier = flags.getOrElse("--classifier", "logistic")
+    val dataDir = flags.getOrElse("--data-dir", "data")
+    val outDir = flags.getOrElse("--out-dir", "ris")
+    val folds = flags.getOrElse("--folds", "10").toInt
+    val reps = flags.getOrElse("--reps", "1").toInt
+    val sweep = flags.contains("--sweep")
     // --sweep always runs the DEMV convergence sweep; any other method
     // label would stamp sweep rows with the wrong experiment name
     require(!sweep || method == "demv",
       s"--sweep runs the DEMV sweep; pass method 'demv' (got '$method') so the output file is labeled correctly")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session()
 
     val spec = Datasets.get(spark, dataset, dataDir, nFeatures)
     val rows =

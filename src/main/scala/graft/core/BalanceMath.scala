@@ -110,83 +110,10 @@ object BalanceMath {
     }
     // maxIterHit = the budget expired: all `stop` iterations consumed, OR
     // stop == 0 on a cell that still needed walking. A cell already
-    // converged at entry (disp == 1, zero iterations) never hits the cap —
-    // without the `disp != 1.0` clause, stop == 0 would flag EVERY cell
-    // (evalDemv's sweep starts at stop = 0) and diverge from
-    // balanceCellFast's (g0, 0, false).
+    // converged at entry (disp == 1, zero iterations) never hits the cap,
+    // whatever `stop` is — without the `disp != 1.0` clause, stop == 0
+    // would flag EVERY cell (evalDemv's sweep starts at stop = 0).
     BalanceResult(size, i, trace.result(),
       maxIterHit = i == stop && (stop > 0 || disp != 1.0), traceTruncated = truncated)
-  }
-
-  /** Closed-form target size, usable when `stop` (and hence the walk) is too
-    * long to replay step-by-step. Returns the same (targetSize, iters,
-    * maxIterHit) as [[balanceCell]] without materializing the trace.
-    *
-    * The walk from g0 moves size toward `wExp * total` one step at a time and
-    * stops at the first size whose rounded disparity is 1. Because the raw
-    * ratio is strictly monotone in size, the stopping size — or the point
-    * where the walk overshoots and starts oscillating — is found by binary
-    * search in O(log range).
-    */
-  def balanceCellFast(
-      wExp: Double,
-      g0: Long,
-      total: Long,
-      roundLevel: Int,
-      stop: Long): (Long, Long, Boolean) = {
-    val d0 = disparity(wExp, g0, total, roundLevel)
-    if (d0 == 1.0) return (g0, 0L, false)
-    if (stop == 0) return (g0, 0L, true)
-    val up = rawRatio(wExp, g0, total) > 1
-    // "the walk stops or flips direction at size s":
-    //   up-walk:   disp(s)==1 (converged) or raw(s) < 1 (overshoot -> flip)
-    //   down-walk: disp(s)==1 or raw(s) > 1
-    // raw is strictly decreasing in s, so each predicate is monotone in s:
-    // up-walk true for all s >= T, down-walk true for all s <= T.
-    def stopsAt(s: Long): Boolean = {
-      val d = disparity(wExp, s, total, roundLevel)
-      d == 1.0 || (if (up) rawRatio(wExp, s, total) < 1 else rawRatio(wExp, s, total) > 1)
-    }
-    if (up) {
-      // `stop` may be an "effectively unbounded" sentinel (Long.MaxValue);
-      // clamp the SEARCH ceiling so `g0 + budget + 1` and the doubling
-      // probe can never overflow. The walk's true stopping point is
-      // bounded by ~wExp*total << the clamp, so when the clamp is active
-      // the budget-expiry branch (which uses the unclamped `stop`) is
-      // unreachable and every return value stays exact.
-      val budget = math.min(stop, (Long.MaxValue >> 2) - g0)
-      // T = smallest s > g0 with stopsAt(s); exponential then binary search.
-      var b = g0 + 1
-      while (!stopsAt(b) && b <= g0 + budget) b = math.min(b * 2, g0 + budget + 1)
-      if (!stopsAt(b)) return (g0 + stop, stop, true) // budget expires mid-walk
-      var a = g0 + 1
-      while (a < b) { val m = a + (b - a) / 2; if (stopsAt(m)) b = m else a = m + 1 }
-      val t = a
-      val steps = t - g0
-      if (steps > stop) (g0 + stop, stop, true)
-      else if (disparity(wExp, t, total, roundLevel) == 1.0) (t, steps, steps == stop)
-      else { // overshot the rounding window: oscillates t-1 <-> t until stop
-        val rem = stop - steps
-        (if (rem % 2 == 1) t - 1 else t, stop, true)
-      }
-    } else {
-      // T = largest s < g0 with stopsAt(s) (predicate downward-closed).
-      if (!stopsAt(1)) {
-        // walk never stops: sizes g0-1 ... 1 then 0 ends the loop. i only
-        // increments while size stays >= 1 (reference demv/helpers.py:18-26).
-        return if (stop <= g0 - 1) (g0 - stop, stop, true) else (0L, g0 - 1, false)
-      }
-      var a = 1L
-      var b = g0 - 1
-      while (a < b) { val m = a + (b - a + 1) / 2; if (stopsAt(m)) a = m else b = m - 1 }
-      val t = a
-      val steps = g0 - t
-      if (steps > stop) (g0 - stop, stop, true)
-      else if (disparity(wExp, t, total, roundLevel) == 1.0) (t, steps, steps == stop)
-      else { // raw(t) > 1 but rounded disp != 1: oscillates t <-> t+1
-        val rem = stop - steps
-        (if (rem % 2 == 1) t + 1 else t, stop, true)
-      }
-    }
   }
 }

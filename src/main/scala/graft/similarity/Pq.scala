@@ -45,7 +45,7 @@ import graft.functions.{CentroidResidualExpr, NearestCentroidsExpr, PqAdcDistAtE
   * UNREFINED ADC top-k ([[adcTopK]]/[[ivfAdcTopK]]/
   * [[ivfAdcTopKResidual]]) is a CANDIDATE GENERATOR, not a finished
   * ranking — PQ codes cannot micro-rank inside tight clusters, and the
-  * measured recall@10 on the 20-cluster PqRecallBench fixture is 1.2%
+  * measured recall@10 on the 20-cluster BENCHNOTES fixture is 1.2%
   * raw / 8.8% residual without the rerank, vs 57% residual+rerank at
   * R=200 and 99% at R=cluster-size. Treat the unrefined forms as the
   * building block they are (reranking is where recall comes from;
@@ -174,7 +174,7 @@ object Pq {
     * exact top-`k` wins. PQ codes can't micro-rank inside tight
     * clusters (quantization collapses near-identical vectors onto one
     * code — measured recall@10 of 1% on a 20-cluster corpus,
-    * tools/PqRecallBench); as a CANDIDATE GENERATOR + exact rerank the
+    * BENCHNOTES.md); as a CANDIDATE GENERATOR + exact rerank the
     * recall is a tunable function of `rerank` (R = 50 already recovers
     * ~all of it there). Cost shape: the corpus scan is still
     * ADC-over-codes; the float vectors are read only for the Q x R
@@ -318,7 +318,7 @@ object Pq {
     * resolution on WITHIN-cell structure instead of re-describing the
     * coarse geometry the cell id already captures. Raw-vector codes
     * collapse a tight cluster onto one code word (measured recall@10 of
-    * ~1% intra-cluster, tools/PqRecallBench); residual codes
+    * ~1% intra-cluster, BENCHNOTES.md); residual codes
     * discriminate inside the cell. Same one-bounded-sample cost shape
     * as [[trainCodebooks]] — the cell assignment of the sample happens
     * on the driver with the kernel's own argmin.

@@ -112,8 +112,8 @@ object Similarity {
     * is still scanned once and joined on a single equi-key, so the plan
     * shape and shuffle count are unchanged at any corpus size.
     *
-    * Calibration (measured, [[graft.tools.ProbesRecallBench]], 20k
-    * vectors / numBits=8): recall@10 climbs 0.31 (maxProbes=0) → 0.55
+    * Calibration (measured, BENCHNOTES.md "Query-directed multi-probe
+    * LSH", 20k vectors / numBits=8): recall@10 climbs 0.31 (maxProbes=0) → 0.55
     * (2) → 0.66 (4) → 0.71 (full ring). `maxProbes = numBits/2` buys
     * ~89% of the full-ring recall gain at ~1/3 of the candidate
     * fan-out — the recommended starting point when tuning away from the

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 
 /** Dev tool: dump the formatted physical plan of each driver-contract query
   * and flag plan smells — missing filter/column pushdown, unexpected
   * single-partition windows, interpreted (non-codegen) projections,
-  * sort-merge joins where a broadcast was expected.
+  * sort-merge joins where a broadcast was expected. Plans come from the
+  * session Bench times (see [[graft.Harness]]).
   *
   *   runMain graft.tools.ExplainAudit [sfDir] [queryName...]
   */
@@ -14,40 +14,30 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
-        try {
-          val qe = fn(spark, sfDir).queryExecution
-          val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-          // tree-walk THROUGH the AQE wrapper (a bare executedPlan.collect
-          // visits only the AdaptiveSparkPlanExec leaf), not string
-          // heuristics: find actual single-partition windows (empty
-          // partitionSpec) and join anti-patterns
-          val globalWindows = PlanWalk.collectDeep(qe.executedPlan) {
-            case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
-          }
-          val smells = Seq(
-            s"${globalWindows.length} single-partition window(s)" -> globalWindows.nonEmpty,
-            "cartesian product" -> plan.contains("CartesianProduct"),
-            "broadcast nested loop" -> plan.contains("BroadcastNestedLoopJoin")
-          ).collect { case (s, true) => s }
-          println(s"===== $name ${if (smells.nonEmpty) smells.mkString("[SMELL: ", "; ", "]") else ""}")
-          println(plan)
-        } catch {
-          case e: Throwable => println(s"===== $name FAILED: ${e.getMessage}")
-        }
+    val spark = Harness.session()
+    val selected = SparkEntry.queries.filter { case (n, _) => only.isEmpty || only(n) }
+    Harness.eachQuery(selected) { (name, fn) =>
+      val qe = fn(spark, sfDir).queryExecution
+      val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+      // tree-walk THROUGH the AQE wrapper (a bare executedPlan.collect
+      // visits only the AdaptiveSparkPlanExec leaf), not string
+      // heuristics: find actual single-partition windows (empty
+      // partitionSpec) and join anti-patterns
+      val globalWindows = PlanWalk.collectDeep(qe.executedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec
+          if w.partitionSpec.isEmpty => w
       }
+      val smells = Seq(
+        s"${globalWindows.length} single-partition window(s)" -> globalWindows.nonEmpty,
+        "cartesian product" -> plan.contains("CartesianProduct"),
+        "broadcast nested loop" -> plan.contains("BroadcastNestedLoopJoin")
+      ).collect { case (s, true) => s }
+      println(s"===== $name ${if (smells.nonEmpty) smells.mkString("[SMELL: ", "; ", "]") else ""}")
+      println(plan)
+    }.foreach {
+      case (name, Left(e)) => println(s"===== $name FAILED: ${e.getMessage}")
+      case _ =>
+    }
     spark.stop()
   }
 }

@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.{Harness, SparkEntry}
 
 /** Dev profiling harness: run ONE declared query with the bench's exact
   * session/config/noop-sink methodology and print a per-JOB time
-  * breakdown (job id, duration, #tasks, the first line of the callsite)
+  * breakdown (job id, duration, the last stage's name and the stage count)
   * so the expensive action inside a multi-job query is attributable —
   * guide §1's "decide whether the time is going to shuffle read /
   * compute / scheduler" step, in a UI-less sandbox.
@@ -18,36 +17,22 @@ object QBench {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides any of the above
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
+    // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides any of the
+    // shared session's settings
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";"))
+    val spark = Harness.start(extraConf.foldLeft(Harness.builder()) { (b, kv) =>
       val Array(k, v) = kv.split("=", 2)
-      builder = builder.config(k.trim, v.trim)
+      b.config(k.trim, v.trim)
     })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     // per-job bookkeeping
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val site = e.stageInfos.lastOption.map(si =>
           si.name.take(60) + s" [${e.stageInfos.size} stages]").getOrElse("?")
         jobStart.put(e.jobId, (e.time, site))
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        stageTasks.put(si.stageId, (si.numTasks,
-          si.taskMetrics.executorRunTime))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         Option(jobStart.get(e.jobId)).foreach { case (t0, site) =>
@@ -61,13 +46,13 @@ object QBench {
     spark.read.parquet(s"$sfDir/documents.parquet").count()
     (1 to passes).foreach { p =>
       lines.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"== pass $p: $name $sec%.3f s")
-      lines.forEach(l => println("   " + l))
-      // cold-plan parity with Bench: drop tracked caches between passes
-      graft.etl.CacheTracker.unpersistCaches(blocking = true)
+      Harness.eachQuery(Seq(name -> fn)) { (_, fn) =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        println(f"== pass $p: $name $sec%.3f s")
+        lines.forEach(l => println("   " + l))
+      }.foreach { case (_, outcome) => outcome.fold(throw _, identity) }
     }
     spark.stop()
   }

@@ -37,14 +37,7 @@ object ScaleUp {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
     require(factor >= 1 && factor <= 1000, s"factor must be in [1, 1000], got $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     run(spark, src, dst, factor, only)
     spark.stop()
   }

@@ -1,0 +1,37 @@
+package graft.cli
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+class CliSpec extends AnyFunSuite {
+
+  test("the flag parser rejects a typoed flag against GenerateCM's flags") {
+    val e = intercept[IllegalArgumentException](
+      Cli.flags(Seq("--fold", "5"), GenerateCM.valueFlags))
+    assert(e.getMessage.contains("'--fold'"))
+    assert(Cli.flags(Seq("--folds", "5"), GenerateCM.valueFlags) === Map("--folds" -> "5"))
+  }
+
+  test("the flag parser rejects a value flag with no value") {
+    intercept[IllegalArgumentException](
+      Cli.flags(Seq("--classifier", "logistic", "--folds"), GenerateCM.valueFlags))
+    intercept[IllegalArgumentException](
+      Cli.flags(Seq("--folds", "--reps", "2"), GenerateMetrics.valueFlags))
+  }
+
+  test("the flag parser accepts GenerateMetrics' --sweep switch") {
+    val flags = Cli.flags(Seq("--folds", "3", "--sweep", "--reps", "2"),
+      GenerateMetrics.valueFlags, switches = Set("--sweep"))
+    assert(flags === Map("--folds" -> "3", "--sweep" -> "true", "--reps" -> "2"))
+    intercept[IllegalArgumentException](
+      Cli.flags(Seq("--sweep"), GenerateMetrics.valueFlags))
+  }
+
+  test("GenerateCM.main throws on a bad flag before it builds a session") {
+    val before = SparkSession.getDefaultSession
+    val e = intercept[IllegalArgumentException](
+      GenerateCM.main(Array("compas", "demv", "--fold", "5")))
+    assert(e.getMessage.contains("'--fold'"))
+    assert(SparkSession.getDefaultSession === before)
+  }
+}

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Count-oracle tests (SURVEY §5.3): a literal Scala transcription of the
   * reference's `_balance_set` loop (reference `demv/helpers.py:5-29`) is the
-  * model; [[BalanceMath.balanceCell]] and [[BalanceMath.balanceCellFast]]
-  * must match it exactly on sizes, iteration counts and traces. Property
+  * model; [[BalanceMath.balanceCell]] must match it exactly on sizes,
+  * iteration counts and traces. Property
   * cases are seeded random sweeps (no scalatest-scalacheck bridge in the
   * offline cache).
   */
@@ -107,42 +107,15 @@ class BalanceMathSpec extends AnyFunSuite {
     }
   }
 
-  test("property sweep: balanceCellFast agrees with balanceCell") {
-    val rng = new scala.util.Random(7)
-    for (_ <- 1 to 500) {
-      val total = 10L + rng.nextInt(99990)
-      val g0 = 1L + (rng.nextLong().abs % total)
-      val wExp = (0.001 + rng.nextDouble() * 0.999) * (0.001 + rng.nextDouble() * 0.999)
-      val roundLevel = rng.nextInt(3)
-      // stop = 0 included: evalDemv's sweep starts there, and it is where
-      // maxIterHit's converged-at-entry clause matters
-      val stop = Seq(0L, 10L, 1000L, 100000L)(rng.nextInt(4))
-      val slow = BalanceMath.balanceCell(wExp, g0, total, roundLevel, stop, traceLimit = 1)
-      val (size, iters, hit) = BalanceMath.balanceCellFast(wExp, g0, total, roundLevel, stop)
-      withClue(s"(wExp=$wExp g0=$g0 total=$total r=$roundLevel stop=$stop) ") {
-        assert(size === slow.targetSize)
-        assert(iters === slow.iters)
-        assert(hit === slow.maxIterHit)
-      }
-    }
-  }
-
-  test("stop=0 on an already-converged cell reports maxIterHit=false in both paths") {
-    // pick wExp so disparity(g0) rounds to exactly 1.0 at roundLevel 2
+  test("stop=0 reports maxIterHit only on an unconverged cell") {
+    // evalDemv's sweep starts at stop = 0. A cell whose disparity already
+    // rounds to exactly 1.0 (roundLevel 2) did not need the budget...
     val (wExp, g0, total) = (0.25, 250L, 1000L)
     val r = BalanceMath.balanceCell(wExp, g0, total, 2, stop = 0L)
     assert(r.targetSize === g0 && r.iters === 0L && !r.maxIterHit)
-    assert(BalanceMath.balanceCellFast(wExp, g0, total, 2, 0L) === ((g0, 0L, false)))
-  }
-
-  test("balanceCellFast survives an effectively-unbounded stop sentinel") {
-    // Long.MaxValue as 'no budget': g0 + stop + 1 must not overflow into a
-    // garbage negative targetSize
-    val (size, iters, hit) =
-      BalanceMath.balanceCellFast(0.9, 10L, 1000L, 2, Long.MaxValue)
-    assert(size > 10L && size <= 1001L, s"targetSize $size out of range")
-    assert(iters === size - 10L)
-    assert(!hit)
+    // ...while one that still needed walking ran out of it at entry
+    val u = BalanceMath.balanceCell(0.3, 10L, 100L, 1, stop = 0L)
+    assert(u.targetSize === 10L && u.iters === 0L && u.maxIterHit)
   }
 
   test("walk down to zero ends loop without final increment") {

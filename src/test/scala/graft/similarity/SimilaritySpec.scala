@@ -128,9 +128,9 @@ class SimilaritySpec extends SparkSpec {
   test("query-directed probing: maxProbes=numBits/2 keeps >=85% of full-ring recall") {
     import spark.implicits._
     // Spec-guards the calibration the lshTopK scaladoc promises (measured
-    // at 20k vectors by graft.tools.ProbesRecallBench): flipping the
-    // lowest-|margin| bits first means half the probes buy almost all the
-    // recall. A clustered corpus (like real embedding corpora) is the hard
+    // at 20k vectors, BENCHNOTES.md "Query-directed multi-probe LSH"):
+    // flipping the lowest-|margin| bits first means half the probes buy
+    // almost all the recall. A clustered corpus (like real embedding corpora) is the hard
     // case — true neighbors straddle the same hyperplanes.
     val rng = new scala.util.Random(42)
     val dim = 32

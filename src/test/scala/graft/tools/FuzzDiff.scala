@@ -30,7 +30,10 @@ import scala.util.Random
   * each paired with semantically-equivalent DuckDB SQL (the same macro
   * bodies the 73-query oracle gate already proved, generalized over the
   * fuzz parameters). Results are dumped Verify-style and compared by
-  * `tools/oracle_check.py` (column-sorted, row-sorted, cell-by-cell).
+  * `tools/oracle_check.py` (column-sorted, row-sorted, cell-by-cell):
+  *
+  *   Test/runMain graft.tools.FuzzDiff [sfDir] [outDir] [seed] [nCases]
+  *   python3 tools/oracle_check.py <sfDir> <outDir>
   *
   * Scope contracts (deliberate, documented — not silent):
   *  - Case-folding kernels (fingerprint / simhash / minhash / winnowing
@@ -1728,22 +1731,16 @@ object FuzzDiff {
   def run(spark: SparkSession, sfDir: String, outDir: String, seed: Long, nCases: Int): (Int, Seq[(String, String)]) = {
     registerViews(spark, sfDir, seed, outDir)
     val cs = cases(seed, nCases)
-    val failures = Seq.newBuilder[(String, String)]
-    var ok = 0
-    cs.foreach { c =>
-      try {
-        c.build(spark).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${c.name}")
-        ok += 1
-      } catch {
-        case e: Exception => failures += ((c.name, e.toString.take(500)))
-      }
+    val outcomes = graft.Harness.eachQuery(cs.map(c => c.name -> c)) { (_, c) =>
+      c.build(spark).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${c.name}")
     }
+    val failures = outcomes.collect { case (name, Left(e)) => (name, e.toString.take(500)) }
     val json = cs.map(c =>
         s""""${c.name}": ${com.fasterxml.jackson.databind.json.JsonMapper.builder().build().writeValueAsString(c.duckSql)}""")
       .mkString("{\n", ",\n", "\n}")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (ok, failures.result())
+    (outcomes.size - failures.size, failures)
   }
 
   def main(args: Array[String]): Unit = {
@@ -1751,13 +1748,7 @@ object FuzzDiff {
     val outDir = if (args.length > 1) args(1) else "/tmp/fuzz_out"
     val seed = if (args.length > 2) args(2).toLong else 42L
     val n = if (args.length > 3) args(3).toInt else 520
-    val spark = SparkSession.builder()
-      .appName("graft-fuzzdiff")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      .getOrCreate()
+    val spark = graft.Harness.session()
     graft.sql.GraftFunctions.register(spark)
     val (ok, failures) = run(spark, sfDir, outDir, seed, n)
     println(s"FUZZDIFF: $ok/${ok + failures.length} spark-side ok; outDir=$outDir")
