@@ -1228,7 +1228,7 @@ object SparkEntry {
         .orderBy(col("doc_id"), col("span_start"))),
 
     // q85: span removal — the cleaning half of L49: q84's spans cut out
-    // of every document by the compiled single-pass RemoveSpansExpr
+    // of every document by the compiled single-pass remove_spans
     // kernel (spans pack into one small array per affected doc; plain
     // equi-join; no corpus explode, no window). Output is the full
     // cleaned text, so the oracle is a byte-exact string compare.
@@ -2346,7 +2346,7 @@ object SparkEntry {
     // — per-subspace codebooks trained on bounded seeded samples,
     // corpus encoded to m=8 code ids in one compiled pass, ADC scoring
     // of all queries in ONE scan via a driver-built lookup table
-    // (PqAdcDistsExpr), per-query top-k as a map-side WindowGroupLimit.
+    // (Kernels.pqAdcDists), per-query top-k as a map-side WindowGroupLimit.
     // Codebooks are captured for the oracle (the q37/q65 pattern):
     // DuckDB replays code assignment (argmin + lower-code tie), the ADC
     // tables (list_dot_product of the diff with itself — ascending-i,
@@ -2396,7 +2396,7 @@ object SparkEntry {
     // reduction on the anisotropic spec fixture). Training is driver
     // alternation over the ONE bounded sample (Newton-polar
     // Procrustes); corpus/queries rotate in one compiled map-side pass
-    // (MatVecExpr), then EVERYTHING downstream is the verified q121
+    // (Kernels.matVec), then EVERYTHING downstream is the verified q121
     // machinery. Oracle = the q121 replay over rotated vectors with
     // the rotation's column vectors captured as VALUES.
     "q132_opq_ann" -> ((s, dir) => {
@@ -2489,7 +2489,7 @@ object SparkEntry {
     // rotation CTE (rotated vectors), the q123 residual-ADC replay
     // over them (rank <= rerank as candidates), and a plain exact
     // squared-L2 rerank (list_dot_product of the diff with itself —
-    // bit-identical to Dist2Expr's ascending-i loop).
+    // bit-identical to the dist2 kernel's ascending-i loop).
     "q134_ann_opq_ivfpq_refined" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
@@ -3250,7 +3250,7 @@ object SparkEntry {
   /** DuckDB replica of the q132 OPQ+PQ pipeline: the q121 ADC replay
     * over ROTATED vectors — the captured rotation's COLUMN vectors as
     * VALUES, each rotated coordinate a list_dot_product(v0, column j)
-    * (ascending-i, bit-identical to the MatVecExpr kernel), assembled
+    * (ascending-i, bit-identical to the mat_vec kernel), assembled
     * in j order by the ordered list aggregate.
     */
   private def q132OracleSql(rot: Seq[Double], cbs: Seq[Seq[Double]]): String = {
@@ -3396,7 +3396,7 @@ object SparkEntry {
     * captured-rotation CTE builds the rotated vectors, the q123
     * residual-ADC replay ranks probed candidates over them, the top
     * `rerank` = 12 feed an exact squared-L2 rerank
-    * (list_dot_product(diff, diff) — bit-identical to Dist2Expr's
+    * (list_dot_product(diff, diff) — bit-identical to the dist2 kernel's
     * ascending-i accumulation over the SAME rotated doubles), and the
     * exact top-5 wins.
     */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.data.Export
 import graft.dedup.{ChunkDedup, Dedup}
-import graft.etl.Mixing
+import graft.etl.{CacheTracker, Mixing}
 import graft.functions.TextFunctions
 import graft.text.Decontaminate
 
@@ -67,7 +67,8 @@ object CurateCorpus {
     * stage read the materialized result instead of re-running the whole
     * upstream chain (without it the chunk-dedup aggregate alone would
     * execute four times — for its own count, the decontamination stages,
-    * and the export).
+    * and the export). The checkpoints are released when `run` returns,
+    * written or thrown.
     */
   def run(
       docs: DataFrame,
@@ -80,59 +81,64 @@ object CurateCorpus {
       maxPerSource: Int = 0,
       unicode: Boolean = false): Seq[(String, Long)] = {
     val input = docs.count()
+    // every stage checkpoint, released once the export is written
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    def checkpoint(stage: DataFrame): DataFrame = {
+      val cp = stage.localCheckpoint()
+      checkpoints += CacheTracker.checkpointRdd(cp)
+      cp
+    }
+    try {
+      // 1. quality gate — cheapest filter first, map-side only.
+      // --unicode threads the multilingual tier through the gate's token
+      // count and the decontamination n-grams (stage 4): on CJK corpora
+      // the ascii conventions score every doc below the gate and see no
+      // n-grams at all. Span dedup (stage 3) stays \s-token-based — its
+      // CJK modality is a separate operator concern, documented.
+      val quality = checkpoint(docs.where(
+          TextFunctions.qualityScore(col("text"), unicode) >= minQuality))
+      val nQuality = quality.count()
 
-    // 1. quality gate — cheapest filter first, map-side only.
-    // --unicode threads the multilingual tier through the gate's token
-    // count and the decontamination n-grams (stage 4): on CJK corpora
-    // the ascii conventions score every doc below the gate and see no
-    // n-grams at all. Span dedup (stage 3) stays \s-token-based — its
-    // CJK modality is a separate operator concern, documented.
-    val quality = docs.where(
-        TextFunctions.qualityScore(col("text"), unicode) >= minQuality)
-      .localCheckpoint()
-    val nQuality = quality.count()
+      // 2. exact dedup — one shuffle on uniform fingerprint keys
+      val exact = checkpoint(Dedup.exact(quality, "text", "doc_id", unicode))
+      val nExact = exact.count()
 
-    // 2. exact dedup — one shuffle on uniform fingerprint keys
-    val exact = Dedup.exact(quality, "text", "doc_id", unicode).localCheckpoint()
-    val nExact = exact.count()
+      // 3. chunk-granular substring dedup; drop docs left with no content
+      val spans = ChunkDedup.dedupSpans(exact, "doc_id", "text", chunkWords)
+        .where(col("n_kept") > 0)
+        .select(col("doc_id"), col("clean_text"))
+      val chunked = checkpoint(exact.drop("text", "n_chars")
+        .join(spans, Seq("doc_id"))
+        .withColumnRenamed("clean_text", "text"))
+      val nChunked = chunked.count()
 
-    // 3. chunk-granular substring dedup; drop docs left with no content
-    val spans = ChunkDedup.dedupSpans(exact, "doc_id", "text", chunkWords)
-      .where(col("n_kept") > 0)
-      .select(col("doc_id"), col("clean_text"))
-    val chunked = exact.drop("text", "n_chars")
-      .join(spans, Seq("doc_id"))
-      .withColumnRenamed("clean_text", "text")
-      .localCheckpoint()
-    val nChunked = chunked.count()
+      // 4. decontamination against the held-out benchmark slice
+      val bench = chunked.where(pmod(col("doc_id"), lit(benchMod)) === benchMod - 1)
+      val train = chunked.where(pmod(col("doc_id"), lit(benchMod)) =!= benchMod - 1)
+      val clean = checkpoint(Decontaminate.removeContaminated(train, bench, "doc_id", "text",
+          ngram, unicode))
+      val nClean = clean.count()
 
-    // 4. decontamination against the held-out benchmark slice
-    val bench = chunked.where(pmod(col("doc_id"), lit(benchMod)) === benchMod - 1)
-    val train = chunked.where(pmod(col("doc_id"), lit(benchMod)) =!= benchMod - 1)
-    val clean = Decontaminate.removeContaminated(train, bench, "doc_id", "text", ngram,
-        unicode)
-      .localCheckpoint()
-    val nClean = clean.count()
+      // 5. per-source cap (anti-domination); rank-filter plan gets the
+      // map-side WindowGroupLimit rewrite, so no source ever funnels whole
+      // through one task
+      val capped =
+        if (maxPerSource > 0)
+          checkpoint(Mixing.capPerGroup(clean, "source", "doc_id", maxPerSource))
+        else clean
+      val nCapped = if (maxPerSource > 0) capped.count() else nClean
 
-    // 5. per-source cap (anti-domination); rank-filter plan gets the
-    // map-side WindowGroupLimit rewrite, so no source ever funnels whole
-    // through one task
-    val capped =
-      if (maxPerSource > 0)
-        Mixing.capPerGroup(clean, "source", "doc_id", maxPerSource).localCheckpoint()
-      else clean
-    val nCapped = if (maxPerSource > 0) capped.count() else nClean
+      // 6. deterministic split assignment (engine- and retry-stable)
+      val split = Mixing.assignSplit(capped, "doc_id",
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), outCol = "split")
 
-    // 6. deterministic split assignment (engine- and retry-stable)
-    val split = Mixing.assignSplit(capped, "doc_id",
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), outCol = "split")
+      // 7. sharded export: one directory tree per (split, lang)
+      Export.writeSharded(split, outDir, Seq("split", "lang"),
+        Seq(col("doc_id")), maxPerFile)
 
-    // 7. sharded export: one directory tree per (split, lang)
-    Export.writeSharded(split, outDir, Seq("split", "lang"),
-      Seq(col("doc_id")), maxPerFile)
-
-    Seq("input" -> input, "quality" -> nQuality, "exact_dedup" -> nExact,
-      "span_dedup" -> nChunked, "decontaminated" -> nClean,
-      "per_source_cap" -> nCapped)
+      Seq("input" -> input, "quality" -> nQuality, "exact_dedup" -> nExact,
+        "span_dedup" -> nChunked, "decontaminated" -> nClean,
+        "per_source_cap" -> nCapped)
+    } finally checkpoints.foreach(_.unpersist())
   }
 }

@@ -2,11 +2,8 @@ package graft.data
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,7 +41,7 @@ object Warc {
     StructField("payload", StringType, nullable = false)))
 
   /** Parsed record array of a string/binary WARC cell. */
-  def parseRecords(c: Column): Column = toCol(WarcParseExpr(toExpr(c)))
+  def parseRecords(c: Column): Column = graft.functions.Kernels.warcParse(c)
 
   // hoisted record-boundary magic: allocated once, not per record
   private val WarcMagic: Array[Byte] =
@@ -137,26 +134,4 @@ object Warc {
   }
 
   def parseStr(s: UTF8String): ArrayData = parse(s.getBytes)
-}
-
-/** Catalyst expression behind [[Warc.parseRecords]]: string or binary
-  * in, `array<struct<warc_type,target_uri,content_length,payload>>` out.
-  */
-case class WarcParseExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string or binary column, got $t")
-  }
-  override def dataType: DataType = ArrayType(Warc.recordType, containsNull = false)
-  override def prettyName: String = "warc_parse"
-  @transient private lazy val isBinary = child.dataType == BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    if (isBinary) Warc.parse(input.asInstanceOf[Array[Byte]])
-    else Warc.parseStr(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (isBinary) defineCodeGen(ctx, ev, c => s"graft.data.Warc.parse($c)")
-    else defineCodeGen(ctx, ev, c => s"graft.data.Warc.parseStr($c)")
-  override protected def withNewChildInternal(newChild: Expression): WarcParseExpr =
-    copy(child = newChild)
 }

@@ -1,14 +1,9 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-domain boilerplate line removal — the CCNet/OSCAR-family trick:
@@ -28,8 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    into one sorted fp array per domain and joined back broadcast
   *    (`broadcastFps = false` for pathological domain counts);
   *  - removal is ONE compiled kernel pass per document
-  *    ([[StripLinesByFpExpr]], binary-search against the sorted fp
-  *    array) — document bodies are never reshuffled.
+  *    ([[graft.functions.Kernels.stripLinesByFp]], binary-search
+  *    against the sorted fp array) — document bodies are never
+  *    reshuffled.
   *
   * Conventions (engine-portable, all replayed by the q113 oracle):
   * lines split on '\n'; vote/removal key is the line stripped of ASCII
@@ -129,11 +125,11 @@ object Boilerplate {
       Array[Any](UTF8String.fromString(kept.toString), lines.length, removed))
   }
 
-  /** [[StripLinesByFpExpr]] as a Column: struct(cleaned, n_lines,
-    * n_removed).
+  /** The [[graft.functions.Kernels.stripLinesByFp]] kernel:
+    * struct(cleaned, n_lines, n_removed).
     */
   def stripLinesByFp(text: Column, fps: Column): Column =
-    toCol(StripLinesByFpExpr(toExpr(text), toExpr(fps)))
+    graft.functions.Kernels.stripLinesByFp(text, fps)
 
   /** The per-domain boilerplate fp sets: (domain, boiler_fps sorted
     * array<long>). Counting shuffles only (domain, fp, id); the
@@ -195,32 +191,4 @@ object Boilerplate {
       .withColumn("n_removed", col("__res.n_removed"))
       .drop("__res")
   }
-}
-
-/** Compiled boilerplate-line removal: text x sorted-fp-array ->
-  * struct(cleaned, n_lines, n_removed), one pass per document inside
-  * codegen. NULL text -> NULL struct; the fp array is required (pass
-  * an empty array for "no boilerplate", as [[Boilerplate
-  * .stripDomainBoilerplate]] does after its left join).
-  */
-case class StripLinesByFpExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (_: StringType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, array<long>), got ($l, $r)")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("cleaned", StringType, nullable = false),
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_removed", IntegerType, nullable = false)))
-  override def prettyName: String = "strip_lines_by_fp"
-  override protected def nullSafeEval(t: Any, f: Any): Any =
-    Boilerplate.stripByFp(t.asInstanceOf[UTF8String], f.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, f) => s"graft.dedup.Boilerplate.stripByFp($t, $f)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): StripLinesByFpExpr =
-    copy(left = newLeft, right = newRight)
 }

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import graft.functions.{Kernels, TextFunctions}
 
 /** Document deduplication at corpus scale.
   *
@@ -201,7 +201,7 @@ object Dedup {
     *  - the full SIGNATURE rides the banded self-join (fixed 8·numHashes
     *    bytes per row — the join input stays a bounded-width shuffle),
     *    so the MinHash jaccard ESTIMATE (matching-component fraction,
-    *    compiled [[graft.functions.SigMatchCountExpr]]) is computable
+    *    compiled [[graft.functions.Kernels.sigMatchCount]]) is computable
     *    IN-STAGE on every candidate row before anything wide exists;
     *  - `estFloor` (default threshold·5/8) drops candidates whose
     *    estimate can't plausibly reach `threshold`: for a TRUE pair at
@@ -268,8 +268,7 @@ object Dedup {
     val l = trimmed.alias("l")
     val r = trimmed.alias("r")
     val matches = {
-      import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-      toCol(graft.functions.SigMatchCountExpr(toExpr(col("l.sig")), toExpr(col("r.sig"))))
+      Kernels.sigMatchCount(col("l.sig"), col("r.sig"))
     }
     // checkpointed (tracked — see CacheTracker.unpersistCaches): the
     // candidate-id prune reads the survivors twice
@@ -604,14 +603,8 @@ object Dedup {
   }
 
   /** Exact word-n-gram JACCARD near-dup pairs with exact-string blocking
-    * (the q41/L3 operator, factored out so the block-cap recall ladder
-    * can measure it at different caps): candidates must share at least
-    * one word-`blockN`-gram — rare across unrelated docs, dense inside
-    * near-duplicates — so the pair count follows block occupancy, not
-    * n². The blocking join and its dedup shuffle IDS + 8-byte xxhash64
-    * values only (a 2^-64 collision can only add a spurious candidate,
-    * which the exact-Jaccard filter rejects); n-gram sets re-attach to
-    * the few survivors and the set ops stay codegen'd builtins.
+    * (the q41/L3 operator, on the [[blockedNgramCandidates]] engine, so
+    * the block-cap recall ladder can measure it at different caps).
     *
     * `blockCap` keeps the `blockCap` SMALLEST ids per block (a map-side
     * WindowGroupLimit): a boilerplate blockN-gram shared by a g-doc
@@ -629,6 +622,68 @@ object Dedup {
       blockN: Int = 8,
       blockCap: Int = 64,
       minJaccard: Double = 0.2): DataFrame = {
+    val inter = size(array_intersect(col("__nga"), col("__ngb")))
+    val union = size(array_union(col("__nga"), col("__ngb")))
+    blockedNgramCandidates(df, idCol, textCol, n, blockN, blockCap)
+      .select(col("id_a"), col("id_b"),
+        when(union === 0, lit(0.0))
+          .otherwise(round(inter.cast("double") / union.cast("double"), 6)).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
+  }
+
+  /** N-gram CONTAINMENT pairs — Broder's second resemblance measure
+    * (1997, "On the resemblance and containment of documents"):
+    * `C(a in b) = |grams(a) ∩ grams(b)| / |grams(a)|`. The asymmetric
+    * axis symmetric Jaccard (q41/L3) is blind to: a short document
+    * quoted whole inside a long one scores near-zero Jaccard (the union
+    * is huge) but containment ~1 — the quoted-boilerplate /
+    * doc-inside-doc modality of exact-substring dedup, at SET rather
+    * than SPAN granularity (the span sibling is L49).
+    *
+    * Same [[blockedNgramCandidates]] engine as [[jaccardPairs]]. Output:
+    * both containment directions plus Jaccard, pairs where EITHER
+    * direction clears `minContainment`.
+    */
+  def containmentPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int = 5,
+      blockN: Int = 8,
+      blockCap: Int = 64,
+      minContainment: Double = 0.5): DataFrame = {
+    // candidates share a blockN-gram and blockN >= n, so both sets are
+    // non-empty by construction — the divisions are safe
+    val inter = size(array_intersect(col("__nga"), col("__ngb"))).cast("double")
+    val contA = inter / size(col("__nga")).cast("double")
+    val contB = inter / size(col("__ngb")).cast("double")
+    val union = size(array_union(col("__nga"), col("__ngb"))).cast("double")
+    blockedNgramCandidates(df, idCol, textCol, n, blockN, blockCap)
+      .select(col("id_a"), col("id_b"),
+        round(contA, 6).as("cont_a_in_b"),
+        round(contB, 6).as("cont_b_in_a"),
+        round(inter / union, 6).as("jaccard"))
+      .where(col("cont_a_in_b") >= minContainment ||
+        col("cont_b_in_a") >= minContainment)
+  }
+
+  /** Candidate pairs `id_a < id_b`, with their distinct word-`n`-gram
+    * sets `__nga` and `__ngb`, of documents sharing at least one
+    * word-`blockN`-gram — rare across
+    * unrelated docs, dense inside near-duplicates — so the pair count
+    * follows block occupancy, not n². The blocking join and its dedup shuffle IDS +
+    * 8-byte xxhash64 values only (a 2^-64 collision can only add a
+    * spurious candidate, which the caller's exact score rejects); n-gram
+    * sets re-attach to the few survivors and the set ops stay codegen'd
+    * builtins. `blockCap` keeps the smallest ids per block.
+    */
+  private def blockedNgramCandidates(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      blockN: Int,
+      blockCap: Int): DataFrame = {
     require(n >= 1 && blockN >= n,
       s"need blockN >= n >= 1 (blockN is the minimum shared run), got n=$n blockN=$blockN")
     require(blockCap >= 2, s"blockCap must be >= 2, got $blockCap")
@@ -658,83 +713,9 @@ object Dedup {
       cand.select(col("id_a").as(idCol))
         .union(cand.select(col("id_b").as(idCol))).distinct())
     val sets = d.select(col(idCol), col("__ng")).join(candIds, Seq(idCol))
-    val withSets = cand
+    cand
       .join(sets.select(col(idCol).as("id_a"), col("__ng").as("__nga")), Seq("id_a"))
       .join(sets.select(col(idCol).as("id_b"), col("__ng").as("__ngb")), Seq("id_b"))
-    val inter = size(array_intersect(col("__nga"), col("__ngb")))
-    val union = size(array_union(col("__nga"), col("__ngb")))
-    withSets
-      .select(col("id_a"), col("id_b"),
-        when(union === 0, lit(0.0))
-          .otherwise(round(inter.cast("double") / union.cast("double"), 6)).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
-  }
-
-  /** N-gram CONTAINMENT pairs — Broder's second resemblance measure
-    * (1997, "On the resemblance and containment of documents"):
-    * `C(a in b) = |grams(a) ∩ grams(b)| / |grams(a)|`. The asymmetric
-    * axis symmetric Jaccard (q41/L3) is blind to: a short document
-    * quoted whole inside a long one scores near-zero Jaccard (the union
-    * is huge) but containment ~1 — the quoted-boilerplate /
-    * doc-inside-doc modality of exact-substring dedup, at SET rather
-    * than SPAN granularity (the span sibling is L49).
-    *
-    * Plan shape = q41's exactly (shared discipline): candidates must
-    * share a word-`blockN`-gram, the blocking join ships ids + 8-byte
-    * hashes only and keeps the `blockCap` smallest ids per block (a
-    * map-side WindowGroupLimit — the viral-boilerplate bound), n-gram
-    * sets re-attach to survivors, and set ops stay in codegen'd
-    * builtins. Output: both containment directions plus Jaccard, pairs
-    * where EITHER direction clears `minContainment`.
-    */
-  def containmentPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 5,
-      blockN: Int = 8,
-      blockCap: Int = 64,
-      minContainment: Double = 0.5): DataFrame = {
-    require(n >= 1 && blockN >= n,
-      s"need blockN >= n >= 1 (blockN is the minimum shared run), got n=$n blockN=$blockN")
-    require(blockCap >= 2, s"blockCap must be >= 2, got $blockCap")
-    val d = df.select(col(idCol),
-      TextFunctions.wordNgrams(col(textCol), n).as("__ng"),
-      TextFunctions.wordNgrams(col(textCol), blockN).as("__blk"))
-    val wb = Window.partitionBy(col("__b8")).orderBy(col(idCol))
-    val ex = d.select(col(idCol), explode(col("__blk")).as("__b8s"))
-      .select(col(idCol), xxhash64(col("__b8s")).as("__b8"))
-      .withColumn("__rk", row_number().over(wb))
-      .where(col("__rk") <= blockCap).drop("__rk")
-    // checkpointed (tracked — see CacheTracker.unpersistCaches)
-    val cand = graft.etl.CacheTracker.checkpointTracked(ex.alias("ca")
-      .join(ex.alias("cb"),
-        col("ca.__b8") === col("cb.__b8") &&
-          col(s"ca.$idCol") < col(s"cb.$idCol"))
-      .select(col(s"ca.$idCol").as("id_a"), col(s"cb.$idCol").as("id_b"))
-      .distinct())
-    // candidate-id prune — see [[jaccardPairs]] (same shape, same
-    // round-7 sf100 finding)
-    val candIds = broadcast(
-      cand.select(col("id_a").as(idCol))
-        .union(cand.select(col("id_b").as(idCol))).distinct())
-    val sets = d.select(col(idCol), col("__ng")).join(candIds, Seq(idCol))
-    val withSets = cand
-      .join(sets.select(col(idCol).as("id_a"), col("__ng").as("__nga")), Seq("id_a"))
-      .join(sets.select(col(idCol).as("id_b"), col("__ng").as("__ngb")), Seq("id_b"))
-    // candidates share a blockN-gram and blockN >= n, so both sets are
-    // non-empty by construction — the divisions are safe
-    val inter = size(array_intersect(col("__nga"), col("__ngb"))).cast("double")
-    val contA = inter / size(col("__nga")).cast("double")
-    val contB = inter / size(col("__ngb")).cast("double")
-    val union = size(array_union(col("__nga"), col("__ngb"))).cast("double")
-    withSets
-      .select(col("id_a"), col("id_b"),
-        round(contA, 6).as("cont_a_in_b"),
-        round(contB, 6).as("cont_b_in_a"),
-        round(inter / union, 6).as("jaccard"))
-      .where(col("cont_a_in_b") >= minContainment ||
-        col("cont_b_in_a") >= minContainment)
   }
 }
 

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-pattern blocklist matching — the mechanism behind C4-style
@@ -167,34 +162,4 @@ object AcAutomaton {
     }
     new AcAutomaton(byteClass, goto.toArray, ends.map(_.toArray).toArray)
   }
-}
-
-/** Compiled blocklist-hit counter: the Aho-Corasick pass as a Catalyst
-  * expression. The automaton is built lazily per (de)serialized
-  * expression instance and enters generated code as a plan reference
-  * object, so whole-stage codegen keeps the surrounding stage fused.
-  */
-case class BlocklistHitsExpr(
-    child: Expression,
-    patterns: Seq[String],
-    wordBounded: Boolean) extends UnaryExpression {
-
-  require(patterns.nonEmpty, "blocklist must contain at least one pattern")
-
-  @transient private lazy val auto = AcAutomaton.build(patterns)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string column, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "blocklist_hits"
-  override protected def nullSafeEval(input: Any): Any =
-    auto.countHits(input.asInstanceOf[UTF8String], wordBounded)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("acAutomaton", auto, classOf[AcAutomaton].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.countHits($c, $wordBounded)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BlocklistHitsExpr =
-    copy(child = newChild)
 }

@@ -4,11 +4,6 @@ import java.io.ByteArrayOutputStream
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** GZIP compress/decompress kernels — REAL codecs (java.util.zip is in
@@ -36,13 +31,13 @@ object Gzip {
     * decompress(compress(x)) == x roundtrip belongs in an oracle hash
     * (q93 pins exactly that), never the compressed bytes themselves.
     */
-  def gzip(c: Column): Column = toCol(GzipCompressExpr(toExpr(c)))
+  def gzip(c: Column): Column = Kernels.gzip(c)
 
   /** Decompressed bytes of a GZIP binary column; NULL on malformed or
     * truncated input or when the output would exceed `maxBytes`.
     */
   def gunzip(c: Column, maxBytes: Int = 64 * 1024 * 1024): Column =
-    toCol(GzipDecompressExpr(toExpr(c), maxBytes))
+    Kernels.gunzip(c, maxBytes)
 
   /** Decompressed TEXT of a GZIP binary column (UTF-8 bytes to string —
     * Spark's binary-to-string cast is exactly `UTF8String.fromBytes`).
@@ -93,52 +88,4 @@ object Gzip {
       }
     }
   }
-}
-
-/** Catalyst expression behind [[Gzip.gzip]]: string or binary in, GZIP
-  * binary out.
-  */
-case class GzipCompressExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string or binary column, got $t")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "gzip"
-  @transient private lazy val isBinary = child.dataType == BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    if (isBinary) Gzip.compress(input.asInstanceOf[Array[Byte]])
-    else Gzip.compressStr(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (isBinary) defineCodeGen(ctx, ev, c => s"graft.functions.Gzip.compress($c)")
-    else defineCodeGen(ctx, ev, c => s"graft.functions.Gzip.compressStr($c)")
-  override protected def withNewChildInternal(newChild: Expression): GzipCompressExpr =
-    copy(child = newChild)
-}
-
-/** Catalyst expression behind [[Gzip.gunzip]]: GZIP binary in, bytes
-  * out; NULL on malformed/truncated/over-budget input (fail-soft
-  * ingestion quarantine + zip-bomb guard).
-  */
-case class GzipDecompressExpr(child: Expression, maxBytes: Int)
-    extends UnaryExpression {
-  require(maxBytes > 0, s"maxBytes must be positive, got $maxBytes")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary column, got $t")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "gunzip"
-  override protected def nullSafeEval(input: Any): Any =
-    Gzip.decompress(input.asInstanceOf[Array[Byte]], maxBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Gzip.decompress($c, $maxBytes);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): GzipDecompressExpr =
-    copy(child = newChild)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled single-pass kernels behind the text/vector Catalyst expressions
-  * (see [[MinHashSigExpr]] etc.).
+  * (declared in [[Kernels]]).
   *
   * Spark's higher-order functions (`transform`/`aggregate`) are
   * CodegenFallback — interpreted tree-walks per element. A minhash built
@@ -336,7 +336,7 @@ object TextAlgo {
   /** Exact Jaccard of two SORTED distinct long arrays (merge-intersect). */
   /** Positions where two equal-length long arrays agree — the MinHash
     * jaccard ESTIMATE numerator (est = matches / numHashes). Compiled
-    * kernel for the candidate prefilter ([[SigMatchCountExpr]]): at
+    * kernel for the candidate prefilter ([[Kernels.sigMatchCount]]): at
     * corpus scale the banded join emits ~10-100M candidate rows and this
     * runs on every one, in-stage, before anything wide is attached.
     */
@@ -589,7 +589,7 @@ object TextAlgo {
   }
 
   /** Unicode-tier tokens as ArrayData — the kernel behind
-    * [[UnicodeTokensExpr]] / `TextFunctions.unicodeTokens`.
+    * [[Kernels.unicodeTokens]] / `TextFunctions.unicodeTokens`.
     */
   def unicodeTokens(s: UTF8String): ArrayData = {
     val toks = unicodeTokenize(s.toString)
@@ -1081,7 +1081,7 @@ object TextAlgo {
     * [[pqAdcDists]]. Same ascending-j accumulation from 0.0.
     */
   def pqAdcDistAt(codes: ArrayData, tables: Array[Double], m: Int, ksub: Int, idx: Long): Double = {
-    // idx is a public join column ([[PqAdcDistAtExpr]]): validate against
+    // idx is a public join column ([[Kernels.pqAdcDistAt]]): validate against
     // the packed table count — a silent Long->Int truncation would read a
     // wrong table (or wrap) instead of failing loudly
     val nTables = tables.length / (m * ksub)
@@ -1259,7 +1259,7 @@ object TextAlgo {
     * (floor, not round — identical semantics in any SQL engine, so the
     * oracle can replay it; round() half-way rules differ between JVM and
     * DuckDB). All-zero vectors quantize to zeros. Kept in [-127, 127].
-    * The expression form is [[graft.functions.QuantizeInt8Expr]].
+    * The expression form is [[graft.functions.Kernels.quantizeInt8]].
     */
   def quantizeInt8(v: ArrayData): ArrayData = {
     val n = v.numElements()

@@ -44,54 +44,44 @@ object TextFunctions {
 
   /** Duplicate word-n-gram fraction (intra-document repetition signal, the
     * filter LLM-corpus cleaning thresholds on) — one compiled pass
-    * ([[DupNgramFractionExpr]]).
+    * ([[Kernels.dupNgramFraction]]).
     */
-  def dupNgramFraction(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColD, expression => toExprD}
-    toColD(DupNgramFractionExpr(toExprD(c), n))
-  }
+  def dupNgramFraction(c: Column, n: Int): Column =
+    Kernels.dupNgramFraction(c, n)
 
   /** Distinct word-n-grams (exact strings) — one compiled pass
-    * ([[WordNgramsExpr]]); combine with array_intersect/array_union for
+    * ([[Kernels.wordNgrams]]); combine with array_intersect/array_union for
     * exact set similarity. `unicode = true` opts into the multilingual
     * tokenization tier (codepoint-class runs, CJK singles — see
     * [[unicodeTokens]]); the default keeps the engine-wide `\s+`-run
     * convention byte-unchanged.
     */
-  def wordNgrams(c: Column, n: Int, unicode: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColN, expression => toExprN}
-    toColN(WordNgramsExpr(toExprN(c), n, unicode))
-  }
+  def wordNgrams(c: Column, n: Int, unicode: Boolean = false): Column =
+    Kernels.wordNgrams(c, n, unicode)
 
   /** Non-overlapping word-n-chunks in document order (one compiled pass,
-    * [[WordChunksExpr]]) — the explode unit for chunk-granular exact
+    * [[Kernels.wordChunks]]) — the explode unit for chunk-granular exact
     * substring dedup ([[graft.dedup.ChunkDedup]]).
     */
-  def wordChunks(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColC, expression => toExprC}
-    toColC(WordChunksExpr(toExprC(c), n))
-  }
+  def wordChunks(c: Column, n: Int): Column =
+    Kernels.wordChunks(c, n)
 
   /** All consecutive space-joined word n-grams IN ORDER, non-distinct
-    * ([[WordNgramStreamExpr]]; [[asciiTokens]] tokenization, or
+    * ([[Kernels.wordNgramStream]]; [[asciiTokens]] tokenization, or
     * [[unicodeTokens]] with `unicode = true` — CJK bigram LMs need real
     * token pairs; n = 2 is the bigram stream; [[wordNgrams]] is the
     * distinct-set sibling) — the map-side stream for order-n LM
     * estimation.
     */
-  def wordNgramStream(c: Column, n: Int, unicode: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColS, expression => toExprS}
-    toColS(WordNgramStreamExpr(toExprS(c), n, unicode))
-  }
+  def wordNgramStream(c: Column, n: Int, unicode: Boolean = false): Column =
+    Kernels.wordNgramStream(c, n, unicode)
 
   /** Hashed (gram, prefix) pairs per consecutive word n-gram
-    * ([[NgramHashPairsExpr]]) — the fixed-width stream behind the
+    * ([[Kernels.ngramHashPairs]]) — the fixed-width stream behind the
     * hashed LM tier ([[graft.text.UnigramLm.ngramCrossEntropyHashed]]).
     */
-  def ngramHashPairs(c: Column, n: Int, unicode: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColH, expression => toExprH}
-    toColH(NgramHashPairsExpr(toExprH(c), n, unicode))
-  }
+  def ngramHashPairs(c: Column, n: Int, unicode: Boolean = false): Column =
+    Kernels.ngramHashPairs(c, n, unicode)
 
   /** Sentence array of a text column — the RAG-chunking companion to
     * [[graft.text.Chunker]]'s token windows. The simple-and-DETERMINISTIC
@@ -181,35 +171,30 @@ object TextFunctions {
   }
 
   /** Lowercased-alnum tokens (same tokenization as [[wordNgramStream]]). */
-  def asciiTokens(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColT, expression => toExprT}
-    toColT(AsciiTokensExpr(toExprT(c)))
-  }
+  def asciiTokens(c: Column): Column =
+    Kernels.asciiTokens(c)
 
   /** Unicode-tier tokens — the multilingual opt-in beside
     * [[asciiTokens]]: maximal runs of Unicode letter/mark/number
     * codepoints, CJK codepoints as single tokens (the standard
     * CC-pipeline compromise — no dictionary segmentation), ASCII-only
     * case folding (full Unicode lowercasing is engine-divergent). One
-    * compiled pass ([[UnicodeTokensExpr]]); engine-independent replay is
+    * compiled pass ([[Kernels.unicodeTokens]]); engine-independent replay is
     * `regexp_extract_all(translate(regexp_replace(text, '(CJK)', ' \1 ',
     * 'g'), 'A..Z', 'a..z'), '[\p{L}\p{M}\p{N}]+')` with
     * [[TextAlgo.CjkClass]] (q98). On `[a-z0-9 ]`-only text this equals
     * [[asciiTokens]]; on CJK text, where `\s`/`[a-z0-9]` tokenization
     * yields one giant word or nothing, it yields real tokens.
     */
-  def unicodeTokens(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColU, expression => toExprU}
-    toColU(UnicodeTokensExpr(toExprU(c)))
-  }
+  def unicodeTokens(c: Column): Column =
+    Kernels.unicodeTokens(c)
 
   /** Fraction of tokens that are (lowercased) English stopwords — one
-    * compiled pass ([[TokenSetStatsExpr]]): match count and token count in
+    * compiled pass ([[Kernels.tokenSetStats]]): match count and token count in
     * a single tokenization, no interpreted array filter.
     */
   def stopwordRatio(c: Column, stopwords: Seq[String] = defaultStopwords): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol2, expression => toExpr2}
-    val packed = toCol2(TokenSetStatsExpr(toExpr2(c), stopwords))
+    val packed = Kernels.tokenSetStats(c, stopwords)
     val matches = shiftrightunsigned(packed, 32).cast("double")
     val tokens = packed.bitwiseAND(lit(0xFFFFFFFFL)).cast("double")
     when(tokens === 0, lit(0.0)).otherwise(matches / tokens)
@@ -243,15 +228,14 @@ object TextFunctions {
     * single codegen'd expression (no shuffle, no UDF).
     */
   def langGuess(c: Column, unicode: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol2, expression => toExpr2}
     // single compiled pass over the tokens; argmax ties break in
     // declaration order, 'und' when nothing matches — identical to the
-    // when-ladder this replaces ([[LangGuessExpr]]). unicode = true
+    // when-ladder this replaces ([[Kernels.langGuess]]). unicode = true
     // uses the multilingual tier (CJK-single tokens — ideograph and
     // Hangul markers are unmatchable under \s tokenization) and the
     // extended marker table.
-    toCol2(LangGuessExpr(toExpr2(c),
-      if (unicode) multilingualLangMarkers else defaultLangMarkers, unicode))
+    val markers = if (unicode) multilingualLangMarkers else defaultLangMarkers
+    Kernels.langGuess(c, markers.map(_._2), markers.map(_._1), unicode)
   }
 
   /** Default marker-word table for [[langGuess]] — public so the SQL
@@ -295,7 +279,7 @@ object TextFunctions {
     */
   def fingerprint(c: Column, unicode: Boolean = false, nfc: Boolean = false,
       caseFold: Boolean = false): Column = {
-    // nfc = true: canonical-compose FIRST ([[NfcNormalizeExpr]]), so
+    // nfc = true: canonical-compose FIRST ([[nfcNormalize]]), so
     // composed and decomposed encodings of the same visible text get ONE
     // key — NFD text would otherwise split (ascii tier: the base letter
     // survives the strip only in decomposed form; unicode tier: \p{M}
@@ -311,31 +295,25 @@ object TextFunctions {
     else md5(regexp_replace(lower(base), "[^a-z0-9]", ""))
   }
 
-  /** Unicode simple case folding ([[CaseFoldSimpleExpr]], compiled) —
+  /** Unicode simple case folding ([[Kernels.caseFoldSimple]], compiled) —
     * the dedup-key fold tier above the ASCII-only tokenizer fold.
     */
-  def caseFoldSimple(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColF, expression => toExprF}
-    toColF(CaseFoldSimpleExpr(toExprF(c)))
-  }
+  def caseFoldSimple(c: Column): Column =
+    Kernels.caseFoldSimple(c)
 
-  /** Unicode NFC canonical composition ([[NfcNormalizeExpr]], compiled;
+  /** Unicode NFC canonical composition ([[Kernels.nfcNormalize]], compiled;
     * no-op fast path for already-normalized text).
     */
-  def nfcNormalize(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColN, expression => toExprN}
-    toColN(NfcNormalizeExpr(toExprN(c)))
-  }
+  def nfcNormalize(c: Column): Column =
+    Kernels.nfcNormalize(c)
 
   /** Raw counters for the Gopher rule-based quality gate (one compiled
-    * pass, [[GopherCountersExpr]]; slot layout in
+    * pass, [[Kernels.gopherCounters]]; slot layout in
     * [[TextAlgo.gopherCounters]]). Use [[gopherFlags]] for the thresholded
     * verdicts.
     */
-  def gopherCounters(c: Column, unicode: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColG, expression => toExprG}
-    toColG(GopherCountersExpr(toExprG(c), unicode))
-  }
+  def gopherCounters(c: Column, unicode: Boolean = false): Column =
+    Kernels.gopherCounters(c, unicode)
 
   /** Gopher rule-based quality verdicts (Rae et al. 2021, app. A1.1) as a
     * struct of per-rule failure booleans plus the combined `pass`:
@@ -385,26 +363,22 @@ object TextFunctions {
       (!fWords && !fWordLen && !fSymbol && !fBullet && !fEllipsis && !fAlpha && !fStop).as("pass"))
   }
 
-  /** Blocklist occurrence count ([[BlocklistHitsExpr]], compiled, zero
+  /** Blocklist occurrence count ([[Kernels.blocklistHits]], compiled, zero
     * shuffle): one Aho-Corasick pass over ALL patterns — the C4-style
     * "page contains a listed word" gate without K text scans. See
     * [[AcAutomaton]] for the fold/boundary conventions; `hits > 0` is
     * exact containment.
     */
   def blocklistHits(c: Column, patterns: Seq[String],
-      wordBounded: Boolean = true): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColC, expression => toExprC}
-    toColC(BlocklistHitsExpr(toExprC(c), patterns, wordBounded))
-  }
+      wordBounded: Boolean = true): Column =
+    Kernels.blocklistHits(c, patterns, wordBounded)
 
-  /** C4 line retention ([[C4KeepLinesExpr]], compiled, zero shuffle): the
+  /** C4 line retention ([[Kernels.c4KeepLines]], compiled, zero shuffle): the
     * kept lines of the page, stripped and rejoined with '\n'. See
     * [[TextAlgo.c4KeepLines]] for the rule set.
     */
-  def c4KeepLines(c: Column, minWords: Int = 5): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColC, expression => toExprC}
-    toColC(C4KeepLinesExpr(toExprC(c), minWords))
-  }
+  def c4KeepLines(c: Column, minWords: Int = 5): Column =
+    Kernels.c4KeepLines(c, minWords)
 
   private val AsciiUpper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
   private val AsciiLower = "abcdefghijklmnopqrstuvwxyz"
@@ -447,25 +421,21 @@ object TextFunctions {
   }
 
   /** Order-preserving removal of repeated lines within each document
-    * (exact equality, first occurrence wins; [[DedupLinesExpr]], compiled,
+    * (exact equality, first occurrence wins; [[Kernels.dedupLines]], compiled,
     * zero shuffle) — CCNet/RefinedWeb-style boilerplate stripping. The
     * corpus-level sibling is `dedup/ChunkDedup`.
     */
-  def dedupLines(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColL, expression => toExprL}
-    toColL(DedupLinesExpr(toExprL(c)))
-  }
+  def dedupLines(c: Column): Column =
+    Kernels.dedupLines(c)
 
   /** Remove `[start,end)` token-index spans from the text and rejoin the
-    * kept tokens with single spaces ([[RemoveSpansExpr]], compiled, zero
+    * kept tokens with single spaces ([[Kernels.removeSpans]], compiled, zero
     * shuffle) — the cleaning half of `dedup/SpanDedup`. `spans` is an
     * `array<struct<bigint,bigint>>` column; the output is whitespace-
     * normalized (see the kernel scaladoc).
     */
-  def removeSpans(text: Column, spans: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColL, expression => toExprL}
-    toColL(RemoveSpansExpr(toExprL(text), toExprL(spans)))
-  }
+  def removeSpans(text: Column, spans: Column): Column =
+    Kernels.removeSpans(text, spans)
 
   // --- HTML extraction -----------------------------------------------------
   // Like the PII patterns below: regex syntax restricted to what Java's
@@ -555,59 +525,57 @@ object TextFunctions {
       transform(sequence(lit(0), n - k), i => concat_ws(" ", slice(toks, i + 1, lit(k)))))
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-
   /** MinHash signature of the text column's k-char shingles: array<long> of
     * length `numHashes` (empty when the normalized text is shorter than k).
     * Native codegen'd expression — one pass per document, rolling shingle
-    * hashes ([[MinHashSigExpr]], [[TextAlgo.minhashSig]]). Seeded,
+    * hashes ([[Kernels.minhashSig]], [[TextAlgo.minhashSig]]). Seeded,
     * deterministic.
     */
   def minhashSignature(text: Column, shingleSize: Int, numHashes: Int, seed: Long = 42L): Column =
-    toCol(MinHashSigExpr(toExpr(text), shingleSize, numHashes, seed))
+    Kernels.minhashSig(text, shingleSize, numHashes, seed)
 
   /** Sorted distinct 64-bit shingle hashes — the set representation for
     * exact Jaccard verification via [[jaccardSorted]].
     */
   def shingleHashSet(text: Column, shingleSize: Int): Column =
-    toCol(ShingleHashSetExpr(toExpr(text), shingleSize))
+    Kernels.shingleHashSet(text, shingleSize)
 
   /** Exact Jaccard similarity of two [[shingleHashSet]] columns. */
   def jaccardSorted(a: Column, b: Column): Column =
-    toCol(JaccardSortedExpr(toExpr(a), toExpr(b)))
+    Kernels.jaccardSorted(a, b)
 
   /** Winnowing (MOSS) document fingerprints: sorted distinct window-min
     * rolling shingle hashes — any shared substring of length >=
     * shingleSize + window - 1 produces a shared fingerprint
-    * ([[WinnowingExpr]], [[TextAlgo.winnowing]]).
+    * ([[Kernels.winnowing]], [[TextAlgo.winnowing]]).
     */
   def winnowingFingerprints(text: Column, shingleSize: Int = 5, window: Int = 4): Column =
-    toCol(WinnowingExpr(toExpr(text), shingleSize, window))
+    Kernels.winnowing(text, shingleSize, window)
 
   /** Oracle-checkable winnowing (md5-derived hashes, same selection);
     * ~10x the hashing cost — see TextAlgo.winnowingPortable.
     */
   def winnowingFingerprintsPortable(text: Column, shingleSize: Int = 5, window: Int = 4): Column =
-    toCol(WinnowingPortableExpr(toExpr(text), shingleSize, window))
+    Kernels.winnowingPortable(text, shingleSize, window)
 
   /** Oracle-checkable MinHash signature (md5-base + affine permutations
     * mod 2^31-1) — see TextAlgo.minhashPortableSig.
     */
   def minhashPortableSignature(text: Column, shingleSize: Int, numHashes: Int, seed: Long = 42L): Column =
-    toCol(MinhashPortableSigExpr(toExpr(text), shingleSize, numHashes, seed))
+    Kernels.minhashPortableSig(text, shingleSize, numHashes, seed)
 
   /** Oracle-checkable shingle hash set (md5-60) for exact-Jaccard verify. */
   def shingleHashSetPortable(text: Column, shingleSize: Int): Column =
-    toCol(ShingleHashSetPortableExpr(toExpr(text), shingleSize))
+    Kernels.shingleHashSetPortable(text, shingleSize)
 
   /** Oracle-checkable 60-bit SimHash (md5 token hashes) — see
     * TextAlgo.simhash60Portable.
     */
-  def simhash60Portable(c: Column): Column = toCol(SimHash60PortableExpr(toExpr(c)))
+  def simhash60Portable(c: Column): Column = Kernels.simhash60Portable(c)
 
   /** 64-bit SimHash over whitespace tokens: bit b of the output is the sign
     * of sum over tokens of (bit b of the token hash ? +1 : -1). Native
-    * codegen'd expression ([[SimHash64Expr]], [[TextAlgo.simhash64]]).
+    * codegen'd expression ([[Kernels.simhash64]], [[TextAlgo.simhash64]]).
     */
-  def simhash64(c: Column): Column = toCol(SimHash64Expr(toExpr(c)))
+  def simhash64(c: Column): Column = Kernels.simhash64(c)
 }

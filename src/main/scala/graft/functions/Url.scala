@@ -2,11 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** URL decomposition for web-corpus curation — the keying primitives
@@ -50,7 +45,7 @@ object Url {
     * hosts keep their brackets; the port colon is only split OUTSIDE
     * a closing bracket.
     *
-    * Compiled kernel ([[UrlHostExpr]], r11): the original four-regex
+    * Compiled kernel ([[Kernels.urlHost]], r11): the original four-regex
     * chain re-inlined its whole input tree at every reference whenever
     * the optimizer substituted it into pushed-down/inferred predicates
     * (q105's generate stage grew past the 64 KB codegen limit and fell
@@ -60,10 +55,10 @@ object Url {
     * UrlKernelSpec pins equality; the q94 oracle replays the regex
     * form in DuckDB as before).
     */
-  def urlHost(c: Column): Column = toCol(UrlHostExpr(toExpr(c)))
+  def urlHost(c: Column): Column = Kernels.urlHost(c)
 
   /** The original codegen'd-builtins host parse — the engine-replayable
-    * twin [[UrlHostExpr]] must match value-for-value (UrlKernelSpec).
+    * twin [[Kernels.urlHost]] must match value-for-value (UrlKernelSpec).
     */
   private[graft] def urlHostRegex(c: Column): Column = {
     val auth = regexp_extract(c, AuthorityRe, 1)
@@ -169,10 +164,10 @@ object Url {
     * multiply-referenced extraction is non-cheap.
     */
   def registrableDomainOfHost(h: Column, suffixes: Seq[String] = PublicSuffix.Snapshot): Column =
-    toCol(RegistrableDomainOfHostExpr(toExpr(h), suffixes))
+    Kernels.registrableDomainOfHost(h, suffixes)
 
   /** The original when/isin ladder over anchored regex label extracts —
-    * the engine-replayable twin [[RegistrableDomainOfHostExpr]] must
+    * the engine-replayable twin [[Kernels.registrableDomainOfHost]] must
     * match value-for-value (UrlKernelSpec; the q94/q97 oracles replay
     * this form in DuckDB as before). Compiled kernel rationale: the
     * ladder references `h` ~2·maxK times, so any optimizer substitution
@@ -527,57 +522,4 @@ object UrlAlgo {
     }
     nullifEmpty(lastLabels(2)) // implicit `*` rule
   }
-}
-
-/** Compiled [[Url.urlHost]] — one static call per reference in codegen
-  * (see the Column function's scaladoc for why the four-regex chain had
-  * to stop being an inline tree, r11).
-  */
-case class UrlHostExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string column, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "url_host"
-  override protected def nullSafeEval(input: Any): Any =
-    UrlAlgo.host(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.UrlAlgo.host($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): UrlHostExpr =
-    copy(child = newChild)
-}
-
-/** Compiled [[Url.registrableDomainOfHost]] — the PSL longest-match walk
-  * as one static call over a preprocessed rule table (see the Column
-  * function's ladder twin for why, r11).
-  */
-case class RegistrableDomainOfHostExpr(child: Expression, suffixes: Seq[String])
-    extends UnaryExpression {
-  require(suffixes.nonEmpty, "suffix list must be non-empty")
-  @transient private lazy val rules = new UrlAlgo.PslRules(suffixes)
-  // constructor-time validation parity with the ladder tier: splitRules
-  // alone throws on malformed rules (cheap — no throwaway PslRules table
-  // built per instantiation, and Catalyst copies expressions freely)
-  Url.splitRules(suffixes)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string column, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "registrable_domain_of_host"
-  override protected def nullSafeEval(input: Any): Any =
-    UrlAlgo.registrableDomain(input.asInstanceOf[UTF8String], rules)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pslRules", rules, classOf[UrlAlgo.PslRules].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.UrlAlgo.registrableDomain($c, $ref);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): RegistrableDomainOfHostExpr =
-    copy(child = newChild)
 }

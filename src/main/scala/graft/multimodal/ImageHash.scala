@@ -1,11 +1,7 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Perceptual image hashing + Hamming-ball image near-dup (SURVEY+ L72)
   * — the image-side analogue of SimHash text dedup, the dedup step of
@@ -299,10 +295,7 @@ object ImageHash {
   /** pHash as a Column over a binary payload column; NULL for
     * undecodable payloads.
     */
-  def phash64(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    toCol(PHash64Expr(toExpr(c)))
-  }
+  def phash64(c: Column): Column = graft.functions.Kernels.imagePhash64(c)
 
   /** Image near-dup pairs under pHash — the rescale/recompress-robust
     * tier; same blocked Hamming join as [[nearDupPairs]].
@@ -330,10 +323,7 @@ object ImageHash {
   /** dHash as a Column over a binary payload column; NULL for
     * undecodable / sub-9x8 payloads.
     */
-  def dhash64(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    toCol(DHash64Expr(toExpr(c)))
-  }
+  def dhash64(c: Column): Column = graft.functions.Kernels.imageDhash64(c)
 
   /** Image near-dup pairs: (id_a, id_b, hamming <= maxHamming) over the
     * dHashes of a (idCol, bytesCol) frame. Blocked Hamming join —
@@ -510,59 +500,4 @@ object ImageHash {
       .map(id => (id, phashFixtureBytes(id)))
       .toDF("doc_id", "bytes")
   }
-}
-
-/** Compiled pHash kernel — the [[DHash64Expr]] shape with the DCT hash. */
-case class PHash64Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary column, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_phash64"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ImageHash.phash64Java(v.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |java.lang.Long ${ev.value}Boxed = graft.multimodal.ImageHash.phash64Java($c);
-      |if (${ev.value}Boxed == null) {
-      |  ${ev.isNull} = true;
-      |} else {
-      |  ${ev.value} = ${ev.value}Boxed.longValue();
-      |}""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): PHash64Expr =
-    copy(child = newChild)
-}
-
-/** Compiled dHash kernel: one decode + hash per row inside codegen; the
-  * surrounding stage stays whole-stage-generated (the decode call is a
-  * static method, like the text kernels).
-  */
-case class DHash64Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary column, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_dhash64"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ImageHash.dhash64Java(v.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |java.lang.Long ${ev.value}Boxed = graft.multimodal.ImageHash.dhash64Java($c);
-      |if (${ev.value}Boxed == null) {
-      |  ${ev.isNull} = true;
-      |} else {
-      |  ${ev.value} = ${ev.value}Boxed.longValue();
-      |}""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): DHash64Expr =
-    copy(child = newChild)
 }

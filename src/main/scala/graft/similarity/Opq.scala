@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
+import graft.functions.Kernels
 
 /** OPQ — Optimized Product Quantization (Ge, He, Ke & Sun, CVPR 2013 /
   * TPAMI 2014; FAISS's `OPQm` pre-transform): learn an ORTHOGONAL
@@ -54,7 +54,7 @@ object Opq {
     * map-side pass; R ships as a codegen reference object.
     */
   def rotate(vec: Column, r: Seq[Double], dim: Int): Column =
-    toCol(graft.functions.MatVecExpr(toExpr(vec), r, dim))
+    Kernels.matVec(vec, r, dim)
 
   /** Learn the OPQ rotation from one bounded seeded sample. Returns
     * row-major d x d R with R^T R = I (checked). Deterministic given

@@ -3,9 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
 
-import graft.functions.{CentroidResidualExpr, NearestCentroidsExpr, PqAdcDistAtExpr, PqAdcDistsExpr}
+import graft.functions.Kernels
 
 /** Product quantization for embedding ANN at corpus scale (Jégou,
   * Douze & Schmid, TPAMI 2011 — the FAISS `PQm` family): split each
@@ -23,12 +22,12 @@ import graft.functions.{CentroidResidualExpr, NearestCentroidsExpr, PqAdcDistAtE
   *    ([[Similarity.trainIvfCentroids]] on sliced subvectors — cost is
   *    corpus-size-independent);
   *  - encoding: ONE compiled map-side pass (m argmin scans per row,
-  *    [[NearestCentroidsExpr]]); codes can be persisted and reused —
+  *    [[Kernels.nearestCentroids]]); codes can be persisted and reused —
   *    the corpus's float vectors never need to be read again;
   *  - search: ADC tables build on the driver (Q x m x ksub x subDim
   *    flops — trivial for a bounded query batch), ship as ONE codegen
   *    reference object scoring ALL queries in a single corpus scan
-  *    ([[PqAdcDistsExpr]]); the per-query top-k is a map-side
+  *    ([[Kernels.pqAdcDists]]); the per-query top-k is a map-side
   *    WindowGroupLimit, so the only exchange carries candidate rows.
   *
   * Determinism/oracle contract: codebooks are deterministic given the
@@ -105,8 +104,8 @@ object Pq {
     require(m > 0 && dim % m == 0, s"dim $dim must be a multiple of m $m")
     val subDim = dim / m
     array((0 until m).map { j =>
-      toCol(NearestCentroidsExpr(
-        toExpr(slice(vec, j * subDim + 1, subDim)), codebooks(j), subDim, 1))
+      Kernels.nearestCentroids(
+        slice(vec, j * subDim + 1, subDim), codebooks(j), subDim, 1)
         .getItem(0)
     }: _*)
   }
@@ -157,7 +156,7 @@ object Pq {
       }
     }
     val codes = encode(col(vecCol), codebooks, dim)
-    val dists = toCol(PqAdcDistsExpr(toExpr(codes), tables.toSeq, m, ksub))
+    val dists = Kernels.pqAdcDists(codes, tables.toSeq, m, ksub)
     val w = Window.partitionBy(col("__qi")).orderBy(col("adc_dist"), col("vec_id"))
     corpus
       .select(col(idCol).as("vec_id"), posexplode(dists).as(Seq("__qi", "adc_dist")))
@@ -198,8 +197,7 @@ object Pq {
     val withVec = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
       .join(broadcast(cands), Seq("vec_id"))
       .join(broadcast(qv), Seq("query_id"))
-      .withColumn("dist2", toCol(graft.functions.Dist2Expr(
-        toExpr(col("__cv")), toExpr(col("__qv")))))
+      .withColumn("dist2", Kernels.dist2(col("__cv"), col("__qv")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist2"), col("vec_id"))
     withVec
       .withColumn("rank", row_number().over(w))
@@ -215,7 +213,7 @@ object Pq {
     * occupancy-scaled cell counts the per-query work is
     * corpus-size-independent. Every building block is the verified
     * one: cell assignment and query probing are the compiled strict-<
-    * argmin ([[NearestCentroidsExpr]], the q37 machinery), scoring is
+    * argmin ([[Kernels.nearestCentroids]], the q37 machinery), scoring is
     * the q121 ADC table. The probe pairs (query, cell) broadcast; the
     * only exchange is the per-query top-k rank over candidates.
     *
@@ -239,7 +237,7 @@ object Pq {
     // probes computed by the SAME compiled kernel as corpus assignment,
     // collected with the query vectors (bounded batch)
     val qRows = queries.select(col(idCol).cast("long").as("__id"),
-        toCol(NearestCentroidsExpr(toExpr(col(vecCol)), centroids, dim, nProbe)).as("__pb"),
+        Kernels.nearestCentroids(col(vecCol), centroids, dim, nProbe).as("__pb"),
         col(vecCol).as("__v"))
       .collect()
     require(qRows.nonEmpty, "query batch is empty")
@@ -269,9 +267,9 @@ object Pq {
     val probePairs = qRows.zipWithIndex.flatMap { case (r, qi) =>
       r.getSeq[Long](1).map(cell => (qi, r.getLong(0), cell))
     }.toSeq.toDF("__qi", "query_id", "__cell")
-    val cellOf = toCol(NearestCentroidsExpr(toExpr(col(vecCol)), centroids, dim, 1)).getItem(0)
+    val cellOf = Kernels.nearestCentroids(col(vecCol), centroids, dim, 1).getItem(0)
     val codes = encode(col(vecCol), codebooks, dim)
-    val dists = toCol(PqAdcDistsExpr(toExpr(codes), tables.toSeq, m, ksub))
+    val dists = Kernels.pqAdcDists(codes, tables.toSeq, m, ksub)
     val w = Window.partitionBy(col("__qi")).orderBy(col("adc_dist"), col("vec_id"))
     corpus
       .select(col(idCol).as("vec_id"), cellOf.as("__cell"), dists.as("__ds"))
@@ -373,7 +371,7 @@ object Pq {
     * (query, cell) probe pairs broadcast with their table index, the
     * corpus scan computes cell + residual + codes map-side in one
     * compiled pass, the joined row pays m lookups into ITS pair's table
-    * ([[PqAdcDistAtExpr]]), and the per-query top-k rank is the only
+    * ([[Kernels.pqAdcDistAt]]), and the per-query top-k rank is the only
     * exchange.
     *
     * ==Table-size bound / query-batch chunking==
@@ -411,7 +409,7 @@ object Pq {
       s"maxTableDoubles $maxTableDoubles cannot hold even one query's " +
         s"nProbe x m x ksub = $perQueryDoubles ADC doubles")
     val qRows = queries.select(col(idCol).cast("long").as("__id"),
-        toCol(NearestCentroidsExpr(toExpr(col(vecCol)), centroids, dim, nProbe)).as("__pb"),
+        Kernels.nearestCentroids(col(vecCol), centroids, dim, nProbe).as("__pb"),
         col(vecCol).as("__v"))
       .collect()
     require(qRows.nonEmpty, "query batch is empty")
@@ -467,10 +465,10 @@ object Pq {
     val probePairs = pairs.zipWithIndex
       .map { case ((qid, cell, _), pi) => (pi.toLong, qid, cell) }
       .toSeq.toDF("__pi", "query_id", "__cell")
-    val cellCol = toCol(NearestCentroidsExpr(toExpr(col(vecCol)), centroids, dim, 1)).getItem(0)
+    val cellCol = Kernels.nearestCentroids(col(vecCol), centroids, dim, 1).getItem(0)
     val withCell = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__v"),
       cellCol.as("__cell"))
-    val residual = toCol(CentroidResidualExpr(toExpr(col("__v")), toExpr(col("__cell")), centroids, dim))
+    val residual = Kernels.centroidResidual(col("__v"), col("__cell"), centroids, dim)
     val codes = encode(residual, codebooks, dim)
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"), col("vec_id"))
     withCell
@@ -478,8 +476,8 @@ object Pq {
       .join(broadcast(probePairs), Seq("__cell"))
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        toCol(PqAdcDistAtExpr(toExpr(col("__codes")), toExpr(col("__pi")),
-          tables.toSeq, m, ksub)).as("adc_dist"))
+        Kernels.pqAdcDistAt(col("__codes"), col("__pi"),
+          tables.toSeq, m, ksub).as("adc_dist"))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
@@ -512,8 +510,7 @@ object Pq {
     val withVec = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
       .join(broadcast(cands), Seq("vec_id"))
       .join(broadcast(qv), Seq("query_id"))
-      .withColumn("dist2", toCol(graft.functions.Dist2Expr(
-        toExpr(col("__cv")), toExpr(col("__qv")))))
+      .withColumn("dist2", Kernels.dist2(col("__cv"), col("__qv")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist2"), col("vec_id"))
     withVec
       .withColumn("rank", row_number().over(w))

@@ -17,28 +17,26 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-  import graft.functions.{CosineSimExpr, Dist2Expr, DotProductExpr, HyperplaneBucketExpr,
-    HyperplaneProbesExpr, QuantSumInt8Expr, QuantizeInt8Expr, VecMaxAbsExpr}
+  import graft.functions.Kernels
 
   /** Dot product of two array<double> columns — native codegen'd expression
-    * ([[graft.functions.DotProductExpr]]): one compiled loop per row, not an
+    * ([[graft.functions.Kernels.dotProduct]]): one compiled loop per row, not an
     * interpreted higher-order-function tree.
     */
-  def dot(a: Column, b: Column): Column = toCol(DotProductExpr(toExpr(a), toExpr(b)))
+  def dot(a: Column, b: Column): Column = Kernels.dotProduct(a, b)
 
-  /** Squared Euclidean distance ([[graft.functions.Dist2Expr]], compiled) —
+  /** Squared Euclidean distance ([[graft.functions.Kernels.dist2]], compiled) —
     * the SMOTE/ADASYN neighbor metric.
     */
-  def dist2(a: Column, b: Column): Column = toCol(Dist2Expr(toExpr(a), toExpr(b)))
+  def dist2(a: Column, b: Column): Column = Kernels.dist2(a, b)
 
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; 0 when either vector has zero norm
-    * ([[graft.functions.CosineSimExpr]], single fused pass).
+    * ([[graft.functions.Kernels.cosineSim]], single fused pass).
     */
-  def cosine(a: Column, b: Column): Column = toCol(CosineSimExpr(toExpr(a), toExpr(b)))
+  def cosine(a: Column, b: Column): Column = Kernels.cosineSim(a, b)
 
   /** Symmetric int8 quantization of an embedding column (array<double> ->
     * array<byte>): floor(x * 127 / maxAbs) — the index-compression format
@@ -46,13 +44,13 @@ object Similarity {
     * doubles). Dequantize with maxAbs/127 per vector ([[vecMaxAbs]]);
     * floor (not round) so any SQL engine replays it bit-for-bit.
     */
-  def quantizeInt8(v: Column): Column = toCol(QuantizeInt8Expr(toExpr(v)))
+  def quantizeInt8(v: Column): Column = Kernels.quantizeInt8(v)
 
   /** Largest |x| of the vector — the quantization scale divisor. */
-  def vecMaxAbs(v: Column): Column = toCol(VecMaxAbsExpr(toExpr(v)))
+  def vecMaxAbs(v: Column): Column = Kernels.vecMaxAbs(v)
 
   /** Sum of the int8-quantized elements — compact parity fingerprint. */
-  def quantSumInt8(v: Column): Column = toCol(QuantSumInt8Expr(toExpr(v)))
+  def quantSumInt8(v: Column): Column = Kernels.quantSumInt8(v)
 
   /** Brute-force cosine top-k neighbors for every query vector.
     *
@@ -82,11 +80,11 @@ object Similarity {
     // row-major (numBits x dim) plane matrix, held as a codegen reference
     // object — all sign bits computed in one compiled pass
     val planes = Seq.fill(numBits * dim)(rng.nextGaussian())
-    toCol(HyperplaneBucketExpr(toExpr(vec), planes, dim))
+    Kernels.hyperplaneBucket(vec, planes, dim)
   }
 
   /** Base bucket + the `probes` lowest-|margin| single-bit flips, as an
-    * array<long> ([[graft.functions.HyperplaneProbesExpr]], compiled).
+    * array<long> ([[graft.functions.Kernels.hyperplaneProbes]], compiled).
     * Identical plane generation to [[hyperplaneBucket]] for the same
     * (dim, numBits, seed), so the two key spaces always agree.
     */
@@ -94,7 +92,7 @@ object Similarity {
       vec: Column, dim: Int, numBits: Int, probes: Int, seed: Long = 42L): Column = {
     val rng = new scala.util.Random(seed)
     val planes = Seq.fill(numBits * dim)(rng.nextGaussian())
-    toCol(HyperplaneProbesExpr(toExpr(vec), planes, dim, probes))
+    Kernels.hyperplaneProbes(vec, planes, dim, probes)
   }
 
   /** LSH-bucketed ANN: exact cosine top-k but only among corpus vectors
@@ -159,7 +157,7 @@ object Similarity {
     *
     * Plan shape: centroids train once (spark.ml KMeans — distributed,
     * seeded) and ship as a codegen constant; corpus assignment is a
-    * compiled argmin per row ([[graft.functions.NearestCentroidsExpr]]);
+    * compiled argmin per row ([[graft.functions.Kernels.nearestCentroids]]);
     * candidate generation is ONE equi-join of the corpus's cell id against
     * the exploded (query, probe-cell) pairs — query side is broadcast, the
     * corpus is scanned once and never pairwise-compared. Higher recall per
@@ -447,7 +445,6 @@ object Similarity {
       seed: Long = 42L,
       centroids: Option[Seq[Double]] = None,
       corpusAssign: Int = 1): DataFrame = {
-    import graft.functions.NearestCentroidsExpr
 
     // coarse quantizer: caller-provided (train once, reuse per query) or
     // trained here on the bounded sample
@@ -455,7 +452,7 @@ object Similarity {
       centroids.getOrElse(trainIvfCentroids(corpus, idCol, vecCol, dim, nLists, seed))
 
     def cellsOf(vec: Column, probes: Int): Column =
-      toCol(NearestCentroidsExpr(toExpr(vec), cent, dim, probes))
+      Kernels.nearestCentroids(vec, cent, dim, probes)
 
     // multi-assignment (corpusAssign > 1) stores each corpus vector in its
     // several nearest cells: index grows by that factor, recall at a fixed
@@ -561,7 +558,7 @@ object Similarity {
     val allPlanes = Seq.fill(numBands * numBits * dim)(rng.nextGaussian())
     val bandBuckets = (0 until numBands).map { b =>
       val planes = allPlanes.slice(b * numBits * dim, (b + 1) * numBits * dim)
-      toCol(HyperplaneBucketExpr(toExpr(col(vecCol)), planes, dim))
+      Kernels.hyperplaneBucket(col(vecCol), planes, dim)
     }
     val keyed = df.select(col(idCol).as("id"), col(vecCol).as("__v"),
       posexplode(array(bandBuckets: _*)).as(Seq("__band", "__bucket")))
@@ -607,10 +604,9 @@ object Similarity {
       dim: Int,
       k: Int = 8,
       seed: Long = 42L): (Seq[Double], DataFrame) = {
-    import graft.functions.{NearestCentroidDistExpr, NearestCentroidsExpr}
     val cent = trainIvfCentroids(corpus, idCol, vecCol, dim, nLists = k, seed = seed)
-    val cell = toCol(NearestCentroidsExpr(toExpr(col(vecCol)), cent, dim, 1)).getItem(0)
-    val dist = toCol(NearestCentroidDistExpr(toExpr(col(vecCol)), cent, dim))
+    val cell = Kernels.nearestCentroids(col(vecCol), cent, dim, 1).getItem(0)
+    val dist = Kernels.nearestCentroidDist(col(vecCol), cent, dim)
     val profile = corpus
       .select(cell.as("cell"), floor(dist * 10000).cast("long").as("__d10k"))
       .groupBy(col("cell"))
@@ -645,10 +641,9 @@ object Similarity {
       k: Int = 8,
       seed: Long = 42L,
       driverFlopsPerIter: Long = 10000000000L): (Seq[Double], DataFrame) = {
-    import graft.functions.NearestCentroidsExpr
     val cent = trainIvfCentroids(corpus, idCol, vecCol, dim, nLists = k, seed = seed,
       driverFlopsPerIter = driverFlopsPerIter)
-    val cellOf = toCol(NearestCentroidsExpr(toExpr(col(vecCol)), cent, dim, 1)).getItem(0)
+    val cellOf = Kernels.nearestCentroids(col(vecCol), cent, dim, 1).getItem(0)
     val keyed = corpus.select(col(idCol).as("id"), col(vecCol).as("__v"),
       cellOf.as("cell"))
     val l = keyed.alias("sl")
@@ -735,7 +730,7 @@ object Similarity {
   }
 
   /** Plain-array cosine for in-state comparisons; 0 for zero-norm inputs
-    * (same contract as [[graft.functions.CosineSimExpr]]).
+    * (same contract as [[graft.functions.Kernels.cosineSim]]).
     */
   private def cosineArr(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
@@ -830,19 +825,23 @@ object Similarity {
           (0, s0.getLong(0), None))
         def distToLit(c: Array[Double]): Column =
           dist2(col("v"), typedLit(c.toSeq))
-        var cur = base
+        val first = base
           .withColumn("d", distToLit(s0.getAs[scala.collection.Seq[Double]]("v").toArray))
           .persist()
+        var cur = first
+        // frees `cur`'s blocks: a localCheckpoint keeps them on its
+        // LogicalRDD, so unpersisting the checkpointed frame frees nothing
+        var releaseCur: () => Unit = () => first.unpersist(false)
         // the previous batch's cache is freed only AFTER the next
         // batch's fetch has materialized its child — unpersisting
         // earlier would recompute the whole least(...) chain
-        var toFree: DataFrame = null
+        var toFree: () => Unit = null
         var batches = 0
         final class Cand(val id: Long, val vec: Array[Double], var d: Double)
         while (picked.length < k) {
           val top = cur.orderBy(col("d").desc, col("id").asc)
             .limit(batchFetch).collect()
-          if (toFree != null) { toFree.unpersist(false); toFree = null }
+          if (toFree != null) { toFree(); toFree = null }
           // a short fetch saw EVERY point: no unfetched candidate exists
           // and the whole remaining selection resolves on the driver
           val complete = top.length < batchFetch
@@ -889,16 +888,19 @@ object Similarity {
               // bound the least(...) chain's plan depth: materialize and
               // cut lineage, then the parent cache is immediately free
               val cp = withNew.localCheckpoint(true)
-              cur.unpersist(false)
+              releaseCur()
+              val blocks = graft.etl.CacheTracker.checkpointRdd(cp)
               cur = cp
+              releaseCur = () => blocks.unpersist(false)
             } else {
               val next = withNew.persist()
-              toFree = cur
+              toFree = releaseCur
               cur = next
+              releaseCur = () => next.unpersist(false)
             }
           }
         }
-        cur.unpersist(false)
+        releaseCur()
         picked.toSeq.toDF("rank", "vec_id", "radius")
           .select(col("rank"), col("vec_id"),
             round(sqrt(col("radius")), 6).as("radius"))

@@ -122,14 +122,15 @@ object Hll {
       .otherwise(raw)
   }
 
-  /** [[estimate]] as ONE compiled scalar kernel ([[HllEstimateExpr]]) —
-    * the SQL-surface route (`graft_hll_estimate`); bit-identical to the
-    * builtin composition (spec-enforced).
+  /** [[estimate]] as ONE compiled scalar kernel
+    * ([[graft.functions.Kernels.hllEstimate]]) — the SQL-surface route
+    * (`graft_hll_estimate`); bit-identical to the builtin composition
+    * (spec-enforced).
     */
   def estimateCompiled(reg: Column, p: Int): Column =
-    toCol(HllEstimateExpr(toExpr(reg), p))
+    graft.functions.Kernels.hllEstimate(reg, p)
 
-  /** JVM twin of [[estimate]]'s arithmetic for [[HllEstimateExpr]]:
+  /** JVM twin of [[estimate]]'s arithmetic for the compiled kernel:
     * IDENTICAL operation order (alpha * m * m * 2^maxRho, then one
     * double division of the exact integer harmonic sum), so compiled
     * and builtin-composed estimates agree bit-for-bit. Register values
@@ -328,46 +329,5 @@ case class HllMergeAgg(
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "hll_merge"
   override protected def withNewChildInternal(newChild: Expression): HllMergeAgg =
-    copy(child = newChild)
-}
-
-/** Compiled estimator kernel over a stored register array — the scalar
-  * SQL surface (`graft_hll_estimate`). Arithmetic is the JVM twin of the
-  * builtin-composed [[Hll.estimate]] with the identical operation order,
-  * so the two surfaces agree bit-for-bit (spec-enforced); a NULL array
-  * or a NULL register element yields NULL, mirroring the builtin
-  * composition's null propagation.
-  */
-case class HllEstimateExpr(child: Expression, p: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  require(p >= 4 && p <= 16, s"precision must be in [4, 16], got $p")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<int> register column, got $t")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "hll_estimate"
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else Hll.estimateFromRegisters(v.asInstanceOf[ArrayData], p)
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |java.lang.Double ${ev.value}Boxed =
-      |  graft.sketch.Hll.estimateFromRegisters($c, $p);
-      |if (${ev.value}Boxed == null) {
-      |  ${ev.isNull} = true;
-      |} else {
-      |  ${ev.value} = ${ev.value}Boxed.doubleValue();
-      |}""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): HllEstimateExpr =
     copy(child = newChild)
 }

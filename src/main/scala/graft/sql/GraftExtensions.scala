@@ -4,8 +4,10 @@ import graft.functions._
 import graft.sketch.KmvSketchAgg
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayIntersect, CaseWhen, Cast, Concat, Divide, ElementAt, EqualTo, Expression, ExpressionInfo, IsNull, LessThan, Literal, Multiply, Or, Size, Slice, SortArray}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayIntersect, CaseWhen, Cast, Concat, CreateArray, Divide, ElementAt, EqualTo, Expression, ExpressionInfo, IsNull, LessThan, Literal, Multiply, Or, Size, Slice, SortArray}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL surface for the graft function library: every compiled Catalyst
   * expression (and the KMV sketch aggregate) registered as a named SQL
@@ -30,6 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftFunctions {
+  import SqlLiterals.{int, string}
 
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
@@ -48,149 +51,55 @@ object GraftFunctions {
     if (args.length != n)
       throw new IllegalArgumentException(s"$fn expects $n argument(s), got ${args.length}")
 
-  private def intLit(fn: String, args: Seq[Expression], pos: Int): Int =
-    args(pos) match {
-      case Literal(v: Int, _) => v
-      case Literal(v: Long, _) if v.isValidInt => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be an integer literal, got $other")
-    }
-
-  private def longLit(fn: String, args: Seq[Expression], pos: Int): Long =
-    args(pos) match {
-      case Literal(v: Int, _) => v.toLong
-      case Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be an integer literal, got $other")
-    }
-
-  private def strLit(fn: String, args: Seq[Expression], pos: Int): String =
-    args(pos) match {
-      case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be a string literal, got $other")
-    }
-
-  private def strArrayLit(fn: String, args: Seq[Expression], pos: Int): Seq[String] =
-    args(pos) match {
-      // array('a', 'b') arrives as CreateArray of string literals
-      case org.apache.spark.sql.catalyst.expressions.CreateArray(items, _)
-          if items.forall {
-            case Literal(_: org.apache.spark.unsafe.types.UTF8String, _) => true
-            case _ => false
-          } =>
-        items.map { case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString }
-      // a folded/pre-evaluated literal array
-      case Literal(v: org.apache.spark.sql.catalyst.util.ArrayData,
-          org.apache.spark.sql.types.ArrayType(t, _)) if t.isInstanceOf[org.apache.spark.sql.types.StringType] =>
-        v.toObjectArray(t).toSeq.map(_.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be an array of string literals, got $other")
-    }
-
-  private def boolLit(fn: String, args: Seq[Expression], pos: Int): Boolean =
-    args(pos) match {
-      case Literal(v: Boolean, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be a boolean literal, got $other")
-    }
-
   private def fd(name: String, clazz: Class[_], arity: Int)(
       builder: Seq[Expression] => Expression): FunctionDescription =
     (FunctionIdentifier(name),
       new ExpressionInfo(clazz.getName, null, name),
       (args: Seq[Expression]) => { expectArity(name, args, arity); builder(args) })
 
+  /** A kernel's SQL function: its columns, then each parameter SQL does
+    * not fix, read from a literal.
+    */
+  private def kernelFunction(k: Kernel, name: String): FunctionDescription = {
+    val nIn = k.inputs.length
+    val sqlParams = k.params.count(_.sqlValue.isEmpty)
+    fd(name, classOf[KernelExpr], nIn + sqlParams) { a =>
+      var pos = nIn - 1
+      val values = k.params.map(p => p.sqlValue.getOrElse {
+        pos += 1
+        p.fromSql.get(name, a, pos)
+      })
+      k.expr(a.take(nIn) ++ values: _*)
+    }
+  }
+
   // ---- the registry -------------------------------------------------------
 
-  val all: Seq[FunctionDescription] = Seq(
-    fd("graft_minhash_sig", classOf[MinHashSigExpr], 4)(a =>
-      MinHashSigExpr(a(0), intLit("graft_minhash_sig", a, 1),
-        intLit("graft_minhash_sig", a, 2), longLit("graft_minhash_sig", a, 3))),
-    fd("graft_minhash_portable_sig", classOf[MinhashPortableSigExpr], 4)(a =>
-      MinhashPortableSigExpr(a(0), intLit("graft_minhash_portable_sig", a, 1),
-        intLit("graft_minhash_portable_sig", a, 2), longLit("graft_minhash_portable_sig", a, 3))),
-    fd("graft_shingle_hash_set", classOf[ShingleHashSetExpr], 2)(a =>
-      ShingleHashSetExpr(a(0), intLit("graft_shingle_hash_set", a, 1))),
-    fd("graft_shingle_hash_set_portable", classOf[ShingleHashSetPortableExpr], 2)(a =>
-      ShingleHashSetPortableExpr(a(0), intLit("graft_shingle_hash_set_portable", a, 1))),
-    fd("graft_jaccard_sorted", classOf[JaccardSortedExpr], 2)(a =>
-      JaccardSortedExpr(a(0), a(1))),
-    fd("graft_simhash64", classOf[SimHash64Expr], 1)(a => SimHash64Expr(a(0))),
-    fd("graft_simhash60_portable", classOf[SimHash60PortableExpr], 1)(a =>
-      SimHash60PortableExpr(a(0))),
-    fd("graft_winnowing", classOf[WinnowingExpr], 3)(a =>
-      WinnowingExpr(a(0), intLit("graft_winnowing", a, 1), intLit("graft_winnowing", a, 2))),
-    fd("graft_winnowing_portable", classOf[WinnowingPortableExpr], 3)(a =>
-      WinnowingPortableExpr(a(0), intLit("graft_winnowing_portable", a, 1),
-        intLit("graft_winnowing_portable", a, 2))),
-    fd("graft_dup_ngram_fraction", classOf[DupNgramFractionExpr], 2)(a =>
-      DupNgramFractionExpr(a(0), intLit("graft_dup_ngram_fraction", a, 1))),
-    fd("graft_word_ngrams", classOf[WordNgramsExpr], 2)(a =>
-      WordNgramsExpr(a(0), intLit("graft_word_ngrams", a, 1))),
-    fd("graft_word_chunks", classOf[WordChunksExpr], 2)(a =>
-      WordChunksExpr(a(0), intLit("graft_word_chunks", a, 1))),
-    fd("graft_ascii_tokens", classOf[AsciiTokensExpr], 1)(a => AsciiTokensExpr(a(0))),
-    fd("graft_word_bigrams", classOf[WordNgramStreamExpr], 1)(a => WordNgramStreamExpr(a(0), 2)),
-    fd("graft_word_ngram_stream", classOf[WordNgramStreamExpr], 2)(a =>
-      WordNgramStreamExpr(a(0), intLit("graft_word_ngram_stream", a, 1))),
-    fd("graft_ngram_hash_pairs", classOf[NgramHashPairsExpr], 2)(a =>
-      NgramHashPairsExpr(a(0), intLit("graft_ngram_hash_pairs", a, 1))),
-    fd("graft_case_fold_simple", classOf[CaseFoldSimpleExpr], 1)(a =>
-      CaseFoldSimpleExpr(a(0))),
-    fd("graft_lang_guess", classOf[LangGuessExpr], 1)(a =>
-      LangGuessExpr(a(0), TextFunctions.defaultLangMarkers)),
-    fd("graft_dot_product", classOf[DotProductExpr], 2)(a => DotProductExpr(a(0), a(1))),
-    fd("graft_cosine_sim", classOf[CosineSimExpr], 2)(a => CosineSimExpr(a(0), a(1))),
-    fd("graft_dist2", classOf[Dist2Expr], 2)(a => Dist2Expr(a(0), a(1))),
-    fd("graft_vec_max_abs", classOf[VecMaxAbsExpr], 1)(a => VecMaxAbsExpr(a(0))),
-    fd("graft_quantize_int8", classOf[QuantizeInt8Expr], 1)(a => QuantizeInt8Expr(a(0))),
-    fd("graft_quant_sum_int8", classOf[QuantSumInt8Expr], 1)(a => QuantSumInt8Expr(a(0))),
-    // aggregate: the analyzer wraps a returned AggregateFunction in an
-    // AggregateExpression itself (the same path every builtin SQL
-    // aggregate takes through FunctionRegistry)
-    fd("graft_kmv_sketch", classOf[KmvSketchAgg], 2)(a =>
-      KmvSketchAgg(a(0), intLit("graft_kmv_sketch", a, 1))),
-    // estimators: expand to the same composed builtin-expression tree as
-    // the Column API builds (an inlined SQL macro — nothing new to
-    // execute; constructed from catalyst nodes directly because a
-    // Column->Expression bridge would leave unresolved ColumnNode
-    // wrappers the analyzer never revisits inside a function builder)
-    fd("graft_kmv_distinct_estimate", classOf[KmvSketchAgg], 2)(a =>
-      kmvDistinctEstimateExpr(a(0), intLit("graft_kmv_distinct_estimate", a, 1))),
-    fd("graft_kmv_jaccard_estimate", classOf[KmvSketchAgg], 3)(a =>
-      kmvJaccardEstimateExpr(a(0), a(1), intLit("graft_kmv_jaccard_estimate", a, 2))),
-    fd("graft_vec_pool", classOf[graft.similarity.VecPoolAgg], 2)(a =>
-      graft.similarity.VecPoolAgg(a(0),
-        graft.similarity.VecPoolAgg.modeOf(strLit("graft_vec_pool", a, 1)))),
-    fd("graft_remove_spans", classOf[RemoveSpansExpr], 2)(a =>
-      RemoveSpansExpr(a(0), a(1))),
-    // round-7 additions: the multilingual tokenization tier and the
-    // MinHash jaccard-estimate numerator
-    fd("graft_unicode_tokens", classOf[UnicodeTokensExpr], 1)(a =>
-      UnicodeTokensExpr(a(0))),
-    fd("graft_sig_match_count", classOf[SigMatchCountExpr], 2)(a =>
-      SigMatchCountExpr(a(0), a(1))),
-    // round-8 additions: C4 line retention and NFC canonical composition
-    fd("graft_c4_keep_lines", classOf[C4KeepLinesExpr], 2)(a =>
-      C4KeepLinesExpr(a(0), intLit("graft_c4_keep_lines", a, 1))),
-    fd("graft_nfc_normalize", classOf[NfcNormalizeExpr], 1)(a =>
-      NfcNormalizeExpr(a(0))),
-    // round-8 late additions: the HLL sketch surface and perceptual
-    // image hashing (dedup over binary payloads straight from SQL)
-    fd("graft_hll_sketch", classOf[graft.sketch.HllSketchAgg], 2)(a =>
-      graft.sketch.HllSketchAgg(a(0), intLit("graft_hll_sketch", a, 1))),
-    fd("graft_hll_merge", classOf[graft.sketch.HllMergeAgg], 2)(a =>
-      graft.sketch.HllMergeAgg(a(0), intLit("graft_hll_merge", a, 1))),
-    fd("graft_hll_estimate", classOf[graft.sketch.HllEstimateExpr], 2)(a =>
-      graft.sketch.HllEstimateExpr(a(0), intLit("graft_hll_estimate", a, 1))),
-    fd("graft_image_dhash64", classOf[graft.multimodal.DHash64Expr], 1)(a =>
-      graft.multimodal.DHash64Expr(a(0))),
-    fd("graft_blocklist_hits", classOf[BlocklistHitsExpr], 3)(a =>
-      BlocklistHitsExpr(a(0), strArrayLit("graft_blocklist_hits", a, 1),
-        boolLit("graft_blocklist_hits", a, 2))),
-    fd("graft_strip_lines_by_fp", classOf[graft.dedup.StripLinesByFpExpr], 2)(a =>
-      graft.dedup.StripLinesByFpExpr(a(0), a(1))))
+  val all: Seq[FunctionDescription] =
+    Kernels.all.flatMap(k => k.sqlName.map(kernelFunction(k, _))) ++ Seq(
+      fd("graft_word_bigrams", classOf[KernelExpr], 1)(a =>
+        Kernels.wordNgramStream.expr(a(0), 2, false)),
+      // aggregate: the analyzer wraps a returned AggregateFunction in an
+      // AggregateExpression itself (the same path every builtin SQL
+      // aggregate takes through FunctionRegistry)
+      fd("graft_kmv_sketch", classOf[KmvSketchAgg], 2)(a =>
+        KmvSketchAgg(a(0), int("graft_kmv_sketch", a, 1))),
+      // estimators: expand to the same composed builtin-expression tree as
+      // the Column API builds (an inlined SQL macro — nothing new to
+      // execute; constructed from catalyst nodes directly because a
+      // Column->Expression bridge would leave unresolved ColumnNode
+      // wrappers the analyzer never revisits inside a function builder)
+      fd("graft_kmv_distinct_estimate", classOf[KmvSketchAgg], 2)(a =>
+        kmvDistinctEstimateExpr(a(0), int("graft_kmv_distinct_estimate", a, 1))),
+      fd("graft_kmv_jaccard_estimate", classOf[KmvSketchAgg], 3)(a =>
+        kmvJaccardEstimateExpr(a(0), a(1), int("graft_kmv_jaccard_estimate", a, 2))),
+      fd("graft_vec_pool", classOf[graft.similarity.VecPoolAgg], 2)(a =>
+        graft.similarity.VecPoolAgg(a(0),
+          graft.similarity.VecPoolAgg.modeOf(string("graft_vec_pool", a, 1)))),
+      fd("graft_hll_sketch", classOf[graft.sketch.HllSketchAgg], 2)(a =>
+        graft.sketch.HllSketchAgg(a(0), int("graft_hll_sketch", a, 1))),
+      fd("graft_hll_merge", classOf[graft.sketch.HllMergeAgg], 2)(a =>
+        graft.sketch.HllMergeAgg(a(0), int("graft_hll_merge", a, 1))))
 
   /** Catalyst twin of [[graft.sketch.Kmv.distinctEstimate]] — keep the two
     * in lockstep (KmvSpec asserts SQL/Column parity).
@@ -220,4 +129,55 @@ object GraftFunctions {
         Cast(Size(ArrayIntersect(ArrayIntersect(union, a), b)), DoubleType),
         Cast(Size(union), DoubleType))))
   }
+}
+
+/** Readers of the literal arguments that parameterize graft SQL functions
+  * (shingle sizes, hash counts, seeds, pattern lists): compiled-kernel
+  * parameters, not per-row values, so anything but a literal fails fast
+  * with the function name and the argument position.
+  */
+private[graft] object SqlLiterals {
+
+  private def fail(fn: String, pos: Int, what: String, got: Expression): Nothing =
+    throw new IllegalArgumentException(s"$fn: argument ${pos + 1} must be $what, got $got")
+
+  def int(fn: String, args: Seq[Expression], pos: Int): Int =
+    args(pos) match {
+      case Literal(v: Int, _) => v
+      case Literal(v: Long, _) if v.isValidInt => v.toInt
+      case other => fail(fn, pos, "an integer literal", other)
+    }
+
+  def long(fn: String, args: Seq[Expression], pos: Int): Long =
+    args(pos) match {
+      case Literal(v: Int, _) => v.toLong
+      case Literal(v: Long, _) => v
+      case other => fail(fn, pos, "an integer literal", other)
+    }
+
+  def string(fn: String, args: Seq[Expression], pos: Int): String =
+    args(pos) match {
+      case Literal(v: UTF8String, _) => v.toString
+      case other => fail(fn, pos, "a string literal", other)
+    }
+
+  def strings(fn: String, args: Seq[Expression], pos: Int): Seq[String] =
+    args(pos) match {
+      // array('a', 'b') arrives as CreateArray of string literals
+      case CreateArray(items, _) if items.forall {
+            case Literal(_: UTF8String, _) => true
+            case _ => false
+          } =>
+        items.map { case Literal(v: UTF8String, _) => v.toString }
+      // a folded/pre-evaluated literal array
+      case Literal(v: ArrayData, ArrayType(t, _)) if t.isInstanceOf[StringType] =>
+        v.toObjectArray(t).toSeq.map(_.asInstanceOf[UTF8String].toString)
+      case other => fail(fn, pos, "an array of string literals", other)
+    }
+
+  def bool(fn: String, args: Seq[Expression], pos: Int): Boolean =
+    args(pos) match {
+      case Literal(v: Boolean, _) => v
+      case other => fail(fn, pos, "a boolean literal", other)
+    }
 }

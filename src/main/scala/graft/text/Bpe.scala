@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
+import graft.functions.Kernels
 
 /** Byte-pair-encoding tokenizer TRAINING at corpus scale (Sennrich et al.
   * 2016) — the vocabulary-learning step every LLM data pipeline runs
@@ -23,7 +23,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expressio
   * word table is capped by `(count DESC, word ASC)` — both total orders.
   *
   * Application ([[encode]]) is the standard greedy lowest-rank merging,
-  * compiled ([[graft.functions.BpeEncodeExpr]]) — a zero-shuffle map
+  * compiled ([[graft.functions.Kernels.bpeEncode]]) — a zero-shuffle map
   * stage; `encode(train(corpus), corpus)` is how q30-style token budgets
   * would be computed under a LEARNED vocabulary instead of the regex
   * heuristic.
@@ -266,7 +266,7 @@ object Bpe {
     * zero shuffle).
     */
   def encode(text: Column, merges: Seq[(String, String)]): Column =
-    toCol(graft.functions.BpeEncodeExpr(toExpr(text), merges))
+    Kernels.bpeEncode(text, merges)
 
   /** Token count under the learned vocabulary. */
   def tokenCount(text: Column, merges: Seq[(String, String)]): Column =

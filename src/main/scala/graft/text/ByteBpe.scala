@@ -2,9 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
 
-import graft.functions.{ByteBpeTables, ByteBpeEncodeIdsExpr, Gpt2PretokensExpr, TextAlgo}
+import graft.functions.{ByteBpeTables, Kernels, TextAlgo}
 
 /** BYTE-LEVEL byte-pair encoding — the GPT-2 / tiktoken tokenizer
   * family (Radford et al. 2019) every production LLM export actually
@@ -80,7 +79,7 @@ object ByteBpe {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
     require(maxVocabWords > 0, s"maxVocabWords must be positive, got $maxVocabWords")
     val words = df
-      .select(explode(toCol(Gpt2PretokensExpr(toExpr(col(textCol))))).as("w"))
+      .select(explode(Kernels.gpt2Pretokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .where(col("c") >= minCount)
       .orderBy(col("c").desc, col("w").asc)
@@ -94,7 +93,7 @@ object ByteBpe {
     * shuffle): array<long>, specials atomic, never an UNK.
     */
   def encodeIds(text: Column, model: Model): Column =
-    toCol(ByteBpeEncodeIdsExpr(toExpr(text), model.tables))
+    Kernels.byteBpeEncodeIds(text, model.tables)
 
   /** Token count under the trained model. */
   def tokenCount(text: Column, model: Model): Column =

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Kernels
+
 /** Overlapping passage chunking — the RAG / retrieval-corpus shape: split
   * each document into token windows of `windowTokens` advancing by
   * `strideTokens` (overlap = window - stride), rejoined with single
@@ -27,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    whitespace, which is what embedding tokenizers want anyway.
   *
   * Plan shape / 100 TB: a pure map stage — ONE compiled pass per document
-  * ([[graft.functions.PassageChunksExpr]]: tokenize, arithmetic chunk
+  * ([[graft.functions.Kernels.passageChunks]]: tokenize, arithmetic chunk
   * count, build every chunk) followed by a `posexplode`. Zero shuffles,
   * zero UDFs, no interpreted higher-order functions, and the scan prunes
   * to (id, text). Output row count is ~n/stride per doc —
@@ -55,15 +57,13 @@ object Chunker {
     require(windowTokens > 0, s"windowTokens must be positive, got $windowTokens")
     require(strideTokens > 0 && strideTokens <= windowTokens,
       s"strideTokens must be in [1, windowTokens], got $strideTokens")
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    // one compiled pass per document (PassageChunksExpr); posexplode's
+    // one compiled pass per document (Kernels.passageChunks); posexplode's
     // position IS the chunk index, so the kernel carries no redundant
     // index field. Null/token-less docs yield null/empty arrays -> no rows.
     // unicode = true swaps the `\s+`-run token unit for the multilingual
     // tier (codepoint-class runs, CJK singles) so windowTokens budgets
     // the same thing on every script — a CJK doc is no longer "one token".
-    val chunks = toCol(graft.functions.PassageChunksExpr(
-      toExpr(col(textCol)), windowTokens, strideTokens, unicode))
+    val chunks = Kernels.passageChunks(col(textCol), windowTokens, strideTokens, unicode)
     df.select(col(idCol).as("doc_id"),
         posexplode(chunks).as(Seq("chunk_idx", "__c")))
       .select(

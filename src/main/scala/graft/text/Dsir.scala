@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{Kernels, TextFunctions}
 
 /** DSIR-style data selection with importance resampling weights (Xie et
   * al. 2023, "Data Selection for Language Models via Importance
@@ -55,13 +55,12 @@ object Dsir {
 
   /** Portable hash bucket per feature: md5-60 mod numBuckets (array<long>),
     * unigrams first then bigrams — ONE compiled pass
-    * ([[graft.functions.DsirBucketsExpr]]); bit-identical to
+    * ([[graft.functions.Kernels.dsirBuckets]]); bit-identical to
     * `transform(features, Kmv.hash60(_) % numBuckets)` which as an
     * interpreted HOF chain cost 2.3x the wall time at sf0.1.
     */
   def featureBuckets(text: Column, numBuckets: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    toCol(graft.functions.DsirBucketsExpr(toExpr(text), numBuckets))
+    Kernels.dsirBuckets(text, numBuckets)
   }
 
   /** (doc_id, n_features, dsir_logw) for every document with at least one
@@ -109,7 +108,6 @@ object Dsir {
     // pass 2: pure map stage — compiled fold of ratio[bucket] over the
     // document's own feature array; no join, no exchange. The ratio table
     // ships as a codegen reference object, not a numBuckets-wide literal.
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
     val buckets = featureBuckets(col(textCol), numBuckets)
     // persisted (tracked — graft.etl.CacheTracker.unpersistCaches): the
     // final range sort's boundary sample would otherwise re-evaluate the
@@ -122,7 +120,7 @@ object Dsir {
         .select(col("doc_id"),
           size(col("__bs")).cast("long").as("n_features"),
           round(
-            toCol(graft.functions.DsirScoreExpr(toExpr(col("__bs")), ratios.toIndexedSeq)),
+            Kernels.dsirScore(col("__bs"), ratios.toIndexedSeq),
             6).as("dsir_logw")))
       .orderBy(col("doc_id"))
   }

@@ -7,9 +7,8 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
 
-import graft.functions.CharNgramsLidExpr
+import graft.functions.Kernels
 
 /** Trained language identification — the fastText-shape LID that opens
   * the CCNet pipeline (Wenzek et al. 2020 route documents by a trained
@@ -23,7 +22,7 @@ import graft.functions.CharNgramsLidExpr
   *
   * Scale shape (the [[QualityClassifier]] argument, one model up):
   * feature extraction is one compiled map-side pass
-  * ([[CharNgramsLidExpr]]) + stateless hashing; LR training is a
+  * ([[Kernels.charNgramsLid]]) + stateless hashing; LR training is a
   * handful of full scans over the BOUNDED seed corpus via
   * tree-aggregated gradients; scoring broadcasts the model and is
   * map-side per row.
@@ -46,7 +45,7 @@ object LanguageId {
 
   /** Compiled LID char-n-gram column (array<string>). */
   def charNgrams(text: Column, n: Int): Column =
-    toCol(CharNgramsLidExpr(toExpr(text), n))
+    Kernels.charNgramsLid(text, n)
 
   /** A trained LID model: the spark.ml pipeline plus the label order
     * (class index i predicts `labels(i)`) and the feature params needed

@@ -2,9 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
 
-import graft.functions.{SpEncodePiecesExpr, SpTables}
+import graft.functions.{Kernels, SpTables}
 
 /** SentencePiece UNIGRAM-LM tokenizer (Kudo 2018; the sentencepiece
   * `--model_type=unigram` family behind T5/Gemma/LLaMA exports) — the
@@ -21,7 +20,7 @@ import graft.functions.{SpEncodePiecesExpr, SpTables}
   * decompose per word. The ONLY distributed work is one
   * map-side-combined `groupBy(word).count` (+ the top-`maxVocabWords`
   * cap); EM runs on the driver over that bounded table; encoding is a
-  * compiled zero-shuffle map pass ([[SpEncodePiecesExpr]]).
+  * compiled zero-shuffle map pass ([[Kernels.spEncodePieces]]).
   *
   * Faithfulness notes (documented deviations, the adasyn convention):
   *  - seeding takes the `seedMultiplier * vocabSize` most frequent
@@ -268,7 +267,7 @@ object SentencePiece {
     * zero shuffle): array<string>, '▁'-prefixed word starts.
     */
   def encodePieces(text: Column, model: Model): Column =
-    toCol(SpEncodePiecesExpr(toExpr(text), model.tables))
+    Kernels.spEncodePieces(text, model.tables)
 
   /** Piece count under the trained model. */
   def tokenCount(text: Column, model: Model): Column =

@@ -76,7 +76,7 @@ object UnigramLm {
     * what the oracles replay.
     *
     * Plan: compiled map-side n-gram kernel
-    * ([[graft.functions.WordNgramStreamExpr]] — the first bigram cut
+    * ([[graft.functions.Kernels.wordNgramStream]] — the first bigram cut
     * shuffled the whole token stream through a per-doc lead window just
     * to pair neighbors) -> n-gram tf [shuffle on the uniform (doc, gram)
     * key] -> corpus n-gram counts -> PREFIX counts aggregated from the
@@ -125,7 +125,7 @@ object UnigramLm {
     * same add-one-smoothed `P(w_n | w_1..w_{n-1})` arithmetic as
     * [[ngramCrossEntropy]], but every exchange
     * carries fixed-width 64-bit (gram, prefix) hashes instead of
-    * space-joined strings ([[graft.functions.NgramHashPairsExpr]] —
+    * space-joined strings ([[graft.functions.Kernels.ngramHashPairs]] —
     * the prefix hash is the chain state after n-1 tokens, emitted
     * map-side, so the prefix is never re-derived from a string).
     * Measured at n=3: the exact-string tier went 14.4 s -> 306.8 s per

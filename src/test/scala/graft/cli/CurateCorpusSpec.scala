@@ -10,9 +10,12 @@ class CurateCorpusSpec extends SparkSpec {
   test("curation pipeline runs end-to-end on the sf0.001 fixture") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val out = Files.createTempDirectory("graft_curate").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val stats = CurateCorpus.run(docs, out,
       minQuality = 0.5, chunkWords = 10, benchMod = 17, ngram = 5,
       maxPerFile = 1000).toMap
+    // the stage checkpoints are released once the export is written
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
 
     // monotone funnel: every stage only removes rows
     assert(stats("input") == 500L)
@@ -70,8 +73,10 @@ class CurateCorpusSpec extends SparkSpec {
   test("per-source cap stage bounds every source and stays monotone") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val out = Files.createTempDirectory("graft_curate_cap").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val stats = CurateCorpus.run(docs, out,
       minQuality = 0.5, maxPerFile = 1000, maxPerSource = 5).toMap
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
     assert(stats("per_source_cap") <= stats("decontaminated"))
     val back = spark.read.parquet(out)
     assert(back.count() == stats("per_source_cap"))

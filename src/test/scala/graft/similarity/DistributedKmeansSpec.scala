@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.SparkSpec
+import graft.functions.Kernels
 import org.apache.spark.sql.functions._
 
 class DistributedKmeansSpec extends SparkSpec {
@@ -20,8 +21,7 @@ class DistributedKmeansSpec extends SparkSpec {
   }
 
   private def wcss(df: org.apache.spark.sql.DataFrame, cent: Seq[Double], dim: Int): Double = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    df.select(toCol(graft.functions.NearestCentroidDistExpr(toExpr(col("v")), cent, dim)).as("d"))
+    df.select(Kernels.nearestCentroidDist(col("v"), cent, dim).as("d"))
       .agg(sum(col("d"))).first().getDouble(0)
   }
 

@@ -86,10 +86,13 @@ class KCenterSpec extends SparkSpec {
     val ref = Similarity.kCenterSelect(df, "vec_id", "embedding", 30, batchFetch = 1)
       .orderBy("rank").collect().map(_.toSeq).toSeq
     // checkpointEvery=2 with batchFetch=1 forces many checkpoint cuts
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val got = Similarity.kCenterSelect(df, "vec_id", "embedding", 30,
       batchFetch = 1, checkpointEvery = 2)
       .orderBy("rank").collect().map(_.toSeq).toSeq
     assert(got === ref)
+    // every batch's cache and checkpoint is released by the time it returns
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
   }
 
   test("non-integral id column fails fast instead of silently dropping rows") {
