@@ -1,13 +1,14 @@
 package graft
+import graft.queries.Queries
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Harness.session()
-    // SPARK_GRAFT_BENCH_ONLY: comma-separated query-name subset, for runs
+    // SPARK_GRAFT_BENCH_ONLY: comma-separated query names, for runs
     // against partial data dirs (e.g. the sf10 pair-finding decade, where
     // only documents+embeddings exist at that scale)
-    val onlySet = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(Queries.all)(v => Queries.select(v.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+    val spark = Harness.session()
     // warmup: JVM/codegen/parquet-footer caches out of the timed loop
     // (documents always exists; lineitem may be absent in a partial dir)
     if (new java.io.File(s"$sfDir/lineitem.parquet").exists())
@@ -22,10 +23,9 @@ object Bench {
     // q109v is q109's exact-distinct accuracy yardstick: a corpus-wide
     // exploded count_distinct, valid only at gate/validation scale —
     // timing it would measure exactly the cost the HLL sketch avoids.
-    val timedQueries = (SparkEntry.queries
-        - "q35_cosine_neardup_exact" - "q109v_hll_accuracy")
-      .filter { case (name, _) => onlySet.forall(_.contains(name)) }
-    require(timedQueries.nonEmpty, "SPARK_GRAFT_BENCH_ONLY matched no queries")
+    val untimed = Set("q35_cosine_neardup_exact", "q109v_hll_accuracy")
+    val timedQueries = selected.filterNot(q => untimed(q.name)).map(q => q.name -> q)
+    require(timedQueries.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no timed query")
     // Best-of-N (default 2) per query: a single pass can record a host
     // stall (hypervisor steal, GC roaming across queries — see
     // BENCHNOTES.md round 3) as a 30x query time. The min over passes is
@@ -35,11 +35,11 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
     val byPass = (1 to passes).map { _ =>
-      Harness.eachQuery(timedQueries) { (_, fn) =>
+      Harness.eachQuery(timedQueries) { (_, q) =>
         val t0 = System.nanoTime()
         // noop sink materializes every column (count() would let Spark
         // prune the projection and under-measure the real work)
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        q.build(spark, sfDir).frame.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }.map {
         case (_, Right(sec)) => sec
@@ -50,7 +50,7 @@ object Bench {
           -1.0
       }
     }
-    val results = timedQueries.keys.toSeq.sorted.zip(byPass.transpose).map {
+    val results = timedQueries.map(_._1).zip(byPass.transpose).map {
       // any failed pass poisons the query: report the sentinel, not a min
       case (name, ts) => name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
     }

@@ -1,6 +1,6 @@
 package graft
 
-/** Committed-golden VALUES oracles for the four queries whose outputs are
+/** Committed-golden VALUES oracles for the nine queries whose outputs are
   * JVM-hash-specific (xxhash64 / splitmix64 / rolling-poly / seeded binary
   * payloads) and therefore have no engine-independent SQL reformulation.
   * The ALGORITHMS behind them are independently oracle-verified through the
@@ -14,8 +14,8 @@ package graft
   * point is that the kernels never change). Resources rather than string
   * literals because the sf0.1 winnowing set exceeds the JVM's 64 KB
   * string-constant limit. [[forDir]] keys on the data directory's
-  * basename; a scale with no committed goldens contributes nothing, so
-  * Verify omits the oracle entirely and the checker records an honest
+  * basename; at a scale with no committed goldens a golden query builds
+  * with no oracle, so Verify omits it and the checker records an honest
   * rows-only result instead of a wrong-scale value mismatch.
   */
 object GoldenOracles {
@@ -36,20 +36,16 @@ object GoldenOracles {
       finally in.close()
   }
 
-  /** Golden oracle SQL for one scale tag ("sf0.01", "sf0.1"); empty map
-    * when no goldens are committed for that scale.
+  /** The golden oracle of `query` selected by the data directory's
+    * basename, or None when none is committed for that scale. The in-repo
+    * scale-up dirs are named `testdata-sf1`/`testdata-sf10` (the driver's
+    * are plain `sf0.01`/`sf0.1`); the prefix is stripped so both naming
+    * schemes key the same `golden/<scale>/` resources.
     */
-  def forScale(scale: String): Map[String, String] =
-    queries.flatMap(q => load(scale, q).map(q -> _)).toMap
+  def forDir(sfDir: String, query: String): Option[String] =
+    load(new java.io.File(sfDir).getName.stripPrefix("testdata-"), query)
 
-  /** Golden oracle SQL selected by the data directory's basename. The
-    * in-repo scale-up dirs are named `testdata-sf1`/`testdata-sf10`
-    * (the driver's are plain `sf0.01`/`sf0.1`); the prefix is stripped
-    * so both naming schemes key the same `golden/<scale>/` resources.
-    */
+  /** Every golden oracle committed for the data directory's scale. */
   def forDir(sfDir: String): Map[String, String] =
-    forScale(new java.io.File(sfDir).getName.stripPrefix("testdata-"))
-
-  /** The driver's correctness gate runs at sf0.01 — this is its set. */
-  val sql: Map[String, String] = forScale("sf0.01")
+    queries.flatMap(q => forDir(sfDir, q).map(q -> _)).toMap
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.etl.CacheTracker
+import graft.queries.Scratch
 
 /** The measurement policy every query-running main shares (Bench, Verify,
   * QBench, ExplainAudit, ScaleUp, FuzzDiff): one session configuration and
@@ -36,9 +37,10 @@ object Harness {
     * that order: the body's result, or what it threw. A stderr line names
     * each query before it runs, so log lines between two markers belong to
     * the first. After every query, thrown or not, the tracked operator
-    * caches are drained (blocking) — outside anything the body times, so a
-    * later query or pass never reads an earlier one's blocks and no
-    * checkpoint outlives its query.
+    * caches are drained (blocking) and the query's scratch directories
+    * deleted — outside anything the body times, so a later query or pass
+    * never reads an earlier one's blocks or files and no checkpoint
+    * outlives its query.
     */
   def eachQuery[Q, T](queries: Iterable[(String, Q)])(
       body: (String, Q) => T): Seq[(String, Either[Throwable, T])] =
@@ -48,7 +50,7 @@ object Harness {
       val outcome =
         try Right(body(name, q))
         catch { case t: Throwable => Left(t) }
-        finally CacheTracker.unpersistCaches(blocking = true)
+        finally try CacheTracker.unpersistCaches(blocking = true) finally Scratch.release()
       name -> outcome
     }
 }

@@ -1,5755 +1,40 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.core.DEMV
-import graft.dedup.Dedup
-import graft.etl.Recode
-import graft.functions.TextFunctions
-import graft.similarity.Similarity
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one entry per implemented operator from SURVEY.md §2,
-  * with a DuckDB oracle per SQL-expressible query (column names aligned).
+import graft.queries.Queries
+
+/** Driver contract: every query declared in [[graft.queries]], as a frame
+  * builder keyed by name, and the DuckDB oracle of each query built so far.
   * Doubles are rounded in BOTH engines so hash comparison is stable across
   * summation orders; every result is deterministically ordered.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Persist a slim projected frame before a global ORDER BY when the
-    * projection is expensive and MAP-ONLY: the range sort's boundary
-    * sample is a full extra evaluation of the exchange child — with no
-    * upstream shuffle stage for AQE to reuse, such a query pays its
-    * whole kernel chain twice (measured on q101: two back-to-back
-    * ~1.4 s single-stage jobs, r11). Guide §5's exact caching
-    * criterion: reused (sample + exchange) AND expensive to recompute.
-    * The cached rows are exactly the query's OUTPUT columns — slim for
-    * most call sites, but text-bearing where text IS an output field
-    * (q93's round-tripped text, q130's WET text): those are the
-    * heaviest session-lifetime caches and the reason harnesses must
-    * drain [[graft.etl.CacheTracker]] between queries (Bench/Verify do).
-    * Queries with an aggregation/join exchange before the sort do NOT
-    * need this — the sample reads the materialized shuffle output.
-    */
-  private def cacheBeforeSort(df: DataFrame): DataFrame =
-    graft.etl.CacheTracker.persistTracked(df)
-
-  /** events.parquet carries TIMESTAMP(NANOS) which Spark only reads as Long
-    * (`spark.sql.legacy.parquet.nanosAsLong`, set in Verify/Bench sessions);
-    * normalize to a proper timestamp column either way.
-    */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
-    e.schema("ts").dataType match {
-      // driver layouts seen across rounds: TIMESTAMP(NANOS) read as long
-      // under nanosAsLong (ScaleUp keeps that layout), plain micros read
-      // as TIMESTAMP_NTZ, and instant-semantics TIMESTAMP. All converge on
-      // TIMESTAMP in the UTC session so unix_millis/epoch math is layout-
-      // independent (NTZ cast reinterprets the wall clock as UTC — exactly
-      // DuckDB's epoch_us reading of the same file).
-      case org.apache.spark.sql.types.LongType =>
-        e.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        e.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => e
-    }
-  }
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    pricingSummary(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------- q01
-  /** TPC-H-Q1-style pricing summary: scan+filter pushdown, hash aggregate
-    * (SURVEY A1/A2/P3).
-    */
-  private def pricingSummary(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .where(to_date(col("l_shipdate")) <= lit("1998-09-02"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-        round(avg(col("l_quantity")), 4).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  // ---------------------------------------------------------------- helpers
-  /** orders x customer with binary sensitive vars + label — the DEMV-shaped
-    * predictions table derived from the relational testdata.
-    */
-  private def demvInput(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .select(
-        when(col("c_mktsegment") === "BUILDING", 1).otherwise(0).as("s1"),
-        when(col("c_acctbal") >= 0, 1).otherwise(0).as("s2"),
-        col("o_orderstatus").as("y"),
-        col("o_orderkey"),
-        col("o_totalprice"))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> ((s, dir) => pricingSummary(s, dir)),
-
-    // q02: filter + projection pushdown, single scalar agg (TPC-H Q6 shape)
-    "q02_revenue" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .where(to_date(col("l_shipdate")).between("1995-01-01", "1996-12-31")
-          && col("l_discount").between(0.03, 0.07) && col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"))),
-
-    // q03: multi-way join, small dims broadcast (SURVEY §2.5 J2)
-    "q03_join_nations" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("total_price"))
-        .orderBy(col("r_name"), col("n_name"))),
-
-    // q04: fused conditional counts — the metric-engine workhorse (SURVEY A1,
-    // §2.7): ~6 predicates in ONE pass instead of one scan per count
-    "q04_conditional_counts" -> ((s, dir) =>
-      t(s, dir, "orders").agg(
-        count(lit(1)).as("n_total"),
-        sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("n_f"),
-        sum(when(col("o_orderstatus") === "O", 1L).otherwise(0L)).as("n_o"),
-        sum(when(col("o_orderstatus") === "P", 1L).otherwise(0L)).as("n_p"),
-        sum(when(col("o_totalprice") > 100000, 1L).otherwise(0L)).as("n_high"),
-        sum(when(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 100000, 1L)
-          .otherwise(0L)).as("n_urgent_high"))),
-
-    // q05: distinct (SURVEY A3)
-    "q05_distinct_flags" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(col("l_returnflag"), col("l_linestatus"))
-        .distinct().orderBy(col("l_returnflag"), col("l_linestatus"))),
-
-    // q06: union + re-aggregate (SURVEY §2.8 set ops)
-    "q06_union_parts" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      val small = p.where(col("p_size") < 10).withColumn("size_class", lit("small"))
-      val large = p.where(col("p_size") >= 40).withColumn("size_class", lit("large"))
-      small.unionByName(large)
-        .groupBy(col("size_class"), col("p_brand"))
-        .agg(count(lit(1)).as("n_parts"), round(avg(col("p_retailprice")), 4).as("avg_price"))
-        .orderBy(col("size_class"), col("p_brand"))
-    }),
-
-    // q07: quantile binning via ntile (SURVEY A5/F4 analog, deterministic).
-    // NOT ntile().over(Window.orderBy(...)) — that funnels every row through
-    // one task; Ranking.withNtile range-partitions, offsets, and applies the
-    // exact ntile bucket formula, all stages parallel.
-    "q07_ntile_orders" -> ((s, dir) =>
-      graft.etl.Ranking.withNtile(t(s, dir, "orders"),
-        Seq(col("o_totalprice"), col("o_orderkey")), 5, "bucket")
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          round(min(col("o_totalprice")), 2).as("lo"),
-          round(max(col("o_totalprice")), 2).as("hi"))
-        .orderBy(col("bucket"))),
-
-    // q08: exact top-k per group via ranking window — the sampler's window
-    // shape (SURVEY §2.2 step 3, deterministic variant)
-    "q08_topk_per_segment" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("c_mktsegment")).orderBy(col("c_acctbal").desc, col("c_custkey"))))
-        .where(col("rank") <= 3)
-        .select(col("c_mktsegment"), col("rank"), col("c_custkey"), round(col("c_acctbal"), 2).as("acctbal"))
-        .orderBy(col("c_mktsegment"), col("rank"))),
-
-    // q09: z-score standardization (SURVEY A4) — agg + broadcast, no
-    // single-partition window
-    "q09_zscore_acctbal" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val stats = c.agg(avg(col("c_acctbal")).as("m"), stddev_samp(col("c_acctbal")).as("sd"))
-      c.crossJoin(broadcast(stats))
-        .select(col("c_custkey"), round((col("c_acctbal") - col("m")) / col("sd"), 4).as("z"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // q10: explicit-edge binning (SURVEY F3, pandas cut semantics)
-    "q10_cut_quantity" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .withColumn("qty_bin", Recode.cut(col("l_quantity"),
-          Seq(0, 10, 25, 40, 51), Seq("xs", "s", "m", "l")))
-        .groupBy(col("qty_bin")).agg(count(lit(1)).as("n"))
-        .orderBy(col("qty_bin"))),
-
-    // q11: one-hot with literal column-per-value semantics (SURVEY F5)
-    "q11_onehot_priority" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          sum(when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)).as("p_urgent"),
-          sum(when(col("o_orderpriority") === "2-HIGH", 1L).otherwise(0L)).as("p_high"),
-          sum(when(col("o_orderpriority") === "3-MEDIUM", 1L).otherwise(0L)).as("p_medium"),
-          sum(when(col("o_orderpriority") === "4-NOT SPECIFIED", 1L).otherwise(0L)).as("p_notspec"),
-          sum(when(col("o_orderpriority") === "5-LOW", 1L).otherwise(0L)).as("p_low"))
-        .orderBy(col("o_orderstatus"))),
-
-    // q12: value-map replace + cast (SURVEY P9/P10)
-    "q12_replace_region" -> ((s, dir) =>
-      t(s, dir, "nation")
-        .withColumn("region_code", Recode.replaceValues(col("n_regionkey").cast("string"),
-          Map("0" -> "AFR", "1" -> "AME", "2" -> "ASI", "3" -> "EUR", "4" -> "MEA")))
-        .groupBy(col("region_code")).agg(count(lit(1)).as("n_nations"))
-        .orderBy(col("region_code"))),
-
-    // q13: anti join (SURVEY P6 row-drop analog / NOT EXISTS)
-    "q13_customers_no_open_orders" -> ((s, dir) => {
-      val open = t(s, dir, "orders").where(col("o_orderstatus") === "P")
-      t(s, dir, "customer")
-        .join(open, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // q14: semi join (EXISTS)
-    "q14_suppliers_recent" -> ((s, dir) => {
-      val recent = t(s, dir, "lineitem").where(to_date(col("l_shipdate")) >= lit("1998-01-01"))
-      t(s, dir, "supplier")
-        .join(recent, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    // q15: event-time tumbling window aggregation — the batch shape of the
-    // Structured Streaming pipeline (graft.streaming.EventPipeline)
-    "q15_events_hourly" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .select(col("w.start").as("hour_start"), col("event_type"), col("n_events"), col("sum_value"))
-        .orderBy(col("hour_start"), col("event_type"))),
-
-    // q16: JSON extraction from the semi-structured props column
-    "q16_events_props" -> ((s, dir) =>
-      events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          round(avg(col("k")), 4).as("avg_k"))
-        .orderBy(col("event_type"))),
-
-    // q17: DEMV cell weights — the core algorithm's w_exp/w_obs arithmetic
-    // (SURVEY §2.2). ONE scan: the (s1,s2,y) cell aggregate is tiny
-    // (<= 2^n * L rows), so the combo/label/total marginals are windows
-    // OVER THE CELLS, not re-scans of the base join — at 100 TB this is
-    // one shuffle of 12 rows instead of three scans of the fact table.
-    "q17_demv_weights" -> ((s, dir) => {
-      val cells = demvInput(s, dir)
-        .groupBy(col("s1"), col("s2"), col("y")).agg(count(lit(1)).as("n"))
-      val wCombo = Window.partitionBy(col("s1"), col("s2"))
-      val wLabel = Window.partitionBy(col("y"))
-      val nCombo = sum(col("n")).over(wCombo).cast("double")
-      val nLabel = sum(col("n")).over(wLabel).cast("double")
-      // grand total as a broadcast scalar, NOT an empty-partition window —
-      // same single-row result without the "No Partition Defined" WindowExec
-      val total = col("__total").cast("double")
-      cells
-        .crossJoin(broadcast(cells.agg(sum(col("n")).as("__total"))))
-        .select(col("s1"), col("s2"), col("y"), col("n"),
-          round((nCombo / total) * (nLabel / total), 8).as("w_exp"),
-          round(col("n") / total, 8).as("w_obs"),
-          round(((nCombo / total) * (nLabel / total)) / (col("n") / total), 4).as("disparity"))
-        .orderBy(col("s1"), col("s2"), col("y"))
-    }),
-
-    // q18: full DEMV balancing — output = post-balance cell sizes, which are
-    // deterministic (SURVEY §2.2: the ±1 loop is pure size arithmetic).
-    // No SQL oracle: the convergence loop isn't SQL-expressible; correctness
-    // is covered by ScalaTest replay tests against the reference semantics.
-    "q18_demv_balance" -> ((s, dir) => {
-      val d = demvInput(s, dir).select("s1", "s2", "y")
-      val balanced = new DEMV(Seq("s1", "s2"), shuffleOutput = false).fitTransform(d, "y")
-      balanced.groupBy(col("s1"), col("s2"), col("y")).agg(count(lit(1)).as("n_after"))
-        .orderBy(col("s1"), col("s2"), col("y"))
-    }),
-
-    // q19: exact dedup by normalized content fingerprint (SURVEY+: dedup)
-    "q19_dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(t(s, dir, "documents"), "text", "doc_id")
-        .select(col("fingerprint"), col("n_docs"), col("keep_id"))
-        .orderBy(col("keep_id"))),
-
-    // q20: text statistics — token counts, punctuation ratio (SURVEY+: text)
-    "q20_text_stats" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"),
-        length(col("text")).as("n_chars_computed"),
-        round(TextFunctions.punctRatio(col("text")), 6).as("punct_ratio"),
-        round(TextFunctions.stopwordRatio(col("text")), 6).as("stopword_ratio"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))),
-
-    // q21: language-ID heuristic vs the labeled lang column — confusion counts
-    "q21_lang_confusion" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("guess", TextFunctions.langGuess(col("text")))
-        .groupBy(col("lang"), col("guess")).agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("guess"))),
-
-    // q22: document quality scoring (SURVEY+: text quality)
-    "q22_quality_scores" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("quality", TextFunctions.qualityScore(col("text")))
-        .groupBy(col("source"), col("quality")).agg(count(lit(1)).as("n"))
-        .orderBy(col("source"), col("quality"))),
-
-    // q23: MinHash-LSH near-duplicate pairs, Jaccard-verified (SURVEY+:
-    // fuzzy dedup). No SQL oracle (seeded xxhash64 signatures are
-    // Spark-specific); invariants covered in ScalaTest.
-    "q23_minhash_neardup" -> ((s, dir) =>
-      Dedup.nearDuplicatePairs(t(s, dir, "documents"), "text", "doc_id", threshold = 0.8)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q24: SimHash near-dup pairs (rows-only; xxhash64-specific)
-    "q24_simhash_neardup" -> ((s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), "text", "doc_id", maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q25: embedding norms — vector arithmetic parity with the oracle
-    "q25_embedding_norms" -> ((s, dir) =>
-      t(s, dir, "embeddings").select(
-        col("vec_id"), col("label"),
-        round(Similarity.l2Norm(col("embedding").cast("array<double>")), 4).as("l2_norm"))
-        .orderBy(col("vec_id"))),
-
-    // q26: brute-force cosine top-k similarity search (SURVEY+: ANN baseline)
-    "q26_knn_bruteforce" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 3)
-      Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q27: LSH-bucketed ANN (rows-only: bucket assignment is seeded-plane
-    // specific; recall properties covered in ScalaTest)
-    "q27_knn_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 3)
-      Similarity.lshTopK(emb, queries, "vec_id", "embedding", k = 5, dim = 64, numBits = 4)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q28: cube / grouping sets — the one-pass marginal computation the
-    // balancer's weight math wants (SURVEY A2)
-    "q28_cube_marginals" -> ((s, dir) =>
-      demvInput(s, dir)
-        .cube(col("s1"), col("s2"))
-        .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
-        .orderBy(col("s1").asc_nulls_first, col("s2").asc_nulls_first)),
-
-    // q29: session windows via gap-islands (lag + running sum) — the
-    // SQL-expressible twin of the stateful sessionizer
-    // (graft.streaming.EventPipeline.sessionize)
-    "q29_sessions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      events(s, dir)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        // gap compared at MICROSECOND precision on both engines: a
-        // floor-to-second cast here vs the oracle's fractional epoch()
-        // would disagree on sub-second boundary gaps (q33 learned the
-        // same lesson at ms; timestamps are micros on the Spark side)
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            unix_micros(col("ts")) - unix_micros(col("prev_ts")) > 1800000000L, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum(col("new_session")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"))
-        .agg(max(col("session_id")).as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
-
-    // q30: BPE-ish subword token counting per language (SURVEY+: text)
-    "q30_bpe_tokens" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.bpeishTokenCount(col("text"))).as("total_bpe_tokens"))
-        .orderBy(col("lang"))),
-
-    // q31: post-processing prediction balancer — per-group predicted-class
-    // distributions equalized exactly (graft.eval.PostProcess; rows-only:
-    // the transport plan is driver arithmetic, verified in ScalaTest)
-    "q31_postprocess_balance" -> ((s, dir) => {
-      val pred = demvInput(s, dir)
-        .select(col("s1").as("g"), when(col("o_totalprice") > 100000, 1).otherwise(0).as("pred"))
-      graft.eval.PostProcess.adjust(pred, "g", "pred", seed = 7)
-        .groupBy(col("g"), col("pred")).agg(count(lit(1)).as("n"))
-        .orderBy(col("g"), col("pred"))
-    }),
-
-    // q32: multimodal feature extraction — binary payload columns through
-    // the batched decode plumbing. Images/audio decode for REAL (pure-JVM
-    // PGM/WAV codecs); video exercises the stub fallback (rows-only: the
-    // synthetic payload generation is seeded Scala, not SQL-replayable)
-    "q32_media_features" -> ((s, dir) => {
-      val media = graft.multimodal.Multimodal.synthetic(s, 500, seed = 11)
-      graft.multimodal.Multimodal.extractFeatures(media)
-        .groupBy(col("kind"), col("codec"))
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("brightness")), 6).as("avg_brightness"),
-          sum(col("byte_len")).as("total_bytes"),
-          max(col("width")).as("max_width"),
-          max(col("sample_rate")).as("max_sample_rate"))
-        .orderBy(col("kind"))
-    }),
-
-    // q34: average odds difference (SURVEY M4) — per-class one-vs-rest
-    // TPR/FPR vectors, reproducing the reference's missing-parens formula
-    // (utils.py:113) — oracle-checked against the same arithmetic in SQL
-    "q34_avg_odds" -> ((s, dir) => {
-      import graft.metrics.{FairnessMetrics, GroupCondition}
-      val pred = demvInput(s, dir).select(
-        col("s1"),
-        col("y").as("y_true"),
-        when(col("o_totalprice") > 100000, "F").otherwise("O").as("pred"))
-      val aod = FairnessMetrics.averageOddsDifference(
-        pred, GroupCondition(Map("s1" -> 1)), "pred", "y_true")
-      import s.implicits._
-      aod.toSeq.map { case (c, v) =>
-        // a class absent from one group yields NaN rates (documented aodImpl
-        // deviation) — emit NaN rather than crash in BigDecimal
-        (c.toString,
-          if (v.isNaN || v.isInfinite) v
-          else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }.toDF("class", "aod").orderBy(col("class"))
-    }),
-
-    // q37: IVF ANN — k-means coarse quantizer + probed exact re-rank.
-    // Training is deterministic (seeded xxhash64 TakeOrdered sample +
-    // seeded Lloyd), so the trained centroids are captured here and
-    // embedded as literals in the DuckDB oracle (`oracleSql` is dumped by
-    // Verify AFTER the queries run) — the q27/q39 embedded-constant
-    // pattern extended to data-trained constants.
-    "q37_knn_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 3)
-      val cent = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        dim = 64, nLists = 16)
-      q37Centroids = Some(cent)
-      Similarity.ivfTopK(emb, queries, "vec_id", "embedding", k = 5, dim = 64,
-        nLists = 16, nProbe = 4, corpusAssign = 2, centroids = Some(cent))
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q35: exact all-pairs embedding-cosine near-duplicates — the
-    // brute-force baseline the LSH variant approximates (SURVEY+: dedup by
-    // embedding); compiled cosine keeps the O(n^2/2) pair scan codegen'd
-    "q35_cosine_neardup_exact" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val a = e.alias("ea")
-      val b = e.alias("eb")
-      a.join(b, col("ea.vec_id") < col("eb.vec_id"))
-        .withColumn("cosine", Similarity.cosine(col("ea.v"), col("eb.v")))
-        .where(col("cosine") >= 0.3)
-        .select(col("ea.vec_id").as("id_a"), col("eb.vec_id").as("id_b"),
-          round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q36: composed corpus-cleaning pipeline — quality filter + language
-    // agreement + exact dedup, per-source stats. The end-to-end shape of a
-    // training-data prep job, every stage individually oracle-verified
-    "q36_corpus_clean" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("quality", TextFunctions.qualityScore(col("text")))
-        .withColumn("guess", TextFunctions.langGuess(col("text")))
-        .where(col("quality") >= 0.7 && col("guess") === col("lang"))
-      Dedup.exact(d, "text", "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.tokenCount(col("text"))).as("total_tokens"))
-        .orderBy(col("source"))
-    }),
-
-    // q38: winnowing (MOSS) fingerprint candidate pairs — any shared
-    // substring of length >= shingleSize + window - 1 guarantees a shared
-    // fingerprint; explode + equi-join on 8-byte hashes, text never
-    // shuffled (rows-only: fingerprints are seeded-hash-specific; the
-    // guarantee properties are covered in DedupSpec)
-    // The synthetic corpus draws words from a ~40-word vocabulary, so short
-    // character shingles are all boilerplate (5-char shingles put every doc
-    // pair over any threshold). 20-char shingles span ~4 words — rare across
-    // unrelated docs, dense inside near-duplicates: k=20/w=4/minShared=10
-    // recovers exactly the minhash near-dup band (25 pairs at sf0.01).
-    // maxBucketSize=64: a fingerprint shared by more docs is template noise,
-    // and keeping it makes the candidate join quadratic in the bucket size —
-    // the skew cap IS the scale story of this operator.
-    "q38_winnowing_pairs" -> ((s, dir) =>
-      Dedup.winnowingCandidatePairs(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 20, window = 4, minShared = 10, maxBucketSize = 64)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q39: LSH-bucketed cosine near-dup — the scale-safe sibling of q35's
-    // exact all-pairs baseline: candidate pairs must share a hyperplane
-    // bucket, so the pair count scales with bucket occupancy, not n^2
-    // (rows-only: bucket assignment is seeded-plane specific)
-    "q39_cosine_neardup_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      // occupancy-scaled bit-width (one count job): pinning bits made the
-      // within-bucket self-join quadratic in corpus size — the sf10 decade
-      // measured 70x wall for 10x data before this (BENCHNOTES round 5)
-      val bits = Similarity.bitsForOccupancy(e.count())
-      q39Bits = Some(bits)
-      Similarity.cosineNearDupPairs(e, "vec_id", "v", threshold = 0.3, dim = 64, numBits = bits)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q76: banded sign-LSH near-dup (SURVEY+ L40) — the recall-controlled
-    // production shape of q39: any-band collision makes a candidate, so
-    // per-pair recall rises 1-(1-p^r)^b at a LINEAR x4 cost; bits still
-    // ride the occupancy rule, so the decade scaling holds.
-    "q76_banded_neardup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val bits = Similarity.bitsForOccupancy(e.count())
-      q76Bits = Some(bits)
-      Similarity.bandedCosineNearDupPairs(e, "vec_id", "v", threshold = 0.3,
-          dim = 64, numBits = bits, numBands = Q76Bands)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q40: intra-document repetition — duplicate word-n-gram fraction, the
-    // quality signal corpus cleaning thresholds on (compiled kernel;
-    // DuckDB replays the exact n-gram construction via list comprehension)
-    "q40_repetition" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        round(TextFunctions.dupNgramFraction(col("text"), 3), 6).as("dup3"),
-        round(TextFunctions.dupNgramFraction(col("text"), 5), 6).as("dup5"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))),
-
-    // q41: exact word-5-gram Jaccard near-dup pairs with exact-string
-    // BLOCKING — candidates must share at least one word-8-gram (rare
-    // across unrelated docs, dense inside near-duplicates), so the pair
-    // count follows block occupancy, not n^2. The fully-oracle-able twin of
-    // the hashed MinHash-LSH path (q23): same plan shape, no seeds. Set ops
-    // stay in codegen'd built-ins (array_intersect/array_union); only ids +
-    // n-gram sets shuffle, never raw text.
-    // (implementation factored into Dedup.jaccardPairs in round 7 so the
-    // 64-id block cap's recall trade is MEASURED by BlockCapRecallSpec's
-    // planted ladder — same plan, byte-identical output)
-    "q41_jaccard_pairs" -> ((s, dir) =>
-      graft.dedup.Dedup.jaccardPairs(
-          t(s, dir, "documents"), "doc_id", "text",
-          n = 5, blockN = 8, blockCap = 64, minJaccard = 0.2)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q42: per-language top-k tokens (heavy hitters) — aggregate FIRST
-    // (token counts per lang are vocabulary-bounded), then a window over
-    // the tiny aggregate; deterministic tie-break on the token
-    "q42_top_tokens" -> ((s, dir) => {
-      val counts = t(s, dir, "documents")
-        .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("token"))
-        .where(length(col("token")) > 0)
-        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-      counts
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("lang")).orderBy(col("n").desc, col("token"))))
-        .where(col("rank") <= 5)
-        .select(col("lang"), col("rank"), col("token"), col("n"))
-        .orderBy(col("lang"), col("rank"))
-    }),
-
-    // q43: lexical diversity per language — total/distinct tokens and
-    // type-token ratio, the corpus-analytics cut of the token pipeline
-    "q43_lexical_diversity" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("token"))
-        .where(length(col("token")) > 0)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_tokens"),
-          countDistinct(col("token")).as("n_types"),
-          round(countDistinct(col("token")).cast("double") / count(lit(1)).cast("double"), 6)
-            .as("type_token_ratio"))
-        .orderBy(col("lang"))),
-
-    // q44: SLIDING event-time windows (1h window, 30m slide) — each event
-    // lands in two overlapping windows; the oracle replays the window-start
-    // arithmetic with two shifted time_buckets
-    "q44_events_sliding" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .select(col("w.start").as("w_start"), col("event_type"), col("n_events"), col("sum_value"))
-        .orderBy(col("w_start"), col("event_type"))),
-
-    // q45: AS-OF JOIN — for every click, the most recent prior-or-equal
-    // view value of the same user (graft.etl.AsOfJoin: tagged union + ONE
-    // partitioned window, no range-join blowup; DuckDB's native ASOF JOIN
-    // is the oracle)
-    "q45_asof_click_view" -> ((s, dir) => {
-      // exact integer ms (unix_millis ~ DuckDB epoch_ms), not raw
-      // timestamps: events.parquet is nanos, Spark truncates to micros
-      val ev = events(s, dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          round(col("value"), 4).as("click_value"))
-      // right side unique per (user, ts): keep the max view value
-      val views = ev.where(col("event_type") === "view")
-        .groupBy(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
-        .agg(max(col("value")).as("v"))
-        .select(col("user_id"), col("ts_ms"), round(col("v"), 4).as("view_value"))
-      graft.etl.AsOfJoin.asofLatest(clicks, views, Seq("user_id"), "ts_ms", Seq("view_value"))
-        .select(col("user_id"), col("ts_ms"), col("click_value"), col("view_value"))
-        .orderBy(col("user_id"), col("ts_ms"), col("click_value"))
-    }),
-
-    // q46: salted skew join — lineitem x supplier on suppkey with the left
-    // side salted 8 ways and the right replicated; the salt changes the
-    // physical distribution ONLY, so the oracle is the plain SQL join
-    "q46_skew_salted_join" -> ((s, dir) =>
-      graft.etl.SkewJoin.saltedEquiJoin(
-        t(s, dir, "lineitem").select(col("l_suppkey").as("s_suppkey"), col("l_quantity")),
-        t(s, dir, "supplier").select(col("s_suppkey"), col("s_name")),
-        Seq("s_suppkey"), saltBuckets = 8)
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("n_items"), round(sum(col("l_quantity")), 2).as("total_qty"))
-        .orderBy(col("s_name"))),
-
-    // q47: RANGE JOIN — events inside each user's first-hour interval,
-    // bucketed so containment becomes an equi-join on (user, bucket); the
-    // oracle is the plain SQL BETWEEN join
-    "q47_range_join_first_hour" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"), col("value"))
-      val intervals = ev.groupBy(col("user_id"))
-        .agg(min(col("ts_ms")).as("lo"))
-        .withColumn("hi", col("lo") + lit(3600L * 1000))
-      graft.etl.RangeJoin.pointInInterval(ev, intervals,
-        Seq("user_id"), "ts_ms", "lo", "hi", bucketWidth = 3600L * 1000)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_first_hour"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // q48: exact interpolated per-group percentiles (SURVEY A5) — computed
-    // by graft.etl.GroupPercentiles (range-split order statistics, 3
-    // bounded jobs) instead of Spark's `percentile` imperative aggregate,
-    // whose per-group value->count buffer merges in a single reducer (the
-    // round-2 scale flag). The interpolation reproduces DuckDB's
-    // `quantile_cont` two-multiply form exactly.
-    "q48_group_percentiles" -> ((s, dir) => {
-      import graft.etl.GroupPercentiles.PctSpec
-      graft.etl.GroupPercentiles.exact(
-        t(s, dir, "lineitem"),
-        Seq("l_returnflag"),
-        Seq(
-          PctSpec("l_quantity", 0.25, "p25"),
-          PctSpec("l_quantity", 0.5, "p50"),
-          PctSpec("l_quantity", 0.75, "p75"),
-          PctSpec("l_extendedprice", 0.9, "price_p90")))
-        .select(col("l_returnflag"),
-          round(col("p25"), 4).as("p25"),
-          round(col("p50"), 4).as("p50"),
-          round(col("p75"), 4).as("p75"),
-          round(col("price_p90"), 4).as("price_p90"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // q49: PII scrubbing (LLM-pipeline corpus cleaning) — synthetic PII is
-    // injected deterministically from doc_id so every row exercises the
-    // redaction; patterns are Java-regex/RE2-portable and md5 of the
-    // redacted text is byte-checked against DuckDB's identical pipeline
-    "q49_pii_redaction" -> ((s, dir) => {
-      val textExpr = concat(col("text"), lit(" contact user"),
-        col("doc_id").cast("string"), lit("@example.com node 10.0."),
-        (col("doc_id") % 256).cast("string"), lit(".7 call 555-123-4567"))
-      val withText = t(s, dir, "documents").select(col("doc_id"), textExpr.as("txt"))
-      val (ne, ni, np) = TextFunctions.piiCounts(col("txt"))
-      withText.select(col("doc_id"),
-        ne.as("n_email"), ni.as("n_ip"), np.as("n_phone"),
-        md5(TextFunctions.redactPii(col("txt"))).as("redacted_md5"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q50: weighted corpus mixing (LLM data recipe) — upweight English,
-    // downsample the rest; md5-hash selection makes the exact subset
-    // reproducible in DuckDB (graft.etl.Mixing)
-    "q50_weighted_mix" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.etl.Mixing.weightedMix(
-        Seq(
-          d.where(col("lang") === "en") -> 0.9,
-          d.where(col("lang") =!= "en") -> 0.25),
-        idCol = "doc_id", salt = "mix")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("lang"))
-    }),
-
-    // q51: sequence packing (LLM training export) — concat-and-chunk
-    // assignment of documents to fixed 4096-char training sequences via a
-    // scale-safe global running total (graft.etl.Packing); oracle = the
-    // naive single-window cumsum DuckDB can afford at sf scale
-    "q51_sequence_packing" -> ((s, dir) => {
-      graft.etl.Packing.assignSequences(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        orderCols = Seq(col("doc_id")), weightCol = "n_chars", budget = 4096L)
-        .groupBy(col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("seq_id"))
-    }),
-
-    // q52: corpus TF-IDF top terms per document (graft.text.TfIdf) —
-    // sklearn-smoothed idf, max_df stop-term cutoff doubling as the
-    // term-join skew guard; oracle replays the identical pipeline in SQL
-    "q52_tfidf_top_terms" -> ((s, dir) =>
-      graft.text.TfIdf.topTerms(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text",
-        k = 3, maxDfFraction = 0.9)
-        .select(col("doc_id"), col("rank"), col("term"),
-          col("tf"), col("df"), round(col("tfidf"), 6).as("tfidf"))
-        .orderBy(col("doc_id"), col("rank"))),
-
-    // q53: deterministic train/val/test split (graft.etl.Mixing.assignSplit)
-    // — hash-uniform assignment, proportions hold within every language
-    // stratum without a stratified pass; oracle replays the md5 draw and
-    // the exact cumulative-boundary doubles
-    "q53_split_assign" -> ((s, dir) =>
-      graft.etl.Mixing.assignSplit(
-        t(s, dir, "documents"), idCol = "doc_id",
-        splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "sp")
-        .groupBy(col("lang"), col("split"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("lang"), col("split"))),
-
-    // q54: int8 embedding quantization (Similarity.quantizeInt8) — per-
-    // vector scale + quantized-sum fingerprint, floor semantics replayed
-    // exactly by the DuckDB oracle; cosine drift vs float is spec-bounded
-    "q54_quantize_int8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      emb.select(col("vec_id"),
-        round(Similarity.vecMaxAbs(col("v")), 6).as("max_abs"),
-        Similarity.quantSumInt8(col("v")).as("q_sum"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // q55: near-dup clusters — connected components (min-label propagation,
-    // graft.dedup.Components) over the q39 LSH pair graph; component = min
-    // reachable vec_id, recomputed independently by a DuckDB recursive CTE
-    "q55_neardup_components" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val bits = Similarity.bitsForOccupancy(e.count())
-      q55Bits = Some(bits)
-      val pairs = Similarity.cosineNearDupPairs(e, "vec_id", "v",
-        threshold = 0.3, dim = 64, numBits = bits)
-      graft.dedup.Components.connectedComponents(
-        pairs, "id_a", "id_b", e.select(col("vec_id")), "vec_id")
-        .select(col("id").as("vec_id"), col("component"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // q56: inverted-index AND search (graft.text.Search) — postings are
-    // filtered to the query terms BEFORE any shuffle; AND = distinct
-    // matched-term count equals the query size
-    "q56_keyword_search" -> ((s, dir) =>
-      graft.text.Search.matchAll(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text",
-        terms = Seq("window", "merge", "stream"))
-        .orderBy(col("doc_id"))),
-
-    // q57: unigram LM cross-entropy (graft.text.UnigramLm) — the CCNet-
-    // style quality score; oracle replays add-one smoothing and the
-    // weighted average in SQL
-    "q57_unigram_xent" -> ((s, dir) =>
-      graft.text.UnigramLm.crossEntropy(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text")
-        .select(col("doc_id"), col("n_tokens"), round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))),
-
-    // q58: PORTABLE winnowing fingerprints — q38's selection algorithm on
-    // md5-derived hashes both engines can compute, making the whole
-    // fingerprint SET oracle-checked (q38's rolling hash stays the
-    // production path; this is its cross-engine verification twin).
-    // ASCII corpus assumption: the JVM kernel lowercases A-Z only.
-    "q58_winnowing_portable" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        explode(TextFunctions.winnowingFingerprintsPortable(col("text"), 8, 4)).as("fp"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"), col("fp"))),
-
-    // q59: PORTABLE MinHash-LSH near-dup — q23's operator
-    // (Dedup.minhashPairs, the body of nearDuplicatePairs) run on md5-base
-    // hashes + affine permutations mod 2^31-1 (overflow-free arithmetic
-    // DuckDB reproduces exactly), candidates verified by exact Jaccard on
-    // md5 shingle sets. Only the kernels differ from q23, so the oracle
-    // checks the production banding, hot-bucket guard, candidate
-    // checkpoint, id prune and verify. estFloor = 0.0 turns the estimate
-    // prefilter off: the 0.2 threshold sits where it would change results
-    // (BENCHNOTES round 7).
-    "q59_minhash_portable" -> ((s, dir) =>
-      Dedup.minhashPairs(t(s, dir, "documents"), "doc_id",
-          TextFunctions.minhashPortableSignature(col("text"), 5, 32, 42L),
-          TextFunctions.shingleHashSetPortable(col("text"), 5),
-          threshold = 0.2, bands = 8, rowsPerBand = 4, estFloor = 0.0,
-          maxBucketSize = 1000)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q60: PORTABLE SimHash Hamming-ball near-dup — q24's operator
-    // (Dedup.hammingPairs64, block4 scheme) on a 60-bit md5-token SimHash
-    // DuckDB reproduces bit-for-bit. The oracle blocks on 4 x 15 bits,
-    // the operator on 4 x 16; both are pigeonhole-complete for
-    // hamming <= 3, so both yield every such pair.
-    "q60_simhash_portable" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-          t(s, dir, "documents")
-            .select(col("doc_id"), TextFunctions.simhash60Portable(col("text")).as("sim")),
-          "doc_id", "sim", maxHamming = 3, blockScheme = "block4")
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q61: benchmark decontamination (SURVEY+ L23) — docs with doc_id % 17
-    // == 3 play the held-out benchmark; training docs sharing any distinct
-    // word-5-gram with it are flagged with hit counts. The benchmark n-gram
-    // set broadcasts; the corpus match is map-side (no corpus shuffle).
-    "q61_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.where(pmod(col("doc_id"), lit(17)) === 3)
-      val train = docs.where(pmod(col("doc_id"), lit(17)) =!= 3)
-      graft.text.Decontaminate.overlapReport(train, bench, "doc_id", "text", n = 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q62: bloom-prefiltered exact anti-join (SURVEY+ L24) — strip from the
-    // non-src0 corpus every document whose normalized content fingerprint
-    // already appears in src0 (cross-source exact contamination). The bloom
-    // probe short-circuits definitely-clean rows past the join; the exact
-    // confirm restores plain-anti-join semantics, so the oracle is the
-    // plain anti-join.
-    "q62_bloom_antijoin" -> ((s, dir) => {
-      val fp = TextFunctions.fingerprint(col("text"))
-      val docs = t(s, dir, "documents").withColumn("__fp", fp)
-      val corpus = docs.where(col("source") =!= "src0")
-      val block = docs.where(col("source") === "src0").select(col("__fp"))
-      graft.etl.BloomFilters.antiJoin(corpus, "__fp", block, "__fp",
-          expectedItems = 20000L)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q63: chunk-granular exact substring dedup (SURVEY+ L25, Lee et al.
-    // 2021 at chunk granularity) — repeated 10-word chunks removed
-    // everywhere but their first (doc_id, position) occurrence, documents
-    // reassembled from the survivors.
-    "q63_chunk_dedup" -> ((s, dir) =>
-      graft.dedup.ChunkDedup.dedupSpans(t(s, dir, "documents"), "doc_id", "text", n = 10)
-        .orderBy(col("doc_id"))),
-
-    // q64: token-budget selection (SURVEY+ L26) — keep the highest-quality
-    // documents until 20% of the corpus token mass is spent. The running
-    // total is Packing's range-split cumsum (no single-partition window);
-    // the integer comparison cum*5 <= total sidesteps double-literal
-    // fraction drift between engines. The 1-row global-total broadcast is
-    // the allowed scalar-BNL pattern (q09/q17).
-    "q64_token_budget" -> ((s, dir) => {
-      // persisted: the running-total machinery (boundary sample, range
-      // counts, final pass) plus the corpus-total aggregate evaluate this
-      // map-only scored frame FOUR times — the cacheBeforeSort rationale,
-      // one action wider (r11); cached rows are the three slim fields
-      val scored = cacheBeforeSort(t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextFunctions.qualityScore(col("text")).as("quality")))
-      val total = scored.agg(sum(col("n_tokens")).as("__total"))
-      graft.etl.Packing
-        .withRunningTotal(scored, Seq(negate(col("quality")), col("doc_id")),
-          "n_tokens", "cum_tokens")
-        .crossJoin(broadcast(total))
-        .where(col("cum_tokens") * 5 <= col("__total"))
-        .select(col("doc_id"), col("quality"), col("n_tokens"), col("cum_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q65: KMeans document clustering profile (SURVEY+ L27) — cluster the
-    // embedding corpus with seeded bounded-sample KMeans (cost independent
-    // of corpus size), assign every vector map-side, report per-cluster
-    // size and mean distance-to-centroid. Trained centroids are captured
-    // for the oracle exactly like q37's.
-    "q65_kmeans_clusters" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val (cent, profile) = Similarity.kmeansClusterProfile(
-        emb, "vec_id", "embedding", dim = 64, k = 8)
-      q65Centroids = Some(cent)
-      profile.orderBy(col("cell"))
-    }),
-
-    // q66: exact-N stratified corpus sample (SURVEY+ L28) — exactly 60
-    // docs proportional over languages (largest-remainder quotas), rows
-    // picked by the portable md5 rank; salted two-level selection never
-    // ranks a whole stratum in one task.
-    "q66_stratified_sample" -> ((s, dir) =>
-      graft.etl.Stratified.exactProportionalSample(
-          t(s, dir, "documents"), "lang", "doc_id", total = 60L)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))),
-
-    // q67: token-weighted language mixing (SURVEY+ L29) — each language
-    // consumes corpus token mass up to its weight share (en 4/10, fr 2/10,
-    // de 2/10, es 1/10, zh 1/10 of TOTAL tokens), documents admitted in
-    // portable-md5 order. The per-language running total is the grouped
-    // range-split cumsum — languages are few and huge, exactly the shape
-    // where Window.partitionBy(lang) would sort a third of the corpus in
-    // one task. All-integer budget test (cum*10 <= total*w10): no
-    // fraction-literal drift.
-    "q67_token_mix" -> ((s, dir) => {
-      import s.implicits._
-      // persisted: grouped-running-total machinery + the corpus-total
-      // aggregate re-evaluate this map-only frame several times (the q64
-      // rationale, r11); cached rows are the four slim fields
-      val scored = cacheBeforeSort(t(s, dir, "documents").select(
-        col("doc_id"), col("lang"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-        graft.etl.Stratified.md5Rank(col("doc_id")).as("__rk")))
-      val total = scored.agg(sum(col("n_tokens")).as("__total"))
-      val weights = broadcast(Seq(("en", 4), ("fr", 2), ("de", 2), ("es", 1), ("zh", 1))
-        .toDF("lang", "__w10"))
-      graft.etl.Packing
-        .withGroupedRunningTotal(scored, Seq("lang"), Seq(col("__rk"), col("doc_id")),
-          "n_tokens", "cum_tokens")
-        .join(weights, Seq("lang"))
-        .crossJoin(broadcast(total))
-        .where(col("cum_tokens") * 10 <= col("__total") * col("__w10"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok_sel"))
-        .orderBy(col("lang"))
-    }),
-
-    // q69: canonical document per near-dup cluster (SURVEY+ L33) — closes
-    // the dedup loop: q41's exact-Jaccard pairs -> connected components ->
-    // keep the highest-quality doc per cluster (ties to the lower id).
-    // The winner rank is a window PARTITIONED BY component (components are
-    // tiny — the safe high-cardinality window case).
-    "q69_canonical_docs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = queries("q41_jaccard_pairs")(s, dir).select(col("id_a"), col("id_b"))
-      val comps = graft.dedup.Components.connectedComponents(
-          pairs, "id_a", "id_b", docs.select(col("doc_id")), "doc_id")
-        .select(col("id").as("doc_id"), col("component"))
-      val quality = docs.select(col("doc_id"),
-        TextFunctions.qualityScore(col("text")).as("quality"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("component")).orderBy(col("quality").desc, col("doc_id"))
-      comps.join(quality, Seq("doc_id"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n_docs", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("component"))))
-        .where(col("rn") === 1)
-        .select(col("component"), col("n_docs"), col("doc_id").as("keep_id"), col("quality"))
-        .orderBy(col("component"))
-    }),
-
-    // q68: bigram-LM cross-entropy (SURVEY+ L32) — one conditioning level
-    // beyond q57: P(w2|w1) add-one smoothed from corpus bigram counts
-    // (UnigramLm.ngramCrossEntropy at n = 2).
-    "q68_bigram_xent" -> ((s, dir) =>
-      graft.text.UnigramLm.ngramCrossEntropy(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", n = 2)
-        .select(col("doc_id"), col("n_ngrams").as("n_bigrams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))),
-
-    // q70: cross-source corpus overlap via KMV sketches (SURVEY+ L34) —
-    // ONE scan builds a k-minimum-values sketch of each source's 5-shingle
-    // set (graft.sketch.KmvSketchAgg: bounded TypedImperativeAggregate
-    // state, <= k longs per source per map partition, order-independent);
-    // pairwise distinct-count and Jaccard estimates are then plain Column
-    // math over the tiny aggregated result — cross-source overlap with NO
-    // join of raw data. Portable md5-60 hashes => DuckDB replays the
-    // sketches and estimators bit-for-bit.
-    "q70_kmv_source_overlap" -> ((s, dir) => {
-      import graft.sketch.Kmv
-      val k = 256
-      val sh = t(s, dir, "documents").select(col("source"),
-        TextFunctions.shingleHashSetPortable(col("text"), 5).as("hs"))
-      val sk = sh.groupBy(col("source")).agg(Kmv.sketch(col("hs"), k).as("sk"))
-      val a = sk.select(col("source").as("source_a"), col("sk").as("ska"))
-      val b = sk.select(col("source").as("source_b"), col("sk").as("skb"))
-      // pair join runs on the AGGREGATED frame: one row per source, so the
-      // non-equi (<) join is |sources|^2 over sketch ids — tiny by
-      // construction, same class as the documented exact baselines
-      a.join(b, col("source_a") < col("source_b"))
-        .select(col("source_a"), col("source_b"),
-          round(Kmv.distinctEstimate(col("ska"), k), 4).as("est_distinct_a"),
-          round(Kmv.distinctEstimate(col("skb"), k), 4).as("est_distinct_b"),
-          round(Kmv.jaccardEstimate(col("ska"), col("skb"), k), 4).as("est_jaccard"))
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-
-    // q71: SemDeDup (SURVEY+ L35, Abbas et al. 2023) — semantic near-dup
-    // pairs found inside trained KMeans cells only: the global O(n^2) pair
-    // scan becomes an equi-join on the cell id (data-adaptive buckets,
-    // vs q39's random hyperplanes). Centroids captured for the oracle the
-    // same way as q37/q65.
-    "q71_semdedup_pairs" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      // SemDeDup scaling rule: cells grow with the corpus (the paper runs
-      // 50k cells over 5B vectors) so within-cell all-pairs stays linear —
-      // k pinned at 8 measured 95x wall for 10x data on the sf10 decade
-      val k = Similarity.cellsForOccupancy(emb.count())
-      // measurement hook (round-6 verdict task): lowering the flop
-      // threshold forces centroid training through the DISTRIBUTED
-      // spark.ml route — the oracle captures whatever centroids the run
-      // produced, so the gate verifies that route end-to-end too
-      val flops = sys.env.get("SPARK_GRAFT_IVF_DRIVER_FLOPS")
-        .map(_.toLong).getOrElse(10000000000L)
-      val (cent, pairs) = Similarity.semanticNearDupPairs(
-        emb, "vec_id", "v", dim = 64, threshold = 0.3, k = k,
-        driverFlopsPerIter = flops)
-      q71Centroids = Some(cent)
-      pairs.select(col("cell").cast("long").as("cell"), col("id_a"), col("id_b"),
-          round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q73: hierarchical KMV rollup (SURVEY+ L34) — per-source sketches
-    // re-aggregated into ONE corpus sketch by feeding the sketch arrays
-    // back through the same aggregate (KmvSpec proves rollup == direct).
-    // This is the 100 TB maintenance pattern: keep tiny per-partition
-    // sketches fresh incrementally, answer corpus-wide distinct questions
-    // from the rollup without touching raw data. Oracle = the direct
-    // global sketch, which equals the rollup by the merge property.
-    "q73_kmv_rollup" -> ((s, dir) => {
-      import graft.sketch.Kmv
-      val k = 256
-      val sh = t(s, dir, "documents").select(col("source"),
-        TextFunctions.shingleHashSetPortable(col("text"), 5).as("hs"))
-      val perSource = sh.groupBy(col("source")).agg(Kmv.sketch(col("hs"), k).as("sk"))
-      perSource.agg(
-          // count over non-null sources = DuckDB count(DISTINCT source)
-          // semantics (a NULL-source group would otherwise be counted)
-          count(col("source")).as("n_sources"),
-          Kmv.sketch(col("sk"), k).as("g"))
-        .select(col("n_sources"),
-          size(col("g")).cast("long").as("sketch_size"),
-          element_at(col("g"), 1).as("h_min"),
-          element_at(col("g"), size(col("g"))).as("h_kth"),
-          round(Kmv.distinctEstimate(col("g"), k), 4).as("est_distinct_shingles"))
-    }),
-
-    // q72: per-domain document cap (SURVEY+ L36) — keep at most 15 docs
-    // per source, rows picked by the portable md5 rank. The rank filter is
-    // rewritten by Spark 4 into a map-side WindowGroupLimit (asserted in
-    // MixingSpec), so the exchange carries <= cap rows per group per map
-    // task — never the whole domain.
-    "q72_domain_cap" -> ((s, dir) =>
-      graft.etl.Mixing.capPerGroup(t(s, dir, "documents"), "source", "doc_id", cap = 15)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("source"))),
-
-    // q74: Gopher rule-based quality gate (SURVEY+ L7 family) — per-source
-    // counts of each rule failure plus the combined pass, all from ONE
-    // compiled single-pass counter kernel per document. The word-count
-    // window uses the paper's [50, 100k]; the fixture straddles it, so
-    // every rule column carries real signal.
-    "q74_gopher_rules" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("source"), TextFunctions.gopherFlags(col("text"), 50L, 100000L).as("f"))
-        .groupBy(col("source")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("f.fail_words").cast("long")).as("n_fail_words"),
-          sum(col("f.fail_word_len").cast("long")).as("n_fail_word_len"),
-          sum(col("f.fail_symbol").cast("long")).as("n_fail_symbol"),
-          sum(col("f.fail_bullet").cast("long")).as("n_fail_bullet"),
-          sum(col("f.fail_ellipsis").cast("long")).as("n_fail_ellipsis"),
-          sum(col("f.fail_alpha").cast("long")).as("n_fail_alpha"),
-          sum(col("f.fail_stopword").cast("long")).as("n_fail_stopword"),
-          sum(col("f.pass").cast("long")).as("n_pass"))
-        .orderBy(col("source"))),
-
-    // q75: within-document repeated-line removal (CCNet/RefinedWeb
-    // boilerplate stripping) — map-side compiled kernel, zero shuffle;
-    // reports the line/char deltas per document.
-    "q75_line_dedup" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), "\n", -1)).cast("long").as("n_lines"),
-          TextFunctions.dedupLines(col("text")).as("__clean"))
-        .select(col("doc_id"), col("n_lines"),
-          size(split(col("__clean"), "\n", -1)).cast("long").as("n_kept"),
-          length(col("__clean")).cast("long").as("n_chars_after"))
-        .orderBy(col("doc_id"))),
-
-    // q77: BM25 top-k retrieval (graft.text.Search.bm25TopK) — OR-semantics
-    // ranked search with Lucene idf; "dup" is the rare high-idf term, the
-    // others are corpus-common. One posting shuffle (filtered to the query
-    // terms map-side), dl rides the grouping key, |Q|-row broadcast df,
-    // TakeOrderedAndProject top-k. Oracle replays the identical double
-    // arithmetic in DuckDB (explicit DOUBLE casts keep it out of DECIMAL).
-    "q77_bm25_topk" -> ((s, dir) =>
-      graft.text.Search.bm25TopK(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text",
-        terms = Seq("dup", "window", "stream"), k = 20)),
-
-    // q78: corpus top-k bigram stats (graft.text.NgramStats) — two-level
-    // hash-agg (map-side combined), TakeOrderedAndProject top-k; ties at
-    // the cut break on the bigram string (ASCII, binary-collation-stable)
-    "q78_top_bigrams" -> ((s, dir) =>
-      graft.text.NgramStats.topBigrams(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", k = 30)),
-
-    // q79: JSONL boundary roundtrip (graft.data.JsonLines) — sharded
-    // lang-partitioned JSONL export then explicit-schema PERMISSIVE
-    // read-back; the oracle is the source table itself, so a hash-green
-    // run proves the interchange format is lossless INCLUDING newlines
-    // and escapes in text, and that no line was dropped or quarantined
-    "q79_jsonl_roundtrip" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      // pid-suffixed staging dir: verify and bench can run concurrently
-      // against different sf dirs — a shared fixed path would let one
-      // run's overwrite race the other's lazy read-back
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q79_jsonl_${ProcessHandle.current().pid()}").getAbsolutePath
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-      graft.data.JsonLines.writeSharded(docs, out,
-        partitionCols = Seq("lang"), orderCols = Seq(col("doc_id")),
-        maxRecordsPerFile = 2000, shardsPerPartition = 2)
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("source", StringType),
-        StructField("n_chars", LongType), StructField("text", StringType),
-        StructField("lang", StringType)))
-      graft.data.JsonLines.read(s, out, schema)
-        .where(col("_corrupt_line").isNull)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q80: overlapping passage chunking (graft.text.Chunker, SURVEY+ L45)
-    // — the RAG/embedding-corpus splitter. Pure map stage: tokenize,
-    // arithmetic chunk count, explode+slice+join; zero shuffles before
-    // the output ordering. window=16/stride=12 gives ~4 chunks per
-    // fixture doc (~50 tokens), exercising the overlap and the short
-    // final chunk.
-    "q80_passage_chunks" -> ((s, dir) =>
-      graft.text.Chunker.chunkPassages(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text",
-        windowTokens = 16, strideTokens = 12)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-
-    // q81: SpaceSaving heavy-hitters sketch (graft.sketch.SpaceSaving,
-    // SURVEY+ L46) — per-source top-10 bigrams from a bounded-memory
-    // mergeable summary. Per-document bigram ARRAYS feed the aggregate
-    // (no corpus-token explode); capacity 131072 exceeds the fixture
-    // bigram vocabulary at every gate scale THROUGH sf10 (the scaled-up
-    // corpora's decorrelation mutations grow it to ~91k/source at sf10;
-    // 4096 left the exact regime at sf1), so counts are exact (err 0)
-    // and the oracle is the exact ranking. Buffers allocate lazily —
-    // memory tracks distinct-seen, not capacity — and the
-    // eviction/merge-bound regime is spec-covered (SpaceSavingSpec).
-    "q81_heavy_hitters" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(col("source"))
-        .agg(graft.sketch.SpaceSaving.summary(
-          TextFunctions.wordNgramStream(col("text"), 2), 131072).as("sk"))
-        .select(col("source"),
-          posexplode(graft.sketch.SpaceSaving.topK(col("sk"), 10)))
-        .select(col("source"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.term").as("bigram"), col("col.count").as("est_count"),
-          col("col.err").as("err"))
-        .orderBy(col("source"), col("rank"))),
-
-    // q82: DSIR importance weights (graft.text.Dsir, SURVEY+ L47) —
-    // hashed unigram+bigram log-likelihood-ratio scores of every doc
-    // against the lang='en' target distribution. Pass 1 ships only
-    // (bucket, bool) ints into a 1024-group agg; pass 2 is a pure map
-    // stage folding a 1024-double plan literal over each doc's own
-    // feature array. 6-dp rounding absorbs summation-order noise (the
-    // q77 precedent).
-    "q82_dsir_weights" -> ((s, dir) =>
-      graft.text.Dsir.importanceWeights(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text",
-        targetPred = col("lang") === "en", numBuckets = 1024)),
-
-    // q83: group-centroid embedding pooling (graft.similarity.Pooling,
-    // SURVEY+ L48) — per-label mean centroid over x1000-quantized
-    // vectors. The TypedImperativeAggregate ships ONE dim-length double
-    // array per (group x map-partition) instead of an n x dim posexplode
-    // shuffle; integral quantized inputs make the sums exact in any merge
-    // order, so the oracle is a bit-exact replay with no rounding. The
-    // final posexplode runs over the 10-group AGGREGATED result (the
-    // driver gate has no array-column precedent), not the data.
-    "q83_label_centroids" -> ((s, dir) =>
-      t(s, dir, "embeddings")
-        // the aggregate skips NULL rows and rows containing a null
-        // element; filter them HERE too so n_vecs always equals the
-        // mean denominator (fixture has neither, but a regenerated
-        // scale-up must not be able to diverge the oracle)
-        .where(col("embedding").isNotNull &&
-          !exists(col("embedding"), x => x.isNull))
-        .select(col("label"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 1000, 0)).as("qv"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          graft.similarity.Pooling.meanPool(col("qv")).as("centroid"))
-        .select(col("label"), col("n_vecs"),
-          posexplode(col("centroid")).as(Seq("dim", "c")))
-        .select(col("label"), col("n_vecs"),
-          col("dim").cast("long").as("dim"), col("c"))
-        .orderBy(col("label"), col("dim"))),
-
-    // q84: cross-doc duplicated-span detection (graft.dedup.SpanDedup,
-    // SURVEY+ L49) — Lee-et-al-style exact-substring spans via word-8-gram
-    // anchors (md5-60 portable hash for the oracle; xxhash64 default in
-    // production): positions whose gram occurs in >=2 distinct docs,
-    // merged per doc into maximal overlap-or-abut token runs.
-    "q84_duplicated_spans" -> ((s, dir) =>
-      graft.dedup.SpanDedup.duplicatedSpans(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text",
-        n = 8, minDocs = 2, hash = graft.dedup.SpanDedup.portableHash60)
-        .orderBy(col("doc_id"), col("span_start"))),
-
-    // q85: span removal — the cleaning half of L49: q84's spans cut out
-    // of every document by the compiled single-pass remove_spans
-    // kernel (spans pack into one small array per affected doc; plain
-    // equi-join; no corpus explode, no window). Output is the full
-    // cleaned text, so the oracle is a byte-exact string compare.
-    "q85_strip_spans" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val spans = graft.dedup.SpanDedup.duplicatedSpans(
-        docs, idCol = "doc_id", textCol = "text", n = 8, minDocs = 2,
-        hash = graft.dedup.SpanDedup.portableHash60)
-      graft.dedup.SpanDedup.stripSpans(
-          docs.select(col("doc_id"), col("text")), "doc_id", "text", spans)
-        .select(col("doc_id"), col("clean_text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q86: BPE tokenizer training (graft.text.Bpe, SURVEY+ L50) — the
-    // first 6 learned merge rules over the documents corpus. The only
-    // distributed work is ONE word-frequency agg (BPE training is a pure
-    // function of the word-count table); the driver merge loop is
-    // replayed in DuckDB as 6 generated CTE rounds (argmax with the
-    // (count DESC, left, right) code-point tie-break + boundary-wrapped
-    // replace, which is exactly left-to-right non-overlapping like the
-    // trainer). maxVocabWords is far above the fixture vocabulary, so
-    // the cap provably does not bite.
-    "q86_bpe_merges" -> ((s, dir) => {
-      val merges = graft.text.Bpe.train(
-        t(s, dir, "documents"), "text", numMerges = 6,
-        minCount = 1L, maxVocabWords = 100000)
-      graft.text.Bpe.mergesTable(s, merges).orderBy(col("rank"))
-    }),
-
-    // q87: greedy k-center coreset (graft.similarity.Similarity
-    // .kCenterSelect, SURVEY+ L51) — 8 maximally-diverse embeddings by
-    // farthest-point-first selection. Each round is one map stage over
-    // the cached corpus against a plan-literal center + a TakeOrdered(1);
-    // the oracle replays all 8 rounds as generated CTEs (exact dist2
-    // replay, (d DESC, id) argmax).
-    "q87_kcenter_coreset" -> ((s, dir) =>
-      graft.similarity.Similarity.kCenterSelect(
-        t(s, dir, "embeddings"), idCol = "vec_id", vecCol = "embedding",
-        k = 8)),
-
-    // q88: HTML -> text extraction (TextFunctions.htmlToText, SURVEY+
-    // L52) — each document wrapped into a full HTML page (head/style,
-    // h1, comment, p, trailing script) and extracted back: block
-    // removal, tag->space, entity decode, collapse. The whole operator
-    // is a codegen'd regexp/replace chain over shared Java/RE2 syntax,
-    // so the oracle replays extraction byte-for-byte.
-    "q88_html_extract" -> ((s, dir) =>
-      // rangeBeforeKernel (r12), NOT cacheBeforeSort: the output is the
-      // full cleaned text, so the cache held the whole corpus — the
-      // pre-kernel range exchange gives the same single kernel
-      // evaluation (boundary sample reads only the scan) with no cache
-      t(s, dir, "documents")
-        .repartitionByRange(col("doc_id"))
-        .select(col("doc_id"),
-          concat(
-            lit("<html><head><style>p { color: red }</style></head><body><h1>"),
-            col("source"), lit("</h1><!-- id --><p>"), col("text"),
-            lit("</p><script>var x = 1 &amp;&amp; 2;</script></body></html>"))
-            .as("html"))
-        .select(col("doc_id"),
-          TextFunctions.htmlToText(col("html")).as("text_clean"))
-        .orderBy(col("doc_id"))),
-
-    // q89: WARC record parsing (graft.data.Warc, SURVEY+ L53) — each
-    // document synthesized into a two-record WARC cell (response +
-    // metadata, byte-accurate Content-Length via octet_length) and
-    // parsed back by the compiled kernel; the oracle is the identity
-    // derivation straight off the documents table, so any framing or
-    // byte-slicing error in the parser breaks the hash.
-    "q89_warc_roundtrip" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull && col("source").isNotNull)
-      val blob = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://example.org/doc/"),
-        col("doc_id"),
-        lit("\r\nContent-Length: "), octet_length(col("text")),
-        lit("\r\n\r\n"), col("text"), lit("\r\n\r\n"),
-        lit("WARC/1.0\r\nWARC-Type: metadata\r\nWARC-Target-URI: https://example.org/meta/"),
-        col("doc_id"),
-        lit("\r\nContent-Length: "), octet_length(col("source")),
-        lit("\r\n\r\n"), col("source"), lit("\r\n\r\n"))
-      docs.select(col("doc_id"),
-          posexplode(graft.data.Warc.parseRecords(blob)).as(Seq("idx", "r")))
-        .select(col("doc_id"), col("idx").cast("long").as("idx"),
-          col("r.warc_type"), col("r.target_uri"),
-          col("r.content_length"), col("r.payload"))
-        .orderBy(col("doc_id"), col("idx"))
-    }),
-
-    // q90: composed web-ingestion capstone — WARC parse -> HTML->text
-    // extraction -> min-token quality gate -> per-source corpus stats,
-    // all in one plan. The oracle rebuilds the page and REPLAYS
-    // extraction+filter+agg but trusts no parser: if the WARC kernel
-    // returned one wrong payload byte, extraction output diverges and
-    // the hash breaks (q89 proves parse identity; this proves the
-    // chain composes).
-    "q90_ingest_chain" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull && col("source").isNotNull)
-      val page = concat(
-        lit("<html><head><style>p { color: red }</style></head><body><h1>"),
-        col("source"), lit("</h1><!-- id --><p>"), col("text"),
-        lit("</p><script>var x = 1 &amp;&amp; 2;</script></body></html>"))
-      val blob = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://example.org/doc/"),
-        col("doc_id"), lit("\r\nContent-Length: "), octet_length(page),
-        lit("\r\n\r\n"), page, lit("\r\n\r\n"))
-      docs.select(col("doc_id"), col("source"),
-          explode(graft.data.Warc.parseRecords(blob)).as("r"))
-        .where(col("r.warc_type") === "response")
-        .select(col("source"),
-          TextFunctions.htmlToText(col("r.payload")).as("clean"))
-        .where(TextFunctions.tokenCount(col("clean")) >= 50)
-        .groupBy(col("source")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(TextFunctions.tokenCount(col("clean"))).as("n_tokens"),
-          sum(length(col("clean")).cast("long")).as("n_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // q91: the ingestion chain as the REUSABLE streaming transform
-    // (graft.streaming.IngestPipeline.warcToCleanDocs, SURVEY+ L54) —
-    // WARC parse -> HTML extraction -> full Gopher gate in one stateless
-    // map pipeline, run here in batch and aggregated per source. The
-    // gate is kept as a struct (requirePass=false) because the synthetic
-    // corpus fails the stopword rule corpus-wide — the per-rule counts
-    // carry the signal. The same transform over readStream is proven by
-    // StreamingIngestSpec (restart recovery + replay idempotence).
-    "q91_ingest_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull && col("source").isNotNull)
-      val page = concat(
-        lit("<html><head><style>p { color: red }</style></head><body><h1>"),
-        col("source"), lit("</h1><!-- id --><p>"), col("text"),
-        lit("</p><script>var x = 1 &amp;&amp; 2;</script></body></html>"))
-      val blob = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://example.org/doc/"),
-        col("doc_id"), lit("\r\nContent-Length: "), octet_length(page),
-        lit("\r\n\r\n"), page, lit("\r\n\r\n"))
-      graft.streaming.IngestPipeline.warcToCleanDocs(
-          docs.select(col("source"), blob.as("blob")), "blob",
-          minWords = 50L, requirePass = false)
-        .groupBy(col("source")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens").cast("long")).as("n_tokens"),
-          sum(col("gate.fail_words").cast("long")).as("n_fail_words"),
-          sum(col("gate.fail_word_len").cast("long")).as("n_fail_word_len"),
-          sum(col("gate.fail_symbol").cast("long")).as("n_fail_symbol"),
-          sum(col("gate.fail_bullet").cast("long")).as("n_fail_bullet"),
-          sum(col("gate.fail_ellipsis").cast("long")).as("n_fail_ellipsis"),
-          sum(col("gate.fail_alpha").cast("long")).as("n_fail_alpha"),
-          sum(col("gate.fail_stopword").cast("long")).as("n_fail_stopword"),
-          sum(col("gate.pass").cast("long")).as("n_pass"))
-        .orderBy(col("source"))
-    }),
-
-    // q100: REAL-FILE .warc.gz ingestion (WarcFiles, SURVEY+ L63) — the
-    // L57∘L53∘L52∘L38 composition over ACTUAL files: the fixture writer
-    // serializes the q90/q91 page corpus into 8 gzipped WARC shard
-    // files (driver-side, bounded, deterministic), then the query
-    // ingests them through binaryFile -> gunzip -> WARC parse -> HTML
-    // extraction -> Gopher gate and aggregates per shard. The oracle
-    // replays extraction+gate from the PRE-compression truth keyed by
-    // the same doc_id % 8 assignment — any byte lost in the gzip/file/
-    // parse roundtrip breaks the hash. Streaming twin: the same files
-    // read via the file stream source in StreamingIngestSpec.
-    "q100_warcgz_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull && col("source").isNotNull)
-        .select(col("doc_id"), col("source"), col("text")).collect()
-      val records = docs.toSeq.map { r =>
-        val id = r.getLong(0)
-        val page = "<html><head><style>p { color: red }</style></head><body><h1>" +
-          r.getString(1) + "</h1><!-- id --><p>" + r.getString(2) +
-          "</p><script>var x = 1 &amp;&amp; 2;</script></body></html>"
-        id -> graft.data.WarcFiles.responseRecord(s"https://example.org/doc/$id", page)
-      }
-      // per-process fixture dir: keyed by (data dir, PID) so two
-      // concurrent gate runs over the same data dir can't race (one
-      // deleting shards while the other's binaryFile scan reads them);
-      // within ONE process, regenerating over the same path is safe and
-      // keeps repeated in-session runs from leaking a dir per call
-      val fixDir = java.nio.file.Paths.get("/tmp/graft_warcgz",
-        java.lang.Integer.toHexString(dir.hashCode) + "_" + java.lang.ProcessHandle.current().pid())
-      registerTmpCleanup(fixDir.toString)
-      // regenerate each run: deterministic content; stale files from an
-      // earlier corpus would skew the counts
-      if (java.nio.file.Files.isDirectory(fixDir)) {
-        val it = java.nio.file.Files.list(fixDir)
-        try it.forEach(p => java.nio.file.Files.delete(p)) finally it.close()
-      }
-      graft.data.WarcFiles.writeShards(records, fixDir, nShards = 8)
-      val blobs = graft.data.WarcFiles
-        .readWarcGz(s, fixDir.toString + "/*.warc.gz")
-        .select(regexp_extract(col("path"), "shard_([0-9]+)", 1)
-          .cast("int").as("shard"), col("blob"))
-      graft.streaming.IngestPipeline.warcToCleanDocs(
-          blobs, "blob", minWords = 50L, requirePass = false)
-        .groupBy(col("shard")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens").cast("long")).as("n_tokens"),
-          sum(col("gate.fail_words").cast("long")).as("n_fail_words"),
-          sum(col("gate.fail_word_len").cast("long")).as("n_fail_word_len"),
-          sum(col("gate.fail_symbol").cast("long")).as("n_fail_symbol"),
-          sum(col("gate.fail_bullet").cast("long")).as("n_fail_bullet"),
-          sum(col("gate.fail_ellipsis").cast("long")).as("n_fail_ellipsis"),
-          sum(col("gate.fail_alpha").cast("long")).as("n_fail_alpha"),
-          sum(col("gate.fail_stopword").cast("long")).as("n_fail_stopword"),
-          sum(col("gate.pass").cast("long")).as("n_pass"))
-        .orderBy(col("shard"))
-    }),
-
-    // q92: BATCH BM25 retrieval (Search.bm25TopKBatch, SURVEY+ L41) —
-    // three queries scored against the corpus in ONE plan: postings
-    // filtered by a broadcast semi-join on the union of query terms,
-    // query-independent tf/df aggregation, broadcast query fan-out,
-    // per-query top-10 via a map-side WindowGroupLimit. The oracle
-    // generalizes the q77 double-arithmetic replay with a VALUES query
-    // table.
-    "q92_bm25_batch" -> ((s, dir) => {
-      import s.implicits._
-      val queries = Seq(
-        ("qa", "dup"), ("qa", "window"),
-        ("qb", "stream"), ("qb", "spark"), ("qb", "merge"),
-        ("qc", "line")).toDF("query_id", "term")
-      graft.text.Search.bm25TopKBatch(
-          t(s, dir, "documents"), "doc_id", "text",
-          queries, "query_id", "term", k = 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q93: GZIP compress -> decompress roundtrip (graft.functions.Gzip,
-    // SURVEY+ L57) — the compressed-TEXT codec of the web-ingestion
-    // front, real (java.util.zip) where the media codecs are stubbed.
-    // Oracle = identity on the text (one wrong byte anywhere in either
-    // codec breaks the hash); the quarantine/zip-bomb semantics are
-    // spec-covered (GzipSpec) and fuzz-covered (fz_gzip).
-    "q93_gzip_roundtrip" -> ((s, dir) =>
-      // rangeBeforeKernel (r12), NOT cacheBeforeSort: text_rt IS the
-      // full round-tripped text, so the cache held the whole corpus —
-      // the pre-kernel range exchange keeps one codec evaluation
-      // (boundary sample reads only the scan) with no cache
-      t(s, dir, "documents")
-        .repartitionByRange(col("doc_id"))
-        .select(col("doc_id"),
-          graft.functions.Gzip.gunzipText(
-            graft.functions.Gzip.gzip(col("text"))).as("text_rt"))
-        .select(col("doc_id"), col("text_rt"),
-          length(col("text_rt")).as("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    // q94: URL decomposition (graft.functions.Url, SURVEY+ L58) — the
-    // per-domain-cap keying primitive over synthesized URLs exercising
-    // case-folding, userinfo, ports, ccTLD-ish suffixes, queries and
-    // fragments. Pure codegen'd regexp builtins under the Java/RE2
-    // shared-syntax discipline, so the oracle replays the parse
-    // byte-for-byte from the same construction — including the eTLD+1
-    // public-suffix ladder (the suffix snapshot becomes IN lists in the
-    // oracle) over ccTLD (co.uk), 3-label private
-    // (s3.amazonaws.com), wildcard (*.ck -> '...example.ck' is itself a
-    // public suffix) and exception (!www.ck -> registrable domain is the
-    // rule itself, prevailing over the wildcard) rules.
-    "q94_url_parts" -> ((s, dir) => {
-      val id = col("doc_id")
-      val url = concat(
-        element_at(array(lit("https"), lit("HTTP"), lit("ftp")),
-          (id % 3 + 1).cast("int")),
-        lit("://"),
-        when(id % 7 === 0, lit("user:pw@")).otherwise(lit("")),
-        lit("Sub"), id % 5, lit(".host"), id % 11, lit(".example."),
-        element_at(array(lit("com"), lit("org"), lit("co.uk"), lit("s3.amazonaws.com"),
-          lit("ck"), lit("www.ck")), (id % 6 + 1).cast("int")),
-        when(id % 4 === 0, lit(":8080")).otherwise(lit("")),
-        lit("/p/"), id,
-        when(id % 2 === 0, lit("?q=x&n=1")).otherwise(lit("")),
-        when(id % 6 === 0, lit("#frag")).otherwise(lit("")))
-      // two projections: parts first, suffix ladder over the
-      // materialized host attribute (registrableDomainOfHost scaladoc —
-      // inlining the synthesized-URL derivation at every ladder
-      // reference would blow the 64 KB codegen limit)
-      t(s, dir, "documents")
-        .select(col("doc_id"), graft.functions.Url.urlParts(url).as("u"))
-        .select(col("doc_id"), col("u.scheme").as("scheme"),
-          col("u.host").as("host"), col("u.port").as("port"),
-          col("u.path").as("path"), col("u.query").as("query"),
-          col("u.domain").as("domain"),
-          graft.functions.Url.registrableDomainOfHost(col("u.host")).as("etld1"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q97: per-domain cap keyed on the PARSED eTLD+1 — the L36+L58
-    // composition run as one plan: synthesize target URIs (the q94
-    // construction), extract the REGISTRABLE domain with the
-    // public-suffix ladder (so `a.example.co.uk` caps under
-    // `example.co.uk`, not the whole `co.uk` registry — the round-6
-    // verdict's mis-keying fix), cap each domain with the portable md5
-    // rank (map-side WindowGroupLimit). Proves the operators compose.
-    "q97_url_domain_cap" -> ((s, dir) => {
-      val id = col("doc_id")
-      val url = concat(
-        element_at(array(lit("https"), lit("HTTP"), lit("ftp")),
-          (id % 3 + 1).cast("int")),
-        lit("://"),
-        when(id % 7 === 0, lit("user:pw@")).otherwise(lit("")),
-        lit("Sub"), id % 5, lit(".host"), id % 11, lit(".example."),
-        element_at(array(lit("com"), lit("org"), lit("co.uk"), lit("s3.amazonaws.com"),
-          lit("ck"), lit("www.ck")), (id % 6 + 1).cast("int")),
-        when(id % 4 === 0, lit(":8080")).otherwise(lit("")),
-        lit("/p/"), id,
-        when(id % 2 === 0, lit("?q=x&n=1")).otherwise(lit("")),
-        when(id % 6 === 0, lit("#frag")).otherwise(lit("")))
-      // host materialized in its own projection, ladder over the
-      // attribute (registrableDomainOfHost scaladoc)
-      val keyed = t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"),
-          graft.functions.Url.urlHost(url).as("host"))
-        .select(col("doc_id"), col("n_chars"),
-          graft.functions.Url.registrableDomainOfHost(col("host")).as("domain"))
-      graft.etl.Mixing.capPerGroup(keyed, "domain", "doc_id", cap = 50)
-        .groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("domain"))
-    }),
-
-    // q96: n-gram CONTAINMENT pairs (Dedup.containmentPairs, SURVEY+
-    // L60) — Broder's asymmetric resemblance axis: a short doc quoted
-    // whole inside a long one scores ~0 Jaccard but containment ~1.
-    // Same capped blocking discipline as q41; oracle extends the q41
-    // replay with both containment directions.
-    "q96_containment_pairs" -> ((s, dir) =>
-      graft.dedup.Dedup.containmentPairs(
-          t(s, dir, "documents"), "doc_id", "text",
-          n = 5, blockN = 8, blockCap = 64, minContainment = 0.5)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // q95: sentence segmentation (TextFunctions.sentences, SURVEY+ L59)
-    // — deterministic-tier sentence splitting over punctuation-decorated
-    // documents (the synthetic corpus has no terminators, so each doc is
-    // wrapped with seeded '.'/'!'/'?' decorations first). Per-doc
-    // sentence count, first sentence, and mean sentence character
-    // length; the oracle replays the decoration AND the segmentation.
-    "q95_sentences" -> ((s, dir) => {
-      val id = col("doc_id")
-      val decorated = concat(
-        lit("Dr intro here"),
-        element_at(array(lit(". "), lit("! "), lit("? ")), (id % 3 + 1).cast("int")),
-        col("text"),
-        element_at(array(lit("."), lit("!"), lit("?")), (id % 3 + 1).cast("int")),
-        lit(" Tail claim"),
-        when(id % 2 === 0, lit(".")).otherwise(lit("")))
-      val sent = graft.functions.TextFunctions.sentences(decorated)
-      t(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"), sent.as("s"))
-        .select(col("doc_id"),
-          size(col("s")).as("n_sentences"),
-          element_at(col("s"), 1).as("first_sentence"),
-          // length-of-concatenation == sum of lengths (no null elements);
-          // `aggregate` is a CodegenFallback higher-order function — see
-          // the q101 note (r11)
-          round(length(concat_ws("", col("s"))).cast("double") /
-            greatest(size(col("s")), lit(1)), 4).as("avg_chars"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q101: sentence segmentation with the ABBREVIATION-GUARD tier
-    // (TextFunctions.sentencesAbbrevGuard, round-7 verdict task #7) —
-    // the q95 decoration extended with title/latinism abbreviations
-    // whose periods must NOT break sentences. The oracle replays the
-    // mask (same regexes, same order, same U+E000 sentinel) then the
-    // q95 segmentation then the restore.
-    "q101_sentences_abbrev" -> ((s, dir) => {
-      val id = col("doc_id")
-      val decorated = concat(
-        element_at(array(
-          lit("Dr. Smith arrived at 5 p.m. sharp"),
-          lit("See e.g. the appendix"),
-          lit("Prof. Lee et al. wrote this")), (id % 3 + 1).cast("int")),
-        element_at(array(lit(". "), lit("! "), lit("? ")), (id % 3 + 1).cast("int")),
-        col("text"),
-        element_at(array(lit("."), lit("!"), lit("?")), (id % 3 + 1).cast("int")),
-        lit(" The U.S. case closed"),
-        when(id % 2 === 0, lit(".")).otherwise(lit("")))
-      val sent = graft.functions.TextFunctions.sentencesAbbrevGuard(decorated)
-      t(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"), sent.as("s"))
-        .select(col("doc_id"),
-          size(col("s")).as("n_sentences"),
-          element_at(col("s"), 1).as("first_sentence"),
-          element_at(col("s"), -1).as("last_sentence"),
-          // sum of sentence lengths == length of the concatenation (the
-          // kernel never emits null elements, which concat_ws would skip
-          // and aggregate would poison): `aggregate` is a higher-order
-          // function and CodegenFallback — it forced this projection to
-          // interpreted eval (guide §4.1: prefer built-ins; r11)
-          round(length(concat_ws("", col("s"))).cast("double") /
-            greatest(size(col("s")), lit(1)), 4).as("avg_chars"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q103: multilingual language-ID (TextFunctions.langGuess
-    // unicode=true, the L7 lang-ID heuristic extended to non-Latin
-    // scripts) — eight per-doc_id samples (zh/ja/ko/ru/el/hi/en and a
-    // marker-free digits row) classified through the unicode tier;
-    // under \s tokenization every CJK sample is one giant "word" and
-    // classifies 'und'. Oracle replays tokens + per-language marker
-    // hit counts + the kernel's first-strict-max argmax as a generated
-    // CASE ladder.
-    "q103_lang_guess_multilingual" -> ((s, dir) => {
-      val id = col("doc_id")
-      val sample = element_at(array(
-        lit("这是一个的测试文本和数据了很好"),
-        lit("日本語のテストでこれはをにが書いた"),
-        lit("이 문서의 내용은 한국어 텍스트를 가지고 있다"),
-        lit("и в не на что он как это текст"),
-        lit("και το να της με που την ελληνικά"),
-        lit("के है में की और से को का पाठ"),
-        lit("the quick and of to is you that it"),
-        lit("12345 67890 --- !!!")), (id % 8 + 1).cast("int"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.langGuess(sample, unicode = true).as("lang"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_id"))
-        .orderBy(col("lang"))
-    }),
-
-    // q102: URL canonicalization (Url.canonicalize, SURVEY+ L64) — the
-    // dedup / crawl-frontier key: lowercase scheme+host, drop userinfo,
-    // drop default ports, "/" for empty paths, strip tracking params,
-    // SORT the survivors, drop fragments. The synthesis plants exactly
-    // the noise canonicalization must erase (shuffled param order,
-    // utm/gclid params, :80/:443 on matching schemes, fragments), and
-    // the n_distinct aggregate proves different-noise copies of the
-    // same logical URL collapse to one key. Oracle replays the regex
-    // chain + list_sort byte-for-byte.
-    "q102_url_canonical" -> ((s, dir) => {
-      val id = col("doc_id")
-      val url = concat(
-        element_at(array(lit("http"), lit("HTTPS"), lit("http")),
-          (id % 3 + 1).cast("int")),
-        lit("://"),
-        when(id % 7 === 0, lit("crawler:pw@")).otherwise(lit("")),
-        lit("Host"), id % 11, lit(".example."),
-        element_at(array(lit("com"), lit("org"), lit("co.uk")),
-          (id % 3 + 1).cast("int")),
-        element_at(array(lit(":80"), lit(":443"), lit(""), lit(":8080")),
-          (id % 4 + 1).cast("int")),
-        when(id % 5 === 0, lit("")).otherwise(concat(lit("/page/"), id % 50)),
-        element_at(array(
-          lit("?b=2&utm_source=feed&a=1"),
-          lit("?a=1&gclid=XyZ123&b=2"),
-          lit("?utm_campaign=x&utm_medium=y"),
-          lit(""),
-          lit("?b=2&a=1&fbclid=F00"),
-          lit("?UTM_Source=Feed&a=1&b=2"), // uppercase tracking name
-          lit("?b=2&fbclid&a=1")), // valueless tracking param
-          (id % 7 + 1).cast("int")),
-        when(id % 2 === 0, lit("#section-3")).otherwise(lit("")))
-      // materialize the synthetic URL in its OWN projection before the
-      // canonicalize ladder: canonicalize references its input ~12 times
-      // (scheme/host/port/path/query each re-derive from it), and inlining
-      // the concat/element_at decoration at every reference blew the
-      // whole-stage-codegen method past the JVM's 64 KB limit — the stage
-      // silently fell back to INTERPRETED eval (ERROR CodeGenerator in the
-      // r11 baseline bench, 2.8 s -> codegen restored). An attribute
-      // reference is one slot read; CollapseProject keeps the split
-      // because the multiply-referenced alias is non-cheap.
-      val canon = t(s, dir, "documents")
-        .select(col("doc_id"), url.as("__url"))
-        .select(col("doc_id"),
-          graft.functions.Url.canonicalize(col("__url")).as("canonical"))
-      canon
-        .groupBy(col("canonical"))
-        .agg(count(lit(1)).as("n_raw"), min(col("doc_id")).as("first_id"))
-        .orderBy(col("canonical"))
-    }),
-
-    // q104: C4 line-level cleaning (TextFunctions.c4Flags, SURVEY+ L65) —
-    // the Raffel et al. 2020 §2.2 rule set: keep lines ending in a
-    // terminal mark with >= 5 words and no "javascript"; drop pages with
-    // "lorem ipsum", '{', a blocklist term, or < 3 kept lines. The
-    // decoration plants every rule's trigger (short line, no-end-mark
-    // line, JavaScript line, Lorem Ipsum line on doc_id%5, brace line on
-    // %7, blocklist term on %11, padded line exercising the whitespace
-    // strip). One compiled kernel + builtin page predicates = pure map
-    // stage; the oracle replays line rules with list_filter and the
-    // ASCII translate fold.
-    "q104_c4_filter" -> ((s, dir) => {
-      val id = col("doc_id")
-      val page = concat_ws("\n",
-        lit("This line ends with a period and has enough words."),
-        concat(lit("Body "), col("text"), lit(" tail words end here.")),
-        lit("Too short."),
-        lit("No terminal punctuation on this line at all"),
-        when(id % 3 === 0, lit("Please enable JavaScript to view comments."))
-          .otherwise(lit("A perfectly ordinary fifth line goes here.")),
-        when(id % 5 === 0, lit("Lorem Ipsum dolor sit amet consectetur adipiscing elit."))
-          .otherwise(lit("Another normal sentence with plenty of words present.")),
-        when(id % 7 === 0, lit("if (x) { return y; } // code"))
-          .otherwise(lit("Closing body sentence wraps the page nicely.")),
-        lit("   Padded line has exactly seven words total.   "),
-        when(id % 11 === 0, lit("This sentence mentions BadWord99 unfortunately today."))
-          .otherwise(lit("This sentence mentions nothing objectionable at all.")))
-      t(s, dir, "documents").where(col("text").isNotNull)
-        .select(col("doc_id"),
-          TextFunctions.c4Flags(page, minWords = 5, minKeptLines = 3,
-            blocklist = Seq("badword99")).as("f"))
-        .select(col("doc_id"),
-          col("f.n_lines").as("n_lines"),
-          col("f.n_kept").as("n_kept"),
-          length(col("f.kept_text")).cast("long").as("kept_chars"),
-          col("f.has_lorem").as("has_lorem"),
-          col("f.has_brace").as("has_brace"),
-          col("f.has_blocked").as("has_blocked"),
-          col("f.pass").as("pass"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q105: domain link graph + integer PageRank (graph.LinkGraph,
-    // SURVEY+ L66) — href extraction from HTML, eTLD+1 edge resolution
-    // (co.uk domains exercise the suffix ladder), self-loop drop (h=2
-    // links to itself by construction), then 5 PageRank iterations in
-    // scaled-integer arithmetic: Long sums are order-independent, so the
-    // ranks are bit-identical across partitionings and replay exactly in
-    // DuckDB's int64 arithmetic — a double-precision PageRank could
-    // never survive a value-hash oracle.
-    "q105_domain_pagerank" -> ((s, dir) => {
-      val id = col("doc_id")
-      def tldOf(d: Column) = when(d % 3 === 0, lit("co.uk")).otherwise(lit("com"))
-      def hostOf(d: Column) = concat(lit("dom"), d, lit("."), tldOf(d))
-      val h = id % 11
-      val a = (h + 1) % 11
-      val b = (h * 3 + 7) % 11
-      val pageUrl = concat(lit("https://www."), hostOf(h), lit("/page/"), id)
-      val html = concat(
-        lit("<html><body><p>Some page text.</p><a href=\"https://www."), hostOf(a),
-        lit("/x\">one</a><a class=\"nav\" href=\"HTTPS://"), hostOf(b),
-        lit(":443/y?q=1\">two</a><a href=\"/rel/path\">r</a>" +
-          "<a href=\"mailto:x@y.example\">m</a>"),
-        when(id % 4 === 0,
-          lit("<a href=\"https://cdn.shared-assets.com/lib.js\">s</a>"))
-          .otherwise(lit("")),
-        lit("</body></html>"))
-      val pages = t(s, dir, "documents")
-        .select(pageUrl.as("page_url"), html.as("html"))
-      val edges = graft.graph.LinkGraph.domainEdges(pages, "page_url", "html")
-      graft.graph.LinkGraph.pageRank(edges, iters = 5, checkpointEvery = 2)
-        .select(col("node").as("domain"), col("rank"))
-        .orderBy(col("domain"))
-    }),
-
-    // q106: FUZZY decontamination (Decontaminate.fuzzyOverlapReport,
-    // SURVEY+ L67) — MinHash-LSH near-dup matching of the corpus against
-    // a benchmark set, the tier above q61's exact-n-gram hygiene. The
-    // bench fixture takes every 83rd doc, perturbing odd multiples with
-    // an appended suffix (paraphrase-ish contamination exact n-grams at
-    // n=8 would still catch less reliably at shingle granularity). The
-    // PORTABLE md5 hash family makes signature, banding, candidate join
-    // and Jaccard verify all engine-replayable; the production kernel
-    // path shares every plan shape (bench bands + bench sets broadcast,
-    // candidate-id prune — the corpus never shuffles).
-    "q106_fuzzy_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.where(col("doc_id") % 83 === 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 166 === 0, col("text"))
-            .otherwise(concat(col("text"),
-              lit(" benchmark held out split marker tokens"))).as("text"))
-      graft.text.Decontaminate.fuzzyOverlapReport(
-          docs, bench, "doc_id", "text", threshold = 0.5, portable = true)
-        .orderBy(col("doc_id"), col("bench_doc_id"))
-    }),
-
-    // q107: NFC-normalized dedup keys (TextFunctions.fingerprint(nfc =
-    // true), SURVEY+ L68) — composed (U+00E9) and decomposed (e+U+0301)
-    // encodings of the same visible text are byte-distinct but ONE
-    // document; real web text mixes them (NFD from macOS/CMS exports).
-    // The fixture doubles the corpus into composed/decomposed twins;
-    // NFC-first fingerprinting must collapse every pair to its even
-    // (composed) twin. Oracle replays with DuckDB's nfc_normalize —
-    // both engines implement UAX #15, so NFC bytes are a portable
-    // contract (verified on combining/fullwidth/Hangul edge cases).
-    "q107_nfc_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").where(col("text").isNotNull)
-      val a = docs.select((col("doc_id") * 2).as("doc_id"),
-        concat(lit(NfcComposedPrefix), col("text")).as("text"))
-      val b = docs.select((col("doc_id") * 2 + 1).as("doc_id"),
-        concat(lit(NfcDecomposedPrefix), col("text")).as("text"))
-      graft.dedup.Dedup.exact(a.union(b), "text", "doc_id",
-          unicode = true, nfc = true)
-        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q108: per-domain anchor-term profile (LinkGraph.anchorTermProfile,
-    // SURVEY+ L69) — what the web calls each destination domain: anchor
-    // texts of incoming links, tokenized through the unicode tier,
-    // counted per (eTLD+1 domain, term), top-3 per domain with bytewise
-    // tie-break. Extraction and domain resolution are map-side; the rank
-    // filter is a map-side WindowGroupLimit. The oracle replays the zip
-    // of the two capture groups with list_zip + numeric struct access.
-    "q108_anchor_profile" -> ((s, dir) => {
-      val id = col("doc_id")
-      def tldOf(d: Column) = when(d % 3 === 0, lit("co.uk")).otherwise(lit("com"))
-      def hostOf(d: Column) = concat(lit("dom"), d, lit("."), tldOf(d))
-      val h = id % 11
-      val a = (h + 1) % 11
-      val b = (h * 3 + 7) % 11
-      val anchorA = element_at(array(
-        lit("spark tutorials portal"), lit("data catalog home"),
-        lit("fast queries portal")), (id % 3 + 1).cast("int"))
-      val html = concat(
-        lit("<html><body><a href=\"https://www."), hostOf(a), lit("/x\">"),
-        anchorA,
-        lit("</a><a class=\"nav\" href=\"HTTPS://"), hostOf(b),
-        lit(":443/y?q=1\">official site</a>"),
-        when(id % 4 === 0,
-          lit("<a href=\"https://cdn.shared-assets.com/lib.js\">static assets</a>"))
-          .otherwise(lit("")),
-        lit("</body></html>"))
-      val pages = t(s, dir, "documents").select(html.as("html"))
-      graft.graph.LinkGraph.anchorTermProfile(pages, "html", k = 3)
-        .orderBy(col("domain"), col("rank"))
-    }),
-
-    // q109: HyperLogLog per-source distinct-shingle accounting (SURVEY+
-    // L70) — fixed 2 KiB register state per source regardless of
-    // cardinality (the complement to q70's KMV: millions of group
-    // sketches stay resident and mergeable at 100 TB), ONE scan, one
-    // hash-agg shuffle of 2 KiB buffers. The '__all__' row re-aggregates
-    // the per-source REGISTER ARRAYS through Hll.mergeSketches
-    // (elementwise max == union sketch; HllSpec proves rollup == direct)
-    // without re-touching raw data. Registers are pure integer functions
-    // of the md5-60 hashes, so DuckDB replays them exactly (index = top
-    // 11 bits, rho via binary-string length); v_zero / s_int /
-    // reg_checksum pin the register content in exact integer arithmetic,
-    // and the estimate is deterministic double division of those integers
-    // (+ the standard linear-counting branch), compared after round(4).
-    // This is the SKETCH-ONLY plan — the exact-distinct accuracy
-    // yardstick lives in q109v (untimed, Bench-excluded like q35): a
-    // corpus-wide exploded count_distinct riding the timed query would
-    // be exactly the cost the sketch exists to avoid at 100 TB.
-    "q109_hll_source_distinct" -> ((s, dir) => {
-      import graft.sketch.Hll
-      val p = 11
-      val sh = t(s, dir, "documents").select(col("source"),
-        TextFunctions.shingleHashSetPortable(col("text"), 5).as("hs"))
-      val perSrc = sh.groupBy(col("source")).agg(Hll.sketch(col("hs"), p).as("reg"))
-      val allRow = perSrc.agg(Hll.mergeSketches(col("reg"), p).as("reg"))
-        .select(lit("__all__").as("source"), col("reg"))
-      perSrc.unionByName(allRow)
-        .select(col("source"),
-          Hll.zeroCount(col("reg")).as("v_zero"),
-          Hll.harmonicSum(col("reg"), p).as("s_int"),
-          Hll.checksum(col("reg")).as("reg_checksum"),
-          round(Hll.estimate(col("reg"), p), 4).as("est_distinct"))
-        .orderBy(col("source"))
-    }),
-
-    // q109v: the HLL ACCURACY yardstick — sketch estimate joined to the
-    // exact distinct count, per source and global. Untimed validation
-    // (Bench-excluded, the q35 pattern): the exact side is a corpus-wide
-    // exploded count_distinct, affordable only at gate/validation scale
-    // and deliberately kept OUT of q109's timed plan. cube(source)
-    // computes the per-source AND global rollup in ONE shingle pass —
-    // two separate aggregates each re-shingled the corpus (measured
-    // 4.5s -> ~2.5s at sf0.1).
-    "q109v_hll_accuracy" -> ((s, dir) => {
-      import graft.sketch.Hll
-      val p = 11
-      val sh = t(s, dir, "documents").select(col("source"),
-        TextFunctions.shingleHashSetPortable(col("text"), 5).as("hs"))
-      val perSrc = sh.groupBy(col("source")).agg(Hll.sketch(col("hs"), p).as("reg"))
-      val allRow = perSrc.agg(Hll.mergeSketches(col("reg"), p).as("reg"))
-        .select(lit("__all__").as("source"), col("reg"))
-      val exact = sh.select(col("source"), explode(col("hs")).as("h"))
-        .cube(col("source"))
-        .agg(count_distinct(col("h")).as("exact_distinct"))
-        .select(coalesce(col("source"), lit("__all__")).as("source"),
-          col("exact_distinct"))
-      perSrc.unionByName(allRow)
-        .select(col("source"),
-          round(Hll.estimate(col("reg"), p), 4).as("est_distinct"))
-        .join(exact, Seq("source"))
-        .orderBy(col("source"))
-    }),
-
-    // q110: positional phrase search (SURVEY+ L71) — exact consecutive
-    // token sequences over the inverted-index-with-positions shape: the
-    // corpus shuffles ONLY query-term postings (isin prefilter at the
-    // scan), slots broadcast, occurrences = an array_intersect fold of
-    // offset-shifted position arrays. Covers a repeated-term phrase
-    // ("table table") and 2-/3-gram phrases. The oracle is the direct
-    // definition: a windowed adjacency scan over the same tokenization
-    // (regexp_extract_all + list_filter over start positions) — two
-    // completely different plans, same rows.
-    "q110_phrase_search" -> ((s, dir) => {
-      graft.text.Search.phraseMatches(
-        t(s, dir, "documents"), "doc_id", "text", q110Phrases)
-        .orderBy(col("query_id"), col("doc_id"))
-    }),
-
-    // q111: perceptual image near-dup (SURVEY+ L72) — dHash (integer
-    // box-average to 9x8 + adjacent-bucket comparisons, a pure integer
-    // function of the pixels) over a deterministic 18x16 image fixture
-    // keyed by doc_id (families of 3: base PGM, one-bucket-perturbed
-    // GRAYSCALE PNG — so the planted pair's value rides the real
-    // ImageIO decode path — and an unrelated image). Pair search is the
-    // blocked Hamming join shared with SimHash (pigeonhole-complete at
-    // d <= 3); the oracle recomputes pixels from the same formula in
-    // DuckDB int math and compares ALL pairs via bit SETS — different
-    // plan and different hash representation, same pairs.
-    "q111_image_dhash_neardup" -> ((s, dir) => {
-      // fixture bounded to 3000 images at ANY scale: the oracle is an
-      // all-pairs scan by design (different plan than the blocked join),
-      // so an unbounded fixture would hand DuckDB 50k^2 pairs at the sf1
-      // gate. Operator-level scale decades are measured separately on
-      // the unbounded corpus (BENCHNOTES round 8).
-      val imgs = graft.multimodal.ImageHash.syntheticImages(
-        t(s, dir, "documents").select(col("doc_id")).where(col("doc_id") < 3000))
-      // bucket cap effectively off: the oracle is an uncapped all-pairs
-      // scan, and gate scales keep blocks far below any real skew guard
-      graft.multimodal.ImageHash.nearDupPairs(imgs, "doc_id", "bytes",
-        maxHamming = 3, maxBucketSize = 1 << 20)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q130: WET-format ingestion (SURVEY+ L85) — CommonCrawl's
-    // pre-extracted-text sibling of WARC, the format most corpus users
-    // start from. WET records are WARC `conversion` records, so the
-    // reader is Warc.parseRecords verbatim + a type filter and the
-    // payload IS the document. Fixture serializes the corpus into 8
-    // real gzipped WET shards (with the leading warcinfo record every
-    // real WET file carries — the reader must skip it); the query
-    // round-trips binaryFile -> gunzip -> parse -> conversion filter
-    // and emits the documents back. Oracle = the pre-compression truth
-    // directly: any byte lost anywhere in the file roundtrip breaks
-    // the text hash.
-    "q130_wet_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"), col("text")).collect()
-      val nShards = 8
-      val records: Seq[(Long, String)] = docs.toSeq.map { r =>
-        val id = r.getLong(0)
-        id -> graft.data.Wet.conversionRecord(s"https://example.org/doc/$id", r.getString(1))
-      }
-      // warcinfo first in each shard: sortKey s - nShards routes to
-      // shard s (floorMod) and sorts before every doc id >= 0
-      val info = (0 until nShards).map(sh =>
-        (sh.toLong - nShards) -> graft.data.Wet.warcinfoRecord(s"shard_$sh.warc.wet.gz"))
-      val fixDir = java.nio.file.Paths.get("/tmp/graft_wetgz",
-        java.lang.Integer.toHexString(dir.hashCode) + "_" + java.lang.ProcessHandle.current().pid())
-      registerTmpCleanup(fixDir.toString)
-      if (java.nio.file.Files.isDirectory(fixDir)) {
-        val it = java.nio.file.Files.list(fixDir)
-        try it.forEach(p => java.nio.file.Files.delete(p)) finally it.close()
-      }
-      graft.data.WarcFiles.writeShards(info ++ records, fixDir, nShards)
-      graft.data.Wet.docs(
-          graft.data.Wet.readWetGz(s, fixDir.toString + "/*.warc.gz"))
-        .select(regexp_extract(col("target_uri"), "doc/([0-9]+)", 1)
-            .cast("bigint").as("doc_id"),
-          col("target_uri"), col("n_chars"), col("text"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q129: pHash image near-dup (SURVEY+ L84) — the DCT tier ABOVE
-    // q111's dHash: integral 32x32 resize + fixed-point-cosine 8x8
-    // low-frequency DCT block thresholded at its median (all integer
-    // arithmetic — the 256 table literals ARE the algorithm, so the
-    // oracle replays every bit). Fixture plants a TRUE RESCALE (3/2
-    // nearest upscale) per family: the perturbation class dHash's
-    // shifted grid breaks under (PhashSpec pins the dHash-fails/
-    // pHash-survives case with JPEG recompress on top). Pair search is
-    // the same blocked Hamming join; the oracle resynthesizes pixels,
-    // replays resize + two DCT stages + median in DuckDB int math and
-    // compares all pairs via bit sets.
-    "q129_image_phash_neardup" -> ((s, dir) => {
-      // bounded fixture at any scale — the oracle is an all-pairs scan
-      // by design (the q111 rationale)
-      val imgs = graft.multimodal.ImageHash.syntheticImagesPhash(
-        t(s, dir, "documents").select(col("doc_id")).where(col("doc_id") < 3000))
-      graft.multimodal.ImageHash.phashNearDupPairs(imgs, "doc_id", "bytes",
-        maxHamming = 3, maxBucketSize = 1 << 20)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q112: blocklist filtering (SURVEY+ L73) — the C4-style "page
-    // contains a listed word" gate as ONE compiled Aho-Corasick pass
-    // over the whole pattern set (vs K contains/regexp scans). Patterns
-    // here are single alnum words under the word-bounded convention, so
-    // the oracle replays the EXACT semantics as token equality: fold
-    // A-Z, extract [a-z0-9]+ runs, join against a pattern VALUES table
-    // — a completely different plan (explode + join vs automaton scan),
-    // same counts. Phrase/substring modes are spec-pinned JVM-side
-    // (BlocklistSpec randomized naive-reference sweep).
-    "q112_blocklist_filter" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.blocklistHits(
-            col("text"), q112Patterns, wordBounded = true).as("n_hits"))
-        .withColumn("blocked", (col("n_hits") > 0).cast("int"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q113: per-domain boilerplate line removal (SURVEY+ L74) — lines
-    // recurring in >= minFrac of a domain's pages are site chrome and
-    // get stripped. Fixture decorates every doc with a universal nav
-    // line + copyright footer (frac 1.0 -> removed), a 1/3-frequency
-    // banner (kept at minFrac 0.5), the doc body and a unique line
-    // (kept). Counting shuffles only (domain, md5-60 fp, id); removal
-    // is one compiled kernel pass against the broadcast per-domain
-    // sorted fp array. The oracle replays the whole contract (strip
-    // class, fp convention, inclusive frac, minDocs floor, blank-line
-    // immunity) via list_filter + list_contains — explode/join-free on
-    // the removal side, a different plan shape than the Spark join.
-    "q113_domain_boilerplate" -> ((s, dir) => {
-      val id = col("doc_id")
-      val dom = concat(lit("dom"), id % 7)
-      val decorated = concat(
-        lit("Home | About | Contact - "), dom, lit("\n"),
-        when(id % 3 === 0, concat(lit("Subscribe banner "), dom, lit("\n")))
-          .otherwise(lit("")),
-        col("text"), lit("\n"),
-        lit("unique doc line "), id, lit("\n"),
-        lit("(c) copyright "), dom, lit(" all rights reserved"))
-      val docs = t(s, dir, "documents").where(col("text").isNotNull)
-        .select(id, dom.as("domain"), decorated.as("text"))
-      graft.dedup.Boilerplate.stripDomainBoilerplate(
-          docs, "text", "domain", "doc_id", minFrac = 0.5, minDocs = 2)
-        .select(col("doc_id"), col("domain"), col("cleaned"),
-          col("n_lines"), col("n_removed"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q114: temperature-resampled corpus mix (SURVEY+ L75) — the
-    // multilingual-LM flattening rule (share proportional to count^0.5;
-    // Arivazhagan et al. 2019, mT5) over the lang strata. Exactness
-    // chain: sqrt is IEEE-correctly-rounded in BOTH engines, the 2^20
-    // weight scale + floor are exact, so integer weights, the
-    // largest-remainder split and the availability cap replay
-    // bit-identically; row choice is the shared portable md5 rank.
-    "q114_temperature_mix" -> ((s, dir) => {
-      graft.etl.Stratified.exactTemperatureSample(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"), col("source")),
-          "lang", "doc_id", total = 90, alpha = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q115: CCNet perplexity bucketing (SURVEY+ L76) — per-language
-    // head/middle/tail terciles of the q57 cross-entropy score. Bucket
-    // assignment is RANK-based (round(xent,6), doc_id total order +
-    // exact integer NTILE arithmetic), never cut-value-based — float
-    // cuts are knife-edged across engines. The oracle replays the q57
-    // score chain then a plain ntile(3) window; the Spark side uses the
-    // scalable grouped-ntile (global range-split rank + broadcast
-    // per-language extents), a completely different plan.
-    "q115_perplexity_buckets" -> ((s, dir) => {
-      graft.text.PerplexityBuckets.partition(
-          t(s, dir, "documents"), "doc_id", "text", "lang")
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("xent"),
-          when(col("bucket") === 1, "head")
-            .when(col("bucket") === 2, "middle")
-            .otherwise("tail").as("ppl_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q117: TRIGRAM cross-entropy (SURVEY+ L77) — q68's operator one
-    // conditioning level up (UnigramLm.ngramCrossEntropy at n = 3):
-    // P(w3|w1 w2) with add-one smoothing, prefix counts c(w1 w2 ·)
-    // aggregated FROM the trigram counts, V from the same compiled
-    // tokenizer. Oracle replays the full double arithmetic (q68 pattern:
-    // exact-integer counts, identical cast/op order, round 6).
-    "q117_trigram_xent" -> ((s, dir) =>
-      graft.text.UnigramLm.ngramCrossEntropy(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", n = 3)
-        .select(col("doc_id"), col("n_ngrams").as("n_trigrams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))),
-
-    // q118: the q115 bucketing on the TRIGRAM score (ngramOrder = 3) —
-    // same rank-based tercile machinery, sharper LM (closer to CCNet's
-    // 5-gram KenLM); oracle = the q117 scoring CTEs + the q115 window
-    // ntile, a different plan end to end.
-    "q118_perplexity_buckets_trigram" -> ((s, dir) => {
-      graft.text.PerplexityBuckets.partition(
-          t(s, dir, "documents"), "doc_id", "text", "lang", ngramOrder = 3)
-        .select(col("doc_id"), col("lang"),
-          col("n_tokens").as("n_trigrams"), col("xent"),
-          when(col("bucket") === 1, "head")
-            .when(col("bucket") === 2, "middle")
-            .otherwise("tail").as("ppl_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q116: the COMPOSED curation capstone (SURVEY+ L79) — the round-7/8
-    // tiers chained in ONE plan, the way a real pipeline runs them:
-    //   C4 line cleaning (L65) -> per-domain boilerplate strip (L74) ->
-    //   blocklist gate (L73) -> NFC exact dedup (L68) ->
-    //   perplexity buckets (L76, tail dropped) -> temperature mix (L75).
-    // Every tier is verified in isolation (q104/q113/q112/q107/q115/
-    // q114); what THIS query pins is the interactions: C4 keeps the nav
-    // and footer lines (they read like sentences), so only the
-    // boilerplate stage can remove them; the innocuous line-4 variant is
-    // stripped AS BOILERPLATE (10/11 frequency) while the rare badword
-    // variant survives the strip and triggers the gate; the NFC twins
-    // (composed/decomposed template bodies) only collapse because
-    // normalization runs on the STRIPPED text (identical chrome around
-    // different bodies must not fuse docs); and the per-language mix
-    // quotas are computed over what survives bucketing — stripping
-    // changes fingerprints changes buckets changes quotas. The oracle
-    // composes the six per-stage replay CTE chains end to end.
-    "q116_curation_capstone" -> ((s, dir) => {
-      val deduped = capstoneDeduped(s, dir)
-      val buckets = graft.text.PerplexityBuckets.partition(
-          deduped, "doc_id", "cleaned", "lang")
-        .where(col("bucket") <= 2) // CCNet move: drop the tail tercile
-      graft.etl.Stratified.exactTemperatureSample(buckets, "lang", "doc_id",
-          total = 60, alpha = 0.5)
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("xent"),
-          when(col("bucket") === 1, "head").otherwise("middle").as("ppl_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q126: the capstone with the PRE-TRAINED-MODEL LM stage — the
-    // 100 TB default (judge round-9 what's-wrong #1): same four
-    // cleaning/dedup stages, but the bucketing scores against a bounded
-    // trigram model trained ONCE on a fixed slice of the deduped corpus
-    // (doc_id % 7 == 0) and broadcast — the LM stage stops re-estimating
-    // over the scoring corpus, so the capstone's dominant 5.7x/decade
-    // stage becomes the measured 2.0x/decade map-side path. Oracle =
-    // the q116 stage chains with the LM CTEs swapped for the q124
-    // captured-model replay over the deduped text.
-    "q126_curation_capstone_model" -> ((s, dir) => {
-      val deduped = capstoneDeduped(s, dir)
-      val slice = deduped.where(col("doc_id") % 7 === 0)
-      val modelRows = graft.text.UnigramLm.trainNgramModelHashedCaptured(
-        slice, "cleaned", n = 3, maxGrams = 2048).collect()
-      require(modelRows.nonEmpty, "q126 training slice produced an empty model")
-      q126Model = Some((modelRows.map(r => (r.getString(1), r.getDouble(2))).toSeq,
-        modelRows.head.getDouble(3)))
-      import s.implicits._
-      val model = modelRows.map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3)))
-        .toSeq.toDF("g", "prob", "unseen_prob")
-      val buckets = graft.text.PerplexityBuckets.partition(
-          deduped, "doc_id", "cleaned", "lang", ngramOrder = 3, model = Some(model))
-        .where(col("bucket") <= 2)
-      graft.etl.Stratified.exactTemperatureSample(buckets, "lang", "doc_id",
-          total = 60, alpha = 0.5)
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("xent"),
-          when(col("bucket") === 1, "head").otherwise("middle").as("ppl_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q137: the END-TO-END CommonCrawl capstone FROM REAL FILES
-    // (SURVEY+ L91) — the one interaction the per-stage queries can't
-    // pin: file-format BYTES flowing through the whole curation stack.
-    // The q116/q126 synthetic pages are serialized into 8 REAL gzipped
-    // WET shards (leading warcinfo records included), ingested back
-    // through binaryFile -> gunzip -> WARC framing -> conversion
-    // filter (the q130 reader), then the full q126 chain runs on the
-    // INGESTED text: C4 -> per-domain boilerplate -> blocklist -> NFC
-    // dedup -> fixed-slice model-LM buckets -> temperature mix. The
-    // oracle is the q126 replay over the PRE-COMPRESSION pages — any
-    // byte lost anywhere in the file roundtrip (gzip framing, record
-    // lengths, UTF-8, uri parsing) changes a downstream hash and
-    // breaks the match.
-    "q137_wet_curation_capstone" -> ((s, dir) => {
-      val pages = capstonePages(s, dir)
-      // serialize the pages as WET conversion records (bounded gate
-      // fixture — the q130 collect pattern)
-      val rows = pages.select(col("doc_id"), col("page")).collect()
-      val nShards = 8
-      val records: Seq[(Long, String)] = rows.toSeq.map { r =>
-        val id = r.getLong(0)
-        id -> graft.data.Wet.conversionRecord(s"https://example.org/doc/$id", r.getString(1))
-      }
-      val info = (0 until nShards).map(sh =>
-        (sh.toLong - nShards) -> graft.data.Wet.warcinfoRecord(s"shard_$sh.warc.wet.gz"))
-      val fixDir = java.nio.file.Paths.get("/tmp/graft_wetcap",
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-          java.lang.ProcessHandle.current().pid())
-      registerTmpCleanup(fixDir.toString)
-      if (java.nio.file.Files.isDirectory(fixDir)) {
-        val it = java.nio.file.Files.list(fixDir)
-        try it.forEach(p => java.nio.file.Files.delete(p)) finally it.close()
-      }
-      graft.data.WarcFiles.writeShards(info ++ records, fixDir, nShards)
-      // ingest the REAL files back and recover (doc_id, lang, page)
-      val ingested = graft.data.Wet.docs(
-          graft.data.Wet.readWetGz(s, fixDir.toString + "/*.warc.gz"))
-        .select(regexp_extract(col("target_uri"), "doc/([0-9]+)", 1)
-            .cast("bigint").as("doc_id"),
-          col("text").as("page"))
-        .join(t(s, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
-        .select(col("doc_id"), col("lang"), col("page"))
-      val deduped = capstoneCleanDedup(ingested)
-      // fixed-reference-set model training (the q133 discipline)
-      val slice = deduped.where(col("doc_id") < 400)
-      val modelRows = graft.text.UnigramLm.trainNgramModelHashedCaptured(
-        slice, "cleaned", n = 3, maxGrams = 2048).collect()
-      require(modelRows.nonEmpty, "q137 reference slice produced an empty model")
-      q137Model = Some((modelRows.map(r => (r.getString(1), r.getDouble(2))).toSeq,
-        modelRows.head.getDouble(3)))
-      import s.implicits._
-      val model = modelRows.map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3)))
-        .toSeq.toDF("g", "prob", "unseen_prob")
-      val buckets = graft.text.PerplexityBuckets.partition(
-          deduped, "doc_id", "cleaned", "lang", ngramOrder = 3, model = Some(model))
-        .where(col("bucket") <= 2)
-      graft.etl.Stratified.exactTemperatureSample(buckets, "lang", "doc_id",
-          total = 60, alpha = 0.5)
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("xent"),
-          when(col("bucket") === 1, "head").otherwise("middle").as("ppl_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q120: the HASHED production tier of the trigram LM (L77's scale
-    // path) — identical smoothing arithmetic, but every exchange
-    // carries fixed-width (gram, prefix) 64-bit hashes instead of
-    // strings (the exact tier q117 went 21x/decade at 500k -> 5M docs).
-    // JVM-hash-specific output -> committed golden VALUES oracle (the
-    // q23/q24/q38 pattern); the arithmetic is oracle-verified via q117
-    // and SearchLmSpec proves hashed == exact on randomized corpora.
-    "q120_trigram_xent_hashed" -> ((s, dir) =>
-      graft.text.UnigramLm.ngramCrossEntropyHashed(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", n = 3)
-        .select(col("doc_id"), col("n_ngrams").as("n_trigrams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))),
-
-    // q125: the hashed LM tier at ORDER 5 — CCNet proper scores with a
-    // 5-gram KenLM (Wenzek et al. 2020); the q120 machinery accepts any
-    // n >= 2, this declares the canonical order. Same fixed-width
-    // (gram, prefix) hash exchanges; golden VALUES oracle per scale
-    // (JVM-hash-specific output, the q120 pattern), arithmetic
-    // spec-verified by a driver-side add-one 5-gram replay.
-    "q125_5gram_xent_hashed" -> ((s, dir) =>
-      graft.text.UnigramLm.ngramCrossEntropyHashed(
-        t(s, dir, "documents"), idCol = "doc_id", textCol = "text", n = 5)
-        .select(col("doc_id"), col("n_ngrams").as("n_5grams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))),
-
-    // q127: BYTE-LEVEL BPE training (SURVEY+ L83, the GPT-2/tiktoken
-    // family — graft.text.ByteBpe): first 32 merges over the corpus's
-    // GPT-2 pre-token frequencies, symbols in the public
-    // bytes_to_unicode alphabet ('Ġ' = space). One distributed agg;
-    // driver merge loop reused from q86. The pre-tokenizer's lookahead
-    // has no RE2 form, so the oracle pins scale-keyed golden VALUES
-    // (q120 pattern); the algorithm is spec-verified (ByteBpeSpec:
-    // byte-table facts, hand merges, round-trip, monotonicity).
-    "q127_byte_bpe_merges" -> ((s, dir) => {
-      val model = graft.text.ByteBpe.train(
-        t(s, dir, "documents").where(col("text").isNotNull), "text", numMerges = 32)
-      graft.text.ByteBpe.mergesTable(s, model).orderBy(col("rank"))
-    }),
-
-    // q128: byte-level BPE ENCODING under the q127 vocabulary + an
-    // atomic <|endoftext|> special (id 256+32, the GPT-2 layout):
-    // per-doc token count and the first three ids — the token-budget
-    // arithmetic (L26/L16/L29) counted the way the target model
-    // tokenizes. Compiled zero-shuffle encode; golden VALUES oracle.
-    "q128_byte_bpe_tokens" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").where(col("text").isNotNull)
-      val model = graft.text.ByteBpe.train(docs, "text", numMerges = 32,
-        specials = Seq("<|endoftext|>"))
-      docs.select(col("doc_id"),
-          graft.text.ByteBpe.encodeIds(
-            concat(col("text"), lit("<|endoftext|>")), model).as("ids"))
-        .select(col("doc_id"), size(col("ids")).as("n_tokens"),
-          try_element_at(col("ids"), lit(1)).as("id1"),
-          try_element_at(col("ids"), lit(2)).as("id2"),
-          try_element_at(col("ids"), lit(3)).as("id3"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q136: SentencePiece UNIGRAM-LM tokenization (SURVEY+ L90, Kudo
-    // 2018 — the sentencepiece model_type=unigram family behind
-    // T5/Gemma/LLaMA exports): EM-trained piece vocabulary over the
-    // FIXED doc_id < 400 reference slice (constant training cost at
-    // every scale, the q133 discipline), Viterbi encoding of the full
-    // corpus in one compiled zero-shuffle pass. Per-doc piece count +
-    // first three pieces. EM float math has no cross-engine replay
-    // (like the q127/q128 merge loop), so the declared oracle pins
-    // scale-keyed golden VALUES; the algorithm itself is spec-verified
-    // (hand-computed Viterbi goldens, tie-break, char-fallback,
-    // round-trip, determinism — SentencePieceSpec).
-    "q136_sp_unigram_tokens" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").where(col("text").isNotNull)
-      val model = graft.text.SentencePiece.train(
-        docs.where(col("doc_id") < 400), "text", vocabSize = 400)
-      docs.select(col("doc_id"),
-          graft.text.SentencePiece.encodePieces(col("text"), model).as("p"))
-        .select(col("doc_id"), size(col("p")).as("n_pieces"),
-          try_element_at(col("p"), lit(1)).as("p1"),
-          try_element_at(col("p"), lit(2)).as("p2"),
-          try_element_at(col("p"), lit(3)).as("p3"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q121: product-quantization ANN (SURVEY+ L80, Jegou et al. 2011)
-    // — per-subspace codebooks trained on bounded seeded samples,
-    // corpus encoded to m=8 code ids in one compiled pass, ADC scoring
-    // of all queries in ONE scan via a driver-built lookup table
-    // (Kernels.pqAdcDists), per-query top-k as a map-side WindowGroupLimit.
-    // Codebooks are captured for the oracle (the q37/q65 pattern):
-    // DuckDB replays code assignment (argmin + lower-code tie), the ADC
-    // tables (list_dot_product of the diff with itself — ascending-i,
-    // bit-identical to the driver loop) and the ascending-j
-    // parenthesized sum, so every distance matches bit-for-bit.
-    "q121_pq_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 3)
-      val cbs = graft.similarity.Pq.trainCodebooks(
-        emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 16)
-      q121Codebooks = Some(cbs)
-      graft.similarity.Pq.adcTopK(emb, "vec_id", "embedding", queries,
-          cbs, dim = 64, k = 5)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("adc_dist"), 4).as("adc_dist"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q122: IVF+PQ ANN (SURVEY+ L80 composition — the FAISS IVFx,PQm
-    // billion-scale layout): the q37 coarse quantizer routes each query
-    // to nProbe cells, the q121 ADC table scores ONLY those cells'
-    // residents, so per-query cost is probed occupancy, not the corpus.
-    // Both models' constants are captured and the oracle composes the
-    // two verified replays (argmin cells/probes + ADC pivot sum).
-    "q122_ivfpq_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 3)
-      val cent = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        dim = 64, nLists = 16)
-      val cbs = graft.similarity.Pq.trainCodebooks(
-        emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 16)
-      q122Models = Some((cent, cbs))
-      graft.similarity.Pq.ivfAdcTopK(emb, "vec_id", "embedding", queries,
-          cent, cbs, dim = 64, k = 5, nProbe = 4)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("adc_dist"), 4).as("adc_dist"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q132: OPQ + PQ ANN (SURVEY+ L86 — FAISS's `OPQm,PQm`
-    // pre-transform, Ge et al. 2013): a learned ORTHOGONAL rotation
-    // decorrelates/balances the subspaces before PQ (L2 distances are
-    // rotation-invariant, so search semantics are unchanged while the
-    // codes quantize better — measured 51% reconstruction-error
-    // reduction on the anisotropic spec fixture). Training is driver
-    // alternation over the ONE bounded sample (Newton-polar
-    // Procrustes); corpus/queries rotate in one compiled map-side pass
-    // (Kernels.matVec), then EVERYTHING downstream is the verified q121
-    // machinery. Oracle = the q121 replay over rotated vectors with
-    // the rotation's column vectors captured as VALUES.
-    "q132_opq_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val rot = graft.similarity.Opq.trainRotation(
-        emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 16, iters = 6)
-      val rotated = emb.select(col("vec_id"),
-        graft.similarity.Opq.rotate(col("embedding"), rot, 64).as("embedding"))
-      val queries = rotated.where(col("vec_id") < 3)
-      val cbs = graft.similarity.Pq.trainCodebooks(
-        rotated, "vec_id", "embedding", dim = 64, m = 8, ksub = 16)
-      q132Models = Some((rot, cbs))
-      graft.similarity.Pq.adcTopK(rotated, "vec_id", "embedding", queries,
-          cbs, dim = 64, k = 5)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("adc_dist"), 4).as("adc_dist"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q123: RESIDUAL IVF+PQ ANN (SURVEY+ L81 — the FAISS IVFPQ
-    // construction proper): PQ codes are learned on and assigned to
-    // v - centroid(cell), and each query builds one ADC table PER
-    // PROBED CELL from its own residual, so codes micro-rank WITHIN a
-    // cell (raw-vector codes collapse tight clusters onto one code —
-    // the round-9 measured 1% recall). Oracle extends the q122 replay
-    // by the centroid subtraction at all three sites: corpus residual
-    // (v[i]-cc[i]), code assignment over residual slices, and the
-    // per-(query,cell) table diff ((qv-cc)-cv).
-    "q123_ivfpq_residual_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 3)
-      val cent = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        dim = 64, nLists = 16)
-      val cbs = graft.similarity.Pq.trainResidualCodebooks(
-        emb, "vec_id", "embedding", dim = 64, m = 8, centroids = cent, ksub = 16)
-      q123Models = Some((cent, cbs))
-      graft.similarity.Pq.ivfAdcTopKResidual(emb, "vec_id", "embedding", queries,
-          cent, cbs, dim = 64, k = 5, nProbe = 4)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("adc_dist"), 4).as("adc_dist"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q133: LM MODEL-ARTIFACT round trip + FIXED-REFERENCE-SET training
-    // (SURVEY+ L87) — the train-once/score-many contract: a bounded
-    // hashed trigram model trains on a CONSTANT reference set
-    // (doc_id < 400 — the same 400 documents at every corpus size,
-    // where q124's doc_id % 7 slice GROWS with the corpus and blends
-    // the trainer into the measured decade), persists through the
-    // schema-pinned param-stamped parquet artifact
-    // (ModelState.saveLmModel / loadLmModel — the q119 DedupState
-    // pattern), and the LOADED artifact broadcast-scores the full
-    // corpus. The oracle replays the TRAINED model's captured (gram,
-    // prob) VALUES — so artifact-round-trip fidelity is itself
-    // oracle-gated: any double the parquet trip changed would break
-    // the hash match.
-    "q133_lm_artifact_scoring" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val ref = docs.where(col("doc_id") < 400)
-      val modelRows = graft.text.UnigramLm.trainNgramModelHashedCaptured(
-        ref, "text", n = 3, maxGrams = 2048).collect()
-      require(modelRows.nonEmpty, "q133 reference set produced an empty model")
-      q133Model = Some((modelRows.map(r => (r.getString(1), r.getDouble(2))).toSeq,
-        modelRows.head.getDouble(3)))
-      import s.implicits._
-      val trained = modelRows.map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3)))
-        .toSeq.toDF("g", "prob", "unseen_prob")
-      val stateDir = "/tmp/graft_q133_model_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        java.lang.ProcessHandle.current().pid()
-      registerTmpCleanup(stateDir)
-      graft.model.ModelState.saveLmModel(trained, n = 3, unicode = false, path = stateDir)
-      val loaded = graft.model.ModelState.loadLmModel(s, stateDir, n = 3)
-      graft.text.UnigramLm.scoreNgramsWithModel(docs, "doc_id", "text", loaded, n = 3)
-        .select(col("doc_id"), col("n_ngrams").as("n_trigrams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q134: the PRODUCTION ANN STACK, declared (SURVEY+ L88) — OPQ rotation ->
-    // residual IVFPQ -> exact refine (FAISS `OPQ8,IVF16,PQ8 +
-    // IndexRefineFlat`), the scaladoc-designated default entry point
-    // (Pq.ivfAdcTopKResidualRefined), with BOTH trained models
-    // round-tripping through their persisted artifacts
-    // (ModelState.saveRotation/savePqModel -> load) before scoring —
-    // the full train-once/score-many deployment in one declared plan.
-    // Oracle composes the three verified replays: the q132 captured-
-    // rotation CTE (rotated vectors), the q123 residual-ADC replay
-    // over them (rank <= rerank as candidates), and a plain exact
-    // squared-L2 rerank (list_dot_product of the diff with itself —
-    // bit-identical to the dist2 kernel's ascending-i loop).
-    "q134_ann_opq_ivfpq_refined" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val rot = graft.similarity.Opq.trainRotation(
-        emb, "vec_id", "embedding", dim = 64, m = 8, ksub = 16, iters = 6)
-      val stateBase = "/tmp/graft_q134_model_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        java.lang.ProcessHandle.current().pid()
-      registerTmpCleanup(stateBase)
-      graft.model.ModelState.saveRotation(s, stateBase + "/rot", rot, dim = 64)
-      val rotLoaded = graft.model.ModelState.loadRotation(s, stateBase + "/rot", dim = 64)
-      val rotated = emb.select(col("vec_id"),
-        graft.similarity.Opq.rotate(col("embedding"), rotLoaded, 64).as("embedding"))
-      val cent = Similarity.trainIvfCentroids(rotated, "vec_id", "embedding",
-        dim = 64, nLists = 16)
-      val cbs = graft.similarity.Pq.trainResidualCodebooks(
-        rotated, "vec_id", "embedding", dim = 64, m = 8, centroids = cent, ksub = 16)
-      graft.model.ModelState.savePqModel(s, stateBase + "/pq", cent, cbs, dim = 64)
-      val (centL, cbsL) = graft.model.ModelState.loadPqModel(
-        s, stateBase + "/pq", dim = 64, m = 8, ksub = 16)
-      q134Models = Some((rotLoaded, centL, cbsL))
-      val queries = rotated.where(col("vec_id") < 3)
-      graft.similarity.Pq.ivfAdcTopKResidualRefined(rotated, "vec_id", "embedding",
-          queries, centL, cbsL, dim = 64, k = 5, nProbe = 4, rerank = 12)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("dist2"), 4).as("dist2"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // q135: TRAINED language identification (SURVEY+ L89) — the
-    // fastText-shape LID that opens the CCNet chain (hashing-trick
-    // char-trigram features -> multinomial LR; Joulin et al. 2016 /
-    // Wenzek et al. 2020), one tier above the q103 marker heuristic.
-    // A planted multilingual corpus (8 scripts/languages, per-doc
-    // deterministic word sampling) trains on the bounded doc_id < 2000
-    // seed; the trained model exports as a bounded captured (gram,
-    // lang, w) table (the q124 pattern — margins are linear in n-gram
-    // occurrences, so a string-join replay IS the model) and
-    // broadcast-scores every document map-side; prediction is the
-    // rank-based argmax over 6dp-rounded margins. The oracle rebuilds
-    // the planted text, replays the n-gram normalization (the q98
-    // translate+regexp formula, codepoint substr windows) and the
-    // margin sum/argmax from the captured VALUES.
-    "q135_lid_trained" -> ((s, dir) => {
-      val li = (col("doc_id") % LidPools.length).cast("int")
-      val langArr = typedlit(LidPools.map(_._1))
-      val poolArr = typedlit(LidPools.map(_._2))
-      val words = (0 until 9).map { k =>
-        val widx = (expr(s"doc_id div ${LidPools.length}") + lit(3 * k + k * k)) % 14
-        element_at(element_at(poolArr, li + 1), (widx + 1).cast("int"))
-      }
-      val synth = t(s, dir, "documents")
-        .select(col("doc_id"),
-          element_at(langArr, li + 1).as("lang"),
-          concat_ws(" ", words: _*).as("t"))
-      val seed = synth.where(col("doc_id") < 2000)
-      val model = graft.text.LanguageId.train(seed, "t", "lang",
-        n = 3, numFeatures = 1 << 16, maxIter = 50)
-      val bounded = graft.text.LanguageId.exportBounded(model, seed, "t", maxGrams = 300)
-      q135Model = Some(bounded.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq)
-      graft.text.LanguageId.scoreBounded(synth, "doc_id", "t", bounded, n = 3)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q124: PRE-TRAINED-MODEL LM scoring — THE 100 TB CCNet path
-    // (Wenzek et al. 2020 score with a pre-trained KenLM, not a model
-    // re-estimated over the scoring corpus), now a DECLARED query: a
-    // bounded hashed trigram model trains once on a fixed slice
-    // (doc_id % 7 == 0 — the "reference corpus"), BROADCASTS, and
-    // map-side-scores the whole corpus — no corpus-sized model
-    // exchange, 2.0x/decade measured vs 12-21x for the corpus-trained
-    // tiers. The captured-gram trainer carries each model gram's
-    // string form, so the oracle replays scoring engine-independently:
-    // captured (gram, prob) VALUES left-joined onto the q117 trigram
-    // stream, unseen floor for the rest.
-    "q124_lm_model_scoring" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val slice = docs.where(col("doc_id") % 7 === 0)
-      val modelRows = graft.text.UnigramLm.trainNgramModelHashedCaptured(
-        slice, "text", n = 3, maxGrams = 2048).collect()
-      require(modelRows.nonEmpty, "q124 training slice produced an empty model")
-      q124Model = Some((modelRows.map(r => (r.getString(1), r.getDouble(2))).toSeq,
-        modelRows.head.getDouble(3)))
-      import s.implicits._
-      val model = modelRows.map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3)))
-        .toSeq.toDF("g", "prob", "unseen_prob")
-      graft.text.UnigramLm.scoreNgramsWithModel(docs, "doc_id", "text", model, n = 3)
-        .select(col("doc_id"), col("n_ngrams").as("n_trigrams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q131: the 5-GRAM model tier — CCNet proper is a 5-gram KenLM,
-    // and q125 measured the corpus-trained 5-gram at 22x/decade (every
-    // 5-gram occurrence nearly distinct -> the gram exchanges approach
-    // the token stream). THIS is how order-5 runs at 100 TB: bounded
-    // hashed 5-gram model off the fixed slice, broadcast, one map-side
-    // scoring pass (the q124 shape at n = 5, same captured-model
-    // oracle machinery).
-    "q131_lm5_model_scoring" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val slice = docs.where(col("doc_id") % 7 === 0)
-      val modelRows = graft.text.UnigramLm.trainNgramModelHashedCaptured(
-        slice, "text", n = 5, maxGrams = 4096).collect()
-      require(modelRows.nonEmpty, "q131 training slice produced an empty model")
-      q131Model = Some((modelRows.map(r => (r.getString(1), r.getDouble(2))).toSeq,
-        modelRows.head.getDouble(3)))
-      import s.implicits._
-      val model = modelRows.map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3)))
-        .toSeq.toDF("g", "prob", "unseen_prob")
-      graft.text.UnigramLm.scoreNgramsWithModel(docs, "doc_id", "text", model, n = 5)
-        .select(col("doc_id"), col("n_ngrams").as("n_5grams"),
-          round(col("xent"), 6).as("xent"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q119: CROSS-CRAWL incremental exact dedup (SURVEY+ L78) — crawl 1
-    // (doc_id % 3 == 0) produces a persistable fingerprint-state
-    // artifact which round-trips through PARQUET (save + schema-checked
-    // load, the q100 PID-keyed fixture pattern) before crawl 2 dedups
-    // against it: the prior crawl is never rescanned. Oracle replays
-    // fingerprints (the q19 md5 convention), the NOT IN state prune and
-    // the within-batch first-per-fp keep directly over the same split.
-    "q119_incremental_dedup" -> ((s, dir) => {
-      import graft.dedup.DedupState
-      val docs = t(s, dir, "documents")
-      val crawl1 = docs.where(col("doc_id") % 3 === 0)
-      val crawl2 = docs.where(col("doc_id") % 3 =!= 0)
-      val stateDir = "/tmp/graft_q119_state_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        java.lang.ProcessHandle.current().pid()
-      registerTmpCleanup(stateDir)
-      DedupState.saveFingerprintState(
-        DedupState.fingerprintState(crawl1, "text"), stateDir)
-      val state = DedupState.loadFingerprintState(s, stateDir)
-      DedupState.exactVsState(crawl2, "text", "doc_id", state)
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.fingerprint(col("text")).as("fingerprint"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // q98: the UNICODE tokenization tier (TextFunctions.unicodeTokens,
-    // round-7 verdict task #1) over a multilingual decorated corpus —
-    // CJK/Hangul/Devanagari/Greek/Cyrillic/accent-Latin snippets keyed
-    // by doc_id. Per-doc token count, CJK-single count, ascii-run count
-    // and head/tail tokens; the oracle replays the tokenizer as the
-    // codepoint-class regexp formula (CJK spacing + \p{L}\p{M}\p{N}
-    // extraction + ASCII translate) over the same decoration.
-    "q98_unicode_tokens" -> ((s, dir) => {
-      val id = col("doc_id")
-      val decorated = concat(multilingualSnippet(id), lit(" "),
-        col("text"), lit(" 終了 end"))
-      val cjkFull = "^" + graft.functions.TextAlgo.CjkClass + "$"
-      t(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.unicodeTokens(decorated).as("toks"))
-        .select(col("doc_id"),
-          size(col("toks")).as("n_tokens"),
-          size(filter(col("toks"), x => x.rlike(cjkFull))).as("n_cjk"),
-          size(filter(col("toks"), x => x.rlike("^[a-z0-9]+$"))).as("n_ascii"),
-          concat_ws(" ", slice(col("toks"), 1, 10)).as("head_tokens"),
-          element_at(col("toks"), -1).as("last_token"))
-        .transform(cacheBeforeSort)
-        .orderBy(col("doc_id"))
-    }),
-
-    // q99: BM25 retrieval THROUGH the unicode tier (Search.bm25TopK
-    // unicode=true) — single-ideograph/Hangul-syllable/accented terms
-    // against the q98 decorated corpus, proving the threading end to
-    // end: same arithmetic replay as q77, tokenization swapped for the
-    // q98 formula. On the ascii tier these terms are unmatchable.
-    "q99_bm25_unicode" -> ((s, dir) => {
-      val id = col("doc_id")
-      val decorated = concat(multilingualSnippet(id), lit(" "),
-        col("text"), lit(" 終了 end"))
-      val corpus = t(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"), decorated.as("t"))
-      graft.text.Search.bm25TopK(corpus, "doc_id", "t",
-        Seq("学", "テ", "텍", "naïve", "machine"), k = 15, unicode = true)
-    }),
-
-    // q33: stateful sessionizer (flatMapGroupsWithState) run in batch —
-    // closed sessions per user with a 30-min gap. In batch the final open
-    // session per user never emits (streaming-consistent semantics), so the
-    // oracle is q29's session SQL minus one session per user. unix_millis
-    // (exact integer ms, floor) mirrors DuckDB's epoch_ms — a double-seconds
-    // conversion would round differently near ms boundaries.
-    "q33_sessionize_stateful" -> ((s, dir) => {
-      import s.implicits._
-      val ev = events(s, dir)
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"), col("value"))
-        .as[(Long, Long, Double)]
-      graft.streaming.EventPipeline.sessionize(ev, gapMs = 1800L * 1000)
-        .groupByKey(_.userId)
-        .count()
-        .toDF("user_id", "n_closed_sessions")
-        .orderBy(col("user_id"))
-    }))
-
-  /** DuckDB replay of the full ingestion gate (the q90 HTML-extraction
-    * CTEs composed with the q74 Gopher-gate CTEs) grouped by `keyExpr`
-    * — shared by q91 (key = source) and q100 (key = the fixture
-    * writer's shard assignment), so the cell-based and file-based
-    * ingestion fronts are pinned against the ONE replay.
-    */
-  private def ingestGateOracleSql(keyExpr: String, keyAlias: String): String =
-    raw"""WITH h AS (SELECT $keyExpr AS $keyAlias,
-      |  '<html><head><style>p { color: red }</style></head><body><h1>' || source ||
-      |  '</h1><!-- id --><p>' || text ||
-      |  '</p><script>var x = 1 &amp;&amp; 2;</script></body></html>' AS html
-      |  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
-      |s1 AS (SELECT $keyAlias,
-      |  regexp_replace(regexp_replace(regexp_replace(html,
-      |    '(?s)<[sS][cC][rR][iI][pP][tT][^>]*>.*?</[sS][cC][rR][iI][pP][tT]>', ' ', 'g'),
-      |    '(?s)<[sS][tT][yY][lL][eE][^>]*>.*?</[sS][tT][yY][lL][eE]>', ' ', 'g'),
-      |    '(?s)<!--.*?-->', ' ', 'g') AS t FROM h),
-      |s2 AS (SELECT $keyAlias, regexp_replace(t, '(?s)<[^>]*>', ' ', 'g') AS t FROM s1),
-      |s3 AS (SELECT $keyAlias,
-      |  replace(replace(replace(replace(replace(replace(t,
-      |    '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-      |    '&#39;', chr(39)), '&amp;', '&') AS t FROM s2),
-      |c AS (SELECT $keyAlias,
-      |  trim(regexp_replace(t, '[ \t\r\n\f]+', ' ', 'g'), ' ') AS clean FROM s3),
-      |cc AS (SELECT $keyAlias,
-      |  list_filter(string_split_regex(clean, '[\s\x0b]+'), x -> x <> '') AS toks,
-      |  list_filter(string_split(clean, chr(10)), l -> trim(l, ' ') <> '') AS nls,
-      |  length(clean) - length(replace(clean, '#', '')) AS n_hash,
-      |  (length(clean) - length(replace(clean, '...', ''))) // 3 AS n_ell3,
-      |  length(clean) - length(replace(clean, '…', '')) AS n_ellu
-      |  FROM c),
-      |g AS (SELECT $keyAlias,
-      |  len(toks) AS n_w,
-      |  coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS sum_len,
-      |  len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-      |  n_hash + n_ell3 + n_ellu AS n_sym,
-      |  len(nls) AS n_lines,
-      |  len(list_filter(nls, l -> substr(ltrim(l, ' '), 1, 1) IN ('-', '*', '•'))) AS n_bullet,
-      |  len(list_filter(nls, l -> ends_with(rtrim(l, ' '), '...') OR ends_with(rtrim(l, ' '), '…'))) AS n_ellend,
-      |  len(list_filter(['the','be','to','of','and','that','have','with'],
-      |    sw -> list_contains(list_transform(toks, x -> lower(x)), sw))) AS n_stop
-      |  FROM cc),
-      |f AS (SELECT $keyAlias, n_w,
-      |  (n_w < 50 OR n_w > 100000) AS f_words,
-      |  (n_w = 0 OR sum_len * 1.0 / n_w < 3.0 OR sum_len * 1.0 / n_w > 10.0) AS f_wlen,
-      |  (n_w > 0 AND n_sym * 1.0 / n_w > 0.1) AS f_sym,
-      |  (n_lines > 0 AND n_bullet * 1.0 / n_lines > 0.9) AS f_bul,
-      |  (n_lines > 0 AND n_ellend * 1.0 / n_lines > 0.3) AS f_ell,
-      |  (n_w = 0 OR n_alpha * 1.0 / n_w < 0.8) AS f_alpha,
-      |  (n_stop < 2) AS f_stop
-      |  FROM g)
-      |SELECT $keyAlias, CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(sum(n_w) AS BIGINT) AS n_tokens,
-      |  CAST(sum(CASE WHEN f_words THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_words,
-      |  CAST(sum(CASE WHEN f_wlen THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_word_len,
-      |  CAST(sum(CASE WHEN f_sym THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_symbol,
-      |  CAST(sum(CASE WHEN f_bul THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_bullet,
-      |  CAST(sum(CASE WHEN f_ell THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_ellipsis,
-      |  CAST(sum(CASE WHEN f_alpha THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_alpha,
-      |  CAST(sum(CASE WHEN f_stop THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_stopword,
-      |  CAST(sum(CASE WHEN NOT (f_words OR f_wlen OR f_sym OR f_bul OR f_ell OR f_alpha OR f_stop)
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-      |FROM f GROUP BY $keyAlias ORDER BY $keyAlias""".stripMargin
-
-  /** DuckDB replay of [[graft.functions.TextFunctions.sentencesAbbrevGuard]]'s
-    * mask fold — generated from the SAME
-    * [[graft.functions.TextFunctions.abbrevMaskSteps]] the Spark side
-    * folds over (one alternation pass for plain entries + per-entry
-    * passes for dotted ones), so query and oracle can never drift.
-    */
-  private[graft] def abbrevMaskSql(expr: String): String =
-    graft.functions.TextFunctions
-      .abbrevMaskSteps(graft.functions.TextFunctions.DefaultAbbreviations)
-      .foldLeft(expr) { case (acc, (pat, _, duckRep)) =>
-        s"regexp_replace($acc, '$pat', '$duckRep', 'g')"
-      }
-
-  /** DuckDB replay of the multilingual [[graft.functions.TextFunctions.langGuess]]:
-    * per-language marker hit counts over the unicode-tier tokens (same
-    * marker table, quoted), then the kernel's argmax — FIRST language
-    * with a strictly-greater running max wins, i.e. lang_i needs
-    * h_i > 0, h_i > h_j for every earlier j, h_i >= h_j for every
-    * later j; 'und' otherwise. Generated from the production table so
-    * they cannot drift.
-    */
-  private def langGuessCaseSql: String = {
-    val ms = graft.functions.TextFunctions.multilingualLangMarkers
-    ms.indices.map { i =>
-      val conds = (Seq(s"h$i > 0") ++
-        (0 until i).map(j => s"h$i > h$j") ++
-        (i + 1 until ms.length).map(j => s"h$i >= h$j")).mkString(" AND ")
-      s"WHEN $conds THEN '${ms(i)._1}'"
-    }.mkString("CASE ", "\n    ", "\n    ELSE 'und' END")
-  }
-
-  private def langGuessHitsSql: String =
-    graft.functions.TextFunctions.multilingualLangMarkers.zipWithIndex.map {
-      case ((_, words), i) =>
-        val list = words.map(w => s"'$w'").mkString(", ")
-        s"len(list_filter(toks, t -> list_contains([$list], lower(t)))) AS h$i"
-    }.mkString(",\n  ")
-
-  /** Multilingual decoration shared by q98/q99: a script-diverse snippet
-    * keyed by doc_id (CJK, Hangul, accented Latin, Devanagari,
-    * Greek/Cyrillic, mixed English+CJK), prepended to the document text.
-    * The synthetic corpus is pure ASCII, so this is what makes the
-    * unicode-tier queries actually exercise non-Latin scripts.
-    */
-  /** q135's planted LID corpus: per-language word pools (8 languages,
-    * 5 scripts, 14 words each — all pre-normalized lowercase so the
-    * fixture is transparent to the n-gram normalization both engines
-    * replay). Shared by the Spark query and the generated oracle SQL,
-    * so both sides use byte-identical strings.
-    */
-  private[graft] val LidPools: Seq[(String, Seq[String])] = Seq(
-    "de" -> Seq("der", "wald", "und", "über", "schnell", "nicht", "zeitung",
-      "straße", "ein", "können", "haus", "für", "wichtig", "zwischen"),
-    "el" -> Seq("και", "το", "πόλη", "να", "θάλασσα", "της", "με", "γρήγορα",
-      "που", "βιβλίο", "την", "από", "σημαντικό", "άνθρωπος"),
-    "en" -> Seq("the", "forest", "and", "quickly", "newspaper", "not",
-      "street", "a", "can", "house", "for", "important", "between", "people"),
-    "es" -> Seq("el", "bosque", "y", "rápido", "periódico", "no", "calle",
-      "una", "puede", "casa", "por", "importante", "entre", "gente"),
-    "fr" -> Seq("le", "forêt", "et", "rapidement", "journal", "pas", "rue",
-      "une", "peut", "maison", "pour", "important", "entre", "gens"),
-    "hi" -> Seq("के", "जंगल", "और", "जल्दी", "अख़बार", "नहीं", "सड़क",
-      "एक", "सकता", "घर", "लिए", "महत्वपूर्ण", "बीच", "लोग"),
-    "ru" -> Seq("и", "лес", "быстро", "газета", "не", "улица", "один",
-      "может", "дом", "для", "важно", "между", "люди", "город"),
-    "zh" -> Seq("的", "森林", "和", "快速", "报纸", "不", "街道", "一个",
-      "可以", "房子", "为了", "重要", "之间", "人们"))
-
-  private def multilingualSnippet(id: Column): Column =
-    element_at(array(
-      lit("世界の日本語テスト"),
-      lit("한국어 텍스트 처리 시험"),
-      lit("Résumé naïve café façade"),
-      lit("हिन्दी में लिखा गया पाठ"),
-      lit("Ελληνικά και Русский текст"),
-      lit("machine learning 机器学习系统")), (id % 6 + 1).cast("int"))
-
-  /** The same six snippets as a DuckDB array-index expression. */
-  private val MultilingualSnippetSql: String =
-    "['世界の日本語テスト','한국어 텍스트 처리 시험','Résumé naïve café façade'," +
-      "'हिन्दी में लिखा गया पाठ','Ελληνικά και Русский текст'," +
-      "'machine learning 机器学习系统'][CAST(doc_id % 6 + 1 AS INT)]"
-
-  /** DuckDB replay of [[graft.functions.TextAlgo.unicodeTokens]] applied
-    * to the SQL expression `textExpr`: space out CJK codepoints (they
-    * become single tokens), ASCII-fold case, extract letter/mark/number
-    * runs. The CJK class is quoted from [[graft.functions.TextAlgo.CjkClass]]
-    * so kernel and oracle can never disagree on the ranges.
-    */
-  /** q107's fixture prefixes: the same visible string in NFC-composed and
-    * NFD-decomposed encodings (é=U+00E9 vs e+U+0301, à vs a+U+0300,
-    * ï vs i+U+0308). Normal (not triple-quoted) literals so the \\u
-    * escapes are processed; shared by the Spark query and the oracle SQL
-    * so both sides use byte-identical codepoints.
-    */
-  private[graft] val NfcComposedPrefix: String =
-    "Caf\u00E9 d\u00E9j\u00E0 vu na\u00EFve r\u00E9sum\u00E9 "
-  private[graft] val NfcDecomposedPrefix: String =
-    "Cafe\u0301 de\u0301ja\u0300 vu nai\u0308ve re\u0301sume\u0301 "
-
-  private[graft] def unicodeToksSql(textExpr: String): String =
-    "regexp_extract_all(translate(regexp_replace(" + textExpr + ", '(" +
-      graft.functions.TextAlgo.CjkClass + ")', ' \\1 ', 'g'), " +
-      "'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-      "'[\\p{L}\\p{M}\\p{N}]+')"
-
-  /** DuckDB CASE/IN replay of [[graft.functions.Url.registrableDomain]]
-    * over the bundled [[graft.functions.PublicSuffix.Snapshot]]: the
-    * suffix snapshot becomes literal IN lists (one per label count,
-    * longest first), the candidate extraction the same anchored
-    * Java/RE2-shared regex. `host` is the SQL expression holding the
-    * already-lowercased host.
-    */
-  private[graft] def etld1OracleSql(host: String): String = {
-    // the same rule split as both Spark tiers (Url.splitRules), so the
-    // oracle ladder cannot drift from the engine's
-    val (excRules, wildTails, normals) =
-      graft.functions.Url.splitRules(graft.functions.PublicSuffix.Snapshot)
-    val byLen = normals.groupBy(_.count(_ == '.') + 1)
-    val wildByLen = wildTails.groupBy(_.count(_ == '.') + 2)
-    val maxK = (byLen.keys ++ wildByLen.keys).foldLeft(2)(math.max)
-    def lastK(k: Int) =
-      s"regexp_extract($host, '([^.]+(?:[.][^.]+){${k - 1}})$$', 1)"
-    def inList(set: Seq[String]) = set.sorted.map(s => s"'$s'").mkString(", ")
-    // exception rules first (they prevail over every other match), then
-    // descending k with normal IN-sets and wildcard tail matches OR'd
-    val excWhens = excRules.groupBy(_.count(_ == '.') + 1).toSeq.sortBy(-_._1)
-      .map { case (n, rules) =>
-        s"WHEN ${lastK(n)} IN (${inList(rules)})\n      THEN ${lastK(n)}"
-      }
-    val kWhens = (maxK to 2 by -1).flatMap { k =>
-      val conds =
-        byLen.get(k).map(set => s"${lastK(k)} IN (${inList(set)})").toSeq ++
-          wildByLen.get(k).map(tails =>
-            s"(${lastK(k - 1)} IN (${inList(tails)}) AND ${lastK(k)} <> '')")
-      if (conds.isEmpty) None
-      else Some(s"WHEN ${conds.mkString(" OR ")}\n      THEN nullif(${lastK(k + 1)}, '')")
-    }
-    val whens = (excWhens ++ kWhens).mkString("\n    ")
-    s"CASE WHEN NOT starts_with($host, '[') THEN\n  CASE $whens\n" +
-      s"    ELSE nullif(${lastK(2)}, '') END\nEND"
-  }
-
-  /** Iterative-algorithm replays (BPE merge loop, k-center rounds) come
-    * from the SHARED generators in [[graft.tools.ReplaySql]] — the same
-    * SQL the differential fuzz harness runs, so the q-gate and the fuzz
-    * gate can never drift onto different replay semantics.
-    */
-  private def bpeMergesOracleSql(numMerges: Int): String =
-    graft.tools.ReplaySql.bpeMerges("documents", "text", numMerges) + "\nORDER BY rank"
-
-  private def kCenterOracleSql(k: Int): String =
-    graft.tools.ReplaySql.kCenter("embeddings", "vec_id", "embedding", k) + "\nORDER BY rank"
-
-  /** q39's hyperplanes are PURE seed output (no data dependence), so the
-    * oracle can embed them as literals: same `Random(42)` Box-Muller
-    * sequence as `Similarity.hyperplaneBucket`, row-major numBits x dim.
-    * `Double.toString` round-trips exactly through DuckDB's parser, and
-    * both engines accumulate the dot product in ascending index order.
-    */
-  /** DuckDB literals for the first `numBits` seeded hyperplanes — the SAME
-    * row-major gaussian stream `hyperplaneBucket` consumes, so plane i is
-    * identical for every bit-width (prefix property of the fill).
-    */
-  private def planeLits(numBits: Int): Seq[String] = {
-    val rng = new scala.util.Random(42L)
-    Seq.fill(numBits * 64)(rng.nextGaussian()).grouped(64)
-      .map(_.map(d => java.lang.Double.toString(d)).mkString("[", ", ", "]")).toSeq
-  }
-
-  private lazy val q39PlaneLits: Seq[String] = planeLits(4)
-
-  /** q110 phrase set, shared by the Spark query and the generated oracle:
-    * 2-grams, 3-grams and a repeated-term phrase over the corpus
-    * vocabulary.
-    */
-  private val q110Phrases: Seq[String] = Seq(
-    "fast table", "table table", "batch part value",
-    "spark order data", "the line sort", "scan query big")
-
-  /** q112's blocklist: single alnum words (so the oracle's token-equality
-    * replay is EXACT — see the q112 comment), mixing corpus-frequent
-    * terms, a mid-frequency term, and one absent term.
-    */
-  private val q112Patterns: Seq[String] = Seq(
-    "customer", "data", "vector", "stream", "zzznotpresent")
-
-  /** The sign-sketch bucket expression over `numBits` embedded planes —
-    * bit i weighted 2^i, matching `TextAlgo.hyperplaneBucket`.
-    */
-  private def bucketCaseSql(numBits: Int): String = {
-    val lits = planeLits(numBits)
-    (0 until numBits).map(i =>
-      s"(CASE WHEN list_dot_product(v, ${lits(i)}) >= 0 THEN ${1L << i} ELSE 0 END)")
-      .mkString("\n  + ")
-  }
-
-  /** Bit-widths the q39/q55 runs derived from their corpus count
-    * (`Similarity.bitsForOccupancy`), captured like the trained-centroid
-    * oracles: Verify dumps `oracleSql` after the queries run, so the
-    * replayed plane ladder always matches THIS run's width.
-    */
-  @volatile private var q39Bits: Option[Int] = None
-  @volatile private var q55Bits: Option[Int] = None
-  @volatile private var q76Bits: Option[Int] = None
-
-  /** q76's band count — fixed small constant (recall multiplier; cost is
-    * linear in it), embedded in both the query and its oracle.
-    */
-  private val Q76Bands = 4
-
-  /** Plane literals for band `band` of a banded sketch: slice of the SAME
-    * seeded stream [[bandedCosineNearDupPairs]] consumes (band 0 == the
-    * single-table planes).
-    */
-  private def bandPlaneLits(numBits: Int, numBands: Int): Seq[Seq[String]] = {
-    val rng = new scala.util.Random(42L)
-    val all = Seq.fill(numBands * numBits * 64)(rng.nextGaussian())
-    (0 until numBands).map { b =>
-      all.slice(b * numBits * 64, (b + 1) * numBits * 64).grouped(64)
-        .map(_.map(d => java.lang.Double.toString(d)).mkString("[", ", ", "]")).toSeq
-    }
-  }
-
-  private def q76OracleSql(bits: Int): String = {
-    val bands = bandPlaneLits(bits, Q76Bands)
-    val bucketCols = bands.zipWithIndex.map { case (lits, bi) =>
-      (0 until bits).map(i =>
-        s"(CASE WHEN list_dot_product(v, ${lits(i)}) >= 0 THEN ${1L << i} ELSE 0 END)")
-        .mkString("    ", "\n  + ", s" AS b$bi")
-    }.mkString(",\n")
-    val bandJoins = (0 until Q76Bands).map(bi =>
-      s"SELECT a.vec_id AS ia, c.vec_id AS ib FROM b a JOIN b c ON a.b$bi = c.b$bi AND a.vec_id < c.vec_id")
-      .mkString("\n  UNION\n  ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |b AS (SELECT vec_id, v,
-       |$bucketCols
-       |  FROM e),
-       |cand AS (
-       |  $bandJoins
-       |)
-       |SELECT ia AS id_a, ib AS id_b,
-       |  round(list_dot_product(x.v, y.v) /
-       |    (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 4) AS cosine
-       |FROM cand JOIN e x ON ia = x.vec_id JOIN e y ON ib = y.vec_id
-       |WHERE list_dot_product(x.v, y.v) /
-       |  (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.3
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  private def q39OracleSql(bits: Int): String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |b AS (SELECT vec_id, v,
-       |    ${bucketCaseSql(bits)} AS bucket
-       |  FROM e)
-       |SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-       |  round(list_dot_product(a.v, c.v) /
-       |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
-       |FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-       |WHERE list_dot_product(a.v, c.v) /
-       |  (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v))) >= 0.3
-       |ORDER BY id_a, id_b""".stripMargin
-
-  private def q55OracleSql(bits: Int): String =
-    s"""WITH RECURSIVE
-       |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |b AS (SELECT vec_id, v,
-       |    ${bucketCaseSql(bits)} AS bucket
-       |  FROM e),
-       |pair AS (SELECT a.vec_id AS s, c.vec_id AS t
-       |  FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-       |  WHERE list_dot_product(a.v, c.v) /
-       |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v))) >= 0.3),
-       |edges AS (SELECT s, t FROM pair UNION ALL SELECT t AS s, s AS t FROM pair),
-       |reach(id, lab) AS (
-       |  SELECT vec_id, vec_id FROM e
-       |  UNION
-       |  SELECT edges.t, reach.lab FROM reach JOIN edges ON reach.id = edges.s)
-       |SELECT id AS vec_id, min(lab) AS component
-       |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin
-
-  /** Trained IVF centroids captured by the q37 query run (deterministic:
-    * seeded bounded sample + seeded Lloyd on the same corpus the oracle
-    * reads). Verify dumps `oracleSql` after running the queries, so the
-    * literals always describe the centroids of THIS run; if q37 has not
-    * run, the entry is simply absent and the driver records rows-only.
-    */
-  @volatile private var q37Centroids: Option[Seq[Double]] = None
-
-  /** q65's trained KMeans centroids, captured the same way as q37's. */
-  @volatile private var q65Centroids: Option[Seq[Double]] = None
-  @volatile private var q121Codebooks: Option[Seq[Seq[Double]]] = None
-  @volatile private var q122Models: Option[(Seq[Double], Seq[Seq[Double]])] = None
-  @volatile private var q123Models: Option[(Seq[Double], Seq[Seq[Double]])] = None
-  @volatile private var q124Model: Option[(Seq[(String, Double)], Double)] = None
-  @volatile private var q126Model: Option[(Seq[(String, Double)], Double)] = None
-  @volatile private var q131Model: Option[(Seq[(String, Double)], Double)] = None
-  @volatile private var q132Models: Option[(Seq[Double], Seq[Seq[Double]])] = None
-  @volatile private var q133Model: Option[(Seq[(String, Double)], Double)] = None
-  @volatile private var q134Models: Option[(Seq[Double], Seq[Double], Seq[Seq[Double]])] = None
-  @volatile private var q135Model: Option[Seq[(String, String, Double)]] = None
-  @volatile private var q137Model: Option[(Seq[(String, Double)], Double)] = None
-
-  /** DuckDB replica of the q135 trained-LID pipeline: rebuild the
-    * planted corpus from the shared [[LidPools]] constants, replay the
-    * LID n-gram normalization (ASCII translate fold + the
-    * letter/mark/number replace — Unicode lower() is engine-divergent,
-    * which is exactly why the kernel folds ASCII only) with codepoint
-    * substr windows, join the captured bounded (gram, lang, w) VALUES
-    * on the STRING gram, and replay margin = round(intercept +
-    * sum(w), 6) + the (margin DESC, lang ASC) argmax.
-    */
-  private def q135OracleSql(model: Seq[(String, String, Double)]): String = {
-    val esc = (s: String) => s.replace("'", "''")
-    val nLang = LidPools.length
-    val poolSql = LidPools.map { case (_, ws) =>
-      ws.map(w => s"'${esc(w)}'").mkString("[", ", ", "]")
-    }.mkString("[\n    ", ",\n    ", "\n  ]")
-    val wordTerms = (0 until 9).map { k =>
-      s"pl.p[CAST(d.doc_id % $nLang AS INT) + 1]" +
-        s"[CAST((d.doc_id // $nLang + ${3 * k + k * k}) % 14 AS INT) + 1]"
-    }.mkString(",\n    ")
-    val weightRows = model.filter(_._1.nonEmpty)
-      .map { case (g, l, w) => s"('${esc(g)}', '${esc(l)}', ${java.lang.Double.toString(w)})" }
-      .mkString(",\n  ")
-    val interRows = model.filter(_._1.isEmpty)
-      .map { case (_, l, b) => s"('${esc(l)}', ${java.lang.Double.toString(b)})" }
-      .mkString(",\n  ")
-    s"""WITH pl AS (SELECT $poolSql AS p),
-       |synth AS (SELECT d.doc_id, concat_ws(' ',
-       |    $wordTerms) AS t
-       |  FROM documents d CROSS JOIN pl),
-       |norm AS (SELECT doc_id,
-       |    trim(regexp_replace(
-       |      translate(t, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-       |      '[^\\p{L}\\p{M}\\p{N}]+', ' ', 'g')) AS nt
-       |  FROM synth),
-       |grams AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, length(nt) - 1), i -> substr(nt, i, 3))) AS gram
-       |  FROM norm),
-       |model0(gram, lang, w0) AS (VALUES
-       |  $weightRows),
-       |model AS (SELECT gram, lang, CAST(w0 AS DOUBLE) AS w FROM model0),
-       |inter0(lang, b0) AS (VALUES
-       |  $interRows),
-       |inter AS (SELECT lang, CAST(b0 AS DOUBLE) AS b FROM inter0),
-       |occ AS (SELECT g.doc_id, m.lang, sum(m.w) AS gw
-       |  FROM grams g JOIN model m ON g.gram = m.gram GROUP BY 1, 2),
-       |margins AS (SELECT d.doc_id, i.lang,
-       |    round(coalesce(o.gw, CAST(0.0 AS DOUBLE)) + i.b, 6) AS margin
-       |  FROM documents d CROSS JOIN inter i
-       |  LEFT JOIN occ o ON o.doc_id = d.doc_id AND o.lang = i.lang),
-       |rk AS (SELECT doc_id, lang, margin,
-       |    row_number() OVER (PARTITION BY doc_id ORDER BY margin DESC, lang) AS rk
-       |  FROM margins)
-       |SELECT doc_id, lang AS lang_pred, margin FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin
-  }
-
-  // PID-keyed /tmp fixture dirs (q100/q119/q130) are read LAZILY by the
-  // returned plans, so they cannot be deleted inside the query builder;
-  // a JVM shutdown hook reaps each dir once instead of leaking one per
-  // process (ADVICE round 9)
-  private val tmpCleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def registerTmpCleanup(dir: String): Unit =
-    if (tmpCleanupRegistered.add(dir)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(p: java.io.File): Unit = {
-          val kids = p.listFiles()
-          if (kids != null) kids.foreach(rm)
-          p.delete(): Unit
+    queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
+
+  /** The oracle of each query's latest build in this JVM. */
+  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.all.map { q =>
+      q.name -> { (s: SparkSession, dir: String) =>
+        val b = q.build(s, dir)
+        b.oracle match {
+          case Some(sql) => built.put(q.name, sql)
+          case None => built.remove(q.name)
         }
-        rm(new java.io.File(dir))
-      }))
-    }
-
-  /** The capstone's shared cleaning/dedup stages (q116/q126): synthetic
-    * page assembly -> C4 line cleaning -> per-domain boilerplate strip ->
-    * blocklist gate -> NFC exact dedup. Returns the persisted slim
-    * (doc_id, lang, cleaned) frame — the LM + bucket + mix stages each
-    * evaluate their input several times (the q115 persist rationale);
-    * tracked in CacheTracker.
-    */
-  private def capstoneDeduped(s: SparkSession, dir: String): DataFrame =
-    capstoneCleanDedup(capstonePages(s, dir))
-
-  /** The capstone's synthetic page assembly (q116/q126/q137): one
-    * multi-line web page per non-null document — portal nav line,
-    * body (1/4 of docs a templated near-dup body in alternating
-    * NFC/NFD encodings), an unpunctuated line, a 1/11 blocklist
-    * violation, a 1/13 lorem-ipsum line. Returns (doc_id, lang, page).
-    */
-  private def capstonePages(s: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    val dom = concat(lit("dom"), id % 7)
-    val tk = expr("(doc_id - 3) div 4") // template index stream (id % 4 == 3 docs)
-    val nfcPre = when(tk % 2 === 0, lit(NfcComposedPrefix))
-      .otherwise(lit(NfcDecomposedPrefix))
-    val templates = array(
-      lit("template body alpha carries enough words to pass."),
-      lit("template body bravo carries enough words to pass."),
-      lit("template body charlie carries enough words to pass."),
-      lit("template body delta carries enough words to pass."),
-      lit("template body echo carries enough words to pass."))
-    val body = when(id % 4 === 3,
-        concat(nfcPre, element_at(templates, (tk % 5 + 1).cast("int"))))
-      .otherwise(concat(lit("Body "), col("text"), lit(" tail words end here.")))
-    val page = concat_ws("\n",
-      concat(lit("Welcome to the portal navigation for "), dom, lit(" today.")),
-      body,
-      lit("No terminal punctuation on this line at all"),
-      when(id % 11 === 0, lit("This sentence mentions badword99 unfortunately today."))
-        .otherwise(lit("This sentence mentions nothing objectionable at all.")),
-      when(id % 13 === 0, lit("Lorem Ipsum dolor sit amet consectetur adipiscing elit."))
-        .otherwise(concat(lit("All rights reserved by the "), dom, lit(" press office."))))
-    t(s, dir, "documents").where(col("text").isNotNull)
-      .select(col("doc_id"), col("lang"), page.as("page"))
-  }
-
-  /** The capstone's cleaning/dedup stages over an assembled
-    * (doc_id, lang, page) frame: C4 line cleaning -> per-domain
-    * boilerplate strip -> blocklist gate -> NFC exact dedup. Returns
-    * the persisted slim (doc_id, lang, cleaned) frame — the LM +
-    * bucket + mix stages each evaluate their input several times (the
-    * q115 persist rationale); tracked in CacheTracker.
-    */
-  private def capstoneCleanDedup(pages: DataFrame): DataFrame = {
-    val dom = concat(lit("dom"), col("doc_id") % 7)
-    // persisted (tracked): the boilerplate stage evaluates its input THREE
-    // times in one action (line-fingerprint votes, per-domain doc counts,
-    // and the strip join) with no upstream exchange for reuse to cover —
-    // without the cache the page assembly + C4 kernel (the capstone's
-    // most expensive text pass) runs 3x per materialization (measured
-    // r12: the two extra evals were the largest jobs of the capstone's
-    // first action). Guide §5 criterion: reused AND expensive.
-    val staged = graft.etl.CacheTracker.checkpointTracked(pages
-      .select(col("doc_id"), col("lang"), dom.as("domain"),
-        TextFunctions.c4Flags(col("page"), minWords = 5, minKeptLines = 3).as("f"))
-      .where(col("f.pass"))
-      .select(col("doc_id"), col("lang"), col("domain"),
-        col("f.kept_text").as("t1")))
-    val stripped = graft.dedup.Boilerplate.stripDomainBoilerplate(
-        staged, "t1", "domain", "doc_id", minFrac = 0.5, minDocs = 2)
-      .where(TextFunctions.blocklistHits(
-        col("cleaned"), Seq("badword99"), wordBounded = true) === 0)
-      .select(col("doc_id"), col("lang"), col("cleaned"))
-    graft.etl.CacheTracker.checkpointTracked(
-      graft.dedup.Dedup.exact(stripped, "cleaned", "doc_id",
-        unicode = true, nfc = true))
-  }
-
-  /** q71's trained SemDeDup centroids, captured the same way as q37's. */
-  @volatile private var q71Centroids: Option[Seq[Double]] = None
-
-  /** DuckDB replica of the q65 cluster profile: assign each vector to the
-    * nearest trained centroid (list_distance ties to the lower cell id,
-    * matching the strict-< argmin), then the same quantized-integer mean
-    * distance. floor(dist*10000) quantization makes the sum exact in both
-    * engines regardless of accumulation order.
-    */
-  private def q65OracleSql(cent: Seq[Double]): String = {
-    val centRows = cent.grouped(64).zipWithIndex.map { case (c, i) =>
-      c.map(d => java.lang.Double.toString(d))
-        .mkString(s"($i, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |cent(cell, c) AS (VALUES
-       |  $centRows),
-       |d AS (SELECT e.vec_id, cent.cell, list_distance(e.v, cent.c) AS dist,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_distance(e.v, cent.c), cent.cell) AS rk
-       |  FROM e CROSS JOIN cent),
-       |a AS (SELECT vec_id, cell, CAST(floor(dist * 10000) AS BIGINT) AS d10k FROM d WHERE rk = 1)
-       |SELECT CAST(cell AS BIGINT) AS cell, count(*) AS n,
-       |  round((CAST(sum(d10k) AS DOUBLE) / count(*)) / 10000.0, 4) AS avg_dist
-       |FROM a GROUP BY cell ORDER BY cell""".stripMargin
-  }
-
-  /** DuckDB replica of the q121 PQ-ANN pipeline with the trained
-    * per-subspace codebooks as literals: code assignment is the argmin
-    * with lower-code tie (list_distance is a monotone sqrt of the
-    * kernel's squared scan), ADC table entries are
-    * list_dot_product(diff, diff) — the same ascending-i accumulation
-    * as the driver table loop — and the total is the explicit
-    * ascending-j parenthesized sum, so every double matches the
-    * compiled path bit-for-bit.
-    */
-  private def q121OracleSql(cbs: Seq[Seq[Double]]): String =
-    pqAdcOracleSql(cbs,
-      "e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)")
-
-  /** DuckDB replica of the q132 OPQ+PQ pipeline: the q121 ADC replay
-    * over ROTATED vectors — the captured rotation's COLUMN vectors as
-    * VALUES, each rotated coordinate a list_dot_product(v0, column j)
-    * (ascending-i, bit-identical to the mat_vec kernel), assembled
-    * in j order by the ordered list aggregate.
-    */
-  private def q132OracleSql(rot: Seq[Double], cbs: Seq[Seq[Double]]): String = {
-    val rcolRows = (0 until 64).map { j =>
-      (0 until 64).map(i => java.lang.Double.toString(rot(i * 64 + j)))
-        .mkString(s"($j, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    pqAdcOracleSql(cbs,
-      s"""e0 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v0 FROM embeddings),
-         |rcol(j, rv) AS (VALUES
-         |  $rcolRows),
-         |e AS (SELECT e0.vec_id,
-         |    list(list_dot_product(e0.v0, rcol.rv) ORDER BY rcol.j) AS v
-         |  FROM e0 CROSS JOIN rcol GROUP BY e0.vec_id)""".stripMargin)
-  }
-
-  /** The shared q121 ADC-replay body: `eCtes` must define
-    * `e (vec_id, v)` — plain cast vectors for q121, captured-rotation
-    * products for q132.
-    */
-  private def pqAdcOracleSql(cbs: Seq[Seq[Double]], eCtes: String): String = {
-    val m = cbs.length
-    val subDim = 64 / m
-    val ksub = cbs.head.length / subDim
-    val cbRows = cbs.zipWithIndex.flatMap { case (cb, j) =>
-      (0 until ksub).map { c =>
-        cb.slice(c * subDim, (c + 1) * subDim)
-          .map(d => java.lang.Double.toString(d))
-          .mkString(s"($j, $c, CAST([", ", ", "] AS DOUBLE[]))")
+        b.frame
       }
-    }.mkString(",\n  ")
-    val pivotCols = (0 until m)
-      .map(j => s"max(CASE WHEN at.j = $j THEN at.t END) AS t$j").mkString(",\n    ")
-    val orderedSum = (1 until m).foldLeft("t0") { (acc, j) => s"($acc + t$j)" }
-    s"""WITH $eCtes,
-       |cb(j, c, cv) AS (VALUES
-       |  $cbRows),
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-       |enc AS (SELECT e.vec_id, cb.j, cb.c,
-       |    row_number() OVER (PARTITION BY e.vec_id, cb.j
-       |      ORDER BY list_distance(list_transform(range(1, ${subDim + 1}),
-       |        i -> e.v[cb.j * $subDim + i]), cb.cv), cb.c) AS rk
-       |  FROM e CROSS JOIN cb),
-       |codes AS (SELECT vec_id, j, c FROM enc WHERE rk = 1),
-       |tab AS (SELECT q.query_id, cb.j, cb.c,
-       |    list_dot_product(
-       |      list_transform(range(1, ${subDim + 1}), i -> q.qv[cb.j * $subDim + i] - cb.cv[i]),
-       |      list_transform(range(1, ${subDim + 1}), i -> q.qv[cb.j * $subDim + i] - cb.cv[i])) AS t
-       |  FROM q CROSS JOIN cb),
-       |at AS (SELECT tab.query_id, codes.vec_id, codes.j, tab.t
-       |  FROM codes JOIN tab ON codes.j = tab.j AND codes.c = tab.c),
-       |pv AS (SELECT query_id, vec_id,
-       |    $pivotCols
-       |  FROM at GROUP BY 1, 2),
-       |adc AS (SELECT query_id, vec_id, $orderedSum AS adc_dist FROM pv
-       |  WHERE query_id <> vec_id),
-       |r AS (SELECT query_id, vec_id, adc_dist,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, vec_id) AS rank
-       |  FROM adc)
-       |SELECT query_id, rank, vec_id, round(adc_dist, 4) AS adc_dist
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+    }.toMap
 
-  /** DuckDB replica of the q122 IVF+PQ pipeline: the q37 cell/probe
-    * replay (argmin over centroid literals, lower-cell tie) feeding the
-    * q121 ADC replay (tables via list_dot_product(diff,diff), pivot +
-    * ascending-j parenthesized sum) over probed candidates only.
+  /** The DuckDB oracle SQL of every query built in this JVM, from its
+    * latest build (a trained query's oracle replays what that build
+    * trained). Read it after running the queries.
     */
-  private def q122OracleSql(cent: Seq[Double], cbs: Seq[Seq[Double]]): String = {
-    val m = cbs.length
-    val subDim = 64 / m
-    val ksub = cbs.head.length / subDim
-    val centRows = cent.grouped(64).zipWithIndex.map { case (c, i) =>
-      c.map(d => java.lang.Double.toString(d))
-        .mkString(s"($i, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    val cbRows = cbs.zipWithIndex.flatMap { case (cb, j) =>
-      (0 until ksub).map { c =>
-        cb.slice(c * subDim, (c + 1) * subDim)
-          .map(d => java.lang.Double.toString(d))
-          .mkString(s"($j, $c, CAST([", ", ", "] AS DOUBLE[]))")
-      }
-    }.mkString(",\n  ")
-    val pivotCols = (0 until m)
-      .map(j => s"max(CASE WHEN at.j = $j THEN at.t END) AS t$j").mkString(",\n    ")
-    val orderedSum = (1 until m).foldLeft("t0") { (acc, j) => s"($acc + t$j)" }
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |cent(cell, cc) AS (VALUES
-       |  $centRows),
-       |cb(j, c, cv) AS (VALUES
-       |  $cbRows),
-       |ca AS (SELECT e.vec_id, cent.cell,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_distance(e.v, cent.cc), cent.cell) AS rk
-       |  FROM e CROSS JOIN cent),
-       |cells AS (SELECT vec_id, cell FROM ca WHERE rk = 1),
-       |probes AS (SELECT vec_id AS query_id, cell FROM ca WHERE vec_id < 3 AND rk <= 4),
-       |cand AS (SELECT probes.query_id, cells.vec_id
-       |  FROM probes JOIN cells ON probes.cell = cells.cell
-       |  WHERE probes.query_id <> cells.vec_id),
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-       |enc AS (SELECT e.vec_id, cb.j, cb.c,
-       |    row_number() OVER (PARTITION BY e.vec_id, cb.j
-       |      ORDER BY list_distance(list_transform(range(1, ${subDim + 1}),
-       |        i -> e.v[cb.j * $subDim + i]), cb.cv), cb.c) AS rk
-       |  FROM e CROSS JOIN cb),
-       |codes AS (SELECT vec_id, j, c FROM enc WHERE rk = 1),
-       |tab AS (SELECT q.query_id, cb.j, cb.c,
-       |    list_dot_product(
-       |      list_transform(range(1, ${subDim + 1}), i -> q.qv[cb.j * $subDim + i] - cb.cv[i]),
-       |      list_transform(range(1, ${subDim + 1}), i -> q.qv[cb.j * $subDim + i] - cb.cv[i])) AS t
-       |  FROM q CROSS JOIN cb),
-       |at AS (SELECT cand.query_id, cand.vec_id, codes.j, tab.t
-       |  FROM cand JOIN codes ON cand.vec_id = codes.vec_id
-       |    JOIN tab ON tab.query_id = cand.query_id AND codes.j = tab.j AND codes.c = tab.c),
-       |pv AS (SELECT query_id, vec_id,
-       |    $pivotCols
-       |  FROM at GROUP BY 1, 2),
-       |adc AS (SELECT query_id, vec_id, $orderedSum AS adc_dist FROM pv),
-       |r AS (SELECT query_id, vec_id, adc_dist,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, vec_id) AS rank
-       |  FROM adc)
-       |SELECT query_id, rank, vec_id, round(adc_dist, 4) AS adc_dist
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** DuckDB replica of the q123 RESIDUAL IVF+PQ pipeline: the q122
-    * replay with the centroid subtraction at every site FAISS IVFPQ
-    * specifies — the corpus residual (v[i] - cc[i], plain double
-    * subtraction on both engines), code assignment as argmin over
-    * RESIDUAL subvector slices, and one ADC table per (query, probed
-    * cell) whose diff is (qv - cc_probe) - cv (left-assoc, matching the
-    * driver loop's order of operations bit-for-bit).
-    */
-  private def q123OracleSql(cent: Seq[Double], cbs: Seq[Seq[Double]]): String =
-    residualAdcReplayCtes(cent, cbs,
-      "e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)") +
-      """
-        |SELECT query_id, rank, vec_id, round(adc_dist, 4) AS adc_dist
-        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** DuckDB replica of the q134 PRODUCTION ANN STACK: the q132
-    * captured-rotation CTE builds the rotated vectors, the q123
-    * residual-ADC replay ranks probed candidates over them, the top
-    * `rerank` = 12 feed an exact squared-L2 rerank
-    * (list_dot_product(diff, diff) — bit-identical to the dist2 kernel's
-    * ascending-i accumulation over the SAME rotated doubles), and the
-    * exact top-5 wins.
-    */
-  private def q134OracleSql(rot: Seq[Double], cent: Seq[Double],
-      cbs: Seq[Seq[Double]]): String = {
-    val rcolRows = (0 until 64).map { j =>
-      (0 until 64).map(i => java.lang.Double.toString(rot(i * 64 + j)))
-        .mkString(s"($j, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    val rotatedE =
-      s"""e0 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v0 FROM embeddings),
-         |rcol(j, rv) AS (VALUES
-         |  $rcolRows),
-         |e AS (SELECT e0.vec_id,
-         |    list(list_dot_product(e0.v0, rcol.rv) ORDER BY rcol.j) AS v
-         |  FROM e0 CROSS JOIN rcol GROUP BY e0.vec_id)""".stripMargin
-    residualAdcReplayCtes(cent, cbs, rotatedE) +
-      """,
-        |cand12 AS (SELECT query_id, vec_id FROM r WHERE rank <= 12),
-        |rr2 AS (SELECT c.query_id, c.vec_id,
-        |    list_dot_product(
-        |      list_transform(range(1, 65), i -> e.v[i] - q.qv[i]),
-        |      list_transform(range(1, 65), i -> e.v[i] - q.qv[i])) AS dist2
-        |  FROM cand12 c JOIN e ON c.vec_id = e.vec_id
-        |    JOIN q ON c.query_id = q.query_id),
-        |rk2 AS (SELECT query_id, vec_id, dist2,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY dist2, vec_id) AS rank
-        |  FROM rr2)
-        |SELECT query_id, rank, vec_id, round(dist2, 4) AS dist2
-        |FROM rk2 WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** The shared q123 residual-ADC replay: `eCtes` must define
-    * `e (vec_id, v)` (plain cast vectors for q123, captured-rotation
-    * products for q134); returns the full WITH chain through
-    * `r (query_id, vec_id, adc_dist, rank)` and `q (query_id, qv)` —
-    * callers append the final SELECT (q123) or further rerank CTEs
-    * (q134).
-    */
-  private def residualAdcReplayCtes(cent: Seq[Double], cbs: Seq[Seq[Double]],
-      eCtes: String): String = {
-    val m = cbs.length
-    val subDim = 64 / m
-    val ksub = cbs.head.length / subDim
-    val centRows = cent.grouped(64).zipWithIndex.map { case (c, i) =>
-      c.map(d => java.lang.Double.toString(d))
-        .mkString(s"($i, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    val cbRows = cbs.zipWithIndex.flatMap { case (cb, j) =>
-      (0 until ksub).map { c =>
-        cb.slice(c * subDim, (c + 1) * subDim)
-          .map(d => java.lang.Double.toString(d))
-          .mkString(s"($j, $c, CAST([", ", ", "] AS DOUBLE[]))")
-      }
-    }.mkString(",\n  ")
-    val pivotCols = (0 until m)
-      .map(j => s"max(CASE WHEN at.j = $j THEN at.t END) AS t$j").mkString(",\n    ")
-    val orderedSum = (1 until m).foldLeft("t0") { (acc, j) => s"($acc + t$j)" }
-    s"""WITH $eCtes,
-       |cent(cell, cc) AS (VALUES
-       |  $centRows),
-       |cb(j, c, cv) AS (VALUES
-       |  $cbRows),
-       |ca AS (SELECT e.vec_id, cent.cell,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_distance(e.v, cent.cc), cent.cell) AS rk
-       |  FROM e CROSS JOIN cent),
-       |cells AS (SELECT vec_id, cell FROM ca WHERE rk = 1),
-       |probes AS (SELECT vec_id AS query_id, cell FROM ca WHERE vec_id < 3 AND rk <= 4),
-       |res AS (SELECT e.vec_id, cells.cell,
-       |    list_transform(range(1, 65), i -> e.v[i] - cent.cc[i]) AS r
-       |  FROM e JOIN cells ON e.vec_id = cells.vec_id
-       |    JOIN cent ON cells.cell = cent.cell),
-       |enc AS (SELECT res.vec_id, cb.j, cb.c,
-       |    row_number() OVER (PARTITION BY res.vec_id, cb.j
-       |      ORDER BY list_distance(list_transform(range(1, ${subDim + 1}),
-       |        i -> res.r[cb.j * $subDim + i]), cb.cv), cb.c) AS rk
-       |  FROM res CROSS JOIN cb),
-       |codes AS (SELECT vec_id, j, c FROM enc WHERE rk = 1),
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-       |tab AS (SELECT probes.query_id, probes.cell, cb.j, cb.c,
-       |    list_dot_product(
-       |      list_transform(range(1, ${subDim + 1}),
-       |        i -> (q.qv[cb.j * $subDim + i] - cent.cc[cb.j * $subDim + i]) - cb.cv[i]),
-       |      list_transform(range(1, ${subDim + 1}),
-       |        i -> (q.qv[cb.j * $subDim + i] - cent.cc[cb.j * $subDim + i]) - cb.cv[i])) AS t
-       |  FROM probes JOIN q ON probes.query_id = q.query_id
-       |    JOIN cent ON probes.cell = cent.cell CROSS JOIN cb),
-       |cand AS (SELECT probes.query_id, cells.vec_id, cells.cell
-       |  FROM probes JOIN cells ON probes.cell = cells.cell
-       |  WHERE probes.query_id <> cells.vec_id),
-       |at AS (SELECT cand.query_id, cand.vec_id, codes.j, tab.t
-       |  FROM cand JOIN codes ON cand.vec_id = codes.vec_id
-       |    JOIN tab ON tab.query_id = cand.query_id AND tab.cell = cand.cell
-       |      AND tab.j = codes.j AND tab.c = codes.c),
-       |pv AS (SELECT query_id, vec_id,
-       |    $pivotCols
-       |  FROM at GROUP BY 1, 2),
-       |adc AS (SELECT query_id, vec_id, $orderedSum AS adc_dist FROM pv),
-       |r AS (SELECT query_id, vec_id, adc_dist,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, vec_id) AS rank
-       |  FROM adc)""".stripMargin
-  }
-
-  /** DuckDB replica of the q124 pre-trained-model LM scoring: the
-    * captured bounded model as (gram, prob) VALUES — the string form
-    * carried by [[graft.text.UnigramLm.trainNgramModelHashedCaptured]]
-    * — left-joined onto the q117 trigram stream over the FULL corpus;
-    * grams missing from the model score at the captured unseen floor.
-    * Engine-independent: no JVM hash ever appears; the hashed Spark
-    * join and the string DuckDB join agree wherever the 64-bit gram
-    * hash is injective on the observed grams (the q120 argument).
-    */
-  private def q124OracleSql(model: Seq[(String, Double)], unseen: Double): String =
-    ngramModelOracleSql(3, model, unseen, "n_trigrams")
-
-  /** The captured-model scoring replay at any order: the q117-style
-    * lead() n-gram stream over the FULL corpus, space-joined grams
-    * left-joined against the captured (gram, prob) VALUES, unseen floor
-    * for the rest. Shared by q124 (n=3) and q131 (n=5).
-    */
-  private def ngramModelOracleSql(n: Int, model: Seq[(String, Double)],
-      unseen: Double, nCol: String): String = {
-    val modelRows = model
-      .map { case (g, p) => s"('$g', ${java.lang.Double.toString(p)})" }
-      .mkString(",\n  ")
-    val leads = (2 to n)
-      .map(i => s"    lead(term, ${i - 1}) OVER (PARTITION BY doc_id ORDER BY pos) AS w$i")
-      .mkString(",\n")
-    val ws = (1 to n).map(i => s"w$i").mkString(", ")
-    val gram = (1 to n).map(i => s"g.w$i").mkString(" || ' ' || ")
-    s"""WITH raw AS (SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS a FROM documents),
-       |tok AS (SELECT doc_id, unnest(a) AS term, generate_subscripts(a, 1) AS pos FROM raw),
-       |tk AS (SELECT doc_id, term, pos FROM tok WHERE term <> ''),
-       |tg AS (SELECT doc_id, term AS w1,
-       |$leads
-       |  FROM tk),
-       |g AS (SELECT doc_id, $ws FROM tg WHERE w$n IS NOT NULL),
-       |model(gram, prob) AS (VALUES
-       |  $modelRows),
-       |sc AS (SELECT g.doc_id, coalesce(m.prob, ${java.lang.Double.toString(unseen)}) AS prob
-       |  FROM g LEFT JOIN model m ON ($gram) = m.gram)
-       |SELECT doc_id, CAST(count(*) AS BIGINT) AS $nCol,
-       |  round(sum(-ln(prob)) / count(*), 6) AS xent
-       |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB replica of the q129 pHash pipeline: pixel synthesis from
-    * the shared fixture formulas (ImageHash.phashFixturePixel), box
-    * resize to 32x32 via grouped integer division, the TWO separable
-    * DCT stages against the fixed-point cosine table literals
-    * (ImageHash.DctTable — the constants are the algorithm), the
-    * division-free median threshold (2c > sorted31 + sorted32), and an
-    * all-pairs bit-set Hamming scan — nothing in common with the Spark
-    * plan (packed longs, blocked LSH join) except the answer.
-    */
-  private def q129OracleSql: String = {
-    val tRows = (0 until 8).flatMap { k =>
-      (0 until 32).map(n => s"($k, $n, ${graft.multimodal.ImageHash.DctTable(k * 32 + n)})")
-    }.mkString(",\n  ")
-    s"""WITH x36 AS (SELECT unnest(range(0, 36)) AS x),
-       |y32 AS (SELECT unnest(range(0, 32)) AS y),
-       |x54 AS (SELECT unnest(range(0, 54)) AS x),
-       |y48 AS (SELECT unnest(range(0, 48)) AS y),
-       |ids AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS r FROM documents WHERE doc_id < 3000),
-       |b01 AS (SELECT i.doc_id, i.g, x36.x, y32.y, x36.x AS bx, y32.y AS by, 36 AS w, 32 AS h
-       |    FROM ids i, x36, y32 WHERE i.r = 0
-       |  UNION ALL
-       |  SELECT i.doc_id, i.g, x54.x, y48.y,
-       |      (x54.x * 36) // 54 AS bx, (y48.y * 32) // 48 AS by, 54 AS w, 48 AS h
-       |    FROM ids i, x54, y48 WHERE i.r = 1),
-       |vb AS (SELECT doc_id, x, y, w, h, 40 + (vv * vv) % 151 AS v
-       |  FROM (SELECT *, g * 73 + (bx // 9) * 41 + (by // 9) * 59 AS vv FROM b01)),
-       |v2 AS (SELECT doc_id, x, y, 36 AS w, 32 AS h,
-       |    40 + (vv * vv + 13) % 151 + (x * 13 + y * 5 + 3 * g) % 7 AS v
-       |  FROM (SELECT i.doc_id, i.g, x36.x, y32.y,
-       |          i.g * 97 + (x36.x // 9) * 67 + (y32.y // 9) * 31 AS vv
-       |        FROM ids i, x36, y32 WHERE i.r = 2)),
-       |px AS (SELECT * FROM vb UNION ALL SELECT * FROM v2),
-       |rz AS (SELECT doc_id, (x * 32) // w AS gx, (y * 32) // h AS gy,
-       |    CAST(sum(v) AS BIGINT) // CAST(count(*) AS BIGINT) AS v
-       |  FROM px GROUP BY doc_id, (x * 32) // w, (y * 32) // h),
-       |t(k, n, t) AS (VALUES
-       |  $tRows),
-       |rr AS (SELECT rz.doc_id, rz.gy, t.k AS u, CAST(sum(rz.v * t.t) AS BIGINT) AS rv
-       |  FROM rz JOIN t ON t.n = rz.gx GROUP BY rz.doc_id, rz.gy, t.k),
-       |cc AS (SELECT rr.doc_id, t.k AS vf, rr.u, CAST(sum(rr.rv * t.t) AS BIGINT) AS c
-       |  FROM rr JOIN t ON t.n = rr.gy GROUP BY rr.doc_id, t.k, rr.u),
-       |m AS (SELECT doc_id, c, row_number() OVER (PARTITION BY doc_id ORDER BY c) AS rn FROM cc),
-       |med AS (SELECT doc_id, sum(CASE WHEN rn IN (32, 33) THEN c END) AS med2
-       |  FROM m GROUP BY doc_id),
-       |bits AS (SELECT cc.doc_id, cc.vf * 8 + cc.u AS bit
-       |  FROM cc JOIN med ON cc.doc_id = med.doc_id WHERE 2 * cc.c > med.med2),
-       |ph AS (SELECT i.doc_id,
-       |    list_sort(list(b.bit) FILTER (WHERE b.bit IS NOT NULL)) AS bits
-       |  FROM ids i LEFT JOIN bits b ON i.doc_id = b.doc_id GROUP BY i.doc_id),
-       |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(coalesce(len(a.bits), 0) + coalesce(len(b.bits), 0)
-       |      - 2 * coalesce(len(list_intersect(a.bits, b.bits)), 0) AS INTEGER) AS hamming
-       |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, hamming FROM pr WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** The capstone oracle's shared stage chains (q116/q126): `scoring`
-    * plugs in between the dedup CTE `dd (doc_id, lang, t2)` and the
-    * bucket/mix suffix, and must define `x (doc_id, n_tokens, xent)`.
-    */
-  private def capstoneOracleSql(scoring: String): String = {
-    val strip = (x: String) =>
-      "regexp_replace(regexp_replace(" + x +
-        ", '^[ \\t\\x0B\\f\\r]+', ''), '[ \\t\\x0B\\f\\r]+$', '')"
-    val fp = (x: String) =>
-      "CAST(concat('0x', substr(md5(" + x + "), 1, 15)) AS BIGINT)"
-    val fold = (x: String) =>
-      "translate(" + x + ", 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')"
-    "WITH d AS (SELECT doc_id, lang, 'dom' || (doc_id % 7) AS domain,\n" +
-      "    'Welcome to the portal navigation for dom' || (doc_id % 7) || ' today.' || chr(10) ||\n" +
-      "    CASE WHEN doc_id % 4 = 3\n" +
-      s"      THEN (CASE WHEN ((doc_id - 3) // 4) % 2 = 0 THEN '$NfcComposedPrefix' ELSE '$NfcDecomposedPrefix' END) ||\n" +
-      "        ['template body alpha carries enough words to pass.',\n" +
-      "         'template body bravo carries enough words to pass.',\n" +
-      "         'template body charlie carries enough words to pass.',\n" +
-      "         'template body delta carries enough words to pass.',\n" +
-      "         'template body echo carries enough words to pass.'][CAST(((doc_id - 3) // 4) % 5 + 1 AS INT)]\n" +
-      "      ELSE 'Body ' || text || ' tail words end here.' END || chr(10) ||\n" +
-      "    'No terminal punctuation on this line at all' || chr(10) ||\n" +
-      "    CASE WHEN doc_id % 11 = 0 THEN 'This sentence mentions badword99 unfortunately today.'\n" +
-      "         ELSE 'This sentence mentions nothing objectionable at all.' END || chr(10) ||\n" +
-      "    CASE WHEN doc_id % 13 = 0 THEN 'Lorem Ipsum dolor sit amet consectetur adipiscing elit.'\n" +
-      "         ELSE 'All rights reserved by the dom' || (doc_id % 7) || ' press office.' END AS page\n" +
-      "  FROM documents WHERE text IS NOT NULL),\n" +
-      "tl AS (SELECT doc_id, lang, domain, page,\n" +
-      "    list_transform(string_split(page, chr(10)), l -> " + strip("l") + ") AS st FROM d),\n" +
-      "kp AS (SELECT doc_id, lang, domain, page,\n" +
-      "    list_filter(st, l ->\n" +
-      "      regexp_matches(l, '[.?!\"]$')\n" +
-      "      AND len(list_filter(string_split_regex(l, '[ \\t\\x0B\\f\\r]+'), x -> x <> '')) >= 5\n" +
-      "      AND NOT contains(" + fold("l") + ", 'javascript')) AS kept\n" +
-      "  FROM tl),\n" +
-      "c4 AS (SELECT doc_id, lang, domain, array_to_string(kept, chr(10)) AS t1\n" +
-      "  FROM kp\n" +
-      "  WHERE NOT contains(" + fold("page") + ", 'lorem ipsum')\n" +
-      "    AND NOT contains(page, '{') AND len(kept) >= 3),\n" +
-      "votes AS (SELECT DISTINCT domain, doc_id, " + fp("u.sl") + " AS f\n" +
-      "  FROM (SELECT doc_id, domain, list_transform(string_split(t1, chr(10)), l -> " +
-      strip("l") + ") AS sls FROM c4), unnest(sls) AS u(sl)\n" +
-      "  WHERE u.sl <> ''),\n" +
-      "freq AS (SELECT domain, f, count(*) AS df FROM votes GROUP BY 1, 2),\n" +
-      "nd AS (SELECT domain, count(*) AS n FROM c4 GROUP BY 1),\n" +
-      "boiler AS (SELECT freq.domain, list(freq.f) AS bf\n" +
-      "  FROM freq JOIN nd ON freq.domain = nd.domain\n" +
-      "  WHERE df >= 2 AND CAST(df AS DOUBLE) >= 0.5 * n\n" +
-      "  GROUP BY freq.domain),\n" +
-      "res AS (SELECT c4.doc_id, c4.lang,\n" +
-      "    array_to_string(list_filter(string_split(c4.t1, chr(10)), l ->\n" +
-      "      " + strip("l") + " = ''\n" +
-      "      OR NOT list_contains(coalesce(b.bf, []), " + fp(strip("l")) + ")), chr(10)) AS t2\n" +
-      "  FROM c4 LEFT JOIN boiler b ON c4.domain = b.domain),\n" +
-      "blk AS (SELECT DISTINCT r.doc_id\n" +
-      "  FROM res r, unnest(regexp_extract_all(" + fold("r.t2") + ", '[a-z0-9]+')) AS t(w)\n" +
-      "  WHERE t.w = 'badword99'),\n" +
-      "g AS (SELECT * FROM res WHERE doc_id NOT IN (SELECT doc_id FROM blk)),\n" +
-      "f2 AS (SELECT doc_id, lang, t2,\n" +
-      "    md5(array_to_string(" + unicodeToksSql("nfc_normalize(t2)") + ", '')) AS fp2 FROM g),\n" +
-      "k2 AS (SELECT doc_id, lang, t2, row_number() OVER (PARTITION BY fp2 ORDER BY doc_id) AS rn FROM f2),\n" +
-      "dd AS (SELECT doc_id, lang, t2 FROM k2 WHERE rn = 1),\n" +
-      scoring +
-      "sx AS (SELECT x.doc_id, dd.lang, x.n_tokens, x.xent FROM x JOIN dd USING (doc_id)),\n" +
-      "b2 AS (SELECT sx.*, ntile(3) OVER (PARTITION BY lang ORDER BY xent, doc_id) AS bkt FROM sx),\n" +
-      "hm AS (SELECT * FROM b2 WHERE bkt <= 2),\n" +
-      "cnt AS (SELECT lang, count(*) AS c FROM hm GROUP BY lang),\n" +
-      "w AS (SELECT lang, c, CAST(floor(sqrt(CAST(c AS DOUBLE)) * 1048576) AS BIGINT) AS wt FROM cnt),\n" +
-      "tw AS (SELECT sum(wt) AS tw FROM w),\n" +
-      "q0 AS (SELECT lang, c, (60 * wt) // tw AS base, (60 * wt) % tw AS rem FROM w, tw),\n" +
-      "deficit AS (SELECT 60 - sum(base) AS dfc FROM q0),\n" +
-      "q AS (SELECT lang,\n" +
-      "    least(c, base + CASE WHEN row_number() OVER (ORDER BY rem DESC, lang) <= dfc\n" +
-      "                         THEN 1 ELSE 0 END) AS quota\n" +
-      "  FROM q0, deficit),\n" +
-      "r2 AS (SELECT hm.*, row_number() OVER (PARTITION BY lang\n" +
-      "    ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT),\n" +
-      "      doc_id) AS rnk FROM hm)\n" +
-      "SELECT r2.doc_id, r2.lang, r2.n_tokens, r2.xent,\n" +
-      "  CASE r2.bkt WHEN 1 THEN 'head' ELSE 'middle' END AS ppl_bucket\n" +
-      "FROM r2 JOIN q USING (lang) WHERE r2.rnk <= q.quota\n" +
-      "ORDER BY r2.doc_id"
-  }
-
-  /** q116's LM stage: the corpus-trained add-one unigram replay over
-    * the deduped text.
-    */
-  private def CapstoneUnigramScoringSql: String =
-    "tok AS (SELECT doc_id, t.term FROM dd,\n" +
-      "    unnest(string_split_regex(lower(t2), '[^a-z0-9]+')) AS t(term)\n" +
-      "  WHERE t.term <> ''),\n" +
-      "tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),\n" +
-      "tot AS (SELECT CAST(sum(tf) AS BIGINT) AS t, count(DISTINCT term) AS v FROM tf),\n" +
-      "p AS (SELECT term,\n" +
-      "    CAST(sum(tf) + 1 AS DOUBLE) / CAST((SELECT t + v FROM tot) AS DOUBLE) AS prob\n" +
-      "  FROM tf GROUP BY term),\n" +
-      "x AS (SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,\n" +
-      "    round(sum(tf.tf * -ln(p.prob)) / sum(tf.tf), 6) AS xent\n" +
-      "  FROM tf JOIN p USING (term) GROUP BY tf.doc_id),\n"
-
-  /** q126's LM stage: the q124 captured-model trigram replay over the
-    * deduped text (model grams as VALUES, unseen floor for the rest).
-    */
-  private def capstoneModelScoringSql(model: Seq[(String, Double)], unseen: Double): String = {
-    val modelRows = model
-      .map { case (g, p) => s"('$g', ${java.lang.Double.toString(p)})" }
-      .mkString(",\n  ")
-    "raw2 AS (SELECT doc_id, string_split_regex(lower(t2), '[^a-z0-9]+') AS a FROM dd),\n" +
-      "tok2 AS (SELECT doc_id, unnest(a) AS term, generate_subscripts(a, 1) AS pos FROM raw2),\n" +
-      "tk2 AS (SELECT doc_id, term, pos FROM tok2 WHERE term <> ''),\n" +
-      "tg2 AS (SELECT doc_id, term AS w1,\n" +
-      "    lead(term) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,\n" +
-      "    lead(term, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3\n" +
-      "  FROM tk2),\n" +
-      "g2 AS (SELECT doc_id, w1, w2, w3 FROM tg2 WHERE w3 IS NOT NULL),\n" +
-      "model(gram, prob) AS (VALUES\n  " + modelRows + "),\n" +
-      "sc AS (SELECT g2.doc_id, coalesce(m.prob, " + java.lang.Double.toString(unseen) + ") AS prob\n" +
-      "  FROM g2 LEFT JOIN model m ON (g2.w1 || ' ' || g2.w2 || ' ' || g2.w3) = m.gram),\n" +
-      "x AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,\n" +
-      "    round(sum(-ln(prob)) / count(*), 6) AS xent\n" +
-      "  FROM sc GROUP BY doc_id),\n"
-  }
-
-  /** DuckDB replica of the q71 SemDeDup pipeline with the trained
-    * centroids as literals: nearest-cell assignment (list_distance ties to
-    * the lower cell id, matching the strict-< argmin), pairs share a cell,
-    * exact cosine threshold — the same dot/sqrt form as the q35 oracle.
-    */
-  private def q71OracleSql(cent: Seq[Double]): String = {
-    val centRows = cent.grouped(64).zipWithIndex.map { case (c, i) =>
-      c.map(d => java.lang.Double.toString(d))
-        .mkString(s"($i, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |cent(cell, c) AS (VALUES
-       |  $centRows),
-       |d AS (SELECT e.vec_id, e.v, cent.cell,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_distance(e.v, cent.c), cent.cell) AS rk
-       |  FROM e CROSS JOIN cent),
-       |a AS (SELECT vec_id, v, CAST(cell AS BIGINT) AS cell FROM d WHERE rk = 1)
-       |SELECT x.cell, x.vec_id AS id_a, y.vec_id AS id_b,
-       |  round(list_dot_product(x.v, y.v) /
-       |    (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 4) AS cosine
-       |FROM a x JOIN a y ON x.cell = y.cell AND x.vec_id < y.vec_id
-       |WHERE list_dot_product(x.v, y.v) /
-       |  (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.3
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** DuckDB replica of the IVF pipeline with the trained centroids as
-    * literals: every vector ranks the 16 cells by euclidean distance
-    * (`list_distance`; ties to the lower cell id, matching
-    * `TextAlgo.nearestCentroids`'s strict-< scan), the corpus stores each
-    * vector in its 2 nearest cells (corpusAssign), queries probe their 4
-    * nearest (nProbe), candidates share a cell, exact cosine re-rank.
-    */
-  private def q37OracleSql(cent: Seq[Double]): String = {
-    val centRows = cent.grouped(64).zipWithIndex.map { case (c, i) =>
-      c.map(d => java.lang.Double.toString(d))
-        .mkString(s"($i, CAST([", ", ", "] AS DOUBLE[]))")
-    }.mkString(",\n  ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |cent(cell, c) AS (VALUES
-       |  $centRows),
-       |d AS (SELECT e.vec_id, e.v, cent.cell,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_distance(e.v, cent.c), cent.cell) AS rk
-       |  FROM e CROSS JOIN cent),
-       |corpus AS (SELECT vec_id AS neighbor_id, v, cell FROM d WHERE rk <= 2),
-       |q AS (SELECT vec_id AS query_id, v, cell FROM d WHERE vec_id < 3 AND rk <= 4),
-       |cand AS (SELECT DISTINCT q.query_id, corpus.neighbor_id
-       |  FROM q JOIN corpus ON q.cell = corpus.cell AND q.query_id <> corpus.neighbor_id),
-       |scored AS (SELECT cand.query_id, cand.neighbor_id,
-       |    list_dot_product(cv.v, qv.v) /
-       |      (sqrt(list_dot_product(cv.v, cv.v)) * sqrt(list_dot_product(qv.v, qv.v))) AS cos
-       |  FROM cand JOIN e cv ON cand.neighbor_id = cv.vec_id
-       |            JOIN e qv ON cand.query_id = qv.vec_id),
-       |r AS (SELECT query_id, neighbor_id, cos,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cosine
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    // q27: 4-bit embedded planes (fixed — a 3-query k-NN probe, no
-    // occupancy concern); multi-probe = own bucket + each sign bit
-    // flipped once, exact re-rank within candidates
-    "q27_knn_lsh" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |b AS (SELECT vec_id, v,
-         |    (CASE WHEN list_dot_product(v, ${q39PlaneLits(0)}) >= 0 THEN 1 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${q39PlaneLits(1)}) >= 0 THEN 2 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${q39PlaneLits(2)}) >= 0 THEN 4 ELSE 0 END)
-         |  + (CASE WHEN list_dot_product(v, ${q39PlaneLits(3)}) >= 0 THEN 8 ELSE 0 END) AS bucket
-         |  FROM e),
-         |q AS (SELECT vec_id AS query_id, bucket AS b0 FROM b WHERE vec_id < 3),
-         |probes AS (SELECT query_id,
-         |  unnest([b0, xor(b0, 1), xor(b0, 2), xor(b0, 4), xor(b0, 8)]) AS bucket FROM q),
-         |cand AS (SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
-         |  FROM probes p JOIN b c ON p.bucket = c.bucket AND p.query_id <> c.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  list_dot_product(cv.v, qv.v) /
-         |    (sqrt(list_dot_product(cv.v, cv.v)) * sqrt(list_dot_product(qv.v, qv.v))) AS cos
-         |  FROM cand JOIN b cv ON cand.neighbor_id = cv.vec_id
-         |            JOIN b qv ON cand.query_id = qv.vec_id),
-         |r AS (SELECT query_id, neighbor_id, cos,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cosine
-         |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_revenue" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-        |FROM lineitem
-        |WHERE CAST(l_shipdate AS DATE) BETWEEN DATE '1995-01-01' AND DATE '1996-12-31'
-        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q03_join_nations" ->
-      """SELECT r_name, n_name, count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q04_conditional_counts" ->
-      """SELECT count(*) AS n_total,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p,
-        |  CAST(sum(CASE WHEN o_totalprice > 100000 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-        |  CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' AND o_totalprice > 100000 THEN 1 ELSE 0 END) AS BIGINT) AS n_urgent_high
-        |FROM orders""".stripMargin,
-    "q05_distinct_flags" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY l_returnflag, l_linestatus",
-    "q06_union_parts" ->
-      """WITH u AS (
-        |  SELECT *, 'small' AS size_class FROM part WHERE p_size < 10
-        |  UNION ALL
-        |  SELECT *, 'large' AS size_class FROM part WHERE p_size >= 40)
-        |SELECT size_class, p_brand, count(*) AS n_parts, round(avg(p_retailprice), 4) AS avg_price
-        |FROM u GROUP BY size_class, p_brand ORDER BY size_class, p_brand""".stripMargin,
-    "q07_ntile_orders" ->
-      """WITH b AS (SELECT o_totalprice, ntile(5) OVER (ORDER BY o_totalprice, o_orderkey) AS bucket FROM orders)
-        |SELECT bucket, count(*) AS n, round(min(o_totalprice), 2) AS lo, round(max(o_totalprice), 2) AS hi
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q08_topk_per_segment" ->
-      """WITH r AS (SELECT c_mktsegment, c_custkey, c_acctbal,
-        |  row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey) AS rank
-        |  FROM customer)
-        |SELECT c_mktsegment, rank, c_custkey, round(c_acctbal, 2) AS acctbal
-        |FROM r WHERE rank <= 3 ORDER BY c_mktsegment, rank""".stripMargin,
-    "q09_zscore_acctbal" ->
-      """SELECT c_custkey, round((c_acctbal - m) / sd, 4) AS z
-        |FROM customer, (SELECT avg(c_acctbal) AS m, stddev_samp(c_acctbal) AS sd FROM customer)
-        |ORDER BY c_custkey""".stripMargin,
-    "q10_cut_quantity" ->
-      """SELECT CASE WHEN l_quantity > 0 AND l_quantity <= 10 THEN 'xs'
-        |            WHEN l_quantity > 10 AND l_quantity <= 25 THEN 's'
-        |            WHEN l_quantity > 25 AND l_quantity <= 40 THEN 'm'
-        |            WHEN l_quantity > 40 AND l_quantity <= 51 THEN 'l' END AS qty_bin,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY qty_bin""".stripMargin,
-    "q11_onehot_priority" ->
-      """SELECT o_orderstatus,
-        |  CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS p_urgent,
-        |  CAST(sum(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS p_high,
-        |  CAST(sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS p_medium,
-        |  CAST(sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS p_notspec,
-        |  CAST(sum(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS p_low
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q12_replace_region" ->
-      """SELECT CASE CAST(n_regionkey AS VARCHAR)
-        |         WHEN '0' THEN 'AFR' WHEN '1' THEN 'AME' WHEN '2' THEN 'ASI'
-        |         WHEN '3' THEN 'EUR' WHEN '4' THEN 'MEA'
-        |         ELSE CAST(n_regionkey AS VARCHAR) END AS region_code,
-        |  count(*) AS n_nations
-        |FROM nation GROUP BY 1 ORDER BY region_code""".stripMargin,
-    "q13_customers_no_open_orders" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderstatus = 'P' AND o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q14_suppliers_recent" ->
-      """SELECT s_suppkey, s_name FROM supplier
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE CAST(l_shipdate AS DATE) >= DATE '1998-01-01' AND l_suppkey = s_suppkey)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q15_events_hourly" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
-        |  count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "q16_events_props" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-        |  round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 4) AS avg_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q17_demv_weights" ->
-      """WITH t AS (
-        |  SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS s1,
-        |         CASE WHEN c_acctbal >= 0 THEN 1 ELSE 0 END AS s2,
-        |         o_orderstatus AS y
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |cells AS (SELECT s1, s2, y, count(*) AS n FROM t GROUP BY 1, 2, 3),
-        |tot AS (SELECT count(*) AS nt FROM t),
-        |sm AS (SELECT s1, s2, count(*) AS n_combo FROM t GROUP BY 1, 2),
-        |lm AS (SELECT y, count(*) AS n_label FROM t GROUP BY 1)
-        |SELECT c.s1, c.s2, c.y, c.n,
-        |  round((sm.n_combo * 1.0 / tot.nt) * (lm.n_label * 1.0 / tot.nt), 8) AS w_exp,
-        |  round(c.n * 1.0 / tot.nt, 8) AS w_obs,
-        |  round(((sm.n_combo * 1.0 / tot.nt) * (lm.n_label * 1.0 / tot.nt)) / (c.n * 1.0 / tot.nt), 4) AS disparity
-        |FROM cells c, tot JOIN sm ON c.s1 = sm.s1 AND c.s2 = sm.s2 JOIN lm ON c.y = lm.y
-        |ORDER BY c.s1, c.s2, c.y""".stripMargin,
-    // q18 oracle: replay BalanceMath.balanceCell in SQL. With roundLevel=1,
-    // pyRound(raw,1)==1.0 is EXACTLY the open double interval (0.95, 1.05):
-    // neither boundary is representable and no double lies between the
-    // boundary double and its decimal value, so the half-even tie rule never
-    // fires. The +-1 walk's stopping size is the first series point past g0
-    // (up) / below g0 (down) where the raw ratio enters the stop predicate;
-    // overshoot -> parity of the remaining budget decides the oscillation.
-    "q18_demv_balance" ->
-      """WITH t AS (
-        |  SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS s1,
-        |         CASE WHEN c_acctbal >= 0 THEN 1 ELSE 0 END AS s2,
-        |         o_orderstatus AS y
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |cells AS (SELECT s1, s2, y, count(*) AS g0 FROM t GROUP BY 1, 2, 3),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS nt FROM t),
-        |sm AS (SELECT s1, s2, count(*) AS n_combo FROM t GROUP BY 1, 2),
-        |lm AS (SELECT y, count(*) AS n_label FROM t GROUP BY 1),
-        |base AS (
-        |  SELECT c.s1, c.s2, c.y, c.g0, tot.nt,
-        |    (CAST(sm.n_combo AS DOUBLE) / tot.nt) * (CAST(lm.n_label AS DOUBLE) / tot.nt) AS wexp
-        |  FROM cells c JOIN sm ON c.s1 = sm.s1 AND c.s2 = sm.s2 JOIN lm ON c.y = lm.y CROSS JOIN tot),
-        |series AS (SELECT s FROM generate_series(1, 2000000) gs(s)),
-        |walk AS (
-        |  SELECT b.s1, b.s2, b.y, b.g0, series.s,
-        |    b.wexp / (CAST(series.s AS DOUBLE) / b.nt) AS raw
-        |  FROM base b JOIN series ON series.s <= b.g0 + 10000),
-        |up_t AS (SELECT s1, s2, y, min(s) AS t FROM walk
-        |         WHERE s > g0 AND raw < CAST(1.05 AS DOUBLE) GROUP BY 1, 2, 3),
-        |dn_t AS (SELECT s1, s2, y, max(s) AS t FROM walk
-        |         WHERE s < g0 AND raw > CAST(0.95 AS DOUBLE) GROUP BY 1, 2, 3),
-        |fin AS (
-        |  SELECT b.s1, b.s2, b.y,
-        |    CASE
-        |      WHEN b.wexp / (CAST(b.g0 AS DOUBLE) / b.nt) > CAST(0.95 AS DOUBLE)
-        |       AND b.wexp / (CAST(b.g0 AS DOUBLE) / b.nt) < CAST(1.05 AS DOUBLE) THEN b.g0
-        |      WHEN b.wexp / (CAST(b.g0 AS DOUBLE) / b.nt) > 1 THEN
-        |        CASE
-        |          WHEN u.t IS NULL THEN b.g0 + 10000
-        |          WHEN b.wexp / (CAST(u.t AS DOUBLE) / b.nt) > CAST(0.95 AS DOUBLE) THEN u.t
-        |          WHEN (10000 - (u.t - b.g0)) % 2 = 1 THEN u.t - 1
-        |          ELSE u.t
-        |        END
-        |      ELSE
-        |        CASE
-        |          WHEN d.t IS NULL THEN (CASE WHEN 10000 <= b.g0 - 1 THEN b.g0 - 10000 ELSE 0 END)
-        |          WHEN b.g0 - d.t > 10000 THEN b.g0 - 10000
-        |          WHEN b.wexp / (CAST(d.t AS DOUBLE) / b.nt) < CAST(1.05 AS DOUBLE) THEN d.t
-        |          WHEN (10000 - (b.g0 - d.t)) % 2 = 1 THEN d.t + 1
-        |          ELSE d.t
-        |        END
-        |    END AS n_after
-        |  FROM base b LEFT JOIN up_t u ON b.s1 = u.s1 AND b.s2 = u.s2 AND b.y = u.y
-        |              LEFT JOIN dn_t d ON b.s1 = d.s1 AND b.s2 = d.s2 AND b.y = d.y)
-        |SELECT s1, s2, y, CAST(n_after AS BIGINT) AS n_after
-        |FROM fin WHERE n_after > 0 ORDER BY s1, s2, y""".stripMargin,
-    "q19_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint,
-        |  count(*) AS n_docs, min(doc_id) AS keep_id
-        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-    "q20_text_stats" ->
-      """SELECT doc_id,
-        |  len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) AS n_tokens,
-        |  length(text) AS n_chars_computed,
-        |  round(CASE WHEN length(text) = 0 THEN 0
-        |    ELSE (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) * 1.0 / length(text) END, 6) AS punct_ratio,
-        |  round(CASE WHEN len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) = 0 THEN 0
-        |    ELSE len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'),
-        |      t -> t IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'))) * 1.0
-        |      / len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) END, 6) AS stopword_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q21_lang_confusion" ->
-      """WITH g AS (SELECT lang,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('the','and','of','to','is','you','that','it'))) AS en,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('der','die','das','und','ist','nicht','ein','ich'))) AS de,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('le','la','les','et','est','vous','que','pas'))) AS fr,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('el','los','las','es','y','que','por','una'))) AS es
-        |  FROM documents),
-        |c AS (SELECT lang, CASE WHEN greatest(en, de, fr, es) = 0 THEN 'und'
-        |  WHEN en = greatest(en, de, fr, es) THEN 'en'
-        |  WHEN de = greatest(en, de, fr, es) THEN 'de'
-        |  WHEN fr = greatest(en, de, fr, es) THEN 'fr'
-        |  ELSE 'es' END AS guess FROM g)
-        |SELECT lang, guess, count(*) AS n FROM c GROUP BY lang, guess ORDER BY lang, guess""".stripMargin,
-    "q22_quality_scores" ->
-      """WITH s AS (SELECT source,
-        |  len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) AS n_tok,
-        |  CASE WHEN length(text) = 0 THEN 0
-        |    ELSE (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) * 1.0 / length(text) END AS punct,
-        |  CASE WHEN len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) = 0 THEN 0
-        |    ELSE len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'),
-        |      t -> t IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'))) * 1.0
-        |      / len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) END AS stop_r
-        |  FROM documents)
-        |SELECT source,
-        |  round(CAST((CASE WHEN n_tok BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END)
-        |    + (CASE WHEN punct < 0.2 THEN 0.3 ELSE 0.0 END)
-        |    + (CASE WHEN stop_r > 0.01 THEN 0.3 ELSE 0.0 END) AS DOUBLE), 2) AS quality,
-        |  count(*) AS n
-        |FROM s GROUP BY source, quality ORDER BY source, quality""".stripMargin,
-    "q25_embedding_norms" ->
-      """SELECT vec_id, label,
-        |  round(sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS l2_norm
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q28_cube_marginals" ->
-      """SELECT s1, s2, count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM (
-        |  SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS s1,
-        |         CASE WHEN c_acctbal >= 0 THEN 1 ELSE 0 END AS s2,
-        |         o_totalprice
-        |  FROM orders JOIN customer ON o_custkey = c_custkey)
-        |GROUP BY CUBE (s1, s2)
-        |ORDER BY s1 NULLS FIRST, s2 NULLS FIRST""".stripMargin,
-    "q29_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |s AS (SELECT user_id,
-        |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM g)
-        |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions, count(*) AS n_events
-        |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q30_bpe_tokens" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[!-/:-@\[-`{-~]'))) AS BIGINT) AS total_bpe_tokens
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q35_cosine_neardup_exact" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_dot_product(a.v, b.v) /
-        |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cosine
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_dot_product(a.v, b.v) /
-        |  (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q36_corpus_clean" ->
-      """WITH f AS (SELECT source, doc_id, lang, text,
-        |  len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) AS n_tok,
-        |  CASE WHEN length(text) = 0 THEN 0
-        |    ELSE (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) * 1.0 / length(text) END AS punct,
-        |  CASE WHEN len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) = 0 THEN 0
-        |    ELSE len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'),
-        |      t -> t IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'))) * 1.0
-        |      / len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) END AS stop_r,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('the','and','of','to','is','you','that','it'))) AS en,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('der','die','das','und','ist','nicht','ein','ich'))) AS de,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('le','la','les','et','est','vous','que','pas'))) AS fr,
-        |  len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'), t -> t IN ('el','los','las','es','y','que','por','una'))) AS es
-        |  FROM documents),
-        |scored AS (SELECT *,
-        |  round(CAST((CASE WHEN n_tok BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END)
-        |    + (CASE WHEN punct < 0.2 THEN 0.3 ELSE 0.0 END)
-        |    + (CASE WHEN stop_r > 0.01 THEN 0.3 ELSE 0.0 END) AS DOUBLE), 2) AS quality,
-        |  CASE WHEN greatest(en, de, fr, es) = 0 THEN 'und'
-        |    WHEN en = greatest(en, de, fr, es) THEN 'en'
-        |    WHEN de = greatest(en, de, fr, es) THEN 'de'
-        |    WHEN fr = greatest(en, de, fr, es) THEN 'fr'
-        |    ELSE 'es' END AS guess
-        |  FROM f),
-        |filt AS (SELECT * FROM scored WHERE quality >= 0.7 AND guess = lang),
-        |keep AS (SELECT *, row_number() OVER (
-        |    PARTITION BY md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))
-        |    ORDER BY doc_id) AS rn
-        |  FROM filt)
-        |SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS total_tokens
-        |FROM keep WHERE rn = 1 GROUP BY source ORDER BY source""".stripMargin,
-    "q34_avg_odds" ->
-      """WITH t AS (
-        |  SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS u,
-        |         o_orderstatus AS yt,
-        |         CASE WHEN o_totalprice > 100000 THEN 'F' ELSE 'O' END AS yp
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |cls AS (SELECT DISTINCT yt AS c FROM t UNION SELECT DISTINCT yp AS c FROM t),
-        |r AS (SELECT c, u,
-        |  CAST(sum(CASE WHEN yt = c AND yp = c THEN 1 ELSE 0 END) AS DOUBLE) AS tp,
-        |  CAST(sum(CASE WHEN yt = c AND yp <> c THEN 1 ELSE 0 END) AS DOUBLE) AS fn,
-        |  CAST(sum(CASE WHEN yt <> c AND yp = c THEN 1 ELSE 0 END) AS DOUBLE) AS fp,
-        |  CAST(sum(CASE WHEN yt <> c AND yp <> c THEN 1 ELSE 0 END) AS DOUBLE) AS tn
-        |  FROM t CROSS JOIN cls GROUP BY c, u)
-        |SELECT ru.c AS class,
-        |  round((ru.fp / (ru.fp + ru.tn) - rp.fp / (rp.fp + rp.tn))
-        |        + (ru.tp / (ru.tp + ru.fn) - rp.tp / (rp.tp + rp.fn)) / 2, 6) AS aod
-        |FROM r ru JOIN r rp ON ru.c = rp.c AND ru.u = 1 AND rp.u = 0
-        |ORDER BY class""".stripMargin,
-    // q31 oracle: PostProcess.adjust transports every (group, class) cell to
-    // its largest-remainder quota of the overall class distribution, so the
-    // final counts ARE the quotas — pure arithmetic on (group, class) counts.
-    // Float op order matches the Scala (classShare = n_class/total first,
-    // then * gSize); rank ties break on the class string, as in adjust().
-    "q31_postprocess_balance" ->
-      """WITH t AS (
-        |  SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS g,
-        |         CASE WHEN o_totalprice > 100000 THEN 1 ELSE 0 END AS pred
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |cells AS (SELECT g, pred, count(*) AS n FROM t GROUP BY 1, 2),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS nt FROM t),
-        |cls AS (SELECT pred, CAST(sum(n) AS DOUBLE) AS n_class FROM cells GROUP BY 1),
-        |grp AS (SELECT g, sum(n) AS g_size FROM cells GROUP BY 1),
-        |raw AS (SELECT grp.g, cls.pred, grp.g_size,
-        |          (cls.n_class / tot.nt) * CAST(grp.g_size AS DOUBLE) AS x
-        |        FROM grp CROSS JOIN cls CROSS JOIN tot),
-        |fl AS (SELECT g, pred, g_size, CAST(trunc(x) AS BIGINT) AS fx, x - trunc(x) AS frac FROM raw),
-        |rem AS (SELECT g, any_value(g_size) - sum(fx) AS r FROM fl GROUP BY g),
-        |rk AS (SELECT fl.*, rem.r,
-        |         row_number() OVER (PARTITION BY fl.g ORDER BY fl.frac DESC, CAST(fl.pred AS VARCHAR)) AS rn
-        |       FROM fl JOIN rem ON fl.g = rem.g)
-        |SELECT g, pred, CAST(fx + CASE WHEN rn <= r THEN 1 ELSE 0 END AS BIGINT) AS n
-        |FROM rk WHERE fx + CASE WHEN rn <= r THEN 1 ELSE 0 END > 0
-        |ORDER BY g, pred""".stripMargin,
-    // q33 oracle: in batch the stateful sessionizer emits only gap-CLOSED
-    // sessions — the final open session per user never emits — so closed
-    // sessions = q29's session count minus one, and single-session users
-    // produce no row. epoch_ms mirrors unix_millis (both floor to ms).
-    "q33_sessionize_stateful" ->
-      """WITH g AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |           OR epoch_ms(ts) - epoch_ms(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |s AS (SELECT user_id,
-        |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM g)
-        |SELECT user_id, CAST(max(session_id) - 1 AS BIGINT) AS n_closed_sessions
-        |FROM s GROUP BY user_id HAVING max(session_id) > 1 ORDER BY user_id""".stripMargin,
-    "q40_repetition" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |  len(w) - 2 AS t3,
-        |  len(list_distinct([array_to_string(list_slice(w, i, i + 2), ' ')
-        |    for i in range(1, greatest(len(w) - 1, 1))])) AS d3,
-        |  len(w) - 4 AS t5,
-        |  len(list_distinct([array_to_string(list_slice(w, i, i + 4), ' ')
-        |    for i in range(1, greatest(len(w) - 3, 1))])) AS d5
-        |  FROM w)
-        |SELECT doc_id,
-        |  round(CASE WHEN t3 <= 0 THEN 0.0 ELSE 1.0 - CAST(d3 AS DOUBLE) / t3 END, 6) AS dup3,
-        |  round(CASE WHEN t5 <= 0 THEN 0.0 ELSE 1.0 - CAST(d5 AS DOUBLE) / t5 END, 6) AS dup5
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "q41_jaccard_pairs" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
-        |  FROM documents),
-        |n AS (SELECT doc_id,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 4), ' ')
-        |    for i in range(1, greatest(len(w) - 3, 1))]) AS ng,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 7), ' ')
-        |    for i in range(1, greatest(len(w) - 6, 1))]) AS blk
-        |  FROM w),
-        |ex AS (SELECT doc_id, b8 FROM (SELECT doc_id, unnest(blk) AS b8 FROM n) e0
-        |  QUALIFY row_number() OVER (PARTITION BY b8 ORDER BY doc_id) <= 64),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM ex a JOIN ex b ON a.b8 = b.b8 AND a.doc_id < b.doc_id),
-        |p AS (SELECT c.id_a, c.id_b,
-        |  len(list_intersect(na.ng, nb.ng)) AS i,
-        |  len(list_distinct(list_concat(na.ng, nb.ng))) AS u
-        |  FROM cand c JOIN n na ON c.id_a = na.doc_id JOIN n nb ON c.id_b = nb.doc_id)
-        |SELECT id_a, id_b,
-        |  round(CASE WHEN u = 0 THEN 0.0 ELSE CAST(i AS DOUBLE) / u END, 6) AS jaccard
-        |FROM p
-        |WHERE round(CASE WHEN u = 0 THEN 0.0 ELSE CAST(i AS DOUBLE) / u END, 6) >= 0.2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q48_group_percentiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.25), 4) AS p25,
-        |  round(quantile_cont(l_quantity, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_quantity, 0.75), 4) AS p75,
-        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS price_p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q47_range_join_first_hour" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS ts_ms, value FROM events),
-        |iv AS (SELECT user_id, min(ts_ms) AS lo, min(ts_ms) + 3600000 AS hi
-        |       FROM e GROUP BY user_id)
-        |SELECT e.user_id, count(*) AS n_first_hour, round(sum(e.value), 2) AS sum_value
-        |FROM e JOIN iv ON e.user_id = iv.user_id AND e.ts_ms BETWEEN iv.lo AND iv.hi
-        |GROUP BY e.user_id ORDER BY e.user_id""".stripMargin,
-    "q46_skew_salted_join" ->
-      """SELECT s_name, count(*) AS n_items, round(sum(l_quantity), 2) AS total_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY s_name""".stripMargin,
-    "q60_simhash_portable" ->
-      """WITH tok AS (
-        |  SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[\s\x0b]+')) AS t(term)
-        |  WHERE t.term <> ''),
-        |th AS (SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(term), 1, 15)) AS BIGINT) AS h FROM tok),
-        |bits AS (SELECT doc_id, b.b,
-        |    sum(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM th CROSS JOIN (SELECT unnest(range(0, 60)) AS b) b
-        |  GROUP BY doc_id, b.b),
-        |sh AS (SELECT doc_id,
-        |    CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS sim
-        |  FROM bits GROUP BY doc_id),
-        |blocks AS (SELECT doc_id, sim, blk.i AS blk, (sim >> (blk.i * 15)) & 32767 AS key
-        |  FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS i) blk),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    bit_count(xor(a.sim, b.sim)) AS hamming
-        |  FROM blocks a JOIN blocks b
-        |    ON a.blk = b.blk AND a.key = b.key AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming
-        |FROM cand WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-    // anchor-profile replay: list_zip of the two capture groups (numeric
-    // struct access — DuckDB zip structs are unnamed), the q94 host
-    // chain, the eTLD+1 ladder, unicode-tier terms, count + rank
-    "q108_anchor_profile" -> {
-      val anchorRe =
-        "<[Aa][ \\t\\r\\n][^>]*[Hh][Rr][Ee][Ff][ \\t\\r\\n]*=[ \\t\\r\\n]*\"([^\"]*)\"[^>]*>([^<]*)</[Aa]>"
-      def hostSql(u: String): String =
-        raw"""nullif(lower(CASE WHEN starts_with(regexp_extract(regexp_extract($u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1), '(?:[^@]*@)?([^@]*)$$', 1), '[')
-          |    THEN regexp_extract(regexp_extract(regexp_extract($u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1), '(?:[^@]*@)?([^@]*)$$', 1), '^(\[[^\]]*\])', 1)
-          |    ELSE regexp_extract(regexp_extract(regexp_extract($u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1), '(?:[^@]*@)?([^@]*)$$', 1), '^([^:]*)', 1) END), '')""".stripMargin
-      raw"""WITH d AS (SELECT doc_id,
-        |  '<html><body><a href="https://www.dom' || ((doc_id % 11 + 1) % 11) || '.' ||
-        |    CASE WHEN ((doc_id % 11 + 1) % 11) % 3 = 0 THEN 'co.uk' ELSE 'com' END || '/x">' ||
-        |    ['spark tutorials portal','data catalog home','fast queries portal'][CAST(doc_id % 3 + 1 AS INT)] ||
-        |    '</a><a class="nav" href="HTTPS://dom' || (((doc_id % 11) * 3 + 7) % 11) || '.' ||
-        |    CASE WHEN (((doc_id % 11) * 3 + 7) % 11) % 3 = 0 THEN 'co.uk' ELSE 'com' END ||
-        |    ':443/y?q=1">official site</a>' ||
-        |    CASE WHEN doc_id % 4 = 0 THEN '<a href="https://cdn.shared-assets.com/lib.js">static assets</a>' ELSE '' END ||
-        |    '</body></html>' AS html
-        |  FROM documents),
-        |z AS (SELECT unnest(list_zip(
-        |    regexp_extract_all(html, '$anchorRe', 1),
-        |    regexp_extract_all(html, '$anchorRe', 2))) AS z
-        |  FROM d),
-        |p AS (SELECT z[1] AS href, z[2] AS anchor FROM z),
-        |hh AS (SELECT
-        |  """.stripMargin + hostSql("href") + " AS dst_host, anchor FROM p),\n" +
-        "dm AS (SELECT " + etld1OracleSql("dst_host") + " AS domain, anchor FROM hh),\n" +
-        raw"""t2 AS (SELECT domain, unnest(""".stripMargin +
-        unicodeToksSql("anchor") + raw""") AS term FROM dm WHERE domain IS NOT NULL),
-        |c AS (SELECT domain, term, CAST(count(*) AS BIGINT) AS n_links FROM t2 GROUP BY 1, 2),
-        |r AS (SELECT domain, term, n_links,
-        |  CAST(row_number() OVER (PARTITION BY domain ORDER BY n_links DESC, term) AS INTEGER) AS rank
-        |  FROM c)
-        |SELECT domain, term, n_links, rank FROM r WHERE rank <= 3
-        |ORDER BY domain, rank""".stripMargin
-    },
-    // NFC dedup replay: DuckDB's nfc_normalize implements the same UAX
-    // #15 composition as java.text.Normalizer; the fingerprint is the
-    // q98 unicode-token formula over the normalized text, winners the
-    // same min-id-per-key rank
-    "q107_nfc_dedup" -> (
-      "WITH c AS (\n" +
-        s"  SELECT doc_id * 2 AS doc_id, '$NfcComposedPrefix' || text AS text FROM documents WHERE text IS NOT NULL\n" +
-        "  UNION ALL\n" +
-        s"  SELECT doc_id * 2 + 1 AS doc_id, '$NfcDecomposedPrefix' || text AS text FROM documents WHERE text IS NOT NULL),\n" +
-        "f AS (SELECT doc_id, text,\n" +
-        "  md5(array_to_string(" + unicodeToksSql("nfc_normalize(text)") + ", '')) AS fp FROM c),\n" +
-        "k AS (SELECT doc_id, text, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM f)\n" +
-        "SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars FROM k WHERE rn = 1 ORDER BY doc_id"),
-    // cross-corpus portable-minhash replay: the q59 pipeline with a bench
-    // side (derived from the same corpus fixture), band join WITHOUT the
-    // id_a < id_b constraint (different relations), md5 shingle-set verify
-    "q106_fuzzy_decontam" -> {
-      val (as, bs) = graft.functions.TextAlgo.minhashPortableConsts(32, 42L)
-      val constRows = (0 until 32).map(i => s"($i, ${as(i)}, ${bs(i)})").mkString(",\n  ")
-      s"""WITH norm AS (SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-         |btext AS (SELECT doc_id AS bench_id,
-         |    CASE WHEN doc_id % 166 = 0 THEN text
-         |      ELSE text || ' benchmark held out split marker tokens' END AS text
-         |  FROM documents WHERE doc_id % 83 = 0),
-         |bnorm AS (SELECT bench_id, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM btext),
-         |consts(i, a, b) AS (VALUES
-         |  $constRows),
-         |h AS (SELECT doc_id,
-         |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) % 2147483647 AS hp
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS pos FROM norm) q),
-         |bh AS (SELECT bench_id,
-         |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) % 2147483647 AS hp
-         |  FROM (SELECT bench_id, t, unnest(range(1, len(t) - 3)) AS pos FROM bnorm) q),
-         |sig AS (SELECT h.doc_id, c.i, min((c.a * h.hp + c.b) % 2147483647) AS mh
-         |  FROM h CROSS JOIN consts c GROUP BY h.doc_id, c.i),
-         |bsig AS (SELECT bh.bench_id, c.i, min((c.a * bh.hp + c.b) % 2147483647) AS mh
-         |  FROM bh CROSS JOIN consts c GROUP BY bh.bench_id, c.i),
-         |band AS (SELECT doc_id, i // 4 AS band,
-         |    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS key
-         |  FROM sig GROUP BY doc_id, i // 4),
-         |bband AS (SELECT bench_id, i // 4 AS band,
-         |    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS key
-         |  FROM bsig GROUP BY bench_id, i // 4),
-         |cand AS (SELECT DISTINCT t2.doc_id, b2.bench_id
-         |  FROM band t2 JOIN bband b2 ON t2.band = b2.band AND t2.key = b2.key),
-         |sets AS (SELECT doc_id, list_sort(list_distinct(list_transform(
-         |    range(1, len(t) - 3),
-         |    pos -> CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT)))) AS sh
-         |  FROM norm),
-         |bsets AS (SELECT bench_id, list_sort(list_distinct(list_transform(
-         |    range(1, len(t) - 3),
-         |    pos -> CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT)))) AS sh
-         |  FROM bnorm),
-         |p AS (SELECT c.doc_id, c.bench_id,
-         |    len(list_intersect(sa.sh, sb.sh)) AS i2,
-         |    len(list_distinct(list_concat(sa.sh, sb.sh))) AS u
-         |  FROM cand c JOIN sets sa ON c.doc_id = sa.doc_id JOIN bsets sb ON c.bench_id = sb.bench_id)
-         |SELECT doc_id, bench_id AS bench_doc_id,
-         |  round(CAST(i2 AS DOUBLE) / u, 6) AS jaccard
-         |FROM p WHERE CAST(i2 AS DOUBLE) / u >= 0.5
-         |ORDER BY doc_id, bench_id""".stripMargin
-    },
-    "q59_minhash_portable" -> {
-      val (as, bs) = graft.functions.TextAlgo.minhashPortableConsts(32, 42L)
-      val constRows = (0 until 32).map(i => s"($i, ${as(i)}, ${bs(i)})").mkString(",\n  ")
-      s"""WITH norm AS (SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-         |h AS (SELECT doc_id,
-         |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) % 2147483647 AS hp
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS pos FROM norm) q),
-         |consts(i, a, b) AS (VALUES
-         |  $constRows),
-         |sig AS (SELECT h.doc_id, c.i, min((c.a * h.hp + c.b) % 2147483647) AS mh
-         |  FROM h CROSS JOIN consts c GROUP BY h.doc_id, c.i),
-         |band AS (SELECT doc_id, i // 4 AS band,
-         |    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS key
-         |  FROM sig GROUP BY doc_id, i // 4),
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM band a JOIN band b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-         |sets AS (SELECT doc_id, list_sort(list_distinct(list_transform(
-         |    range(1, len(t) - 3),
-         |    pos -> CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT)))) AS sh
-         |  FROM norm),
-         |p AS (SELECT c.id_a, c.id_b,
-         |    len(list_intersect(sa.sh, sb.sh)) AS i2,
-         |    len(list_distinct(list_concat(sa.sh, sb.sh))) AS u
-         |  FROM cand c JOIN sets sa ON c.id_a = sa.doc_id JOIN sets sb ON c.id_b = sb.doc_id)
-         |SELECT id_a, id_b, round(CAST(i2 AS DOUBLE) / u, 6) AS jaccard
-         |FROM p WHERE CAST(i2 AS DOUBLE) / u >= 0.2
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-    "q58_winnowing_portable" ->
-      """WITH norm AS (SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-        |h AS (SELECT doc_id, pos,
-        |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 8)), 1, 15)) AS BIGINT) AS h
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM norm) q),
-        |stats AS (SELECT doc_id, count(*) AS cnt FROM h GROUP BY 1),
-        |win AS (SELECT doc_id, pos, min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM h),
-        |fps AS (
-        |  SELECT DISTINCT w.doc_id, w.mh AS fp
-        |  FROM win w JOIN stats USING (doc_id)
-        |  WHERE stats.cnt > 4 AND w.pos <= stats.cnt - 3
-        |  UNION
-        |  SELECT h.doc_id, min(h.h) AS fp FROM h JOIN stats USING (doc_id)
-        |  WHERE stats.cnt <= 4 GROUP BY h.doc_id)
-        |SELECT doc_id, fp FROM fps ORDER BY doc_id, fp""".stripMargin,
-    "q57_unigram_xent" ->
-      """WITH tok AS (
-        |  SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-        |  WHERE t.term <> ''),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(tf) AS BIGINT) AS t, count(DISTINCT term) AS v FROM tf),
-        |p AS (SELECT term,
-        |    CAST(sum(tf) + 1 AS DOUBLE) / CAST((SELECT t + v FROM tot) AS DOUBLE) AS prob
-        |  FROM tf GROUP BY term)
-        |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,
-        |  round(sum(tf.tf * -ln(p.prob)) / sum(tf.tf), 6) AS xent
-        |FROM tf JOIN p USING (term)
-        |GROUP BY tf.doc_id ORDER BY tf.doc_id""".stripMargin,
-    "q56_keyword_search" ->
-      """WITH tok AS (
-        |  SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-        |  WHERE t.term IN ('window', 'merge', 'stream'))
-        |SELECT doc_id, count(*) AS n_hits
-        |FROM tok GROUP BY doc_id
-        |HAVING count(DISTINCT term) = 3
-        |ORDER BY doc_id""".stripMargin,
-    "q54_quantize_int8" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |m AS (SELECT vec_id, v,
-        |  list_aggregate(list_transform(v, x -> abs(x)), 'max') AS ma FROM e)
-        |SELECT vec_id,
-        |  round(CASE WHEN ma IS NULL THEN 0.0 ELSE ma END, 6) AS max_abs,
-        |  CAST(CASE WHEN ma IS NULL OR ma = 0 THEN 0
-        |       ELSE list_sum(list_transform(v, x -> CAST(floor(x * 127.0 / ma) AS INTEGER))) END
-        |    AS INTEGER) AS q_sum
-        |FROM m ORDER BY vec_id""".stripMargin,
-    "q53_split_assign" -> {
-      // cumulative boundaries computed EXACTLY as assignSplit computes them
-      // (0.8 + 0.1 in binary is not the literal 0.9), embedded via
-      // Double.toString which round-trips through DuckDB's parser
-      val cums = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-        .scanLeft(0.0)(_ + _._2).tail
-      s"""WITH u AS (SELECT lang,
-         |  CAST(CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), 'sp')), 1, 8)) AS BIGINT) AS DOUBLE)
-         |    / 4294967296.0 AS u
-         |  FROM documents),
-         |s AS (SELECT lang,
-         |  CASE WHEN u < CAST('${java.lang.Double.toString(cums(0))}' AS DOUBLE) THEN 'train'
-         |       WHEN u < CAST('${java.lang.Double.toString(cums(1))}' AS DOUBLE) THEN 'val'
-         |       ELSE 'test' END AS split
-         |  FROM u)
-         |SELECT lang, split, count(*) AS n_docs
-         |FROM s GROUP BY lang, split ORDER BY lang, split""".stripMargin
-    },
-    "q52_tfidf_top_terms" ->
-      """WITH tok AS (
-        |  SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-        |  WHERE t.term <> ''),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |scored AS (SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-        |    tf.tf * (ln(CAST(n.n + 1 AS DOUBLE) / CAST(dfreq.df + 1 AS DOUBLE)) + 1.0) AS tfidf
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n
-        |  WHERE dfreq.df <= 0.9 * n.n),
-        |r AS (SELECT doc_id, term, tf, df, tfidf,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-        |  FROM scored)
-        |SELECT doc_id, rank, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
-        |  round(tfidf, 6) AS tfidf
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q51_sequence_packing" ->
-      """WITH c AS (SELECT doc_id, n_chars,
-        |  sum(n_chars) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    - n_chars AS before
-        |  FROM documents)
-        |SELECT CAST(floor(before / 4096.0) AS BIGINT) AS seq_id,
-        |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q50_weighted_mix" ->
-      """WITH sel AS (
-        |  SELECT * FROM documents WHERE lang = 'en'
-        |    AND CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), 'mix0')), 1, 8)) AS BIGINT)
-        |        < 0.9 * 4294967296.0
-        |  UNION ALL
-        |  SELECT * FROM documents WHERE lang <> 'en'
-        |    AND CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), 'mix1')), 1, 8)) AS BIGINT)
-        |        < 0.25 * 4294967296.0)
-        |SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM sel GROUP BY lang ORDER BY lang""".stripMargin,
-    "q49_pii_redaction" ->
-      """WITH t AS (SELECT doc_id,
-        |  concat(text, ' contact user', CAST(doc_id AS VARCHAR),
-        |         '@example.com node 10.0.', CAST(doc_id % 256 AS VARCHAR),
-        |         '.7 call 555-123-4567') AS txt
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(txt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_email,
-        |  CAST(len(regexp_extract_all(txt, '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS INTEGER) AS n_ip,
-        |  CAST(len(regexp_extract_all(txt, '\b[0-9]{3}[-.][0-9]{3,4}[-.][0-9]{4}\b')) AS INTEGER) AS n_phone,
-        |  md5(regexp_replace(regexp_replace(regexp_replace(txt,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g'),
-        |      '\b[0-9]{3}[-.][0-9]{3,4}[-.][0-9]{4}\b', '<PHONE>', 'g')) AS redacted_md5
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q44_events_sliding" ->
-      """WITH w AS (SELECT event_type, value,
-        |  unnest([time_bucket(INTERVAL '30 minutes', ts),
-        |          time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes']) AS w_start
-        |  FROM events)
-        |SELECT w_start, event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM w GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
-    "q45_asof_click_view" ->
-      """WITH c AS (SELECT user_id, epoch_ms(ts) AS ts_ms, round(value, 4) AS click_value
-        |  FROM events WHERE event_type = 'click'),
-        |v AS (SELECT user_id, epoch_ms(ts) AS ts_ms, round(max(value), 4) AS view_value
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-        |SELECT c.user_id, c.ts_ms, c.click_value, v.view_value
-        |FROM c ASOF LEFT JOIN v ON c.user_id = v.user_id AND c.ts_ms >= v.ts_ms
-        |ORDER BY c.user_id, c.ts_ms, c.click_value""".stripMargin,
-    "q42_top_tokens" ->
-      """WITH t AS (SELECT lang, unnest(string_split_regex(text, '[\s\x0b]+')) AS token FROM documents),
-        |c AS (SELECT lang, token, count(*) AS n FROM t WHERE length(token) > 0 GROUP BY 1, 2),
-        |r AS (SELECT lang, token, n,
-        |  row_number() OVER (PARTITION BY lang ORDER BY n DESC, token) AS rank FROM c)
-        |SELECT lang, rank, token, n FROM r WHERE rank <= 5 ORDER BY lang, rank""".stripMargin,
-    "q43_lexical_diversity" ->
-      """WITH t AS (SELECT lang, unnest(string_split_regex(text, '[\s\x0b]+')) AS token FROM documents)
-        |SELECT lang, count(*) AS n_tokens, count(DISTINCT token) AS n_types,
-        |  round(CAST(count(DISTINCT token) AS DOUBLE) / count(*), 6) AS type_token_ratio
-        |FROM t WHERE length(token) > 0 GROUP BY lang ORDER BY lang""".stripMargin,
-    "q26_knn_bruteforce" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |    list_dot_product(e.v, q.qv) /
-        |      (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-        |  FROM e, q WHERE e.vec_id <> q.query_id),
-        |r AS (SELECT query_id, neighbor_id, cos,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM scored)
-        |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cosine
-        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin) ++
-    q37Centroids.map(c => "q37_knn_ivf" -> q37OracleSql(c)) ++
-    q65Centroids.map(c => "q65_kmeans_clusters" -> q65OracleSql(c)) ++
-    q121Codebooks.map(c => "q121_pq_ann" -> q121OracleSql(c)) ++
-    q122Models.map { case (cent, cbs) => "q122_ivfpq_ann" -> q122OracleSql(cent, cbs) } ++
-    q123Models.map { case (cent, cbs) => "q123_ivfpq_residual_ann" -> q123OracleSql(cent, cbs) } ++
-    q124Model.map { case (m, u) => "q124_lm_model_scoring" -> q124OracleSql(m, u) } ++
-    q126Model.map { case (m, u) =>
-      "q126_curation_capstone_model" -> capstoneOracleSql(capstoneModelScoringSql(m, u)) } ++
-    q131Model.map { case (m, u) =>
-      "q131_lm5_model_scoring" -> ngramModelOracleSql(5, m, u, "n_5grams") } ++
-    q132Models.map { case (rot, cbs) => "q132_opq_ann" -> q132OracleSql(rot, cbs) } ++
-    q133Model.map { case (m, u) =>
-      "q133_lm_artifact_scoring" -> ngramModelOracleSql(3, m, u, "n_trigrams") } ++
-    q134Models.map { case (rot, cent, cbs) =>
-      "q134_ann_opq_ivfpq_refined" -> q134OracleSql(rot, cent, cbs) } ++
-    q135Model.map(m => "q135_lid_trained" -> q135OracleSql(m)) ++
-    q137Model.map { case (m, u) =>
-      "q137_wet_curation_capstone" -> capstoneOracleSql(capstoneModelScoringSql(m, u)) } ++
-    q71Centroids.map(c => "q71_semdedup_pairs" -> q71OracleSql(c)) ++
-    q39Bits.map(b => "q39_cosine_neardup_lsh" -> q39OracleSql(b)) ++
-    q55Bits.map(b => "q55_neardup_components" -> q55OracleSql(b)) ++
-    q76Bits.map(b => "q76_banded_neardup" -> q76OracleSql(b)) ++
-    staticLlmOracles
-
-  /** Oracles for q61-q64, q66, q70 and q72 (static SQL — no captured
-    * constants).
-    */
-  private def staticLlmOracles: Map[String, String] = Map(
-    "q61_decontaminate" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
-        |  FROM documents),
-        |n AS (SELECT doc_id,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 4), ' ')
-        |    for i in range(1, greatest(len(w) - 3, 1))]) AS ng
-        |  FROM w),
-        |bench AS (SELECT DISTINCT unnest(ng) AS g FROM n WHERE doc_id % 17 = 3),
-        |tr AS (SELECT doc_id, ng FROM n WHERE doc_id % 17 <> 3),
-        |ex AS (SELECT doc_id, unnest(ng) AS g FROM tr),
-        |h AS (SELECT ex.doc_id, count(*) AS n_hits FROM ex JOIN bench USING (g) GROUP BY ex.doc_id)
-        |SELECT tr.doc_id, CAST(len(tr.ng) AS BIGINT) AS n_ngrams, h.n_hits,
-        |  round(CAST(h.n_hits AS DOUBLE) / len(tr.ng), 6) AS frac
-        |FROM tr JOIN h USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q62_bloom_antijoin" ->
-      """WITH f AS (SELECT doc_id, lang, source,
-        |    md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-        |  FROM documents)
-        |SELECT doc_id, lang, source FROM f
-        |WHERE source <> 'src0'
-        |  AND NOT EXISTS (SELECT 1 FROM f b WHERE b.source = 'src0' AND b.fp = f.fp)
-        |ORDER BY doc_id""".stripMargin,
-    "q63_chunk_dedup" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
-        |  FROM documents),
-        |c AS (SELECT doc_id,
-        |  [array_to_string(list_slice(w, i, i + 9), ' ')
-        |    for i in range(1, len(w) + 1, 10)] AS chunks
-        |  FROM w),
-        |e AS (SELECT doc_id, unnest(chunks) AS chunk, generate_subscripts(chunks, 1) AS idx FROM c),
-        |k AS (SELECT doc_id, idx, chunk,
-        |    row_number() OVER (PARTITION BY chunk ORDER BY doc_id, idx) AS rn
-        |  FROM e),
-        |kept AS (SELECT doc_id, idx, chunk FROM k WHERE rn = 1),
-        |agg AS (SELECT doc_id, count(*) AS n_kept,
-        |    string_agg(chunk, ' ' ORDER BY idx) AS clean_text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT c.doc_id, CAST(len(c.chunks) AS BIGINT) AS n_chunks,
-        |  coalesce(agg.n_kept, 0) AS n_kept, coalesce(agg.clean_text, '') AS clean_text
-        |FROM c LEFT JOIN agg USING (doc_id) ORDER BY c.doc_id""".stripMargin,
-    "q64_token_budget" ->
-      """WITH s AS (SELECT doc_id,
-        |  CAST(len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) AS BIGINT) AS n_tokens,
-        |  round(CAST(
-        |    (CASE WHEN (len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> ''))) BETWEEN 10 AND 100000
-        |          THEN 0.4 ELSE 0.0 END)
-        |    + (CASE WHEN (CASE WHEN length(text) = 0 THEN 0
-        |           ELSE (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) * 1.0 / length(text) END) < 0.2
-        |          THEN 0.3 ELSE 0.0 END)
-        |    + (CASE WHEN (CASE WHEN len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) = 0 THEN 0
-        |    ELSE len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'),
-        |      t -> t IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'))) * 1.0
-        |      / len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) END) > 0.01
-        |          THEN 0.3 ELSE 0.0 END) AS DOUBLE), 2) AS quality
-        |  FROM documents),
-        |r AS (SELECT doc_id, quality, n_tokens,
-        |  sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens,
-        |  sum(n_tokens) OVER () AS total
-        |  FROM s)
-        |SELECT doc_id, quality, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-        |FROM r WHERE cum_tokens * 5 <= total ORDER BY doc_id""".stripMargin,
-    "q69_canonical_docs" ->
-      """WITH RECURSIVE
-        |w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
-        |  FROM documents),
-        |n AS (SELECT doc_id,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 4), ' ')
-        |    for i in range(1, greatest(len(w) - 3, 1))]) AS ng,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 7), ' ')
-        |    for i in range(1, greatest(len(w) - 6, 1))]) AS blk
-        |  FROM w),
-        |ex AS (SELECT doc_id, b8 FROM (SELECT doc_id, unnest(blk) AS b8 FROM n) e0
-        |  QUALIFY row_number() OVER (PARTITION BY b8 ORDER BY doc_id) <= 64),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM ex a JOIN ex b ON a.b8 = b.b8 AND a.doc_id < b.doc_id),
-        |pr AS (SELECT c.id_a, c.id_b,
-        |  len(list_intersect(na.ng, nb.ng)) AS i,
-        |  len(list_distinct(list_concat(na.ng, nb.ng))) AS u
-        |  FROM cand c JOIN n na ON c.id_a = na.doc_id JOIN n nb ON c.id_b = nb.doc_id),
-        |p AS (SELECT id_a, id_b FROM pr
-        |  WHERE round(CASE WHEN u = 0 THEN 0.0 ELSE CAST(i AS DOUBLE) / u END, 6) >= 0.2),
-        |edges AS (SELECT id_a AS s, id_b AS t FROM p UNION ALL SELECT id_b AS s, id_a AS t FROM p),
-        |reach(id, lab) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT edges.t, reach.lab FROM reach JOIN edges ON reach.id = edges.s),
-        |comp AS (SELECT id AS doc_id, min(lab) AS component FROM reach GROUP BY id),
-        |q AS (SELECT doc_id,
-        |  round(CAST(
-        |    (CASE WHEN (len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> ''))) BETWEEN 10 AND 100000
-        |          THEN 0.4 ELSE 0.0 END)
-        |    + (CASE WHEN (CASE WHEN length(text) = 0 THEN 0
-        |           ELSE (length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g'))) * 1.0 / length(text) END) < 0.2
-        |          THEN 0.3 ELSE 0.0 END)
-        |    + (CASE WHEN (CASE WHEN len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) = 0 THEN 0
-        |    ELSE len(list_filter(string_split_regex(lower(text), '[\s\x0b]+'),
-        |      t -> t IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'))) * 1.0
-        |      / len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) END) > 0.01
-        |          THEN 0.3 ELSE 0.0 END) AS DOUBLE), 2) AS quality
-        |  FROM documents),
-        |j AS (SELECT comp.component, comp.doc_id, q.quality,
-        |    row_number() OVER (PARTITION BY comp.component
-        |      ORDER BY q.quality DESC, comp.doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY comp.component) AS n_docs
-        |  FROM comp JOIN q USING (doc_id))
-        |SELECT component, n_docs, doc_id AS keep_id, quality
-        |FROM j WHERE rn = 1 ORDER BY component""".stripMargin,
-    "q68_bigram_xent" ->
-      """WITH raw AS (SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS a FROM documents),
-        |tok AS (SELECT doc_id, unnest(a) AS term, generate_subscripts(a, 1) AS pos FROM raw),
-        |tk AS (SELECT doc_id, term, pos FROM tok WHERE term <> ''),
-        |bg AS (SELECT doc_id, term AS w1,
-        |    lead(term) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-        |  FROM tk),
-        |b AS (SELECT doc_id, w1, w2 FROM bg WHERE w2 IS NOT NULL),
-        |tf2 AS (SELECT doc_id, w1, w2, count(*) AS tf FROM b GROUP BY 1, 2, 3),
-        |c2 AS (SELECT w1, w2, CAST(sum(tf) AS BIGINT) AS c2 FROM tf2 GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
-        |v AS (SELECT count(DISTINCT term) AS v FROM tk),
-        |p AS (SELECT c2.w1, c2.w2,
-        |    CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1.c1 + (SELECT v FROM v) AS DOUBLE) AS prob
-        |  FROM c2 JOIN c1 USING (w1))
-        |SELECT tf2.doc_id, CAST(sum(tf2.tf) AS BIGINT) AS n_bigrams,
-        |  round(sum(tf2.tf * -ln(p.prob)) / sum(tf2.tf), 6) AS xent
-        |FROM tf2 JOIN p ON tf2.w1 = p.w1 AND tf2.w2 = p.w2
-        |GROUP BY tf2.doc_id ORDER BY tf2.doc_id""".stripMargin,
-    "q67_token_mix" ->
-      """WITH s AS (SELECT doc_id, lang,
-        |  CAST(len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) AS BIGINT) AS n_tokens,
-        |  CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS rk
-        |  FROM documents),
-        |t AS (SELECT sum(n_tokens) AS total FROM s),
-        |r AS (SELECT lang, n_tokens,
-        |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY rk, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM s),
-        |w(lang, w10) AS (VALUES ('en', 4), ('fr', 2), ('de', 2), ('es', 1), ('zh', 1)),
-        |sel AS (SELECT r.lang, r.n_tokens FROM r JOIN w USING (lang) CROSS JOIN t
-        |  WHERE r.cum * 10 <= t.total * w.w10)
-        |SELECT lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS tok_sel
-        |FROM sel GROUP BY lang ORDER BY lang""".stripMargin,
-    "q66_stratified_sample" ->
-      """WITH cnt AS (SELECT lang, count(*) AS c FROM documents GROUP BY lang),
-        |tot AS (SELECT sum(c) AS t FROM cnt),
-        |q0 AS (SELECT lang, c, (60 * c) // t AS base, (60 * c) % t AS rem FROM cnt, tot),
-        |deficit AS (SELECT 60 - sum(base) AS d FROM q0),
-        |q AS (SELECT lang,
-        |    base + CASE WHEN row_number() OVER (ORDER BY rem DESC, lang) <= d
-        |                THEN 1 ELSE 0 END AS quota
-        |  FROM q0, deficit),
-        |r AS (SELECT doc_id, lang, source,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT),
-        |        doc_id) AS rn
-        |  FROM documents)
-        |SELECT r.doc_id, r.lang, r.source
-        |FROM r JOIN q USING (lang) WHERE r.rn <= q.quota
-        |ORDER BY r.doc_id""".stripMargin,
-    // q70: full KMV replay — per-source k-smallest-distinct md5-60 shingle
-    // hashes (the same norm + substr derivation as the q58/q59 portable
-    // twins), then the identical closed-form estimators. 2^60 and
-    // 255 * 2^60 are exactly representable doubles, so the divisions are
-    // bit-identical across engines.
-    "q70_kmv_source_overlap" ->
-      """WITH norm AS (SELECT source, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-        |h AS (SELECT source,
-        |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) AS h
-        |  FROM (SELECT source, t, unnest(range(1, len(t) - 3)) AS pos FROM norm) q),
-        |sk AS (SELECT source, list_slice(list_sort(list(DISTINCT h)), 1, 256) AS sk FROM h GROUP BY source),
-        |p AS (SELECT a.source AS source_a, b.source AS source_b, a.sk AS ska, b.sk AS skb
-        |  FROM sk a JOIN sk b ON a.source < b.source),
-        |u AS (SELECT *, list_slice(list_sort(list_distinct(list_concat(ska, skb))), 1, 256) AS un FROM p)
-        |SELECT source_a, source_b,
-        |  round(CASE WHEN len(ska) < 256 THEN CAST(len(ska) AS DOUBLE)
-        |        ELSE 255.0 * 1152921504606846976.0 / CAST(ska[256] AS DOUBLE) END, 4) AS est_distinct_a,
-        |  round(CASE WHEN len(skb) < 256 THEN CAST(len(skb) AS DOUBLE)
-        |        ELSE 255.0 * 1152921504606846976.0 / CAST(skb[256] AS DOUBLE) END, 4) AS est_distinct_b,
-        |  round(CASE WHEN len(un) = 0 THEN 0.0
-        |        ELSE CAST(len(list_intersect(list_intersect(un, ska), skb)) AS DOUBLE)
-        |             / CAST(len(un) AS DOUBLE) END, 4) AS est_jaccard
-        |FROM u ORDER BY source_a, source_b""".stripMargin,
-    // q73: the rollup equals the direct global sketch (KMV merge
-    // property), so the oracle skips the per-source level entirely
-    "q73_kmv_rollup" ->
-      """WITH norm AS (SELECT source, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-        |h AS (SELECT source,
-        |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) AS h
-        |  FROM (SELECT source, t, unnest(range(1, len(t) - 3)) AS pos FROM norm) q),
-        |g AS (SELECT list_slice(list_sort(list(DISTINCT h)), 1, 256) AS g FROM h),
-        |ns AS (SELECT count(DISTINCT source) AS n_sources FROM documents)
-        |SELECT ns.n_sources, len(g.g) AS sketch_size,
-        |  g.g[1] AS h_min, g.g[len(g.g)] AS h_kth,
-        |  round(CASE WHEN len(g.g) < 256 THEN CAST(len(g.g) AS DOUBLE)
-        |        ELSE 255.0 * 1152921504606846976.0 / CAST(g.g[256] AS DOUBLE) END, 4) AS est_distinct_shingles
-        |FROM g, ns""".stripMargin,
-    // q109: full HLL register replay — the same md5-60 shingle hashes as
-    // q70, register index = top 11 bits (h // 2^49), rho = 50 minus the
-    // bit length of the 49-bit suffix (format('{:b}') is exact string
-    // formatting — no float log). The '__all__' row is computed from ALL
-    // hashes directly: by the elementwise-max merge property that equals
-    // the Spark side's register rollup. v_zero/s_int/reg_checksum are
-    // exact integer pins of the register content; the estimator repeats
-    // the identical double arithmetic (alpha literal with the same
-    // left-assoc op order) and rounds to 4. Sketch-only — the exact-
-    // distinct yardstick is q109v's.
-    "q109_hll_source_distinct" ->
-      """WITH norm AS (SELECT source, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-        |h AS (SELECT source,
-        |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) AS h
-        |  FROM (SELECT source, t, unnest(range(1, len(t) - 3)) AS pos FROM norm) q),
-        |hs AS (SELECT source, h FROM h UNION ALL SELECT '__all__' AS source, h FROM h),
-        |rho AS (SELECT source, h // 562949953421312 AS idx,
-        |    CASE WHEN h % 562949953421312 = 0 THEN 50
-        |         ELSE 50 - length(format('{:b}', h % 562949953421312)) END AS rho
-        |  FROM hs),
-        |reg0 AS (SELECT source, idx, max(rho) AS mj FROM rho GROUP BY source, idx),
-        |grid AS (SELECT s.source, g.idx FROM (SELECT DISTINCT source FROM hs) s,
-        |         (SELECT unnest(range(0, 2048)) AS idx) g),
-        |reg AS (SELECT grid.source, grid.idx, coalesce(reg0.mj, 0) AS mj
-        |  FROM grid LEFT JOIN reg0 ON grid.source = reg0.source AND grid.idx = reg0.idx),
-        |agg AS (SELECT source,
-        |    CAST(count(*) FILTER (mj = 0) AS INTEGER) AS v_zero,
-        |    CAST(sum(1::BIGINT << (50 - mj)) AS BIGINT) AS s_int,
-        |    CAST(sum((idx + 1) * mj) AS BIGINT) AS reg_checksum
-        |  FROM reg GROUP BY source),
-        |est AS (SELECT source, v_zero, s_int, reg_checksum,
-        |    0.7213/(1+1.079/2048.0)*2048*2048*1125899906842624.0 / CAST(s_int AS DOUBLE) AS raw
-        |  FROM agg)
-        |SELECT source, v_zero, s_int, reg_checksum,
-        |  round(CASE WHEN v_zero > 0 AND raw <= 5120.0
-        |        THEN 2048.0 * ln(2048.0 / CAST(v_zero AS DOUBLE))
-        |        ELSE raw END, 4) AS est_distinct
-        |FROM est
-        |ORDER BY source""".stripMargin,
-    // q109v: the accuracy yardstick — same register replay reduced to
-    // the estimate, joined to the exact distinct count per source and
-    // global.
-    "q109v_hll_accuracy" ->
-      """WITH norm AS (SELECT source, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
-        |h AS (SELECT source,
-        |    CAST(concat('0x', substr(md5(substr(t, CAST(pos AS INTEGER), 5)), 1, 15)) AS BIGINT) AS h
-        |  FROM (SELECT source, t, unnest(range(1, len(t) - 3)) AS pos FROM norm) q),
-        |hs AS (SELECT source, h FROM h UNION ALL SELECT '__all__' AS source, h FROM h),
-        |rho AS (SELECT source, h // 562949953421312 AS idx,
-        |    CASE WHEN h % 562949953421312 = 0 THEN 50
-        |         ELSE 50 - length(format('{:b}', h % 562949953421312)) END AS rho
-        |  FROM hs),
-        |reg0 AS (SELECT source, idx, max(rho) AS mj FROM rho GROUP BY source, idx),
-        |grid AS (SELECT s.source, g.idx FROM (SELECT DISTINCT source FROM hs) s,
-        |         (SELECT unnest(range(0, 2048)) AS idx) g),
-        |reg AS (SELECT grid.source, grid.idx, coalesce(reg0.mj, 0) AS mj
-        |  FROM grid LEFT JOIN reg0 ON grid.source = reg0.source AND grid.idx = reg0.idx),
-        |agg AS (SELECT source,
-        |    CAST(count(*) FILTER (mj = 0) AS INTEGER) AS v_zero,
-        |    CAST(sum(1::BIGINT << (50 - mj)) AS BIGINT) AS s_int
-        |  FROM reg GROUP BY source),
-        |ex AS (SELECT source, count(DISTINCT h) AS exact_distinct FROM hs GROUP BY source),
-        |est AS (SELECT source, v_zero,
-        |    0.7213/(1+1.079/2048.0)*2048*2048*1125899906842624.0 / CAST(s_int AS DOUBLE) AS raw
-        |  FROM agg)
-        |SELECT e.source,
-        |  round(CASE WHEN e.v_zero > 0 AND e.raw <= 5120.0
-        |        THEN 2048.0 * ln(2048.0 / CAST(e.v_zero AS DOUBLE))
-        |        ELSE e.raw END, 4) AS est_distinct,
-        |  ex.exact_distinct
-        |FROM est e JOIN ex ON e.source = ex.source
-        |ORDER BY e.source""".stripMargin,
-    // q110: the direct phrase definition — for each start position i,
-    // does every phrase slot match tk[i + offset]? Generated per phrase
-    // (slot count differs), same tokenization as the Spark side's
-    // compiled asciiTokens kernel. The Spark plan (filtered positional
-    // postings + broadcast slots + array_intersect fold) shares nothing
-    // with this scan except the answer.
-    "q110_phrase_search" -> {
-      val blocks = q110Phrases.zipWithIndex.map { case (p, qi) =>
-        val ts = p.split(" ").toSeq
-        val conds = ts.zipWithIndex
-          .map { case (t, o) => s"tk[i + $o] = '$t'" }.mkString(" AND ")
-        s"""SELECT $qi AS query_id, '$p' AS phrase, doc_id,
-           |  len(list_filter(range(1, len(tk) - ${ts.length - 2}), i -> $conds)) AS n_occ
-           |FROM toks""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents)
-         |SELECT query_id, phrase, doc_id, n_occ FROM (
-         |$blocks
-         |) WHERE n_occ > 0 ORDER BY query_id, doc_id""".stripMargin
-    },
-    // q111: pixel synthesis replayed from the shared fixture formula
-    // (ImageHash.fixturePixel), box-average via grouped integer
-    // division (x*9/18 == x//2 at the fixture size), dHash kept as a
-    // SORTED BIT SET per doc, and an all-pairs scan with set-arithmetic
-    // Hamming — deliberately nothing in common with the Spark plan
-    // (packed 64-bit hashes, 16-bit-block LSH join) except the answer.
-    "q111_image_dhash_neardup" ->
-      """WITH xs AS (SELECT unnest(range(0, 18)) AS x),
-        |ys AS (SELECT unnest(range(0, 16)) AS y),
-        |px AS (SELECT d.doc_id, d.doc_id // 3 AS g, d.doc_id % 3 AS r, xs.x, ys.y
-        |  FROM documents d, xs, ys WHERE d.doc_id < 3000),
-        |vals AS (SELECT doc_id, x, y,
-        |    CASE WHEN r = 0 THEN base
-        |         WHEN r = 1 THEN least(base + CASE WHEN x < 2 AND y < 2 THEN 60 ELSE 0 END, 255)
-        |         ELSE (base * 3 + x * y + 17) % 256 END AS v
-        |  FROM (SELECT *, (g * 31 + (x * 7 + y * 11) * (1 + ((x + y + g) % 5))) % 256 AS base
-        |        FROM px)),
-        |bk AS (SELECT doc_id, y // 2 AS gy, x // 2 AS gx,
-        |    CAST(sum(v) AS BIGINT) // CAST(count(*) AS BIGINT) AS b
-        |  FROM vals GROUP BY doc_id, y // 2, x // 2),
-        |bits AS (SELECT l.doc_id, l.gy * 8 + l.gx AS bit
-        |  FROM bk l JOIN bk rr ON l.doc_id = rr.doc_id AND l.gy = rr.gy AND rr.gx = l.gx + 1
-        |  WHERE l.b < rr.b),
-        |dh AS (SELECT d.doc_id,
-        |    list_sort(list(b.bit) FILTER (WHERE b.bit IS NOT NULL)) AS bits
-        |  FROM documents d LEFT JOIN bits b ON d.doc_id = b.doc_id
-        |  WHERE d.doc_id < 3000 GROUP BY d.doc_id),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(coalesce(len(a.bits), 0) + coalesce(len(b.bits), 0)
-        |      - 2 * coalesce(len(list_intersect(a.bits, b.bits)), 0) AS INTEGER) AS hamming
-        |  FROM dh a JOIN dh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, hamming FROM p WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-    // q129: the q111 all-pairs bit-set shape with the pHash pipeline
-    // replayed in int math (resize buckets, fixed-point DCT stages,
-    // division-free median)
-    "q129_image_phash_neardup" -> q129OracleSql,
-
-    // q130: the WET roundtrip oracle is the pre-compression truth —
-    // the gzip/file/parse path must hand back every byte
-    "q130_wet_ingest" ->
-      """SELECT doc_id, 'https://example.org/doc/' || doc_id AS target_uri,
-        |  CAST(length(text) AS INT) AS n_chars, text
-        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
-
-    // q72: the cap is a plain rank filter over the portable md5 rank —
-    // the Spark side differs only in WHERE the rank is computed (map-side
-    // WindowGroupLimit), never in which rows survive.
-    "q72_domain_cap" ->
-      """WITH r AS (SELECT source, n_chars,
-        |  row_number() OVER (PARTITION BY source
-        |    ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT),
-        |      doc_id) AS rk
-        |  FROM documents)
-        |SELECT source, count(*) AS n_kept, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM r WHERE rk <= 15 GROUP BY source ORDER BY source""".stripMargin,
-    // Gopher counters replayed with list functions; every definition
-    // mirrors the kernel: \s-run tokens, code-point lengths, space-only
-    // line trims, non-overlapping "..." runs, distinct-stopword presence
-    "q74_gopher_rules" ->
-      """WITH c AS (SELECT source,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), x -> x <> '') AS toks,
-        |  list_filter(string_split(text, chr(10)), l -> trim(l, ' ') <> '') AS nls,
-        |  length(text) - length(replace(text, '#', '')) AS n_hash,
-        |  (length(text) - length(replace(text, '...', ''))) // 3 AS n_ell3,
-        |  length(text) - length(replace(text, '…', '')) AS n_ellu
-        |  FROM documents),
-        |g AS (SELECT source,
-        |  len(toks) AS n_w,
-        |  coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS sum_len,
-        |  len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-        |  n_hash + n_ell3 + n_ellu AS n_sym,
-        |  len(nls) AS n_lines,
-        |  len(list_filter(nls, l -> substr(ltrim(l, ' '), 1, 1) IN ('-', '*', '•'))) AS n_bullet,
-        |  len(list_filter(nls, l -> ends_with(rtrim(l, ' '), '...') OR ends_with(rtrim(l, ' '), '…'))) AS n_ellend,
-        |  len(list_filter(['the','be','to','of','and','that','have','with'],
-        |    sw -> list_contains(list_transform(toks, x -> lower(x)), sw))) AS n_stop
-        |  FROM c),
-        |f AS (SELECT source,
-        |  (n_w < 50 OR n_w > 100000) AS f_words,
-        |  (n_w = 0 OR sum_len * 1.0 / n_w < 3.0 OR sum_len * 1.0 / n_w > 10.0) AS f_wlen,
-        |  (n_w > 0 AND n_sym * 1.0 / n_w > 0.1) AS f_sym,
-        |  (n_lines > 0 AND n_bullet * 1.0 / n_lines > 0.9) AS f_bul,
-        |  (n_lines > 0 AND n_ellend * 1.0 / n_lines > 0.3) AS f_ell,
-        |  (n_w = 0 OR n_alpha * 1.0 / n_w < 0.8) AS f_alpha,
-        |  (n_stop < 2) AS f_stop
-        |  FROM g)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN f_words THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_words,
-        |  CAST(sum(CASE WHEN f_wlen THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_word_len,
-        |  CAST(sum(CASE WHEN f_sym THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_symbol,
-        |  CAST(sum(CASE WHEN f_bul THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_bullet,
-        |  CAST(sum(CASE WHEN f_ell THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_ellipsis,
-        |  CAST(sum(CASE WHEN f_alpha THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_alpha,
-        |  CAST(sum(CASE WHEN f_stop THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_stopword,
-        |  CAST(sum(CASE WHEN NOT (f_words OR f_wlen OR f_sym OR f_bul OR f_ell OR f_alpha OR f_stop)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-        |FROM f GROUP BY source ORDER BY source""".stripMargin,
-    // first-occurrence line filter: (x, i) lambda index vs list_position
-    // (first match, 1-based) replays LinkedHashSet order exactly
-    // BM25 replay: every arithmetic step casts into DOUBLE before any
-    // DECIMAL op can happen, and the expression shapes (association order)
-    // mirror Search.bm25TopK exactly; 1.2+1.0 == 2.2 exactly in binary64,
-    // so the literal 2.2 numerator is the same double on both engines
-    "q77_bm25_topk" ->
-      """WITH dl AS (SELECT doc_id,
-        |  len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS dl
-        |  FROM documents),
-        |s AS (SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |tok AS (SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-        |  WHERE t.term IN ('dup', 'window', 'stream')),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |f AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (SELECT tf.doc_id,
-        |    ln(1 + (s.n - f.df + CAST(0.5 AS DOUBLE)) / (f.df + CAST(0.5 AS DOUBLE)))
-        |      * tf.tf * CAST(2.2 AS DOUBLE)
-        |      / (tf.tf + CAST(1.2 AS DOUBLE)
-        |         * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE) * dl.dl / s.avgdl)) AS contrib
-        |  FROM tf JOIN f USING (term) JOIN dl USING (doc_id) CROSS JOIN s)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-        |  round(sum(contrib), 6) AS bm25
-        |FROM scored GROUP BY doc_id
-        |ORDER BY round(sum(contrib), 6) DESC, doc_id LIMIT 20""".stripMargin,
-    "q78_top_bigrams" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS w
-        |  FROM documents),
-        |b AS (SELECT doc_id,
-        |  [w[i] || ' ' || w[i + 1] for i in range(1, greatest(len(w), 1))] AS bgs
-        |  FROM w),
-        |e AS (SELECT doc_id, unnest(bgs) AS bigram FROM b),
-        |d AS (SELECT doc_id, bigram, count(*) AS c FROM e GROUP BY 1, 2)
-        |SELECT bigram, CAST(sum(c) AS BIGINT) AS n_occurrences,
-        |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM d GROUP BY bigram
-        |ORDER BY sum(c) DESC, bigram LIMIT 30""".stripMargin,
-    "q79_jsonl_roundtrip" ->
-      """SELECT doc_id, lang, source, n_chars, text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // chunk replay: same `\s+`-run tokens, 1 + ceil((n-16)/12) chunks,
-    // inclusive list_slice mirrors Spark's slice(start, length=16)
-    "q80_passage_chunks" ->
-      """WITH tkn AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |n AS (SELECT doc_id, t, len(t) AS n FROM tkn),
-        |c AS (SELECT doc_id, t, n,
-        |  CASE WHEN n = 0 THEN 0 WHEN n <= 16 THEN 1
-        |       ELSE 1 + CAST(ceil((n - 16) / 12.0) AS INT) END AS nc
-        |  FROM n),
-        |e AS (SELECT doc_id, t, n, unnest(range(0, nc)) AS i FROM c)
-        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-        |  CAST(least(16, n - i * 12) AS BIGINT) AS n_tokens,
-        |  array_to_string(list_slice(t, i * 12 + 1, i * 12 + 16), ' ') AS chunk_text
-        |FROM e ORDER BY doc_id, chunk_idx""".stripMargin,
-    // exact ranking replay of the no-eviction regime (capacity 4096 >>
-    // fixture vocabulary): same (count desc, bigram asc) tie-break
-    "q81_heavy_hitters" ->
-      """WITH w AS (SELECT source,
-        |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS w
-        |  FROM documents),
-        |b AS (SELECT source,
-        |  unnest([w[i] || ' ' || w[i + 1] for i in range(1, greatest(len(w), 1))]) AS bigram
-        |  FROM w),
-        |c AS (SELECT source, bigram, count(*) AS cnt FROM b GROUP BY 1, 2),
-        |r AS (SELECT source, bigram, cnt,
-        |  row_number() OVER (PARTITION BY source ORDER BY cnt DESC, bigram) AS rank
-        |  FROM c)
-        |SELECT source, CAST(rank AS BIGINT) AS rank, bigram,
-        |  CAST(cnt AS BIGINT) AS est_count, CAST(0 AS BIGINT) AS err
-        |FROM r WHERE rank <= 10 ORDER BY source, rank""".stripMargin,
-    // DSIR replay: md5-60 buckets mod 1024, add-1 smoothed log ratio in
-    // the exact double-op order of Dsir.importanceWeights; round(6)
-    // absorbs summation-order noise (q77 precedent)
-    "q82_dsir_weights" ->
-      """WITH tk AS (SELECT doc_id, lang,
-        |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |f AS (SELECT doc_id, lang,
-        |  list_concat(t, [t[i] || ' ' || t[i + 1] for i in range(1, greatest(len(t), 1))]) AS fs
-        |  FROM tk),
-        |e AS (SELECT doc_id, lang = 'en' AS tgt,
-        |  CAST(concat('0x', substr(md5(u.feat), 1, 15)) AS BIGINT) % 1024 AS b
-        |  FROM f, unnest(fs) AS u(feat)),
-        |g AS (SELECT b, count(*) AS rb,
-        |  sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS tb FROM e GROUP BY 1),
-        |tot AS (SELECT sum(rb) AS r, sum(tb) AS t FROM g),
-        |ratio AS (SELECT b,
-        |  ln((CAST(tb + 1 AS DOUBLE) / (t + 1024)) / (CAST(rb + 1 AS DOUBLE) / (r + 1024))) AS lr
-        |  FROM g CROSS JOIN tot),
-        |d AS (SELECT doc_id, b, count(*) AS c FROM e GROUP BY 1, 2)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_features,
-        |  round(sum(c * lr), 6) AS dsir_logw
-        |FROM d JOIN ratio USING (b) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q75_line_dedup" ->
-      """WITH l AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM documents),
-        |k AS (SELECT doc_id, len(ls) AS n_lines,
-        |  list_filter(ls, (x, i) -> list_position(ls, x) = i) AS kept FROM l)
-        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-        |  CAST(len(kept) AS BIGINT) AS n_kept,
-        |  CAST(length(array_to_string(kept, chr(10))) AS BIGINT) AS n_chars_after
-        |FROM k ORDER BY doc_id""".stripMargin,
-    // pooled-centroid replay: x1000 quantization makes every element
-    // integral, so sum/count is exact in any accumulation order on both
-    // engines — a bit-exact double compare, no rounding cap needed
-    "q83_label_centroids" ->
-      """WITH q AS (SELECT label,
-        |  list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000, 0)) AS qv
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-        |u AS (SELECT label, unnest(qv) AS v, unnest(range(0, len(qv))) AS i FROM q),
-        |m AS (SELECT label, i AS dim, sum(v) / count(v) AS c FROM u GROUP BY label, i),
-        |n AS (SELECT label, count(*) AS n_vecs FROM q GROUP BY label)
-        |SELECT m.label, n.n_vecs, CAST(m.dim AS BIGINT) AS dim, m.c
-        |FROM m JOIN n ON m.label IS NOT DISTINCT FROM n.label
-        |ORDER BY m.label, m.dim""".stripMargin,
-    // duplicated-span replay: same \s+ word convention (q80), md5-60 gram
-    // hashes, df>=2 over DISTINCT docs, gaps-and-islands merge with the
-    // same ">n breaks" rule (abutting windows merge)
-    "q84_duplicated_spans" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), x -> x <> '') AS w
-        |  FROM documents),
-        |gr AS (SELECT doc_id, i - 1 AS pos,
-        |  CAST(concat('0x', substr(md5(array_to_string(list_slice(w, i, i + 7), ' ')), 1, 15)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 6, 1))) AS i FROM w) s),
-        |d AS (SELECT g FROM (SELECT DISTINCT g, doc_id FROM gr) t
-        |  GROUP BY g HAVING count(*) >= 2),
-        |p AS (SELECT gr.doc_id, gr.pos FROM gr JOIN d USING (g)),
-        |m AS (SELECT doc_id, pos,
-        |  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 8
-        |       THEN 1 ELSE 0 END AS brk FROM p),
-        |i AS (SELECT doc_id, pos,
-        |  sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m)
-        |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-        |  CAST(max(pos) + 8 AS BIGINT) AS span_end
-        |FROM i GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-    // span-removal replay: q84's span pipeline + keep tokens not covered
-    // by any [s,e) span, rejoined with single spaces (the kernel's
-    // whitespace normalization) — byte-exact string compare
-    "q85_strip_spans" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), x -> x <> '') AS w
-        |  FROM documents),
-        |gr AS (SELECT doc_id, i - 1 AS pos,
-        |  CAST(concat('0x', substr(md5(array_to_string(list_slice(w, i, i + 7), ' ')), 1, 15)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 6, 1))) AS i FROM w) s),
-        |d AS (SELECT g FROM (SELECT DISTINCT g, doc_id FROM gr) t
-        |  GROUP BY g HAVING count(*) >= 2),
-        |p AS (SELECT gr.doc_id, gr.pos FROM gr JOIN d USING (g)),
-        |m AS (SELECT doc_id, pos,
-        |  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 8
-        |       THEN 1 ELSE 0 END AS brk FROM p),
-        |isl AS (SELECT doc_id, pos,
-        |  sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m),
-        |spn AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e
-        |  FROM isl GROUP BY doc_id, island),
-        |sl AS (SELECT doc_id, list({'s': s, 'e': e}) AS sp FROM spn GROUP BY doc_id)
-        |SELECT w.doc_id,
-        |  CASE WHEN w.w IS NULL THEN NULL
-        |       -- array_to_string([]) is NULL in DuckDB; a fully-covered
-        |       -- doc must compare as '' like the kernel emits
-        |       ELSE coalesce(array_to_string([w.w[i] for i in range(1, len(w.w) + 1)
-        |         if sl.sp IS NULL OR len(list_filter(sl.sp, r -> r.s <= i - 1 AND i - 1 < r.e)) = 0],
-        |         ' '), '') END AS clean_text
-        |FROM w LEFT JOIN sl USING (doc_id)
-        |ORDER BY w.doc_id""".stripMargin,
-    // BPE trainer replay: 6 generated CTE rounds (see bpeMergesOracleSql)
-    "q86_bpe_merges" -> bpeMergesOracleSql(6),
-    // k-center replay: 8 generated rounds (see kCenterOracleSql)
-    "q87_kcenter_coreset" -> kCenterOracleSql(8),
-    // HTML extraction replay: same regexp/replace chain (RE2-shared
-    // syntax; 'g' flag = Spark's replace-all default; || = Spark concat
-    // null semantics)
-    "q88_html_extract" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><style>p { color: red }</style></head><body><h1>' || source ||
-        |  '</h1><!-- id --><p>' || text ||
-        |  '</p><script>var x = 1 &amp;&amp; 2;</script></body></html>' AS html
-        |  FROM documents),
-        |s1 AS (SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(html,
-        |    '(?s)<[sS][cC][rR][iI][pP][tT][^>]*>.*?</[sS][cC][rR][iI][pP][tT]>', ' ', 'g'),
-        |    '(?s)<[sS][tT][yY][lL][eE][^>]*>.*?</[sS][tT][yY][lL][eE]>', ' ', 'g'),
-        |    '(?s)<!--.*?-->', ' ', 'g') AS t FROM h),
-        |s2 AS (SELECT doc_id, regexp_replace(t, '(?s)<[^>]*>', ' ', 'g') AS t FROM s1),
-        |s3 AS (SELECT doc_id,
-        |  replace(replace(replace(replace(replace(replace(t,
-        |    '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |    '&#39;', chr(39)), '&amp;', '&') AS t FROM s2)
-        |SELECT doc_id,
-        |  trim(regexp_replace(t, '[ \t\r\n\f]+', ' ', 'g'), ' ') AS text_clean
-        |FROM s3 ORDER BY doc_id""".stripMargin,
-    // WARC roundtrip: the parsed records must equal the identity
-    // derivation off the source table (same synthesized fields)
-    "q89_warc_roundtrip" ->
-      """WITH base AS (SELECT doc_id, text, source FROM documents
-        |  WHERE text IS NOT NULL AND source IS NOT NULL)
-        |SELECT doc_id, CAST(0 AS BIGINT) AS idx, 'response' AS warc_type,
-        |  'https://example.org/doc/' || doc_id AS target_uri,
-        |  CAST(strlen(text) AS BIGINT) AS content_length, text AS payload
-        |FROM base
-        |UNION ALL
-        |SELECT doc_id, CAST(1 AS BIGINT), 'metadata',
-        |  'https://example.org/meta/' || doc_id,
-        |  CAST(strlen(source) AS BIGINT), source
-        |FROM base
-        |ORDER BY doc_id, idx""".stripMargin,
-    // ingestion-chain replay: rebuild the page, replay extraction +
-    // token gate + agg — parse correctness is implied by equality
-    "q90_ingest_chain" ->
-      """WITH h AS (SELECT source,
-        |  '<html><head><style>p { color: red }</style></head><body><h1>' || source ||
-        |  '</h1><!-- id --><p>' || text ||
-        |  '</p><script>var x = 1 &amp;&amp; 2;</script></body></html>' AS html
-        |  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
-        |s1 AS (SELECT source,
-        |  regexp_replace(regexp_replace(regexp_replace(html,
-        |    '(?s)<[sS][cC][rR][iI][pP][tT][^>]*>.*?</[sS][cC][rR][iI][pP][tT]>', ' ', 'g'),
-        |    '(?s)<[sS][tT][yY][lL][eE][^>]*>.*?</[sS][tT][yY][lL][eE]>', ' ', 'g'),
-        |    '(?s)<!--.*?-->', ' ', 'g') AS t FROM h),
-        |s2 AS (SELECT source, regexp_replace(t, '(?s)<[^>]*>', ' ', 'g') AS t FROM s1),
-        |s3 AS (SELECT source,
-        |  replace(replace(replace(replace(replace(replace(t,
-        |    '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |    '&#39;', chr(39)), '&amp;', '&') AS t FROM s2),
-        |c AS (SELECT source,
-        |  trim(regexp_replace(t, '[ \t\r\n\f]+', ' ', 'g'), ' ') AS clean FROM s3),
-        |w AS (SELECT source, clean,
-        |  len(list_filter(string_split_regex(clean, '[\s\x0b]+'), x -> x <> '')) AS n_tok
-        |  FROM c)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |  CAST(sum(length(clean)) AS BIGINT) AS n_chars
-        |FROM w WHERE n_tok >= 50
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // q91 replay: the q90 extraction CTEs composed with the q74 Gopher
-    // gate CTEs, applied to the CLEANED text (the WARC roundtrip is
-    // identity, oracle-verified by q89)
-    "q91_ingest_gate" -> ingestGateOracleSql("source", "source"),
-    // q100 replay: the SAME extraction+gate chain from the
-    // PRE-compression truth, grouped by the shard assignment the fixture
-    // writer used (doc_id % 8) — the gzip/file roundtrip must be
-    // invisible to every count for the hash to match
-    "q100_warcgz_ingest" ->
-      ingestGateOracleSql("CAST(doc_id % 8 AS INT)", "shard"),
-    // batch-BM25 replay: q77's arithmetic with a VALUES query table;
-    // same double-casting discipline and 6-dp rounding before the
-    // per-query rank cut
-    "q92_bm25_batch" ->
-      """WITH q AS (SELECT * FROM (VALUES
-        |    ('qa', 'dup'), ('qa', 'window'),
-        |    ('qb', 'stream'), ('qb', 'spark'), ('qb', 'merge'),
-        |    ('qc', 'line')) AS t(query_id, term)),
-        |dl AS (SELECT doc_id,
-        |  len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS dl
-        |  FROM documents),
-        |s AS (SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |tok AS (SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-        |  WHERE t.term IN (SELECT DISTINCT term FROM q)),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |f AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (SELECT tf.doc_id, tf.term,
-        |    ln(1 + (s.n - f.df + CAST(0.5 AS DOUBLE)) / (f.df + CAST(0.5 AS DOUBLE)))
-        |      * tf.tf * CAST(2.2 AS DOUBLE)
-        |      / (tf.tf + CAST(1.2 AS DOUBLE)
-        |         * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE) * dl.dl / s.avgdl)) AS contrib
-        |  FROM tf JOIN f USING (term) JOIN dl USING (doc_id) CROSS JOIN s),
-        |aggq AS (SELECT q.query_id, scored.doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_terms,
-        |    round(sum(contrib), 6) AS bm25
-        |  FROM scored JOIN q USING (term)
-        |  GROUP BY q.query_id, scored.doc_id),
-        |r AS (SELECT *, row_number() OVER
-        |    (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS rk
-        |  FROM aggq)
-        |SELECT query_id, doc_id, n_terms, bm25, CAST(rk AS BIGINT) AS rank
-        |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin,
-    // gzip roundtrip: the oracle is the identity — the compressed bytes
-    // are engine-specific, but the roundtripped TEXT must be byte-equal
-    "q93_gzip_roundtrip" ->
-      """SELECT doc_id, text AS text_rt, length(text) AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // URL parse replay: identical construction, identical regexes (the
-    // shared Java/RE2 syntax), identical ''-vs-NULL discipline; the
-    // eTLD+1 ladder replays the PublicSuffix snapshot as IN lists
-    "q94_url_parts" ->
-      ("""WITH u AS (SELECT doc_id,
-        |  ['https','HTTP','ftp'][CAST(doc_id % 3 + 1 AS INT)] || '://' ||
-        |  CASE WHEN doc_id % 7 = 0 THEN 'user:pw@' ELSE '' END ||
-        |  'Sub' || (doc_id % 5) || '.host' || (doc_id % 11) || '.example.' ||
-        |  ['com','org','co.uk','s3.amazonaws.com','ck','www.ck'][CAST(doc_id % 6 + 1 AS INT)] ||
-        |  CASE WHEN doc_id % 4 = 0 THEN ':8080' ELSE '' END ||
-        |  '/p/' || doc_id ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '?q=x&n=1' ELSE '' END ||
-        |  CASE WHEN doc_id % 6 = 0 THEN '#frag' ELSE '' END AS url
-        |  FROM documents),
-        |a AS (SELECT doc_id, url,
-        |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1) AS auth_raw
-        |  FROM u),
-        |n AS (SELECT doc_id, url, auth_raw,
-        |  regexp_extract(auth_raw, '(?:[^@]*@)?([^@]*)$', 1) AS no_user
-        |  FROM a),
-        |h AS (SELECT doc_id, url, auth_raw,
-        |  nullif(lower(CASE WHEN starts_with(no_user, '[')
-        |    THEN regexp_extract(no_user, '^(\[[^\]]*\])', 1)
-        |    ELSE regexp_extract(no_user, '^([^:]*)', 1) END), '') AS host
-        |  FROM n)
-        |SELECT doc_id,
-        |  nullif(lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)), '') AS scheme,
-        |  host,
-        |  CAST(nullif(regexp_extract(nullif(auth_raw, ''), ':([0-9]+)$', 1), '') AS INT) AS port,
-        |  CASE WHEN nullif(auth_raw, '') IS NOT NULL
-        |    THEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#\r\n]*([^?#]*)', 1) END AS path,
-        |  CASE WHEN nullif(auth_raw, '') IS NOT NULL
-        |    THEN nullif(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^?#]*\?([^#]*)', 1), '') END AS query,
-        |  CASE WHEN NOT starts_with(host, '[')
-        |    THEN nullif(regexp_extract(host, '([^.]+[.][^.]+)$', 1), '') END AS domain,
-        |""".stripMargin +
-        etld1OracleSql("host") + " AS etld1\nFROM h ORDER BY doc_id"),
-    // multilingual lang-ID replay: unicode tokens over the eight
-    // samples, generated marker-hit counts, generated argmax ladder
-    "q103_lang_guess_multilingual" ->
-      ("WITH d AS (SELECT doc_id,\n" +
-        "  ['这是一个的测试文本和数据了很好','日本語のテストでこれはをにが書いた'," +
-        "'이 문서의 내용은 한국어 텍스트를 가지고 있다','и в не на что он как это текст'," +
-        "'και το να της με που την ελληνικά','के है में की और से को का पाठ'," +
-        "'the quick and of to is you that it','12345 67890 --- !!!']" +
-        "[CAST(doc_id % 8 + 1 AS INT)] AS sample\n  FROM documents),\n" +
-        "tk AS (SELECT doc_id, " + unicodeToksSql("sample") + " AS toks FROM d),\n" +
-        "hits AS (SELECT doc_id,\n  " + langGuessHitsSql + "\n  FROM tk),\n" +
-        "lg AS (SELECT doc_id,\n  " + langGuessCaseSql + " AS lang\n  FROM hits)\n" +
-        "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS first_id\n" +
-        "FROM lg GROUP BY lang ORDER BY lang"),
-    // C4 replay: same decoration, line rules via list_filter over the
-    // stripped lines (explicit [ \t\x0B\f\r] class — NOT trim()), word
-    // count via ws-run split, javascript/lorem/blocklist via the ASCII
-    // translate fold (Unicode lower() is engine-divergent)
-    "q104_c4_filter" ->
-      """WITH d AS (SELECT doc_id,
-        |  'This line ends with a period and has enough words.' || chr(10) ||
-        |  'Body ' || text || ' tail words end here.' || chr(10) ||
-        |  'Too short.' || chr(10) ||
-        |  'No terminal punctuation on this line at all' || chr(10) ||
-        |  CASE WHEN doc_id % 3 = 0 THEN 'Please enable JavaScript to view comments.'
-        |    ELSE 'A perfectly ordinary fifth line goes here.' END || chr(10) ||
-        |  CASE WHEN doc_id % 5 = 0 THEN 'Lorem Ipsum dolor sit amet consectetur adipiscing elit.'
-        |    ELSE 'Another normal sentence with plenty of words present.' END || chr(10) ||
-        |  CASE WHEN doc_id % 7 = 0 THEN 'if (x) { return y; } // code'
-        |    ELSE 'Closing body sentence wraps the page nicely.' END || chr(10) ||
-        |  '   Padded line has exactly seven words total.   ' || chr(10) ||
-        |  CASE WHEN doc_id % 11 = 0 THEN 'This sentence mentions BadWord99 unfortunately today.'
-        |    ELSE 'This sentence mentions nothing objectionable at all.' END AS page
-        |  FROM documents WHERE text IS NOT NULL),
-        |tl AS (SELECT doc_id, page,
-        |  list_transform(string_split(page, chr(10)), l ->
-        |    regexp_replace(regexp_replace(l, '^[ \t\x0B\f\r]+', ''), '[ \t\x0B\f\r]+$', '')) AS st
-        |  FROM d),
-        |kp AS (SELECT doc_id, page,
-        |  list_filter(st, l ->
-        |    regexp_matches(l, '[.?!"]$')
-        |    AND len(list_filter(string_split_regex(l, '[ \t\x0B\f\r]+'), x -> x <> '')) >= 5
-        |    AND NOT contains(translate(l, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'javascript')) AS kept
-        |  FROM tl),
-        |f AS (SELECT doc_id,
-        |  CAST(len(string_split(page, chr(10))) AS BIGINT) AS n_lines,
-        |  CAST(len(kept) AS BIGINT) AS n_kept,
-        |  CAST(coalesce(length(array_to_string(kept, chr(10))), 0) AS BIGINT) AS kept_chars,
-        |  contains(translate(page, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'lorem ipsum') AS has_lorem,
-        |  contains(page, '{') AS has_brace,
-        |  contains(translate(page, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), 'badword99') AS has_blocked
-        |  FROM kp)
-        |SELECT doc_id, n_lines, n_kept, kept_chars, has_lorem, has_brace, has_blocked,
-        |  (NOT has_lorem AND NOT has_brace AND NOT has_blocked AND n_kept >= 3) AS pass
-        |FROM f ORDER BY doc_id""".stripMargin,
-    // PageRank replay: same decoration, href extraction via the same
-    // shared-syntax regexp, hosts via the q94 parse chain, domains via
-    // the eTLD+1 IN-ladder, then 5 UNROLLED iterations of the identical
-    // integer arithmetic (// is DuckDB's integral divide; every sum is
-    // CAST back to BIGINT because DuckDB sums integers into HUGEINT)
-    "q105_domain_pagerank" -> {
-      def hostSql(u: String): String =
-        raw"""nullif(lower(CASE WHEN starts_with(regexp_extract(regexp_extract($u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1), '(?:[^@]*@)?([^@]*)$$', 1), '[')
-          |    THEN regexp_extract(regexp_extract(regexp_extract($u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1), '(?:[^@]*@)?([^@]*)$$', 1), '^(\[[^\]]*\])', 1)
-          |    ELSE regexp_extract(regexp_extract(regexp_extract($u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1), '(?:[^@]*@)?([^@]*)$$', 1), '^([^:]*)', 1) END), '')""".stripMargin
-      def iterSql(prev: String, cur: String): String =
-        raw"""$cur AS (SELECT nb.node, nb.b + (85 * coalesce(i.inc, 0)) // 100 AS rank
-          |  FROM nb LEFT JOIN (
-          |    SELECT e.dst, CAST(sum((r.rank * e.w) // o.out_w) AS BIGINT) AS inc
-          |    FROM $prev r JOIN e ON r.node = e.src JOIN outw o ON e.src = o.src
-          |    GROUP BY e.dst) i ON nb.node = i.dst)""".stripMargin
-      val iters = (1 to 5).map(k => iterSql(s"r${k - 1}", s"r$k")).mkString(",\n")
-      raw"""WITH d AS (SELECT doc_id,
-        |  'https://www.dom' || (doc_id % 11) || '.' ||
-        |    CASE WHEN (doc_id % 11) % 3 = 0 THEN 'co.uk' ELSE 'com' END || '/page/' || doc_id AS page_url,
-        |  '<html><body><p>Some page text.</p><a href="https://www.dom' || ((doc_id % 11 + 1) % 11) || '.' ||
-        |    CASE WHEN ((doc_id % 11 + 1) % 11) % 3 = 0 THEN 'co.uk' ELSE 'com' END ||
-        |    '/x">one</a><a class="nav" href="HTTPS://dom' || (((doc_id % 11) * 3 + 7) % 11) || '.' ||
-        |    CASE WHEN (((doc_id % 11) * 3 + 7) % 11) % 3 = 0 THEN 'co.uk' ELSE 'com' END ||
-        |    ':443/y?q=1">two</a><a href="/rel/path">r</a><a href="mailto:x@y.example">m</a>' ||
-        |    CASE WHEN doc_id % 4 = 0 THEN '<a href="https://cdn.shared-assets.com/lib.js">s</a>' ELSE '' END ||
-        |    '</body></html>' AS html
-        |  FROM documents),
-        |l AS (SELECT page_url,
-        |  unnest(regexp_extract_all(html, '<[Aa][ \t\r\n][^>]*[Hh][Rr][Ee][Ff][ \t\r\n]*=[ \t\r\n]*"([^"]*)"', 1)) AS href
-        |  FROM d),
-        |hh AS (SELECT
-        |  """.stripMargin + hostSql("page_url") + " AS src_host,\n  " +
-        hostSql("href") + " AS dst_host FROM l),\n" +
-        "dm AS (SELECT " + etld1OracleSql("src_host") + " AS src,\n  " +
-        etld1OracleSql("dst_host") + " AS dst FROM hh),\n" +
-        raw"""e AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM dm
-        |  WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst GROUP BY 1, 2),
-        |outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS out_w FROM e GROUP BY 1),
-        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-        |nb AS (SELECT node, ((1000000000000 * 15) // 100) // n AS b,
-        |  1000000000000 // n AS rr FROM nodes CROSS JOIN nn),
-        |r0 AS (SELECT node, rr AS rank FROM nb),
-        |""".stripMargin + iters + raw"""
-        |SELECT node AS domain, CAST(rank AS BIGINT) AS rank FROM r5 ORDER BY domain""".stripMargin
-    },
-    // canonicalization replay: the q94 parse chain, then the SAME
-    // tracking-strip regex chain + list_sort + default-port/path/query
-    // assembly, aggregated by canonical key
-    "q102_url_canonical" ->
-      ("""WITH u AS (SELECT doc_id,
-        |  ['http','HTTPS','http'][CAST(doc_id % 3 + 1 AS INT)] || '://' ||
-        |  CASE WHEN doc_id % 7 = 0 THEN 'crawler:pw@' ELSE '' END ||
-        |  'Host' || (doc_id % 11) || '.example.' ||
-        |  ['com','org','co.uk'][CAST(doc_id % 3 + 1 AS INT)] ||
-        |  [':80',':443','',':8080'][CAST(doc_id % 4 + 1 AS INT)] ||
-        |  CASE WHEN doc_id % 5 = 0 THEN '' ELSE '/page/' || (doc_id % 50) END ||
-        |  ['?b=2&utm_source=feed&a=1','?a=1&gclid=XyZ123&b=2',
-        |   '?utm_campaign=x&utm_medium=y','','?b=2&a=1&fbclid=F00',
-        |   '?UTM_Source=Feed&a=1&b=2','?b=2&fbclid&a=1'][CAST(doc_id % 7 + 1 AS INT)] ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '#section-3' ELSE '' END AS url
-        |  FROM documents),
-        |a AS (SELECT doc_id, url,
-        |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1) AS auth_raw
-        |  FROM u),
-        |n AS (SELECT doc_id, url, auth_raw,
-        |  regexp_extract(auth_raw, '(?:[^@]*@)?([^@]*)$', 1) AS no_user FROM a),
-        |h AS (SELECT doc_id,
-        |  nullif(lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)), '') AS scheme,
-        |  nullif(lower(CASE WHEN starts_with(no_user, '[')
-        |    THEN regexp_extract(no_user, '^(\[[^\]]*\])', 1)
-        |    ELSE regexp_extract(no_user, '^([^:]*)', 1) END), '') AS host,
-        |  CAST(nullif(regexp_extract(nullif(auth_raw, ''), ':([0-9]+)$', 1), '') AS INT) AS port,
-        |  CASE WHEN nullif(auth_raw, '') IS NOT NULL
-        |    THEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#\r\n]*([^?#]*)', 1) END AS path,
-        |  CASE WHEN nullif(auth_raw, '') IS NOT NULL
-        |    THEN nullif(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^?#]*\?([^#]*)', 1), '') END AS query
-        |  FROM n),
-        |sq AS (SELECT doc_id, scheme, host, port, path, query,
-        |  array_to_string(list_sort(string_split(
-        |    regexp_replace(regexp_replace(regexp_replace(query,
-        |      '""".stripMargin +
-        graft.functions.Url.TrackingStripRe + """', '\1', 'g'),
-        |      '&&+', '&', 'g'),
-        |      '^&+|&+$', '', 'g'), '&')), '&') AS sortedq
-        |  FROM h),
-        |c AS (SELECT doc_id,
-        |  CASE WHEN scheme IS NOT NULL AND host IS NOT NULL THEN
-        |    scheme || '://' || host ||
-        |    CASE WHEN port IS NOT NULL
-        |      AND NOT (scheme = 'http' AND port = 80)
-        |      AND NOT (scheme = 'https' AND port = 443)
-        |      THEN ':' || port ELSE '' END ||
-        |    CASE WHEN path = '' THEN '/' ELSE path END ||
-        |    CASE WHEN query IS NOT NULL AND sortedq <> '' THEN '?' || sortedq ELSE '' END
-        |  END AS canonical
-        |  FROM sq)
-        |SELECT canonical, CAST(count(*) AS BIGINT) AS n_raw,
-        |  min(doc_id) AS first_id
-        |FROM c GROUP BY canonical ORDER BY canonical""".stripMargin),
-    // L36+L58 composition replay: the q94 URL chain, the eTLD+1 suffix
-    // ladder (IN-list replay of the PublicSuffix snapshot), then the
-    // q72 md5-rank cap
-    "q97_url_domain_cap" ->
-      ("""WITH u AS (SELECT doc_id, n_chars,
-        |  ['https','HTTP','ftp'][CAST(doc_id % 3 + 1 AS INT)] || '://' ||
-        |  CASE WHEN doc_id % 7 = 0 THEN 'user:pw@' ELSE '' END ||
-        |  'Sub' || (doc_id % 5) || '.host' || (doc_id % 11) || '.example.' ||
-        |  ['com','org','co.uk','s3.amazonaws.com','ck','www.ck'][CAST(doc_id % 6 + 1 AS INT)] ||
-        |  CASE WHEN doc_id % 4 = 0 THEN ':8080' ELSE '' END ||
-        |  '/p/' || doc_id ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '?q=x&n=1' ELSE '' END ||
-        |  CASE WHEN doc_id % 6 = 0 THEN '#frag' ELSE '' END AS url
-        |  FROM documents),
-        |a AS (SELECT doc_id, n_chars,
-        |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#\r\n]*)', 1) AS auth_raw
-        |  FROM u),
-        |n2 AS (SELECT doc_id, n_chars,
-        |  regexp_extract(auth_raw, '(?:[^@]*@)?([^@]*)$', 1) AS no_user FROM a),
-        |h AS (SELECT doc_id, n_chars,
-        |  nullif(lower(CASE WHEN starts_with(no_user, '[')
-        |    THEN regexp_extract(no_user, '^(\[[^\]]*\])', 1)
-        |    ELSE regexp_extract(no_user, '^([^:]*)', 1) END), '') AS host
-        |  FROM n2),
-        |d AS (SELECT doc_id, n_chars,
-        |""".stripMargin +
-        etld1OracleSql("host") + " AS domain\n" +
-        """  FROM h),
-        |r AS (SELECT domain, n_chars,
-        |  row_number() OVER (PARTITION BY domain
-        |    ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT),
-        |      doc_id) AS rk
-        |  FROM d)
-        |SELECT domain, count(*) AS n_kept, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM r WHERE rk <= 50 GROUP BY domain ORDER BY domain""".stripMargin),
-    // containment replay: the q41 CTE chain with both asymmetric
-    // directions; filter on the ROUNDED values exactly like the query
-    "q96_containment_pairs" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
-        |  FROM documents),
-        |n AS (SELECT doc_id,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 4), ' ')
-        |    for i in range(1, greatest(len(w) - 3, 1))]) AS ng,
-        |  list_distinct([array_to_string(list_slice(w, i, i + 7), ' ')
-        |    for i in range(1, greatest(len(w) - 6, 1))]) AS blk
-        |  FROM w),
-        |ex AS (SELECT doc_id, b8 FROM (SELECT doc_id, unnest(blk) AS b8 FROM n) e0
-        |  QUALIFY row_number() OVER (PARTITION BY b8 ORDER BY doc_id) <= 64),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM ex a JOIN ex b ON a.b8 = b.b8 AND a.doc_id < b.doc_id),
-        |p AS (SELECT c.id_a, c.id_b,
-        |  CAST(len(list_intersect(na.ng, nb.ng)) AS DOUBLE) AS i,
-        |  CAST(len(na.ng) AS DOUBLE) AS sa,
-        |  CAST(len(nb.ng) AS DOUBLE) AS sb,
-        |  CAST(len(list_distinct(list_concat(na.ng, nb.ng))) AS DOUBLE) AS u
-        |  FROM cand c JOIN n na ON c.id_a = na.doc_id JOIN n nb ON c.id_b = nb.doc_id)
-        |SELECT id_a, id_b,
-        |  round(i / sa, 6) AS cont_a_in_b,
-        |  round(i / sb, 6) AS cont_b_in_a,
-        |  round(i / u, 6) AS jaccard
-        |FROM p
-        |WHERE round(i / sa, 6) >= 0.5 OR round(i / sb, 6) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-    // sentence-segmentation replay: same decoration, same piece regex,
-    // same explicit-class trim, same empty-drop
-    "q95_sentences" ->
-      """WITH d AS (SELECT doc_id,
-        |  'Dr intro here' || ['. ','! ','? '][CAST(doc_id % 3 + 1 AS INT)] ||
-        |  text || ['.','!','?'][CAST(doc_id % 3 + 1 AS INT)] || ' Tail claim' ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '.' ELSE '' END AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |p AS (SELECT doc_id,
-        |  list_filter(
-        |    list_transform(regexp_extract_all(t, '[^.!?]+[.!?]+["'')\]]*|[^.!?]+$'),
-        |      x -> regexp_replace(x, '^[ \t\n\f\r]+|[ \t\n\f\r]+$', '', 'g')),
-        |    x -> x <> '') AS s
-        |  FROM d)
-        |SELECT doc_id,
-        |  CAST(len(s) AS INT) AS n_sentences,
-        |  s[1] AS first_sentence,
-        |  round(CAST(list_sum(list_transform(s, x -> length(x))) AS DOUBLE)
-        |    / greatest(len(s), 1), 4) AS avg_chars
-        |FROM p ORDER BY doc_id""".stripMargin,
-    // abbreviation-guard replay: decoration, the generated mask fold
-    // (same list/order/sentinel as production), the q95 segmentation,
-    // then the sentinel restore
-    "q101_sentences_abbrev" ->
-      ("""WITH d AS (SELECT doc_id,
-        |  ['Dr. Smith arrived at 5 p.m. sharp','See e.g. the appendix','Prof. Lee et al. wrote this'][CAST(doc_id % 3 + 1 AS INT)] ||
-        |  ['. ','! ','? '][CAST(doc_id % 3 + 1 AS INT)] || text ||
-        |  ['.','!','?'][CAST(doc_id % 3 + 1 AS INT)] || ' The U.S. case closed' ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '.' ELSE '' END AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |m AS (SELECT doc_id, """.stripMargin +
-        abbrevMaskSql("t") + " AS mt FROM d),\n" +
-        """p AS (SELECT doc_id,
-        |  list_transform(
-        |    list_filter(
-        |      list_transform(regexp_extract_all(mt, '[^.!?]+[.!?]+["'')\]]*|[^.!?]+$'),
-        |        x -> regexp_replace(x, '^[ \t\n\f\r]+|[ \t\n\f\r]+$', '', 'g')),
-        |      x -> x <> ''),
-        |    x -> replace(x, '""".stripMargin + "\uE000" + """', '.')) AS s
-        |  FROM m)
-        |SELECT doc_id,
-        |  CAST(len(s) AS INT) AS n_sentences,
-        |  s[1] AS first_sentence,
-        |  s[-1] AS last_sentence,
-        |  round(CAST(list_sum(list_transform(s, x -> length(x))) AS DOUBLE)
-        |    / greatest(len(s), 1), 4) AS avg_chars
-        |FROM p ORDER BY doc_id""".stripMargin),
-    // unicode-tokenizer replay: same decoration, the codepoint-class
-    // formula (CJK spacing + ASCII translate + \p{L}\p{M}\p{N} runs)
-    // standing in for the compiled kernel, same CJK class constant
-    // q112: word-bounded single-word blocklist hits == token-equality
-    // counts (the matched span must be non-alnum-bounded on both sides,
-    // i.e. it IS a full [a-z0-9]+ token after the ASCII fold) — a
-    // different plan (explode + join) than the automaton scan.
-    "q112_blocklist_filter" ->
-      ("WITH pats(p) AS (VALUES " +
-        q112Patterns.map(p => s"('$p')").mkString(", ") + "),\n" +
-        "tok AS (SELECT d.doc_id, t.w\n" +
-        "  FROM documents d,\n" +
-        "    unnest(regexp_extract_all(translate(d.text,\n" +
-        "      'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),\n" +
-        "      '[a-z0-9]+')) AS t(w)\n" +
-        "  WHERE d.text IS NOT NULL),\n" +
-        "h AS (SELECT tok.doc_id, count(*) AS n\n" +
-        "  FROM tok JOIN pats ON tok.w = pats.p GROUP BY tok.doc_id)\n" +
-        "SELECT d.doc_id, CAST(coalesce(h.n, 0) AS INTEGER) AS n_hits,\n" +
-        "  CAST(CASE WHEN coalesce(h.n, 0) > 0 THEN 1 ELSE 0 END AS INTEGER) AS blocked\n" +
-        "FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id\n" +
-        "WHERE d.text IS NOT NULL\n" +
-        "ORDER BY d.doc_id"),
-
-    // q113: the strip regex is built with plain-string escapes so the
-    // SQL carries literal backslash classes (Java/RE2-shared syntax)
-    "q113_domain_boilerplate" -> {
-      val strip = (x: String) =>
-        "regexp_replace(regexp_replace(" + x +
-          ", '^[ \\t\\x0B\\f\\r]+', ''), '[ \\t\\x0B\\f\\r]+$', '')"
-      val fp = (x: String) =>
-        "CAST(concat('0x', substr(md5(" + x + "), 1, 15)) AS BIGINT)"
-      "WITH d AS (SELECT doc_id, 'dom' || (doc_id % 7) AS domain,\n" +
-        "    'Home | About | Contact - dom' || (doc_id % 7) || chr(10) ||\n" +
-        "    CASE WHEN doc_id % 3 = 0 THEN 'Subscribe banner dom' || (doc_id % 7) || chr(10) ELSE '' END ||\n" +
-        "    text || chr(10) ||\n" +
-        "    'unique doc line ' || doc_id || chr(10) ||\n" +
-        "    '(c) copyright dom' || (doc_id % 7) || ' all rights reserved' AS t\n" +
-        "  FROM documents WHERE text IS NOT NULL),\n" +
-        "votes AS (SELECT DISTINCT domain, doc_id, " + fp("u.sl") + " AS f\n" +
-        "  FROM (SELECT doc_id, domain, list_transform(string_split(t, chr(10)), l -> " +
-        strip("l") + ") AS sls FROM d), unnest(sls) AS u(sl)\n" +
-        "  WHERE u.sl <> ''),\n" +
-        "freq AS (SELECT domain, f, count(*) AS df FROM votes GROUP BY 1, 2),\n" +
-        "nd AS (SELECT domain, count(*) AS n FROM d GROUP BY 1),\n" +
-        "boiler AS (SELECT freq.domain, list(freq.f) AS bf\n" +
-        "  FROM freq JOIN nd ON freq.domain = nd.domain\n" +
-        "  WHERE df >= 2 AND CAST(df AS DOUBLE) >= 0.5 * n\n" +
-        "  GROUP BY freq.domain),\n" +
-        "res AS (SELECT d.doc_id, d.domain,\n" +
-        "    list_filter(string_split(d.t, chr(10)), l ->\n" +
-        "      " + strip("l") + " = ''\n" +
-        "      OR NOT list_contains(coalesce(b.bf, []), " + fp(strip("l")) + ")) AS kept,\n" +
-        "    len(string_split(d.t, chr(10))) AS nl\n" +
-        "  FROM d LEFT JOIN boiler b ON d.domain = b.domain)\n" +
-        "SELECT doc_id, domain, coalesce(array_to_string(kept, chr(10)), '') AS cleaned,\n" +
-        "  CAST(nl AS INTEGER) AS n_lines, CAST(nl - len(kept) AS INTEGER) AS n_removed\n" +
-        "FROM res ORDER BY doc_id"
-    },
-
-    // q114: q66's integer largest-remainder replay with the temperature
-    // weight CTE in front (sqrt exact-rounded, power-of-two scale, floor
-    // — all engine-exact) and the availability cap via least()
-    "q114_temperature_mix" ->
-      """WITH cnt AS (SELECT lang, count(*) AS c FROM documents GROUP BY lang),
-        |w AS (SELECT lang, c, CAST(floor(sqrt(CAST(c AS DOUBLE)) * 1048576) AS BIGINT) AS wt FROM cnt),
-        |tw AS (SELECT sum(wt) AS tw FROM w),
-        |q0 AS (SELECT lang, c, (90 * wt) // tw AS base, (90 * wt) % tw AS rem FROM w, tw),
-        |deficit AS (SELECT 90 - sum(base) AS d FROM q0),
-        |q AS (SELECT lang,
-        |    least(c, base + CASE WHEN row_number() OVER (ORDER BY rem DESC, lang) <= d
-        |                         THEN 1 ELSE 0 END) AS quota
-        |  FROM q0, deficit),
-        |r AS (SELECT doc_id, lang, source,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT),
-        |        doc_id) AS rn
-        |  FROM documents)
-        |SELECT r.doc_id, r.lang, r.source
-        |FROM r JOIN q USING (lang) WHERE r.rn <= q.quota
-        |ORDER BY r.doc_id""".stripMargin,
-
-    // q115: the q57 score chain + a plain per-language ntile window
-    "q115_perplexity_buckets" ->
-      """WITH tok AS (
-        |  SELECT doc_id, t.term
-        |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-        |  WHERE t.term <> ''),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(tf) AS BIGINT) AS t, count(DISTINCT term) AS v FROM tf),
-        |p AS (SELECT term,
-        |    CAST(sum(tf) + 1 AS DOUBLE) / CAST((SELECT t + v FROM tot) AS DOUBLE) AS prob
-        |  FROM tf GROUP BY term),
-        |x AS (SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,
-        |    round(sum(tf.tf * -ln(p.prob)) / sum(tf.tf), 6) AS xent
-        |  FROM tf JOIN p USING (term) GROUP BY tf.doc_id),
-        |s AS (SELECT x.doc_id, d.lang, x.n_tokens, x.xent
-        |  FROM x JOIN documents d ON x.doc_id = d.doc_id),
-        |b AS (SELECT s.*, ntile(3) OVER (PARTITION BY lang ORDER BY xent, doc_id) AS bkt
-        |  FROM s)
-        |SELECT doc_id, lang, n_tokens, xent,
-        |  CASE bkt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // q117: trigram LM replay — the q68 CTE chain with a second lead();
-    // prefix counts summed from the trigram counts exactly like the
-    // Spark plan, identical double cast/op order, round 6
-    "q117_trigram_xent" ->
-      """WITH raw AS (SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS a FROM documents),
-        |tok AS (SELECT doc_id, unnest(a) AS term, generate_subscripts(a, 1) AS pos FROM raw),
-        |tk AS (SELECT doc_id, term, pos FROM tok WHERE term <> ''),
-        |tg AS (SELECT doc_id, term AS w1,
-        |    lead(term) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,
-        |    lead(term, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3
-        |  FROM tk),
-        |g AS (SELECT doc_id, w1, w2, w3 FROM tg WHERE w3 IS NOT NULL),
-        |tf3 AS (SELECT doc_id, w1, w2, w3, count(*) AS tf FROM g GROUP BY 1, 2, 3, 4),
-        |c3 AS (SELECT w1, w2, w3, CAST(sum(tf) AS BIGINT) AS c3 FROM tf3 GROUP BY 1, 2, 3),
-        |cp AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS cp FROM c3 GROUP BY 1, 2),
-        |v AS (SELECT count(DISTINCT term) AS v FROM tk),
-        |p AS (SELECT c3.w1, c3.w2, c3.w3,
-        |    CAST(c3.c3 + 1 AS DOUBLE) / CAST(cp.cp + (SELECT v FROM v) AS DOUBLE) AS prob
-        |  FROM c3 JOIN cp USING (w1, w2))
-        |SELECT tf3.doc_id, CAST(sum(tf3.tf) AS BIGINT) AS n_trigrams,
-        |  round(sum(tf3.tf * -ln(p.prob)) / sum(tf3.tf), 6) AS xent
-        |FROM tf3 JOIN p ON tf3.w1 = p.w1 AND tf3.w2 = p.w2 AND tf3.w3 = p.w3
-        |GROUP BY tf3.doc_id ORDER BY tf3.doc_id""".stripMargin,
-
-    // q118: q117's trigram score feeding q115's plain window ntile
-    "q118_perplexity_buckets_trigram" ->
-      """WITH raw AS (SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS a FROM documents),
-        |tok AS (SELECT doc_id, unnest(a) AS term, generate_subscripts(a, 1) AS pos FROM raw),
-        |tk AS (SELECT doc_id, term, pos FROM tok WHERE term <> ''),
-        |tg AS (SELECT doc_id, term AS w1,
-        |    lead(term) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,
-        |    lead(term, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3
-        |  FROM tk),
-        |g AS (SELECT doc_id, w1, w2, w3 FROM tg WHERE w3 IS NOT NULL),
-        |tf3 AS (SELECT doc_id, w1, w2, w3, count(*) AS tf FROM g GROUP BY 1, 2, 3, 4),
-        |c3 AS (SELECT w1, w2, w3, CAST(sum(tf) AS BIGINT) AS c3 FROM tf3 GROUP BY 1, 2, 3),
-        |cp AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS cp FROM c3 GROUP BY 1, 2),
-        |v AS (SELECT count(DISTINCT term) AS v FROM tk),
-        |p AS (SELECT c3.w1, c3.w2, c3.w3,
-        |    CAST(c3.c3 + 1 AS DOUBLE) / CAST(cp.cp + (SELECT v FROM v) AS DOUBLE) AS prob
-        |  FROM c3 JOIN cp USING (w1, w2)),
-        |x AS (SELECT tf3.doc_id, CAST(sum(tf3.tf) AS BIGINT) AS n_trigrams,
-        |    round(sum(tf3.tf * -ln(p.prob)) / sum(tf3.tf), 6) AS xent
-        |  FROM tf3 JOIN p ON tf3.w1 = p.w1 AND tf3.w2 = p.w2 AND tf3.w3 = p.w3
-        |  GROUP BY tf3.doc_id),
-        |s AS (SELECT x.doc_id, d.lang, x.n_trigrams, x.xent
-        |  FROM x JOIN documents d ON x.doc_id = d.doc_id),
-        |b AS (SELECT s.*, ntile(3) OVER (PARTITION BY lang ORDER BY xent, doc_id) AS bkt
-        |  FROM s)
-        |SELECT doc_id, lang, n_trigrams, xent,
-        |  CASE bkt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // q116: the six per-stage replay chains composed end to end —
-    // q104's C4 CTEs -> q113's boilerplate CTEs -> q112's token-equality
-    // blocklist -> q107's nfc_normalize fingerprint dedup -> q115's LM +
-    // window-ntile -> q114's integer temperature quotas + md5 rank.
-    // Every intermediate feeds the next, so a drift in ANY stage's
-    // semantics (or in an interaction: what gets stripped changes what
-    // gets fingerprinted changes what gets bucketed changes the quotas)
-    // breaks the final hash.
-    "q116_curation_capstone" -> capstoneOracleSql(CapstoneUnigramScoringSql),
-
-    // q119: the q19 fingerprint convention + state prune + first-per-fp
-    // keep, replayed directly over the same crawl split (the parquet
-    // roundtrip on the Spark side must be invisible to every value)
-    "q119_incremental_dedup" ->
-      """WITH f AS (SELECT doc_id,
-        |    md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint
-        |  FROM documents),
-        |c1 AS (SELECT DISTINCT fingerprint FROM f
-        |  WHERE doc_id % 3 = 0 AND fingerprint IS NOT NULL),
-        |c2 AS (SELECT doc_id, fingerprint FROM f WHERE doc_id % 3 <> 0),
-        |fresh AS (SELECT doc_id, fingerprint FROM c2
-        |  WHERE fingerprint IS NULL
-        |     OR fingerprint NOT IN (SELECT fingerprint FROM c1)),
-        |r AS (SELECT doc_id, fingerprint, row_number() OVER (
-        |    PARTITION BY coalesce(fingerprint, '__graft_null__:' || doc_id)
-        |    ORDER BY doc_id) AS rk
-        |  FROM fresh)
-        |SELECT doc_id, fingerprint FROM r WHERE rk = 1 ORDER BY doc_id""".stripMargin,
-
-    "q98_unicode_tokens" ->
-      ("WITH d AS (SELECT doc_id, " + MultilingualSnippetSql +
-        " || ' ' || text || ' 終了 end' AS t\n" +
-        "  FROM documents WHERE text IS NOT NULL),\n" +
-        "tk AS (SELECT doc_id, " + unicodeToksSql("t") + " AS toks FROM d)\n" +
-        "SELECT doc_id,\n" +
-        "  CAST(len(toks) AS INT) AS n_tokens,\n" +
-        "  CAST(len(list_filter(toks, x -> regexp_full_match(x, '" +
-        graft.functions.TextAlgo.CjkClass + "'))) AS INT) AS n_cjk,\n" +
-        "  CAST(len(list_filter(toks, x -> regexp_full_match(x, '[a-z0-9]+'))) AS INT) AS n_ascii,\n" +
-        "  array_to_string(toks[1:10], ' ') AS head_tokens,\n" +
-        "  toks[-1] AS last_token\n" +
-        "FROM tk ORDER BY doc_id"),
-    // unicode BM25 replay: the q77 arithmetic verbatim with the q98
-    // tokenization swapped in (decorated corpus, multilingual terms)
-    "q99_bm25_unicode" ->
-      ("WITH d AS (SELECT doc_id, " + MultilingualSnippetSql +
-        " || ' ' || text || ' 終了 end' AS t\n" +
-        "  FROM documents WHERE text IS NOT NULL),\n" +
-        "tk AS (SELECT doc_id, " + unicodeToksSql("t") + " AS toks FROM d),\n" +
-        """dl AS (SELECT doc_id, len(toks) AS dl FROM tk),
-        |s AS (SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |tok AS (SELECT doc_id, t.term
-        |  FROM tk, unnest(toks) AS t(term)
-        |  WHERE t.term IN ('学', 'テ', '텍', 'naïve', 'machine')),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |f AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (SELECT tf.doc_id,
-        |    ln(1 + (s.n - f.df + CAST(0.5 AS DOUBLE)) / (f.df + CAST(0.5 AS DOUBLE)))
-        |      * tf.tf * CAST(2.2 AS DOUBLE)
-        |      / (tf.tf + CAST(1.2 AS DOUBLE)
-        |         * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE) * dl.dl / s.avgdl)) AS contrib
-        |  FROM tf JOIN f USING (term) JOIN dl USING (doc_id) CROSS JOIN s)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-        |  round(sum(contrib), 6) AS bm25
-        |FROM scored GROUP BY doc_id
-        |ORDER BY round(sum(contrib), 6) DESC, doc_id LIMIT 15""".stripMargin)
-  ) ++
-    // q23/q24/q32/q38: JVM-hash-specific outputs pinned as committed-golden
-    // VALUES literals (see GoldenOracles scaladoc — algorithms are verified
-    // via the portable twins; these close the driver's no_oracle rows)
-    GoldenOracles.sql
+  def oracleSql: Map[String, String] = built.asScala.toMap
 }

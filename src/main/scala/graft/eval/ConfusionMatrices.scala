@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.DEMV
 import graft.data.DatasetSpec
+import graft.etl.CacheTracker
 import graft.metrics.GroupCondition
 
 /** The reference's third entry point (SURVEY §3.3, E9/S8): out-of-fold
@@ -38,9 +39,11 @@ object ConfusionMatrices {
         // truncate the balancer's per-cell union lineage before the k-fold
         // loop re-analyzes it per fit (see CrossVal.crossVal — on wide
         // datasets the repeated Catalyst transform of that tree costs
-        // minutes of driver CPU)
-        new DEMV(spec.sensitiveVars, seed = seed, shuffleOutput = false)
-          .fitTransform(spec.df, spec.label).localCheckpoint()
+        // minutes of driver CPU). The returned frame reads this checkpoint
+        // lazily, so the CacheTracker drain releases it, not this call.
+        CacheTracker.checkpointTracked(
+          new DEMV(spec.sensitiveVars, seed = seed, shuffleOutput = false)
+            .fitTransform(spec.df, spec.label))
       case _ => spec.df
     }
     val featureCols = base.columns.filterNot(_ == spec.label).toSeq

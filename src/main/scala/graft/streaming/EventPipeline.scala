@@ -26,8 +26,8 @@ object EventPipeline {
     StructField("props", StringType)))
 
   /** Hourly tumbling-window counts/sums per event type — the streaming twin
-    * of SparkEntry q15. Pure transformation: works on batch or streaming
-    * input alike.
+    * of query q15 (`queries.RelationalQueries`). Pure transformation: works
+    * on batch or streaming input alike.
     */
   def hourlyAggregates(events: DataFrame, watermark: String = "2 hours"): DataFrame = {
     val src = if (events.isStreaming) events.withWatermark("ts", watermark) else events

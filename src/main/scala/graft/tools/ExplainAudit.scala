@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{Harness, SparkEntry}
+import graft.Harness
+import graft.queries.Queries
 
 /** Dev tool: dump the formatted physical plan of each driver-contract query
   * and flag plan smells — missing filter/column pushdown, unexpected
@@ -13,11 +14,11 @@ import graft.{Harness, SparkEntry}
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val only = args.drop(1).toSet
+    val names = args.drop(1).toSeq
+    val selected = if (names.isEmpty) Queries.all else Queries.select(names)
     val spark = Harness.session()
-    val selected = SparkEntry.queries.filter { case (n, _) => only.isEmpty || only(n) }
-    Harness.eachQuery(selected) { (name, fn) =>
-      val qe = fn(spark, sfDir).queryExecution
+    Harness.eachQuery(selected.map(q => q.name -> q)) { (name, q) =>
+      val qe = q.build(spark, sfDir).frame.queryExecution
       val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
       // tree-walk THROUGH the AQE wrapper (a bare executedPlan.collect
       // visits only the AdaptiveSparkPlanExec leaf), not string

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import graft.{Harness, SparkEntry}
+import graft.Harness
+import graft.queries.Queries
 
 /** Dev profiling harness: run ONE declared query with the bench's exact
   * session/config/noop-sink methodology and print a per-JOB time
@@ -14,7 +15,7 @@ import graft.{Harness, SparkEntry}
   */
 object QBench {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val query = Queries.select(Seq(args(0))).head
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 2
     // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides any of the
@@ -24,7 +25,6 @@ object QBench {
       val Array(k, v) = kv.split("=", 2)
       b.config(k.trim, v.trim)
     })
-    val fn = SparkEntry.queries(name)
     // per-job bookkeeping
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -46,9 +46,9 @@ object QBench {
     spark.read.parquet(s"$sfDir/documents.parquet").count()
     (1 to passes).foreach { p =>
       lines.clear()
-      Harness.eachQuery(Seq(name -> fn)) { (_, fn) =>
+      Harness.eachQuery(Seq(query.name -> query)) { (name, q) =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        q.build(spark, sfDir).frame.write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"== pass $p: $name $sec%.3f s")
         lines.forEach(l => println("   " + l))

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Shared DuckDB replay-SQL generators for the iterative-algorithm
   * oracles — ONE load-bearing copy each, parameterized by table/column
-  * names, consumed by both the q-gate (`SparkEntry.oracleSql`) and the
+  * names, consumed by both the query oracles (graft.queries) and the
   * differential fuzz harness (`FuzzDiff` templates), so the two gates
   * can never drift onto different replay semantics.
   *

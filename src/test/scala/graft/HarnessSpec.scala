@@ -2,8 +2,11 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.etl.CacheTracker
+import graft.queries.Scratch
 
 class HarnessSpec extends SparkSpec {
 
@@ -39,5 +42,21 @@ class HarnessSpec extends SparkSpec {
     assert(outcomes(0)._2 === Right(100L))
     assert(outcomes(1)._2 === Left(boom))
     assert(outcomes(2)._2 === Right(3L))
+  }
+
+  test("eachQuery deletes each query's scratch directory; the next query gets a fresh, empty one") {
+    val dirs = ArrayBuffer.empty[Path]
+    val seen = ArrayBuffer.empty[(Boolean, Boolean)] // (own dir empty, earlier dirs gone)
+    val outcomes = Harness.eachQuery(Seq("a_writes" -> "a", "b_writes" -> "b")) { (_, text) =>
+      val d = Scratch.dir()
+      seen += ((d.toFile.list().isEmpty, dirs.forall(p => !Files.exists(p))))
+      Files.writeString(Files.createDirectories(d.resolve("shard")).resolve("part.txt"), text)
+      dirs += d
+      d.toFile.list().toSeq
+    }
+    assert(outcomes === Seq("a_writes" -> Right(Seq("shard")), "b_writes" -> Right(Seq("shard"))))
+    assert(seen === Seq((true, true), (true, true)))
+    assert(dirs.distinct.size === 2)
+    assert(dirs.forall(p => !Files.exists(p)), "a scratch directory outlived the loop")
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.window.WindowExec
 
+import graft.queries.Queries
+
 /** CI counterpart of graft.tools.ExplainAudit, which prints the plans
   * this spec checks: builds the physical plan of EVERY driver-contract
   * query at sf0.001 and asserts the scale invariants the round-2 judge
@@ -20,8 +22,70 @@ class PlanAuditSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** The driver-contract query names, as the driver view listed them
+    * before the queries moved into per-area declarations.
+    */
+  private val contractNames = Seq(
+    "q01_pricing_summary", "q02_revenue", "q03_join_nations", "q04_conditional_counts",
+    "q05_distinct_flags", "q06_union_parts", "q07_ntile_orders", "q08_topk_per_segment",
+    "q09_zscore_acctbal", "q100_warcgz_ingest", "q101_sentences_abbrev",
+    "q102_url_canonical", "q103_lang_guess_multilingual", "q104_c4_filter",
+    "q105_domain_pagerank", "q106_fuzzy_decontam", "q107_nfc_dedup",
+    "q108_anchor_profile", "q109_hll_source_distinct", "q109v_hll_accuracy",
+    "q10_cut_quantity", "q110_phrase_search", "q111_image_dhash_neardup",
+    "q112_blocklist_filter", "q113_domain_boilerplate", "q114_temperature_mix",
+    "q115_perplexity_buckets", "q116_curation_capstone", "q117_trigram_xent",
+    "q118_perplexity_buckets_trigram", "q119_incremental_dedup", "q11_onehot_priority",
+    "q120_trigram_xent_hashed", "q121_pq_ann", "q122_ivfpq_ann",
+    "q123_ivfpq_residual_ann", "q124_lm_model_scoring", "q125_5gram_xent_hashed",
+    "q126_curation_capstone_model", "q127_byte_bpe_merges", "q128_byte_bpe_tokens",
+    "q129_image_phash_neardup", "q12_replace_region", "q130_wet_ingest",
+    "q131_lm5_model_scoring", "q132_opq_ann", "q133_lm_artifact_scoring",
+    "q134_ann_opq_ivfpq_refined", "q135_lid_trained", "q136_sp_unigram_tokens",
+    "q137_wet_curation_capstone", "q13_customers_no_open_orders", "q14_suppliers_recent",
+    "q15_events_hourly", "q16_events_props", "q17_demv_weights", "q18_demv_balance",
+    "q19_dedup_exact", "q20_text_stats", "q21_lang_confusion", "q22_quality_scores",
+    "q23_minhash_neardup", "q24_simhash_neardup", "q25_embedding_norms",
+    "q26_knn_bruteforce", "q27_knn_lsh", "q28_cube_marginals", "q29_sessions",
+    "q30_bpe_tokens", "q31_postprocess_balance", "q32_media_features",
+    "q33_sessionize_stateful", "q34_avg_odds", "q35_cosine_neardup_exact",
+    "q36_corpus_clean", "q37_knn_ivf", "q38_winnowing_pairs", "q39_cosine_neardup_lsh",
+    "q40_repetition", "q41_jaccard_pairs", "q42_top_tokens", "q43_lexical_diversity",
+    "q44_events_sliding", "q45_asof_click_view", "q46_skew_salted_join",
+    "q47_range_join_first_hour", "q48_group_percentiles", "q49_pii_redaction",
+    "q50_weighted_mix", "q51_sequence_packing", "q52_tfidf_top_terms",
+    "q53_split_assign", "q54_quantize_int8", "q55_neardup_components",
+    "q56_keyword_search", "q57_unigram_xent", "q58_winnowing_portable",
+    "q59_minhash_portable", "q60_simhash_portable", "q61_decontaminate",
+    "q62_bloom_antijoin", "q63_chunk_dedup", "q64_token_budget", "q65_kmeans_clusters",
+    "q66_stratified_sample", "q67_token_mix", "q68_bigram_xent", "q69_canonical_docs",
+    "q70_kmv_source_overlap", "q71_semdedup_pairs", "q72_domain_cap", "q73_kmv_rollup",
+    "q74_gopher_rules", "q75_line_dedup", "q76_banded_neardup", "q77_bm25_topk",
+    "q78_top_bigrams", "q79_jsonl_roundtrip", "q80_passage_chunks", "q81_heavy_hitters",
+    "q82_dsir_weights", "q83_label_centroids", "q84_duplicated_spans", "q85_strip_spans",
+    "q86_bpe_merges", "q87_kcenter_coreset", "q88_html_extract", "q89_warc_roundtrip",
+    "q90_ingest_chain", "q91_ingest_gate", "q92_bm25_batch", "q93_gzip_roundtrip",
+    "q94_url_parts", "q95_sentences", "q96_containment_pairs", "q97_url_domain_cap",
+    "q98_unicode_tokens", "q99_bm25_unicode")
+
+  test("the declarations are the contract's queries, and the driver view keys each once") {
+    assert(Queries.all.map(_.name) === contractNames)
+    assert(SparkEntry.queries.keySet === contractNames.toSet)
+  }
+
+  test("the golden queries build their committed oracle at sf0.01") {
+    val dir = "/root/testdata/sf0.01"
+    val golden = Queries.select(GoldenOracles.queries)
+    val built = Harness.eachQuery(golden.map(q => q.name -> q))((_, q) => q.build(spark, dir).oracle)
+    assert(built.map(_._1) === GoldenOracles.queries.sorted)
+    built.foreach { case (name, oracle) =>
+      assert(oracle.toOption.flatten.nonEmpty, s"$name: no golden oracle at sf0.01")
+      assert(oracle === Right(GoldenOracles.forDir(dir, name)), name)
+    }
+  }
+
   /** Queries whose plan is ALLOWED a BroadcastNestedLoopJoin: the exact
-    * pairwise baselines (documented in SparkEntry next to each query).
+    * pairwise baselines (documented next to each query's declaration).
     */
   private val bnlAllowlist = Set(
     "q26_knn_bruteforce",
@@ -60,52 +124,54 @@ class PlanAuditSpec extends SparkSpec {
   test("no single-partition windows, cartesians, or undocumented BNL joins in any query plan") {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     var walked = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        // PlanWalk, NOT executedPlan.collect: AQE wraps the plan in a
-        // leaf AdaptiveSparkPlanExec and a bare collect checks nothing
-        val nodes = graft.tools.PlanWalk.collectAll(
-          fn(spark, sfDir).queryExecution.executedPlan)
-        walked += nodes.length
-        val globalWindows = nodes.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
-        if (globalWindows.nonEmpty)
-          failures += s"$name: ${globalWindows.length} single-partition window(s)"
-        if (nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]))
-          failures += s"$name: cartesian product"
-        val badBnl = nodes.exists {
-          case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec =>
-            // a BNL whose BROADCAST side is rooted at a GLOBAL aggregate
-            // (no grouping keys => exactly one row) is the standard
-            // scalar-broadcast pattern (q09's mean/std, q17's total) —
-            // constant cost at any scale. The check descends the build
-            // side only, through row-bounded wrappers: a scalar aggregate
-            // buried under a join elsewhere in the lineage must NOT excuse
-            // a quadratic BNL between two large inputs.
-            val buildChild = j.buildSide match {
-              case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
-              case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
-            }
-            !rootedAtScalarAggregate(buildChild)
-          case _ => false
-        }
-        if (badBnl && !bnlAllowlist(name))
-          failures += s"$name: undocumented BroadcastNestedLoopJoin"
-      } catch {
-        case e: Throwable =>
-          failures += s"$name: plan construction failed: ${e.getMessage}"
-      } finally {
-        // eager plan builds (checkpoints, V counts) leave tracked blocks;
-        // release them per query so 138 builds never pile up in this JVM
-        graft.etl.CacheTracker.unpersistCaches(blocking = true)
+    // the same builds give the oracles: one per query at this scale,
+    // except the goldens, which are committed for sf0.01 and up
+    val withoutOracle = scala.collection.mutable.ArrayBuffer.empty[String]
+    // eachQuery drains the tracked caches and scratch dirs after each
+    // build, so 138 builds never pile up in this JVM
+    Harness.eachQuery(Queries.all.map(q => q.name -> q)) { (name, q) =>
+      val built = q.build(spark, sfDir)
+      if (built.oracle.isEmpty) withoutOracle += name
+      // PlanWalk, NOT executedPlan.collect: AQE wraps the plan in a
+      // leaf AdaptiveSparkPlanExec and a bare collect checks nothing
+      val nodes = graft.tools.PlanWalk.collectAll(
+        built.frame.queryExecution.executedPlan)
+      walked += nodes.length
+      val globalWindows = nodes.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
       }
+      if (globalWindows.nonEmpty)
+        failures += s"$name: ${globalWindows.length} single-partition window(s)"
+      if (nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]))
+        failures += s"$name: cartesian product"
+      val badBnl = nodes.exists {
+        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec =>
+          // a BNL whose BROADCAST side is rooted at a GLOBAL aggregate
+          // (no grouping keys => exactly one row) is the standard
+          // scalar-broadcast pattern (q09's mean/std, q17's total) —
+          // constant cost at any scale. The check descends the build
+          // side only, through row-bounded wrappers: a scalar aggregate
+          // buried under a join elsewhere in the lineage must NOT excuse
+          // a quadratic BNL between two large inputs.
+          val buildChild = j.buildSide match {
+            case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+            case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
+          }
+          !rootedAtScalarAggregate(buildChild)
+        case _ => false
+      }
+      if (badBnl && !bnlAllowlist(name))
+        failures += s"$name: undocumented BroadcastNestedLoopJoin"
+    }.foreach {
+      case (name, Left(e)) => failures += s"$name: plan construction failed: ${e.getMessage}"
+      case _ =>
     }
     // guard against the walk itself going vacuous again: >50 queries must
     // yield hundreds of physical nodes (a bare AQE-blind collect sees ~1
     // per query; the real walk sees ~15)
     assert(walked > 500, s"plan walk saw only $walked nodes — traversal broken?")
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+    assert(withoutOracle.toSet === GoldenOracles.queries.toSet)
   }
 
   test("q88 and q93 plan a single range exchange, kernel after it, and no cache") {
@@ -116,7 +182,7 @@ class PlanAuditSpec extends SparkSpec {
     Seq("q88_html_extract", "q93_gzip_roundtrip").foreach { name =>
       try {
         val nodes = graft.tools.PlanWalk.collectAll(
-          SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+          Queries.select(Seq(name)).head.build(spark, sfDir).frame.queryExecution.executedPlan)
         // the explicit repartitionByRange satisfies the global sort's
         // ordering, so the sort adds no exchange of its own — and its
         // boundary sample reads the scan, never the kernel chain

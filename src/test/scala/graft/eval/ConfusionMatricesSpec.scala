@@ -1,7 +1,9 @@
 package graft.eval
 
 import graft.SparkSpec
+import graft.core.DEMV
 import graft.data.DatasetSpec
+import graft.etl.CacheTracker
 import graft.metrics.GroupCondition
 import org.apache.spark.sql.functions._
 
@@ -29,6 +31,22 @@ class ConfusionMatricesSpec extends SparkSpec {
     assert(oof.count() === 300)
     assert(oof.columns.contains("y_true"))
     assert(oof.columns.contains("prediction"))
+  }
+
+  test("outOfFoldPredictions with demv predicts every balanced row once and frees its checkpoint at the drain") {
+    val sc = spark.sparkContext
+    CacheTracker.unpersistCaches(blocking = true)
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val df = graft.data.Generator.classification(spark, 300, nFeatures = 4,
+      nClasses = 2, nInformative = 3, nSensitive = 1, seed = 13)
+    val spec = DatasetSpec(df, "y", 1, Seq("s1"), Map("s1" -> 0), 10)
+    val oof = ConfusionMatrices.outOfFoldPredictions(spec, "logistic",
+      debiaser = Some("demv"), k = 3)
+    val balanced = new DEMV(spec.sensitiveVars, seed = 2L, shuffleOutput = false)
+      .fitTransform(df, "y").count()
+    assert(oof.count() === balanced)
+    CacheTracker.unpersistCaches(blocking = true)
+    assert(sc.getPersistentRDDs.keySet.toSet === before)
   }
 
   test("outOfFoldPredictions with in/post-processing debiasers (eg, blackbox, blackbox_eqodds)") {

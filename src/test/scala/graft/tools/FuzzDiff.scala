@@ -1246,7 +1246,7 @@ object FuzzDiff {
           .select(col("id"), array_join(col("t"), "\u001f").as("joined"),
             size(col("t")).as("n"))
       val duck =
-        "WITH t AS (SELECT id, " + graft.SparkEntry.unicodeToksSql("s") +
+        "WITH t AS (SELECT id, " + graft.queries.Shared.unicodeToksSql("s") +
           " AS toks FROM fuzz_docs WHERE s IS NOT NULL)\n" +
           """SELECT id,
             |  coalesce(array_to_string(toks, chr(31)), '') AS joined,
@@ -1268,7 +1268,7 @@ object FuzzDiff {
           .select(col("id"), array_join(col("sent"), "\u001f").as("joined"),
             size(col("sent")).as("n"))
       val duck =
-        "WITH m AS (SELECT id, " + graft.SparkEntry.abbrevMaskSql("s") +
+        "WITH m AS (SELECT id, " + graft.queries.Shared.abbrevMaskSql("s") +
           " AS mt FROM fuzz_docs WHERE s IS NOT NULL),\n" +
           """p AS (SELECT id,
             |  list_transform(
@@ -1305,7 +1305,7 @@ object FuzzDiff {
            |  FROM fuzz_docs WHERE s IS NOT NULL)
            |SELECT id,
            |""".stripMargin +
-          graft.SparkEntry.etld1OracleSql("host") + " AS etld1\nFROM h"
+          graft.queries.Shared.etld1OracleSql("host") + " AS etld1\nFROM h"
       (build, duck)
     }),
 
@@ -1473,15 +1473,15 @@ object FuzzDiff {
         s.table("fuzz_docs").where(col("s").isNotNull)
           .select(col("id"),
             graft.functions.TextFunctions.nfcNormalize(
-              concat(col("s"), lit(" " + graft.SparkEntry.NfcDecomposedPrefix))).as("nfc"),
+              concat(col("s"), lit(" " + graft.queries.Shared.NfcDecomposedPrefix))).as("nfc"),
             graft.functions.TextFunctions.fingerprint(
-              concat(col("s"), lit(" " + graft.SparkEntry.NfcDecomposedPrefix)),
+              concat(col("s"), lit(" " + graft.queries.Shared.NfcDecomposedPrefix)),
               unicode = true, nfc = true).as("fp"))
-      val dec = " " + graft.SparkEntry.NfcDecomposedPrefix
+      val dec = " " + graft.queries.Shared.NfcDecomposedPrefix
       val duck =
         s"SELECT id, nfc_normalize(s || '$dec') AS nfc,\n" +
           "  md5(array_to_string(" +
-          graft.SparkEntry.unicodeToksSql(s"nfc_normalize(s || '$dec')") +
+          graft.queries.Shared.unicodeToksSql(s"nfc_normalize(s || '$dec')") +
           ", '')) AS fp\nFROM fuzz_docs WHERE s IS NOT NULL"
       (build, duck)
     }),

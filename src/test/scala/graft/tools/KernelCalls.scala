@@ -3,8 +3,9 @@ package graft.tools
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-import graft.{Harness, SparkEntry}
+import graft.Harness
 import graft.cli.CurateCorpus
+import graft.queries.Queries
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -20,19 +21,21 @@ object KernelCalls {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSeq
+    val selected = Queries.select(names.filterNot(_ == "curate")).map(q => q.name -> q).toMap
     val spark = Harness.session()
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     })
-    val runs: Seq[(String, () => Unit)] = args.drop(2).toSeq.map {
+    val runs: Seq[(String, () => Unit)] = names.map {
       case "curate" => "curate" -> (() => {
         CurateCorpus.run(spark.read.parquet(s"$sfDir/documents.parquet"), s"$outDir/curate")
         ()
       })
       case q => q -> (() =>
-        SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save())
+        selected(q).build(spark, sfDir).frame.write.format("noop").mode("overwrite").save())
     }
     Harness.eachQuery(runs) { (name, run) =>
       seen.clear()
