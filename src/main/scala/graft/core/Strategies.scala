@@ -382,18 +382,19 @@ object Strategies {
           .groupBy(kc :+ col("__qrn"): _*)
           .agg((avg(sqrt(col("__d2"))) + lit(1e-9)).as("__w0"))
           .withColumnRenamed("__qrn", "__rn")
-        val withW = indexed.join(wgt, keyCols :+ "__rn", "left")
-          .withColumn("__w", coalesce(col("__w0"), lit(1.0)))
-          .drop("__w0")
-          // fixed-point weights: exact long arithmetic downstream (>= 1 so
-          // every row keeps a nonzero share)
-          .withColumn("__wl", greatest(lit(1L), round(col("__w") * (1L << 20)).cast("long")))
-          // the kNN-weight join above (bucket equi-join + per-row rank
-          // window) is the expensive part of this path and is consumed by
-          // FOUR separate jobs: two collects inside the grouped running
-          // total, the per-cell weight totals, and the output job —
-          // materialize it once rather than re-running it per job
-          .localCheckpoint(false)
+        // the kNN-weight join above (bucket equi-join + per-row rank
+        // window) is the expensive part of this path and is consumed by
+        // FOUR separate jobs: two collects inside the grouped running
+        // total, the per-cell weight totals, and the output job —
+        // materialize it once rather than re-running it per job (the
+        // drain frees the checkpoint)
+        val withW = graft.etl.CacheTracker.checkpointTracked(
+          indexed.join(wgt, keyCols :+ "__rn", "left")
+            .withColumn("__w", coalesce(col("__w0"), lit(1.0)))
+            .drop("__w0")
+            // fixed-point weights: exact long arithmetic downstream (>= 1
+            // so every row keeps a nonzero share)
+            .withColumn("__wl", greatest(lit(1L), round(col("__w") * (1L << 20)).cast("long"))))
         // exact-total apportionment WITHOUT a remainder pass: with C_i the
         // per-cell running weight total in __rn order,
         //   c_i = f(C_i) - f(C_i - w_i)   where f(C) = floor(C * m / W_cell)

@@ -39,17 +39,20 @@ object WarcFiles {
     StructField("length", LongType),
     StructField("content", BinaryType)))
 
-  /** Batch read of `.warc.gz` shards: (path, blob) with `blob` the
-    * inflated WARC text — NULL when the file is not valid gzip or
-    * inflates past `maxBytes` (quarantine, not failure). Feed the result
-    * to [[graft.streaming.IngestPipeline.warcToCleanDocs]] (blobCol =
-    * "blob") for the full WARC -> HTML -> gate chain.
+  /** Batch read of the `*.warc.gz` shards in directory `dir`: (path,
+    * blob) with `blob` the inflated WARC text — NULL when the file is not
+    * valid gzip or inflates past `maxBytes` (quarantine, not failure).
+    * Feed the result to [[graft.streaming.IngestPipeline.warcToCleanDocs]]
+    * (blobCol = "blob") for the full WARC -> HTML -> gate chain. Shards
+    * are selected with `pathGlobFilter`, not a glob path: Spark probes a
+    * loaded path for a `_spark_metadata` directory, and a glob path makes
+    * that probe log a stack trace on every read.
     */
   def readWarcGz(
       spark: SparkSession,
-      pathGlob: String,
+      dir: String,
       maxBytes: Int = 1 << 30): DataFrame =
-    spark.read.format("binaryFile").load(pathGlob)
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.warc.gz").load(dir)
       .select(col("path"),
         Gzip.gunzip(col("content"), maxBytes).cast("string").as("blob"))
 

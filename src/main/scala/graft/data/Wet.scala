@@ -22,14 +22,15 @@ import org.apache.spark.sql.functions._
   */
 object Wet {
 
-  /** Batch read of `.warc.wet.gz` shards: (path, blob) — the
-    * [[WarcFiles.readWarcGz]] leg (WET is gzipped WARC framing).
+  /** Batch read of the `*.warc.gz` shards in directory `dir`: (path,
+    * blob) — the [[WarcFiles.readWarcGz]] leg (WET is gzipped WARC
+    * framing).
     */
   def readWetGz(
       spark: SparkSession,
-      pathGlob: String,
+      dir: String,
       maxBytes: Int = 1 << 30): DataFrame =
-    WarcFiles.readWarcGz(spark, pathGlob, maxBytes)
+    WarcFiles.readWarcGz(spark, dir, maxBytes)
 
   /** Streaming twin — the file stream source over the same directory
     * (exactly-once arrival of new crawl shards via the offset log).

@@ -88,7 +88,7 @@ object CapstoneQueries {
       graft.data.WarcFiles.writeShards(info ++ records, fixDir, nShards)
       // ingest the REAL files back and recover (doc_id, lang, page)
       val ingested = graft.data.Wet.docs(
-          graft.data.Wet.readWetGz(s, fixDir.toString + "/*.warc.gz"))
+          graft.data.Wet.readWetGz(s, fixDir.toString))
         .select(regexp_extract(col("target_uri"), "doc/([0-9]+)", 1)
             .cast("bigint").as("doc_id"),
           col("text").as("page"))

@@ -214,7 +214,7 @@ object IngestQueries {
       val fixDir = Scratch.dir()
       graft.data.WarcFiles.writeShards(records, fixDir, nShards = 8)
       val blobs = graft.data.WarcFiles
-        .readWarcGz(s, fixDir.toString + "/*.warc.gz")
+        .readWarcGz(s, fixDir.toString)
         .select(regexp_extract(col("path"), "shard_([0-9]+)", 1)
           .cast("int").as("shard"), col("blob"))
       gateCounts(graft.streaming.IngestPipeline.warcToCleanDocs(
@@ -673,7 +673,7 @@ object IngestQueries {
       val fixDir = Scratch.dir()
       graft.data.WarcFiles.writeShards(info ++ records, fixDir, nShards)
       graft.data.Wet.docs(
-          graft.data.Wet.readWetGz(s, fixDir.toString + "/*.warc.gz"))
+          graft.data.Wet.readWetGz(s, fixDir.toString))
         .select(regexp_extract(col("target_uri"), "doc/([0-9]+)", 1)
             .cast("bigint").as("doc_id"),
           col("target_uri"), col("n_chars"), col("text"))

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import graft.functions.Kernels
 
 /** OPQ — Optimized Product Quantization (Ge, He, Ke & Sun, CVPR 2013 /
@@ -33,6 +32,8 @@ import graft.functions.Kernels
   * verified [[Pq]] machinery unchanged.
   */
 object Opq {
+
+  import Similarity.nearest
 
   /** y = v R (row-major R, ascending-i accumulation) — driver twin of
     * the compiled kernel ([[graft.functions.TextAlgo.matVec]]).
@@ -73,18 +74,8 @@ object Opq {
     require(m > 0 && dim % m == 0, s"dim $dim must be a multiple of m $m")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val subDim = dim / m
-    val cap = math.min(256 * ksub, math.max(25000, 64 * ksub))
-    val sample: Array[Array[Double]] = corpus
-      .select(col(vecCol).as("__v"), xxhash64(col(idCol), lit(seed)).as("__h"))
-      .orderBy(col("__h")).limit(cap)
-      .select(col("__v"))
-      .collect()
-      .map(_.getSeq[Any](0).toArray.map {
-        case d: Double => d
-        case f: Float => f.toDouble
-        case n: Number => n.doubleValue()
-      })
-    require(sample.nonEmpty, "cannot train an OPQ rotation on an empty corpus")
+    val sample = Similarity.hashSample(corpus, idCol, vecCol, seed,
+      Similarity.trainingCap(ksub), "an OPQ rotation")
     val n = sample.length
 
     var r = identity(dim)
@@ -98,23 +89,9 @@ object Opq {
     var it = 0
     while (it < iters) {
       val rotated = sample.map(matVecLocal(_, r, dim))
-      cbs = (0 until m).map { j =>
-        lloydLocal(rotated.map(_.slice(j * subDim, (j + 1) * subDim)),
-          subDim, ksub, init = if (cbs == null) None else Some(cbs(j)),
-          iters = if (cbs == null) 25 else 8)
-      }
+      cbs = subspaceCodebooks(rotated, m, subDim, ksub, Option(cbs))
       // reconstructions under the current quantizer
-      val recon = rotated.map { y =>
-        val out = new Array[Double](dim)
-        var j = 0
-        while (j < m) {
-          val cb = cbs(j)
-          val c = nearestSub(y, j * subDim, subDim, cb, ksub)
-          System.arraycopy(cb, c * subDim, out, j * subDim, subDim)
-          j += 1
-        }
-        out
-      }
+      val recon = rotated.map(reconstruct(_, cbs, subDim))
       // Procrustes: M = X^T Y-hat (d x d), R = polar(M)
       val mMat = new Array[Double](dim * dim)
       var k = 0
@@ -180,26 +157,35 @@ object Opq {
       m: Int,
       ksub: Int): Double = {
     val subDim = dim / m
-    val cbs = (0 until m).map { j =>
-      lloydLocal(vectors.map(_.slice(j * subDim, (j + 1) * subDim)),
-        subDim, ksub)
-    }
+    val cbs = subspaceCodebooks(vectors, m, subDim, ksub, None)
     var tot = 0.0
     vectors.foreach { y =>
-      var j = 0
-      while (j < m) {
-        val cb = cbs(j)
-        val c = nearestSub(y, j * subDim, subDim, cb, ksub)
-        var i = 0
-        while (i < subDim) {
-          val d = y(j * subDim + i) - cb(c * subDim + i)
-          tot += d * d
-          i += 1
-        }
-        j += 1
-      }
+      val rec = reconstruct(y, cbs, subDim)
+      var i = 0
+      while (i < rec.length) { val d = y(i) - rec(i); tot += d * d; i += 1 }
     }
     tot / vectors.length
+  }
+
+  /** The `m` per-subspace [[lloydLocal]] codebooks of `vectors`: 25 cold
+    * passes, or 8 passes warm-started from `warm`'s codebooks.
+    */
+  private def subspaceCodebooks(vectors: Array[Array[Double]], m: Int, subDim: Int,
+      ksub: Int, warm: Option[IndexedSeq[Array[Double]]]): IndexedSeq[Array[Double]] =
+    (0 until m).map { j =>
+      lloydLocal(vectors.map(_.slice(j * subDim, (j + 1) * subDim)),
+        subDim, ksub, init = warm.map(_(j)), iters = if (warm.isEmpty) 25 else 8)
+    }
+
+  /** `y` with each `subDim` subspace replaced by its nearest code word. */
+  private def reconstruct(
+      y: Array[Double], cbs: IndexedSeq[Array[Double]], subDim: Int): Array[Double] = {
+    val out = new Array[Double](cbs.length * subDim)
+    cbs.indices.foreach { j =>
+      val c = nearest(y, cbs(j), subDim, j * subDim)._1
+      System.arraycopy(cbs(j), c * subDim, out, j * subDim, subDim)
+    }
+    out
   }
 
   // ---- driver linear algebra (d <= a few hundred; deterministic) ----
@@ -211,29 +197,13 @@ object Opq {
     r
   }
 
-  private def nearestSub(y: Array[Double], off: Int, subDim: Int,
-      cb: Array[Double], ksub: Int): Int = {
-    var best = -1
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < ksub) {
-      var s = 0.0
-      var i = 0
-      while (i < subDim) { val d = y(off + i) - cb(c * subDim + i); s += d * d; i += 1 }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** Plain deterministic Lloyd for the OPQ inner loop (internal — the
     * FINAL search codebooks come from [[Pq.trainCodebooks]] over the
     * rotated corpus, so this only has to be a reasonable quantizer):
     * deterministic greedy-maximin init (farthest-point-first from the
     * first sample point — evenly-spaced init proved local-optimum-prone
     * enough to destabilize the OPQ alternation) unless warm-started,
-    * strict-< ascending argmin, empty cluster keeps its previous
-    * centroid.
+    * then a fixed `iters` [[Similarity.lloydStep]] passes.
     */
   private[similarity] def lloydLocal(points: Array[Array[Double]], subDim: Int,
       ksub: Int, init: Option[Array[Double]] = None, iters: Int = 25): Array[Double] = {
@@ -252,11 +222,7 @@ object Opq {
         var bestD = -1.0
         var p = 0
         while (p < n) {
-          var s = 0.0
-          var i = 0
-          while (i < subDim) {
-            val d = points(p)(i) - points(chosen)(i); s += d * d; i += 1
-          }
+          val s = nearest(points(p), points(chosen), subDim)._2
           if (s < minD(p)) minD(p) = s
           if (minD(p) > bestD) { bestD = minD(p); best = p }
           p += 1
@@ -266,43 +232,9 @@ object Opq {
       }
       out
     }
-    var iter = 0
-    while (iter < iters) {
-      val sum = new Array[Double](ksub * subDim)
-      val cnt = new Array[Int](ksub)
-      var p = 0
-      while (p < n) {
-        val a = nearestFlat(points(p), cb, subDim, ksub)
-        var i = 0
-        while (i < subDim) { sum(a * subDim + i) += points(p)(i); i += 1 }
-        cnt(a) += 1
-        p += 1
-      }
-      var c = 0
-      while (c < ksub) {
-        if (cnt(c) > 0) {
-          var i = 0
-          while (i < subDim) { cb(c * subDim + i) = sum(c * subDim + i) / cnt(c); i += 1 }
-        }
-        c += 1
-      }
-      iter += 1
-    }
+    val assign = new Array[Int](n)
+    (0 until iters).foreach(_ => Similarity.lloydStep(points, cb, subDim, assign))
     cb
-  }
-
-  private def nearestFlat(v: Array[Double], cb: Array[Double], subDim: Int, ksub: Int): Int = {
-    var best = -1
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < ksub) {
-      var s = 0.0
-      var i = 0
-      while (i < subDim) { val d = v(i) - cb(c * subDim + i); s += d * d; i += 1 }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
   }
 
   /** Orthogonal polar factor of a square matrix via the Newton

@@ -1,7 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Kernels
@@ -52,6 +51,8 @@ import graft.functions.Kernels
   */
 object Pq {
 
+  import Similarity.{nearest, topK, toDoubles}
+
   /** Train the `m` per-subspace codebooks from ONE bounded seeded
     * corpus sample (TakeOrdered by hash, the [[Similarity
     * .trainIvfCentroids]] convention): the sample's full vectors are
@@ -70,31 +71,26 @@ object Pq {
       ksub: Int = 16,
       seed: Long = 42L): Seq[Seq[Double]] = {
     require(m > 0 && dim % m == 0, s"dim $dim must be a multiple of m $m")
-    val subDim = dim / m
     // same cap rule as the IVF trainer at nLists = ksub
-    val cap = math.min(256 * ksub, math.max(25000, 64 * ksub))
-    val sample: Array[Seq[Double]] = corpus
-      .select(col(vecCol).as("__v"), xxhash64(col(idCol), lit(seed)).as("__h"))
-      .orderBy(col("__h")).limit(cap)
-      .select(col("__v"))
-      .collect()
-      .map(_.getSeq[Any](0).map {
-        case d: Double => d
-        case f: Float => f.toDouble
-        case n: Number => n.doubleValue()
-      })
-    require(sample.nonEmpty, "cannot train PQ codebooks on an empty corpus")
+    subspaceCodebooks(Similarity.hashSample(corpus, idCol, vecCol, seed,
+      Similarity.trainingCap(ksub), "PQ codebooks"), m, dim / m, ksub, seed)
+  }
+
+  /** The `m` codebooks of a collected sample, subspace j trained on the
+    * j-th `subDim` slice of every vector with seed + j. The sample is
+    * already on the driver: the LOCAL trainer replays the DataFrame
+    * path's hash order + multi-restart Lloyd bit-identically
+    * (spec-pinned) without paying one Spark job per subspace just to
+    * sort+collect a LocalRelation (r11, guide §1.2).
+    */
+  private def subspaceCodebooks(sample: Array[Array[Double]], m: Int, subDim: Int,
+      ksub: Int, seed: Long): Seq[Seq[Double]] =
     (0 until m).map { j =>
       val slices = sample.zipWithIndex
-        .map { case (v, i) => (i.toLong, v.slice(j * subDim, (j + 1) * subDim).toArray) }
-      // the sample is already on the driver: the LOCAL trainer replays
-      // the DataFrame path's hash order + multi-restart Lloyd
-      // bit-identically (spec-pinned) without paying one Spark job per
-      // subspace just to sort+collect a LocalRelation (r11, guide §1.2)
+        .map { case (v, i) => (i.toLong, v.slice(j * subDim, (j + 1) * subDim)) }
       Similarity.trainIvfCentroidsLocal(slices.toIndexedSeq,
         subDim, nLists = ksub, seed = seed + j)
     }
-  }
 
   /** PQ codes of a vector column: array<long> of length m, code j = the
     * strict-< argmin centroid of subspace j — one compiled pass.
@@ -124,47 +120,67 @@ object Pq {
       codebooks: Seq[Seq[Double]],
       dim: Int,
       k: Int): DataFrame = {
+    val (m, subDim, ksub) = shape(codebooks, dim)
+    val qRows = queries.select(col(idCol).cast("long"), col(vecCol)).collect()
+    require(qRows.nonEmpty, "query batch is empty")
+    val qIds: Array[Long] = qRows.map(_.getLong(0))
+    // ADC tables, row-major (query, subspace, code)
+    val tables = qRows.flatMap(r => adcTable(toDoubles(r.getSeq[Any](1)), codebooks, subDim, ksub))
+    val codes = encode(col(vecCol), codebooks, dim)
+    val dists = Kernels.pqAdcDists(codes, tables.toSeq, m, ksub)
+    adcRank(corpus
+      .select(col(idCol).as("vec_id"), posexplode(dists).as(Seq("__qi", "adc_dist")))
+      .withColumn("query_id", element_at(typedlit(qIds.toSeq), col("__qi") + 1))
+      .where(col("query_id") =!= col("vec_id")), "__qi", k)
+  }
+
+  /** (m, subDim, ksub) of row-major (ksub x subDim) codebooks over `dim`. */
+  private def shape(codebooks: Seq[Seq[Double]], dim: Int): (Int, Int, Int) = {
     val m = codebooks.length
     val subDim = dim / m
     val ksub = codebooks.head.length / subDim
     require(codebooks.forall(_.length == ksub * subDim),
       "all codebooks must hold ksub x subDim values")
-    val qRows = queries.select(col(idCol).cast("long"), col(vecCol)).collect()
-    require(qRows.nonEmpty, "query batch is empty")
-    val qIds: Array[Long] = qRows.map(_.getLong(0))
-    // ADC tables, row-major (query, subspace, code): exact squared
-    // sub-distances, ascending-i accumulation (the oracle's
-    // list_dot_product(diff, diff) replays this bit-for-bit)
-    val tables: Array[Double] = qRows.flatMap { r =>
-      val qv = r.getSeq[Any](1).toArray.map {
-        case d: Double => d
-        case f: Float => f.toDouble
-        case n: Number => n.doubleValue()
-      }
-      (0 until m).flatMap { j =>
-        val cb = codebooks(j)
-        (0 until ksub).map { c =>
-          var s = 0.0
-          var i = 0
-          while (i < subDim) {
-            val d = qv(j * subDim + i) - cb(c * subDim + i)
-            s += d * d
-            i += 1
-          }
-          s
-        }
+    (m, subDim, ksub)
+  }
+
+  /** One query's ADC table, row-major (subspace, code): the exact squared
+    * sub-distances of `q` to every code word, ascending-i accumulation
+    * (the oracle's list_dot_product(diff, diff) replays this bit-for-bit).
+    */
+  private def adcTable(q: Array[Double], codebooks: Seq[Seq[Double]],
+      subDim: Int, ksub: Int): Seq[Double] =
+    codebooks.indices.flatMap { j =>
+      val cb = codebooks(j)
+      (0 until ksub).map { c =>
+        var s = 0.0
+        var i = 0
+        while (i < subDim) { val d = q(j * subDim + i) - cb(c * subDim + i); s += d * d; i += 1 }
+        s
       }
     }
-    val codes = encode(col(vecCol), codebooks, dim)
-    val dists = Kernels.pqAdcDists(codes, tables.toSeq, m, ksub)
-    val w = Window.partitionBy(col("__qi")).orderBy(col("adc_dist"), col("vec_id"))
-    corpus
-      .select(col(idCol).as("vec_id"), posexplode(dists).as(Seq("__qi", "adc_dist")))
-      .withColumn("query_id", element_at(typedlit(qIds.toSeq), col("__qi") + 1))
-      .where(col("query_id") =!= col("vec_id"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
+
+  /** (query_id, rank, vec_id, adc_dist): the k smallest ADC distances per
+    * `by` partition, ties to the smaller vec_id.
+    */
+  private def adcRank(scored: DataFrame, by: String, k: Int): DataFrame =
+    topK(scored, by, k, Seq(col("adc_dist"), col("vec_id")),
+      "query_id", "rank", "vec_id", "adc_dist")
+
+  /** The exact rerank (the FAISS refine step): true squared L2 re-scores
+    * the candidate (query_id, vec_id) rows only — the corpus vectors are
+    * read for those rows through a broadcast semi-join on id — and the
+    * exact top-`k` per query wins. Output: (query_id, rank, vec_id, dist2).
+    */
+  private def refine(corpus: DataFrame, idCol: String, vecCol: String,
+      queries: DataFrame, cands: DataFrame, k: Int): DataFrame = {
+    val qv = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
+    val withVec = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
+      .join(broadcast(cands.select(col("query_id"), col("vec_id"))), Seq("vec_id"))
+      .join(broadcast(qv), Seq("query_id"))
+      .withColumn("dist2", Kernels.dist2(col("__cv"), col("__qv")))
+    topK(withVec, "query_id", k, Seq(col("dist2"), col("vec_id")),
+      "query_id", "rank", "vec_id", "dist2")
   }
 
   /** [[adcTopK]] with an EXACT rerank (the FAISS refine step,
@@ -191,18 +207,8 @@ object Pq {
       k: Int,
       rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank width $rerank must be >= k $k")
-    val cands = adcTopK(corpus, idCol, vecCol, queries, codebooks, dim, rerank)
-      .select(col("query_id"), col("vec_id"))
-    val qv = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
-    val withVec = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("dist2", Kernels.dist2(col("__cv"), col("__qv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist2"), col("vec_id"))
-    withVec
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("dist2"))
+    refine(corpus, idCol, vecCol, queries,
+      adcTopK(corpus, idCol, vecCol, queries, codebooks, dim, rerank), k)
   }
 
   /** IVF+PQ (the FAISS `IVFx,PQm` composition — the canonical
@@ -231,37 +237,9 @@ object Pq {
       dim: Int,
       k: Int,
       nProbe: Int): DataFrame = {
-    val m = codebooks.length
-    val subDim = dim / m
-    val ksub = codebooks.head.length / subDim
-    // probes computed by the SAME compiled kernel as corpus assignment,
-    // collected with the query vectors (bounded batch)
-    val qRows = queries.select(col(idCol).cast("long").as("__id"),
-        Kernels.nearestCentroids(col(vecCol), centroids, dim, nProbe).as("__pb"),
-        col(vecCol).as("__v"))
-      .collect()
-    require(qRows.nonEmpty, "query batch is empty")
-    val qIds: Array[Long] = qRows.map(_.getLong(0))
-    val tables: Array[Double] = qRows.flatMap { r =>
-      val qv = r.getSeq[Any](2).toArray.map {
-        case d: Double => d
-        case f: Float => f.toDouble
-        case n: Number => n.doubleValue()
-      }
-      (0 until m).flatMap { j =>
-        val cb = codebooks(j)
-        (0 until ksub).map { c =>
-          var s = 0.0
-          var i = 0
-          while (i < subDim) {
-            val d = qv(j * subDim + i) - cb(c * subDim + i)
-            s += d * d
-            i += 1
-          }
-          s
-        }
-      }
-    }
+    val (m, subDim, ksub) = shape(codebooks, dim)
+    val qRows = probedQueries(queries, idCol, vecCol, centroids, dim, nProbe)
+    val tables = qRows.flatMap(r => adcTable(toDoubles(r.getSeq[Any](2)), codebooks, subDim, ksub))
     val spark = corpus.sparkSession
     import spark.implicits._
     val probePairs = qRows.zipWithIndex.flatMap { case (r, qi) =>
@@ -270,45 +248,33 @@ object Pq {
     val cellOf = Kernels.nearestCentroids(col(vecCol), centroids, dim, 1).getItem(0)
     val codes = encode(col(vecCol), codebooks, dim)
     val dists = Kernels.pqAdcDists(codes, tables.toSeq, m, ksub)
-    val w = Window.partitionBy(col("__qi")).orderBy(col("adc_dist"), col("vec_id"))
-    corpus
+    adcRank(corpus
       .select(col(idCol).as("vec_id"), cellOf.as("__cell"), dists.as("__ds"))
       .join(broadcast(probePairs), Seq("__cell"))
       .select(col("query_id"), col("__qi"), col("vec_id"),
         element_at(col("__ds"), col("__qi") + 1).as("adc_dist"))
-      .where(col("query_id") =!= col("vec_id"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
+      .where(col("query_id") =!= col("vec_id")), "__qi", k)
   }
 
-  private def toDoubles(s: Seq[Any]): Array[Double] = s.toArray.map {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case n: Number => n.doubleValue()
-  }
-
-  /** Driver-side twin of the compiled strict-< ascending-index argmin
-    * ([[graft.functions.TextAlgo.nearestCentroids]] at nProbe=1): same
-    * index-ordered squared-diff accumulation, so a sample vector's cell
-    * here equals the corpus scan's cell for that vector bit-for-bit.
+  /** The bounded query batch on the driver as (id, probed cells, vector)
+    * rows: the probes come from the SAME compiled kernel as corpus cell
+    * assignment.
     */
-  private def nearestCell(v: Array[Double], centroids: Array[Double], dim: Int): Int = {
-    val nLists = centroids.length / dim
-    var best = -1
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < nLists) {
-      var s = 0.0
-      var i = 0
-      val off = c * dim
-      val n = math.min(v.length, dim)
-      while (i < n) { val d = v(i) - centroids(off + i); s += d * d; i += 1 }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
+  private def probedQueries(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Double], dim: Int, nProbe: Int): Array[Row] = {
+    val qRows = queries.select(col(idCol).cast("long").as("__id"),
+        Kernels.nearestCentroids(col(vecCol), centroids, dim, nProbe).as("__pb"),
+        col(vecCol).as("__v"))
+      .collect()
+    require(qRows.nonEmpty, "query batch is empty")
+    qRows
   }
+
+  /** v - centroid(cell) over min(v.length, dim) coordinates — the driver
+    * twin of the compiled [[graft.functions.TextAlgo.centroidResidual]].
+    */
+  private def residual(v: Array[Double], centroids: Array[Double], cell: Int, dim: Int): Array[Double] =
+    Array.tabulate(math.min(v.length, dim))(i => v(i) - centroids(cell * dim + i))
 
   /** [[trainCodebooks]] on IVF RESIDUALS (the FAISS IVFPQ construction):
     * each sample vector is assigned its coarse cell, the codebooks are
@@ -333,31 +299,11 @@ object Pq {
     require(m > 0 && dim % m == 0, s"dim $dim must be a multiple of m $m")
     require(centroids.nonEmpty && centroids.length % dim == 0,
       "centroids must be row-major nLists x dim")
-    val subDim = dim / m
-    val cap = math.min(256 * ksub, math.max(25000, 64 * ksub))
     val centArr = centroids.toArray
-    val residuals: Array[Array[Double]] = corpus
-      .select(col(vecCol).as("__v"), xxhash64(col(idCol), lit(seed)).as("__h"))
-      .orderBy(col("__h")).limit(cap)
-      .select(col("__v"))
-      .collect()
-      .map { r =>
-        val v = toDoubles(r.getSeq[Any](0))
-        val off = nearestCell(v, centArr, dim) * dim
-        val out = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { out(i) = v(i) - centArr(off + i); i += 1 }
-        out
-      }
-    require(residuals.nonEmpty, "cannot train PQ codebooks on an empty corpus")
-    (0 until m).map { j =>
-      val slices = residuals.zipWithIndex
-        .map { case (v, i) => (i.toLong, v.slice(j * subDim, (j + 1) * subDim)) }
-      // local trainer — bit-identical to the DataFrame path, no
-      // per-subspace Spark job (see trainCodebooks)
-      Similarity.trainIvfCentroidsLocal(slices.toIndexedSeq,
-        subDim, nLists = ksub, seed = seed + j)
-    }
+    val residuals = Similarity.hashSample(corpus, idCol, vecCol, seed,
+        Similarity.trainingCap(ksub), "PQ codebooks")
+      .map(v => residual(v, centArr, nearest(v, centArr, dim)._1, dim))
+    subspaceCodebooks(residuals, m, dim / m, ksub, seed)
   }
 
   /** RESIDUAL IVF+PQ search ([[ivfAdcTopK]] with FAISS's residual
@@ -399,20 +345,12 @@ object Pq {
       k: Int,
       nProbe: Int,
       maxTableDoubles: Long = 1L << 23): DataFrame = {
-    val m = codebooks.length
-    val subDim = dim / m
-    val ksub = codebooks.head.length / subDim
-    require(codebooks.forall(_.length == ksub * subDim),
-      "all codebooks must hold ksub x subDim values")
+    val (m, subDim, ksub) = shape(codebooks, dim)
     val perQueryDoubles = nProbe.toLong * m * ksub
     require(maxTableDoubles >= perQueryDoubles,
       s"maxTableDoubles $maxTableDoubles cannot hold even one query's " +
         s"nProbe x m x ksub = $perQueryDoubles ADC doubles")
-    val qRows = queries.select(col(idCol).cast("long").as("__id"),
-        Kernels.nearestCentroids(col(vecCol), centroids, dim, nProbe).as("__pb"),
-        col(vecCol).as("__v"))
-      .collect()
-    require(qRows.nonEmpty, "query batch is empty")
+    val qRows = probedQueries(queries, idCol, vecCol, centroids, dim, nProbe)
     val queriesPerChunk = (maxTableDoubles / perQueryDoubles).toInt
     qRows.grouped(queriesPerChunk).map { chunk =>
       ivfAdcTopKResidualChunk(corpus, idCol, vecCol, chunk,
@@ -428,7 +366,7 @@ object Pq {
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      qRows: Array[org.apache.spark.sql.Row],
+      qRows: Array[Row],
       centroids: Seq[Double],
       codebooks: Seq[Seq[Double]],
       dim: Int,
@@ -444,21 +382,8 @@ object Pq {
       val qv = toDoubles(r.getSeq[Any](2))
       r.getSeq[Long](1).map(cell => (r.getLong(0), cell, qv))
     }
-    val tables: Array[Double] = pairs.flatMap { case (_, cell, qv) =>
-      val cOff = cell.toInt * dim
-      (0 until m).flatMap { j =>
-        val cb = codebooks(j)
-        (0 until ksub).map { c =>
-          var s = 0.0
-          var i = 0
-          while (i < subDim) {
-            val d = (qv(j * subDim + i) - centArr(cOff + j * subDim + i)) - cb(c * subDim + i)
-            s += d * d
-            i += 1
-          }
-          s
-        }
-      }
+    val tables = pairs.flatMap { case (_, cell, qv) =>
+      adcTable(residual(qv, centArr, cell.toInt, dim), codebooks, subDim, ksub)
     }
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -468,19 +393,15 @@ object Pq {
     val cellCol = Kernels.nearestCentroids(col(vecCol), centroids, dim, 1).getItem(0)
     val withCell = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__v"),
       cellCol.as("__cell"))
-    val residual = Kernels.centroidResidual(col("__v"), col("__cell"), centroids, dim)
-    val codes = encode(residual, codebooks, dim)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"), col("vec_id"))
-    withCell
+    val residualCol = Kernels.centroidResidual(col("__v"), col("__cell"), centroids, dim)
+    val codes = encode(residualCol, codebooks, dim)
+    adcRank(withCell
       .select(col("vec_id"), col("__cell"), codes.as("__codes"))
       .join(broadcast(probePairs), Seq("__cell"))
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
         Kernels.pqAdcDistAt(col("__codes"), col("__pi"),
-          tables.toSeq, m, ksub).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
+          tables.toSeq, m, ksub).as("adc_dist")), "query_id", k)
   }
 
   /** [[ivfAdcTopKResidual]] + the exact rerank of [[adcTopKRefined]]
@@ -503,18 +424,7 @@ object Pq {
       rerank: Int,
       maxTableDoubles: Long = 1L << 23): DataFrame = {
     require(rerank >= k, s"rerank width $rerank must be >= k $k")
-    val cands = ivfAdcTopKResidual(corpus, idCol, vecCol, queries,
-        centroids, codebooks, dim, rerank, nProbe, maxTableDoubles)
-      .select(col("query_id"), col("vec_id"))
-    val qv = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
-    val withVec = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("dist2", Kernels.dist2(col("__cv"), col("__qv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist2"), col("vec_id"))
-    withVec
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("dist2"))
+    refine(corpus, idCol, vecCol, queries, ivfAdcTopKResidual(corpus, idCol, vecCol, queries,
+      centroids, codebooks, dim, rerank, nProbe, maxTableDoubles), k)
   }
 }

@@ -62,14 +62,39 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("__cv"), col("__qv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    cosineTopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosine(col("__cv"), col("__qv"))), k)
   }
+
+  /** Per-query top-k: rank each `by` partition of `scored` by `order`,
+    * keep ranks <= k and project `out`. Catalyst plans the rank filter as
+    * a map-side WindowGroupLimit, so the exchange carries at most k rows
+    * per query and partition.
+    */
+  private[similarity] def topK(
+      scored: DataFrame, by: String, k: Int, order: Seq[Column], out: String*): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(Window.partitionBy(col(by)).orderBy(order: _*)))
+      .where(col("rank") <= k)
+      .select(out.map(col): _*)
+
+  /** (query_id, neighbor_id, cosine, rank): the k highest cosines per
+    * query, ties to the smaller neighbor id.
+    */
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, "query_id", k, Seq(col("cosine").desc, col("neighbor_id")),
+      "query_id", "neighbor_id", "cosine", "rank")
+
+  /** [[cosineTopK]] over the corpus rows `c` that share a `key` with a
+    * query probe row of `q` (broadcast): self-matches dropped, and each
+    * (query, neighbor) pair scored once however many probes it matched.
+    */
+  private def probedCosineTopK(c: DataFrame, q: DataFrame, key: String, k: Int): DataFrame =
+    cosineTopK(c.join(broadcast(q), Seq(key))
+      .where(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("__cv"), col("__qv"))
+      .dropDuplicates("query_id", "neighbor_id")
+      .withColumn("cosine", cosine(col("__cv"), col("__qv"))), k)
 
   /** Random-hyperplane LSH bucket key: `numBits`-bit sign sketch of the
     * vector against seeded Gaussian-ish hyperplanes. Deterministic given
@@ -137,33 +162,9 @@ object Similarity {
       hyperplaneProbeBuckets(col(vecCol), dim, numBits, nProbe, seed).as("__pb"))
     val q = base
       .select(col("query_id"), col("__qv"), explode(col("__pb")).as("__bucket"))
-    val scored = c.join(broadcast(q), Seq("__bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      // a neighbor can match several probes of the same query -> dedupe
-      // before ranking
-      .select(col("query_id"), col("neighbor_id"), col("__cv"), col("__qv"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", cosine(col("__cv"), col("__qv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    probedCosineTopK(c, q, "__bucket", k)
   }
 
-  /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
-    * corpus into `nLists` cells; each query probes its `nProbe` nearest
-    * centroids and re-ranks exactly (cosine) within those cells only.
-    *
-    * Plan shape: centroids train once (spark.ml KMeans — distributed,
-    * seeded) and ship as a codegen constant; corpus assignment is a
-    * compiled argmin per row ([[graft.functions.Kernels.nearestCentroids]]);
-    * candidate generation is ONE equi-join of the corpus's cell id against
-    * the exploded (query, probe-cell) pairs — query side is broadcast, the
-    * corpus is scanned once and never pairwise-compared. Higher recall per
-    * candidate than sign-sketch LSH when the corpus is clustered; `nProbe`
-    * trades recall for cost.
-    */
   /** Train the IVF coarse quantizer on a BOUNDED deterministic sample of the
     * corpus: the `cap` rows with the smallest seeded xxhash64 of their id
     * (TakeOrdered — per-partition top-k then a tiny merge, never a full
@@ -183,16 +184,7 @@ object Similarity {
       sampleCap: Int = 0,
       maxIter: Int = 10,
       driverFlopsPerIter: Long = 10000000000L): Seq[Double] = {
-    // default cap: 256/cell for small quantizers (unchanged published
-    // layouts), but bounded at max(25k, 64/cell) once cells scale with the
-    // corpus (cellsForOccupancy) — driver Lloyd's AND k-means++ seeding
-    // are O(sample x nLists x dim), so an uncapped 256/cell sample at
-    // hundreds of cells turns training into tens of seconds of
-    // single-threaded driver CPU (measured on the sf10 decade); 64-100
-    // points per cell is the quality floor the scaladoc above cites
-    val cap =
-      if (sampleCap > 0) sampleCap
-      else math.min(256 * nLists, math.max(25000, 64 * nLists))
+    val cap = trainingCap(nLists, sampleCap)
     // adaptive routing (the Components pattern): per-iteration driver work
     // is cap x nLists x dim flops — beyond the threshold (~seconds of
     // driver arithmetic even on the parallel Lloyd) the train moves to the
@@ -205,31 +197,8 @@ object Similarity {
     // driver-trivial (cap * nLists * dim flops per iteration) — spark.ml
     // KMeans here would cost a dozen scheduler round-trips to cluster a
     // few thousand rows
-    val sample: Array[Array[Double]] = corpus
-      .select(col(vecCol).as("__v"), xxhash64(col(idCol), lit(seed)).as("__h"))
-      .orderBy(col("__h")).limit(cap)
-      .select(col("__v"))
-      .collect()
-      .map(_.getSeq[Any](0).toArray.map {
-        case d: Double => d
-        case f: Float => f.toDouble
-        case n: Number => n.doubleValue()
-      })
-    require(sample.nonEmpty, "cannot train IVF centroids on an empty corpus")
-    val k = math.min(nLists, sample.length)
-    // multi-restart: k-means++ is init-sensitive; 5 seeded restarts keeping
-    // the lowest within-cluster sum of squares — still microseconds of
-    // driver arithmetic at this sample size. (Euclidean cells, NOT
-    // spherical: these corpora cluster by position, and directional cells
-    // degrade toward sign-sketch LSH behavior — measured on the synthetic
-    // embeddings: euclidean 9/15 vs spherical 5/15 at nLists=16/nProbe=4.)
-    val best = (0 until 5).map { r =>
-      // arrays throughout: a List-backed Seq here turns wcss's positional
-      // reads into O(n) each (measured: 10s instead of 30ms)
-      val c = lloyd(sample, k, dim, seed + r * 7919, maxIter).toArray
-      (wcss(sample, c, dim), c)
-    }.minBy(_._1)._2
-    best.toSeq.padTo(nLists * dim, 0.0)
+    kmeans(hashSample(corpus, idCol, vecCol, seed, cap, "IVF centroids"),
+      nLists, dim, seed, maxIter)
   }
 
   /** Driver-local twin of [[trainIvfCentroids]]'s small-quantizer path
@@ -254,21 +223,12 @@ object Similarity {
       sampleCap: Int = 0,
       maxIter: Int = 10): Seq[Double] = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
-    val cap =
-      if (sampleCap > 0) sampleCap
-      else math.min(256 * nLists, math.max(25000, 64 * nLists))
     require(sample.nonEmpty, "cannot train IVF centroids on an empty sample")
     // xxhash64(id, lit(seed)) as Catalyst folds it: 42 is the function's
     // initial seed, each child re-seeds with the running hash
     def h(id: Long): Long = XXH64.hashLong(seed, XXH64.hashLong(id, 42L))
-    val picked: Array[Array[Double]] =
-      sample.sortBy(p => h(p._1)).take(cap).map(_._2).toArray
-    val k = math.min(nLists, picked.length)
-    val best = (0 until 5).map { r =>
-      val c = lloyd(picked, k, dim, seed + r * 7919, maxIter).toArray
-      (wcss(picked, c, dim), c)
-    }.minBy(_._1)._2
-    best.toSeq.padTo(nLists * dim, 0.0)
+    val picked = sample.sortBy(p => h(p._1)).take(trainingCap(nLists, sampleCap)).map(_._2).toArray
+    kmeans(picked, nLists, dim, seed, maxIter)
   }
 
   /** Cluster-side trainer for cell counts the driver can't afford: a
@@ -332,57 +292,147 @@ object Similarity {
     } finally feats.unpersist()
   }
 
-  private def wcss(pts: Array[Array[Double]], centers: Array[Double], dim: Int): Double = {
-    val k = centers.length / dim
-    var total = 0.0
-    var i = 0
-    while (i < pts.length) {
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        var s = 0.0
-        var j = 0
-        val off = c * dim
-        val p = pts(i)
-        val m = math.min(dim, p.length)
-        while (j < m) { val d = p(j) - centers(off + j); s += d * d; j += 1 }
-        if (s < bestD) bestD = s
-        c += 1
-      }
-      total += bestD
-      i += 1
-    }
-    total
+  // ---- the driver-side training blocks shared with Pq and Opq ----
+
+  /** Default training-sample cap of a `k`-centroid quantizer, unless
+    * `sampleCap` > 0 sets one: 256 per cell for small quantizers
+    * (unchanged published layouts), but bounded at max(25k, 64 per cell)
+    * once cells scale with the corpus (cellsForOccupancy) — driver Lloyd's
+    * AND k-means++ seeding are O(sample x k x dim), so an uncapped
+    * 256/cell sample at hundreds of cells turns training into tens of
+    * seconds of single-threaded driver CPU (measured on the sf10 decade);
+    * 64-100 points per cell is the quality floor.
+    */
+  private[similarity] def trainingCap(k: Int, sampleCap: Int = 0): Int =
+    if (sampleCap > 0) sampleCap else math.min(256 * k, math.max(25000, 64 * k))
+
+  /** The bounded training sample: the vectors of the `cap` rows with the
+    * smallest seeded xxhash64 of their id (TakeOrdered — per-partition
+    * top-k then a tiny merge, never a full sort), collected in hash order.
+    * `what` names the model for the empty-corpus error.
+    */
+  private[similarity] def hashSample(corpus: DataFrame, idCol: String, vecCol: String,
+      seed: Long, cap: Int, what: String): Array[Array[Double]] = {
+    val sample = corpus
+      .select(col(vecCol).as("__v"), xxhash64(col(idCol), lit(seed)).as("__h"))
+      .orderBy(col("__h")).limit(cap)
+      .select(col("__v"))
+      .collect()
+      .map(r => toDoubles(r.getSeq[Any](0)))
+    require(sample.nonEmpty, s"cannot train $what on an empty corpus")
+    sample
   }
 
-  /** Seeded Lloyd's k-means with k-means++ init, on the driver. Returns
-    * row-major k x dim centroids.
+  /** A collected numeric array as doubles. */
+  private[similarity] def toDoubles(s: Seq[Any]): Array[Double] = s.toArray.map {
+    case d: Double => d
+    case f: Float => f.toDouble
+    case n: Number => n.doubleValue()
+  }
+
+  /** (index, squared distance) of the strict-< ascending-index nearest of
+    * the row-major `dim`-wide centroids `cents` to v(off ..), over
+    * min(dim, v.length - off) coordinates; index -1 when no distance is
+    * below Double.MaxValue. The driver twin of the compiled
+    * [[graft.functions.TextAlgo.nearestCentroids]] argmin: the same
+    * index-ordered accumulation, so a vector's cell here equals the
+    * corpus scan's cell for it bit-for-bit.
+    */
+  private[similarity] def nearest(
+      v: Array[Double], cents: Array[Double], dim: Int, off: Int = 0): (Int, Double) = {
+    val n = math.min(dim, v.length - off)
+    var best = -1
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length / dim) {
+      var s = 0.0
+      var i = 0
+      val co = c * dim
+      while (i < n) { val d = v(off + i) - cents(co + i); s += d * d; i += 1 }
+      if (s < bestD) { bestD = s; best = c }
+      c += 1
+    }
+    (best, bestD)
+  }
+
+  // Per-point loops run on the common ForkJoin pool: the O(n x k x dim)
+  // phases (seeding distance refresh, Lloyd assignment) are
+  // embarrassingly parallel over points, each writing only its own slot —
+  // results are BIT-IDENTICAL to the sequential loop because per-point
+  // arithmetic is unchanged and every order-sensitive accumulation
+  // (minD.sum, the centroid sums) stays sequential. Matters once
+  // cellsForOccupancy scales k into the hundreds: the single-threaded
+  // train was ~7 s of the q71 sf10 wall.
+  private def parForeach(bound: Int)(f: Int => Unit): Unit =
+    java.util.stream.IntStream.range(0, bound).parallel().forEach(i => f(i))
+
+  /** One Lloyd pass over `pts`, in place on the row-major `dim`-wide
+    * centroids `cents`: assign each point its [[nearest]] centroid (cell 0
+    * when none is nearer than Double.MaxValue), then move every centroid
+    * that got points to their mean over its first `dim` coordinates,
+    * summed in point order; an empty cell keeps its centroid. Returns
+    * whether any point changed cell against `assign`, which it updates.
+    */
+  private[similarity] def lloydStep(
+      pts: Array[Array[Double]], cents: Array[Double], dim: Int, assign: Array[Int]): Boolean = {
+    val moved = new java.util.concurrent.atomic.AtomicBoolean(false)
+    parForeach(pts.length) { i =>
+      val best = math.max(0, nearest(pts(i), cents, dim)._1)
+      if (assign(i) != best) { assign(i) = best; moved.set(true) }
+    }
+    val k = cents.length / dim
+    val sums = new Array[Double](k * dim)
+    val cnts = new Array[Long](k)
+    var i = 0
+    while (i < pts.length) {
+      val c = assign(i); cnts(c) += 1
+      var j = 0
+      while (j < math.min(dim, pts(i).length)) { sums(c * dim + j) += pts(i)(j); j += 1 }
+      i += 1
+    }
+    var c = 0
+    while (c < k) {
+      if (cnts(c) > 0) {
+        var j = 0
+        while (j < dim) { cents(c * dim + j) = sums(c * dim + j) / cnts(c); j += 1 }
+      }
+      c += 1
+    }
+    moved.get()
+  }
+
+  /** Driver k-means of a collected sample, zero-padded to row-major
+    * `nLists x dim`. Multi-restart: k-means++ is init-sensitive; 5 seeded
+    * restarts keeping the lowest within-cluster sum of squares — still
+    * microseconds of driver arithmetic at this sample size. (Euclidean
+    * cells, NOT spherical: these corpora cluster by position, and
+    * directional cells degrade toward sign-sketch LSH behavior — measured
+    * on the synthetic embeddings: euclidean 9/15 vs spherical 5/15 at
+    * nLists=16/nProbe=4.)
+    */
+  private def kmeans(
+      pts: Array[Array[Double]], nLists: Int, dim: Int, seed: Long, maxIter: Int): Seq[Double] = {
+    val k = math.min(nLists, pts.length)
+    (0 until 5).map { r =>
+      val c = lloyd(pts, k, dim, seed + r * 7919, maxIter)
+      (pts.map(nearest(_, c, dim)._2).sum, c)
+    }.minBy(_._1)._2.toSeq.padTo(nLists * dim, 0.0)
+  }
+
+  /** Seeded Lloyd's k-means with k-means++ init, on the driver, until no
+    * point moves (counted from an all-zero assignment) or `maxIter`
+    * passes. Returns row-major k x dim centroids.
     */
   private def lloyd(
-      pts: Array[Array[Double]], k: Int, dim: Int, seed: Long, maxIter: Int): Seq[Double] = {
+      pts: Array[Array[Double]], k: Int, dim: Int, seed: Long, maxIter: Int): Array[Double] = {
     val rng = new scala.util.Random(seed)
     val n = pts.length
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    // Per-point loops below run on the common ForkJoin pool: the two
-    // O(n x k x dim) phases (seeding distance refresh, Lloyd assignment)
-    // are embarrassingly parallel over points, each writing only its own
-    // slot — results are BIT-IDENTICAL to the sequential loop because
-    // per-point arithmetic is unchanged and every order-sensitive
-    // accumulation (minD.sum, the centroid sums) stays sequential.
-    // Matters once cellsForOccupancy scales k into the hundreds: the
-    // single-threaded train was ~7 s of the q71 sf10 wall.
-    def parForeach(bound: Int)(f: Int => Unit): Unit =
-      java.util.stream.IntStream.range(0, bound).parallel().forEach(i => f(i))
     // k-means++ seeding
     val centers = scala.collection.mutable.ArrayBuffer(pts(rng.nextInt(n)))
     val minD = Array.fill(n)(Double.MaxValue)
     while (centers.length < k) {
       val last = centers.last
-      parForeach(n) { i => minD(i) = math.min(minD(i), d2(pts(i), last)) }
+      parForeach(n) { i => minD(i) = math.min(minD(i), nearest(pts(i), last, dim)._2) }
       val totalW = minD.sum
       val pick =
         if (totalW <= 0) rng.nextInt(n)
@@ -394,45 +444,27 @@ object Similarity {
         }
       centers += pts(pick)
     }
-    // Lloyd iterations
+    val cents = centers.toArray.flatMap(_.padTo(dim, 0.0).take(dim))
     val assign = new Array[Int](n)
     var iter = 0
     var moved = true
-    while (iter < maxIter && moved) {
-      val anyMoved = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val snap = centers.toArray
-      parForeach(n) { i =>
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < snap.length) {
-          val d = d2(pts(i), snap(c)); if (d < bestD) { bestD = d; best = c }; c += 1
-        }
-        if (assign(i) != best) { assign(i) = best; anyMoved.set(true) }
-      }
-      moved = anyMoved.get()
-      val sums = Array.fill(centers.length)(new Array[Double](dim))
-      val cnts = new Array[Long](centers.length)
-      var i = 0
-      while (i < n) {
-        val c = assign(i); cnts(c) += 1
-        var j = 0
-        while (j < math.min(dim, pts(i).length)) { sums(c)(j) += pts(i)(j); j += 1 }
-        i += 1
-      }
-      var c = 0
-      while (c < centers.length) {
-        if (cnts(c) > 0) {
-          val m = new Array[Double](dim)
-          var j = 0
-          while (j < dim) { m(j) = sums(c)(j) / cnts(c); j += 1 }
-          centers(c) = m
-        } // empty cluster: keep its previous center
-        c += 1
-      }
-      iter += 1
-    }
-    centers.toSeq.flatMap(c => c.padTo(dim, 0.0).take(dim))
+    while (iter < maxIter && moved) { moved = lloydStep(pts, cents, dim, assign); iter += 1 }
+    cents
   }
 
+  /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
+    * corpus into `nLists` cells; each query probes its `nProbe` nearest
+    * centroids and re-ranks exactly (cosine) within those cells only.
+    *
+    * Plan shape: centroids train once (spark.ml KMeans — distributed,
+    * seeded) and ship as a codegen constant; corpus assignment is a
+    * compiled argmin per row ([[graft.functions.Kernels.nearestCentroids]]);
+    * candidate generation is ONE equi-join of the corpus's cell id against
+    * the exploded (query, probe-cell) pairs — query side is broadcast, the
+    * corpus is scanned once and never pairwise-compared. Higher recall per
+    * candidate than sign-sketch LSH when the corpus is clustered; `nProbe`
+    * trades recall for cost.
+    */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -462,21 +494,9 @@ object Similarity {
       explode(cellsOf(col(vecCol), math.max(1, corpusAssign))).as("__cell"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       explode(cellsOf(col(vecCol), nProbe)).as("__cell"))
-    val scored = c.join(broadcast(q), Seq("__cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("__cv"), col("__qv"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", cosine(col("__cv"), col("__qv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    probedCosineTopK(c, q, "__cell", k)
   }
 
-  /** Embedding-cosine near-duplicate pairs above a similarity threshold,
-    * LSH-bucketed (pairs must share a bucket).
-    */
   /** Smallest hyperplane bit-width (>= minBits) whose mean bucket
     * occupancy n/2^bits stays at or under `targetOccupancy`.
     *
@@ -511,6 +531,9 @@ object Similarity {
     math.min(maxCells.toLong, math.max(minCells.toLong, want)).toInt
   }
 
+  /** Embedding-cosine near-duplicate pairs above a similarity threshold,
+    * LSH-bucketed (pairs must share a bucket).
+    */
   def cosineNearDupPairs(
       df: DataFrame,
       idCol: String,

@@ -121,8 +121,42 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** SHA-256 of the oracle SQL at sf0.001 of the queries whose oracle
+    * embeds trained constants (centroids, codebooks, rotations, LSH
+    * planes) as SQL literals: a refactor of the ANN training or search
+    * code that moves any constant changes one of these.
+    */
+  private val trainedOracleSha256 = Map(
+    "q37_knn_ivf" ->
+      "16f58a3dc814b7a0c40b73a6c0c3c27afb2a4783eb4a20c6b5b40470e967457b",
+    "q39_cosine_neardup_lsh" ->
+      "d567b677f0839b38d60c22674408e891a0ea72a06fb149fd135e450b690d2a88",
+    "q55_neardup_components" ->
+      "fd2174cb076c978b2fc27319ad4aece461f37e58d01f6496acfd4f2b43dd4c30",
+    "q65_kmeans_clusters" ->
+      "a2501cdabd0468b3b9afc07acc82b55e45f32134653505b009f6f4b237b22819",
+    "q71_semdedup_pairs" ->
+      "74a0406e176cb62a0e8412cad255580869df33dd84cadad07871c4761dc8d070",
+    "q76_banded_neardup" ->
+      "6e8a9d6d87ea1d3bc7314e3df7a6c257d09e93b4db95e3a169df04448e18bc0e",
+    "q121_pq_ann" ->
+      "568f922061e6c2d21d27350e36aa060f90606f8e7a59b83ee612f067d9dcc8ff",
+    "q122_ivfpq_ann" ->
+      "66d18340d1bd55f2be4beb57d4c6d6d06432d90f5ab74a2271e10c522248cd80",
+    "q123_ivfpq_residual_ann" ->
+      "85dc2aac8f2e9a7a5bc2c6808b1ed780c6f7f91c6e359d7ee407ccd4b7a8b2f2",
+    "q132_opq_ann" ->
+      "b66c3013791fb86116936f29aaff8e4660b936d1db1c86bc1b3f469afea7969a",
+    "q134_ann_opq_ivfpq_refined" ->
+      "4f807cd2f00332533d14f0594b22c537231b80a132e6cf8f29987897bd816df4")
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+
   test("no single-partition windows, cartesians, or undocumented BNL joins in any query plan") {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    val trainedHashes = scala.collection.mutable.Map.empty[String, String]
     var walked = 0
     // the same builds give the oracles: one per query at this scale,
     // except the goldens, which are committed for sf0.01 and up
@@ -132,6 +166,8 @@ class PlanAuditSpec extends SparkSpec {
     Harness.eachQuery(Queries.all.map(q => q.name -> q)) { (name, q) =>
       val built = q.build(spark, sfDir)
       if (built.oracle.isEmpty) withoutOracle += name
+      if (trainedOracleSha256.contains(name))
+        trainedHashes(name) = built.oracle.fold("")(sha256)
       // PlanWalk, NOT executedPlan.collect: AQE wraps the plan in a
       // leaf AdaptiveSparkPlanExec and a bare collect checks nothing
       val nodes = graft.tools.PlanWalk.collectAll(
@@ -172,6 +208,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(walked > 500, s"plan walk saw only $walked nodes — traversal broken?")
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
     assert(withoutOracle.toSet === GoldenOracles.queries.toSet)
+    assert(trainedHashes.toMap === trainedOracleSha256)
   }
 
   test("q88 and q93 plan a single range exchange, kernel after it, and no cache") {

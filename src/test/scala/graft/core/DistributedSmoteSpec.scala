@@ -63,8 +63,16 @@ class DistributedSmoteSpec extends SparkSpec {
         (0 until 3000).map(_ => (1, 1, 800.0 + rng.nextGaussian * 50.0, 800.0 + rng.nextGaussian * 50.0))
     val df = pts.toDF("s", "y", "f1", "f2")
     val m = 600L
+    // drain what earlier specs in this JVM left tracked, so the drain
+    // below frees only this call's blocks
+    graft.etl.CacheTracker.unpersistCaches(blocking = true)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Strategies.synthesizeSmote(df, key, Map(Seq[Any](1, 1) -> m),
       seed = 7, adasyn = true).collect()
+    // the kNN-weight checkpoint of the LSH path is tracked: the drain
+    // frees every block the call made
+    graft.etl.CacheTracker.unpersistCaches(blocking = true)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
     assert(out.length === m)
     val wide = out.count(_.getDouble(2) > 450.0)
     assert(wide.toDouble / m > 0.7,

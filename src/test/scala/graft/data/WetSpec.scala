@@ -22,7 +22,7 @@ class WetSpec extends SparkSpec {
       (sh.toLong - 2) -> Wet.warcinfoRecord(s"shard_$sh.warc.wet.gz"))
     val dir = tmpDir()
     WarcFiles.writeShards(info ++ records, dir, nShards = 2)
-    val got = Wet.docs(Wet.readWetGz(spark, dir.toString + "/*.warc.gz"))
+    val got = Wet.docs(Wet.readWetGz(spark, dir.toString))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
     val want = docsIn.map { case (id, text) =>
       (s"https://example.org/doc/$id", text.codePointCount(0, text.length), text)
@@ -84,7 +84,7 @@ class WetSpec extends SparkSpec {
       "https://example.org/w/3"))
 
     // stream output == the batch binaryFile read of the same dir
-    val batch = Wet.docs(Wet.readWetGz(spark, src + "/*.warc.gz"))
+    val batch = Wet.docs(Wet.readWetGz(spark, src))
       .select("target_uri").collect().map(_.getString(0)).toSeq.sorted
     assert(batch === uris(), "file-stream and batch reads of the same shards diverged")
   }

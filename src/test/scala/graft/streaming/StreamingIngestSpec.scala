@@ -155,7 +155,7 @@ class StreamingIngestSpec extends SparkSpec {
 
     // file-stream output == the batch binaryFile read of the same dir
     val batch = IngestPipeline.warcToCleanDocs(
-        graft.data.WarcFiles.readWarcGz(spark, src + "/*.warc.gz"),
+        graft.data.WarcFiles.readWarcGz(spark, src),
         "blob", minWords = 50L)
       .select("target_uri").collect().map(_.getString(0)).toSeq.sorted
     assert(batch === uris(), "file-stream and batch reads of the same shards diverged")
