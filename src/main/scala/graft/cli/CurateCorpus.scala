@@ -139,6 +139,6 @@ object CurateCorpus {
       Seq("input" -> input, "quality" -> nQuality, "exact_dedup" -> nExact,
         "span_dedup" -> nChunked, "decontaminated" -> nClean,
         "per_source_cap" -> nCapped)
-    } finally checkpoints.foreach(_.unpersist())
+    } finally checkpoints.foreach(CacheTracker.release(_))
   }
 }

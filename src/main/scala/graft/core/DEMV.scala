@@ -99,9 +99,7 @@ class DEMV(
     // salt from idCols when provided (count job scans only keyCols+idCols —
     // column-pruned on wide tables); otherwise all columns
     val saltInput = idCols.getOrElse(df.columns.toSeq)
-    val salted = df.withColumn(
-      saltCol,
-      pmod(xxhash64(saltInput.map(col) :+ lit(seed): _*), lit(saltBuckets)).cast("int"))
+    val salted = df.withColumn(saltCol, ExactSampler.salt(saltInput, seed, saltBuckets))
 
     // Job 1: per-(cell, salt) counts; cell counts, marginals and the total
     // all derive from it on the driver — at most 2^n * L * saltBuckets rows.

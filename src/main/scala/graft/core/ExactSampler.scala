@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.OpaqueLiteral
+
 /** Distributed exact-N per-group resampling.
   *
   * Given per-group target sizes, downsamples (without replacement) or
@@ -65,9 +67,7 @@ object ExactSampler {
     val originalCols = df.columns.toSeq
     val saltCol = "__graft_salt"
     val saltInput = saltCols.getOrElse(originalCols)
-    val salted = df.withColumn(
-      saltCol,
-      pmod(xxhash64(saltInput.map(col) :+ lit(seed): _*), lit(saltBuckets)).cast("int"))
+    val salted = df.withColumn(saltCol, salt(saltInput, seed, saltBuckets))
 
     // Job 1: (group, salt) occupancy — tiny result (groups * saltBuckets).
     val occupancy: Array[Row] = precomputedOccupancy.getOrElse(
@@ -132,6 +132,15 @@ object ExactSampler {
       .withColumn("__graft_dup", explode(expr("sequence(1, __graft_copies)")))
       .select(originalCols.map(col): _*)
   }
+
+  /** The sampling salt in [0, saltBuckets): `xxhash64(saltCols..., seed)`.
+    * The seed enters as an [[graft.functions.OpaqueLiteral]], so that
+    * samplers that differ only in their seed (the folds of a
+    * cross-validation) share their generated code; the hash is the same
+    * as with `lit(seed)`.
+    */
+  private[core] def salt(saltCols: Seq[String], seed: Long, saltBuckets: Int): Column =
+    pmod(xxhash64(saltCols.map(col) :+ OpaqueLiteral.lit(seed): _*), lit(saltBuckets)).cast("int")
 
   /** Largest-remainder allocation of `total` over buckets proportionally to
     * `weights`, each share capped at its weight (downsample feasibility).

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.RddBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry for operator-internal caches.
@@ -58,8 +59,8 @@ object CacheTracker {
   }
 
   /** The RDD that holds a `localCheckpoint`ed frame's blocks: its
-    * LogicalRDD leaf. Unpersisting it releases the checkpoint, which a
-    * caller that owns the frame's whole lifetime can do itself instead of
+    * LogicalRDD leaf. [[release]] frees the checkpoint, which a caller
+    * that owns the frame's whole lifetime can do itself instead of
     * waiting for the [[unpersistCaches]] drain.
     */
   private[graft] def checkpointRdd(cp: DataFrame): RDD[_] = cp.queryExecution.analyzed match {
@@ -69,6 +70,14 @@ object CacheTracker {
       s"localCheckpoint did not yield a LogicalRDD leaf (got ${other.nodeName}); " +
         "its blocks cannot be tracked for release")
   }
+
+  /** Free a checkpoint's blocks (see [[checkpointRdd]]) as
+    * `RDD.unpersist` does, without the WARN that `unpersist` logs for
+    * every locally checkpointed RDD: the lineage is gone by design, and
+    * a warning per release would bury the warnings that mean something.
+    */
+  private[graft] def release(rdd: RDD[_], blocking: Boolean = false): Unit =
+    RddBridge.unpersist(rdd, blocking)
 
   /** Unpersist every tracked cache created since the last call — see the
     * class doc for the call-after-materializing contract.
@@ -84,6 +93,6 @@ object CacheTracker {
     var d = pendingCaches.poll()
     while (d != null) { d.unpersist(blocking); d = pendingCaches.poll() }
     var r = pendingRdds.poll()
-    while (r != null) { r.unpersist(blocking); r = pendingRdds.poll() }
+    while (r != null) { release(r, blocking); r = pendingRdds.poll() }
   }
 }

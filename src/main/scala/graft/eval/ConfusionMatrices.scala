@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.DEMV
 import graft.data.DatasetSpec
 import graft.etl.CacheTracker
+import graft.functions.OpaqueLiteral
 import graft.metrics.GroupCondition
 
 /** The reference's third entry point (SURVEY §3.3, E9/S8): out-of-fold
@@ -53,8 +54,8 @@ object ConfusionMatrices {
     val oof =
       try {
         (0 until k).map { fold =>
-          val train = folded.where(col("__fold") =!= fold)
-          val test = folded.where(col("__fold") === fold)
+          val train = folded.where(col("__fold") =!= OpaqueLiteral.lit(fold))
+          val test = folded.where(col("__fold") === OpaqueLiteral.lit(fold))
           val pred = debiaser match {
             case Some("eg") =>
               Reductions.ExponentiatedGradient.fitEnsemble(

@@ -3,12 +3,13 @@ package graft.eval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.{Pipeline, PipelineStage}
-import org.apache.spark.ml.classification.{GBTClassifier, LinearSVC, LogisticRegression, MultilayerPerceptronClassifier, OneVsRest}
+import org.apache.spark.ml.classification.{Classifier, GBTClassifier, LinearSVC, LogisticRegression, MultilayerPerceptronClassifier, OneVsRest}
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 
 import graft.core.DEMV
 import graft.data.DatasetSpec
 import graft.etl.CacheTracker
+import graft.functions.OpaqueLiteral
 import graft.metrics.{FairnessMetrics, GroupCondition, MetricsResult}
 
 /** One (fold, stop) evaluation record — the row shape of the reference's
@@ -89,43 +90,50 @@ object CrossVal {
     df.withColumn(predCol, back)
   }
 
+  /** The assembler and scaler in front of every classifier. Every stage
+    * built here has a fixed uid: the assembler writes its uid into the
+    * names of its cast columns (`<col>_double_<uid>`), and those names go
+    * into the generated code of every stage that reads the assembled
+    * frame, so a random uid would make each fit compile that code anew.
+    */
+  private[eval] def features(featureCols: Seq[String]): Array[PipelineStage] = Array(
+    new VectorAssembler("graft_assembler")
+      .setInputCols(featureCols.toArray).setOutputCol("__features_raw")
+      .setHandleInvalid("skip"),
+    new StandardScaler("graft_scaler")
+      .setInputCol("__features_raw").setOutputCol("__features")
+      .setWithMean(true).setWithStd(true))
+
   /** E3/E4: the reference's classifier matrix (`generatemetrics.py:173-196`).
     * GBT and SVC are binary-only in spark.ml -> OneVsRest wrap when the
-    * label has more than two classes (SURVEY E4).
+    * label has more than two classes (SURVEY E4). Every stage has a fixed
+    * uid (see [[features]]).
     */
   def pipeline(
       classifier: String,
       featureCols: Seq[String],
       labelCol: String,
       numClasses: Int): Pipeline = {
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("__features_raw")
-      .setHandleInvalid("skip")
-    val scaler = new StandardScaler()
-      .setInputCol("__features_raw").setOutputCol("__features")
-      .setWithMean(true).setWithStd(true)
+    def oneVsRest(c: Classifier[_, _, _]): PipelineStage =
+      if (numClasses > 2) new OneVsRest(s"graft_ovr_$classifier").setClassifier(c)
+        .setLabelCol(labelCol).setFeaturesCol("__features")
+      else c
     val clf: PipelineStage = classifier match {
       case "logistic" =>
-        new LogisticRegression().setLabelCol(labelCol).setFeaturesCol("__features")
+        new LogisticRegression("graft_logistic").setLabelCol(labelCol).setFeaturesCol("__features")
       case "gradient" =>
-        val gbt = new GBTClassifier().setLabelCol(labelCol).setFeaturesCol("__features")
-        if (numClasses > 2) new OneVsRest().setClassifier(gbt)
-          .setLabelCol(labelCol).setFeaturesCol("__features")
-        else gbt
+        oneVsRest(new GBTClassifier("graft_gradient").setLabelCol(labelCol).setFeaturesCol("__features"))
       case "svc" =>
-        val svc = new LinearSVC().setLabelCol(labelCol).setFeaturesCol("__features")
-        if (numClasses > 2) new OneVsRest().setClassifier(svc)
-          .setLabelCol(labelCol).setFeaturesCol("__features")
-        else svc
+        oneVsRest(new LinearSVC("graft_svc").setLabelCol(labelCol).setFeaturesCol("__features"))
       case "mlp" =>
         // layer sizes filled at fit time by the caller via numClasses and
         // feature count; sklearn default hidden size is 100
-        new MultilayerPerceptronClassifier()
+        new MultilayerPerceptronClassifier("graft_mlp")
           .setLabelCol(labelCol).setFeaturesCol("__features")
           .setLayers(Array(featureCols.length, 100, numClasses))
       case other => throw new IllegalArgumentException(s"Unknown classifier '$other'")
     }
-    new Pipeline().setStages(Array(assembler, scaler, clf))
+    new Pipeline("graft_pipeline").setStages(features(featureCols) :+ clf)
   }
 
   /** E2 + E5 + E9: k-fold CV; `method` = "biased" (train as-is) or "demv"
@@ -147,6 +155,16 @@ object CrossVal {
     * rethrows the first failing fold's own exception, unwrapped (e.g.
     * DEMV's empty-cell `IllegalStateException`). No fold thread outlives
     * the call.
+    *
+    * Compiled once: every fold, and every later call with the same
+    * arguments, generates the same Java source, so Spark's codegen cache
+    * serves it and a warm call compiles next to nothing (compiling was
+    * most of a warm call's fixed cost). The pipeline's stages have fixed
+    * uids, and the per-fold constants (the fold id in the fold filters,
+    * the DEMV seed in the sampler's salt) enter the plan as
+    * [[graft.functions.OpaqueLiteral]]s, which the generated code reads
+    * from its references instead of inlining. The sampler's `rand(seed)`
+    * still inlines its seed: one class per fold, which the cache holds.
     */
   def crossVal(
       spec: DatasetSpec,
@@ -175,8 +193,8 @@ object CrossVal {
       inParallel(k, math.min(k, sc.defaultParallelism)) { fold =>
         sc.setJobDescription(s"CrossVal fold $fold/$k")
         try {
-          val test = folded.where(col("__fold") === fold).drop("__fold")
-          val trainBase = folded.where(col("__fold") =!= fold).drop("__fold")
+          val test = folded.where(col("__fold") === OpaqueLiteral.lit(fold)).drop("__fold")
+          val trainBase = folded.where(col("__fold") =!= OpaqueLiteral.lit(fold)).drop("__fold")
           (0 until repetitions).map { rep =>
             // "eg"/"grid" are in-processing reductions (reference
             // `generatemetrics.py:101-131`): the fair model IS the method, so
@@ -223,7 +241,7 @@ object CrossVal {
                   // and release the checkpoint once the fold is scored.
                   val train = balanced.localCheckpoint()
                   val blocks = CacheTracker.checkpointRdd(train)
-                  try fitAndScore(train) finally blocks.unpersist()
+                  try fitAndScore(train) finally CacheTracker.release(blocks)
                 }
             }
           }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 
 /** Fair-classification reduction algorithms (SURVEY §2.12 E7): the
   * reference drives fairlearn's `ExponentiatedGradient` and `GridSearch`
@@ -37,15 +36,10 @@ object Reductions {
   }
 
   private def basePipeline(featureCols: Seq[String], labelCol: String) = {
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("__features_raw")
-      .setHandleInvalid("skip")
-    val scaler = new StandardScaler()
-      .setInputCol("__features_raw").setOutputCol("__features")
-      .setWithMean(true).setWithStd(true)
-    val lr = new LogisticRegression()
+    val lr = new LogisticRegression("graft_reductions_logistic")
       .setLabelCol(labelCol).setFeaturesCol("__features").setWeightCol("__w")
-    new org.apache.spark.ml.Pipeline().setStages(Array(assembler, scaler, lr))
+    new org.apache.spark.ml.Pipeline("graft_reductions_pipeline")
+      .setStages(CrossVal.features(featureCols) :+ lr)
   }
 
   /** Per-group 0-1 loss of `prediction` vs the label — one aggregation. */

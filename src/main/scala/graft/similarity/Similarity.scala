@@ -914,7 +914,7 @@ object Similarity {
               releaseCur()
               val blocks = graft.etl.CacheTracker.checkpointRdd(cp)
               cur = cp
-              releaseCur = () => blocks.unpersist(false)
+              releaseCur = () => graft.etl.CacheTracker.release(blocks)
             } else {
               val next = withNew.persist()
               toFree = releaseCur
