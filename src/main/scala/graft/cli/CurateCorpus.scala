@@ -63,12 +63,12 @@ object CurateCorpus {
 
   /** The pipeline body, separated for testing: returns per-stage row
     * counts and writes the sharded export under `outDir`. Each counted
-    * stage is `localCheckpoint`ed: the count action and every downstream
-    * stage read the materialized result instead of re-running the whole
-    * upstream chain (without it the chunk-dedup aggregate alone would
-    * execute four times — for its own count, the decontamination stages,
-    * and the export). The checkpoints are released when `run` returns,
-    * written or thrown.
+    * stage is checkpointed: the count action and every downstream stage
+    * read the materialized result instead of re-running the whole upstream
+    * chain (without it the chunk-dedup aggregate alone would execute four
+    * times — for its own count, the decontamination stages, and the
+    * export). The checkpoints are freed once the export is written; if a
+    * stage throws, the [[CacheTracker]] drain frees them.
     */
   def run(
       docs: DataFrame,
@@ -81,64 +81,56 @@ object CurateCorpus {
       maxPerSource: Int = 0,
       unicode: Boolean = false): Seq[(String, Long)] = {
     val input = docs.count()
-    // every stage checkpoint, released once the export is written
-    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def checkpoint(stage: DataFrame): DataFrame = {
-      val cp = stage.localCheckpoint()
-      checkpoints += CacheTracker.checkpointRdd(cp)
-      cp
-    }
-    try {
-      // 1. quality gate — cheapest filter first, map-side only.
-      // --unicode threads the multilingual tier through the gate's token
-      // count and the decontamination n-grams (stage 4): on CJK corpora
-      // the ascii conventions score every doc below the gate and see no
-      // n-grams at all. Span dedup (stage 3) stays \s-token-based — its
-      // CJK modality is a separate operator concern, documented.
-      val quality = checkpoint(docs.where(
-          TextFunctions.qualityScore(col("text"), unicode) >= minQuality))
-      val nQuality = quality.count()
+    // 1. quality gate — cheapest filter first, map-side only.
+    // --unicode threads the multilingual tier through the gate's token
+    // count and the decontamination n-grams (stage 4): on CJK corpora
+    // the ascii conventions score every doc below the gate and see no
+    // n-grams at all. Span dedup (stage 3) stays \s-token-based — its
+    // CJK modality is a separate operator concern, documented.
+    val quality = CacheTracker.checkpointTracked(docs.where(
+        TextFunctions.qualityScore(col("text"), unicode) >= minQuality))
+    val nQuality = quality.count()
 
-      // 2. exact dedup — one shuffle on uniform fingerprint keys
-      val exact = checkpoint(Dedup.exact(quality, "text", "doc_id", unicode))
-      val nExact = exact.count()
+    // 2. exact dedup — one shuffle on uniform fingerprint keys
+    val exact = CacheTracker.checkpointTracked(Dedup.exact(quality, "text", "doc_id", unicode))
+    val nExact = exact.count()
 
-      // 3. chunk-granular substring dedup; drop docs left with no content
-      val spans = ChunkDedup.dedupSpans(exact, "doc_id", "text", chunkWords)
-        .where(col("n_kept") > 0)
-        .select(col("doc_id"), col("clean_text"))
-      val chunked = checkpoint(exact.drop("text", "n_chars")
-        .join(spans, Seq("doc_id"))
-        .withColumnRenamed("clean_text", "text"))
-      val nChunked = chunked.count()
+    // 3. chunk-granular substring dedup; drop docs left with no content
+    val spans = ChunkDedup.dedupSpans(exact, "doc_id", "text", chunkWords)
+      .where(col("n_kept") > 0)
+      .select(col("doc_id"), col("clean_text"))
+    val chunked = CacheTracker.checkpointTracked(exact.drop("text", "n_chars")
+      .join(spans, Seq("doc_id"))
+      .withColumnRenamed("clean_text", "text"))
+    val nChunked = chunked.count()
 
-      // 4. decontamination against the held-out benchmark slice
-      val bench = chunked.where(pmod(col("doc_id"), lit(benchMod)) === benchMod - 1)
-      val train = chunked.where(pmod(col("doc_id"), lit(benchMod)) =!= benchMod - 1)
-      val clean = checkpoint(Decontaminate.removeContaminated(train, bench, "doc_id", "text",
-          ngram, unicode))
-      val nClean = clean.count()
+    // 4. decontamination against the held-out benchmark slice
+    val bench = chunked.where(pmod(col("doc_id"), lit(benchMod)) === benchMod - 1)
+    val train = chunked.where(pmod(col("doc_id"), lit(benchMod)) =!= benchMod - 1)
+    val clean = CacheTracker.checkpointTracked(Decontaminate.removeContaminated(
+      train, bench, "doc_id", "text", ngram, unicode))
+    val nClean = clean.count()
 
-      // 5. per-source cap (anti-domination); rank-filter plan gets the
-      // map-side WindowGroupLimit rewrite, so no source ever funnels whole
-      // through one task
-      val capped =
-        if (maxPerSource > 0)
-          checkpoint(Mixing.capPerGroup(clean, "source", "doc_id", maxPerSource))
-        else clean
-      val nCapped = if (maxPerSource > 0) capped.count() else nClean
+    // 5. per-source cap (anti-domination); rank-filter plan gets the
+    // map-side WindowGroupLimit rewrite, so no source ever funnels whole
+    // through one task
+    val capped =
+      if (maxPerSource > 0)
+        CacheTracker.checkpointTracked(Mixing.capPerGroup(clean, "source", "doc_id", maxPerSource))
+      else clean
+    val nCapped = if (maxPerSource > 0) capped.count() else nClean
 
-      // 6. deterministic split assignment (engine- and retry-stable)
-      val split = Mixing.assignSplit(capped, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), outCol = "split")
+    // 6. deterministic split assignment (engine- and retry-stable)
+    val split = Mixing.assignSplit(capped, "doc_id",
+      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), outCol = "split")
 
-      // 7. sharded export: one directory tree per (split, lang)
-      Export.writeSharded(split, outDir, Seq("split", "lang"),
-        Seq(col("doc_id")), maxPerFile)
+    // 7. sharded export: one directory tree per (split, lang)
+    Export.writeSharded(split, outDir, Seq("split", "lang"),
+      Seq(col("doc_id")), maxPerFile)
+    Seq(quality, exact, chunked, clean, capped).foreach(CacheTracker.free(_))
 
-      Seq("input" -> input, "quality" -> nQuality, "exact_dedup" -> nExact,
-        "span_dedup" -> nChunked, "decontaminated" -> nClean,
-        "per_source_cap" -> nCapped)
-    } finally checkpoints.foreach(CacheTracker.release(_))
+    Seq("input" -> input, "quality" -> nQuality, "exact_dedup" -> nExact,
+      "span_dedup" -> nChunked, "decontaminated" -> nClean,
+      "per_source_cap" -> nCapped)
   }
 }

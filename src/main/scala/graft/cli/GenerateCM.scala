@@ -44,7 +44,7 @@ object GenerateCM {
       debiaser = if (debiaser == "biased") None else Some(debiaser), k = folds)
     val cm = ConfusionMatrices.perGroup(oof, GroupCondition(spec.unprivGroup))
     val path = s"$outDir/cm_${dataset}_${debiaser}_$classifier.csv"
-    val ordered = cm.orderBy("group", "y_true", "y_pred").cache()
+    val ordered = graft.etl.CacheTracker.persistTracked(cm.orderBy("group", "y_true", "y_pred"))
     ordered.coalesce(1).write.mode("overwrite").option("header", true).csv(path)
     // the reference's PDF artifact (confusionmatrix.py:133-144): class
     // axis order via the numeric-aware label ordering (a string sort would

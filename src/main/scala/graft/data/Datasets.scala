@@ -45,6 +45,8 @@ object Datasets {
     * 0.1 s once the tower is behind a leaf). These are small, eagerly
     * re-read experiment datasets reused across folds and repetitions, so
     * one materialization on first action is also a reuse win, not a cost.
+    * The one checkpoint outside [[graft.etl.CacheTracker]]: it lives as
+    * long as the [[DatasetSpec]], which a caller may hold across drains.
     */
   private def seal(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
@@ -79,8 +81,8 @@ object Datasets {
 
   /** Resolve the unprivileged group the way every loader does: explicit
     * `sensitiveFeature` list wins (validated against `sfs`), else the
-    * `numberOfFeatures`/`singleFeature` ladder. `extraRecode` runs when the
-    * third feature (or an explicit request for it) needs binarization.
+    * `numberOfFeatures`/`singleFeature` ladder. Loaders call it before any
+    * I/O, so a bad request fails here, not on a missing file.
     */
   private def resolveGroup(
       sfs: Seq[(String, Any)],
@@ -121,6 +123,9 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("sex" -> 0, "race" -> 0, "Bachelors" -> 0),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     val columnNames = Seq("age", "workclass", "fnlwgt", "education", "education-num",
       "marital-status", "occupation", "relationship", "race", "sex", "capital-gain",
       "capital-loss", "hours-per-week", "native-country", "income")
@@ -160,9 +165,6 @@ object Datasets {
     df = Recode.ordinalEncode(df, Seq("sex", "race"))
     df = df.withColumnRenamed(" Bachelors", "Bachelors").withColumnRenamed("hour<10", "hours")
 
-    val group = resolveGroup(
-      Seq("sex" -> 0, "race" -> 0, "Bachelors" -> 0),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     // sex/race are ordinal-encoded doubles; align the group literal types
     val typedGroup = group.map {
       case (k @ ("sex" | "race"), v: Int) => k -> (v.toDouble: Any)
@@ -179,13 +181,13 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("wife_religion" -> 1, "wife_work" -> 1, "wife_edu" -> 0),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     val names = Seq("wife_age", "wife_edu", "hus_edu", "num_child", "wife_religion",
       "wife_work", "hus_occ", "living", "media", "contr_use")
     val schema = StructType(names.map(StructField(_, IntegerType)))
     var df = spark.read.schema(schema).csv(path)
-    val group = resolveGroup(
-      Seq("wife_religion" -> 1, "wife_work" -> 1, "wife_edu" -> 0),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "wife_edu")) df = binarizeCol(df, "wife_edu", 33)
     DatasetSpec(seal(df), "contr_use", 2, group.keys.toSeq, group, 3)
   }
@@ -198,10 +200,10 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
-    var df = dropIndexCol(spark.read.option("header", true).option("inferSchema", true).csv(path))
     val group = resolveGroup(
       Seq("sex" -> 0, "race" -> 0, "age" -> 0),
       numberOfFeatures, singleFeature, sensitiveFeature)
+    var df = dropIndexCol(spark.read.option("header", true).option("inferSchema", true).csv(path))
     if (needsThird(group, "age")) df = binarizeCol(df, "age", 50)
     DatasetSpec(seal(df), "two_year_recid", 1, group.keys.toSeq, group, 29)
   }
@@ -220,6 +222,9 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("black_people" -> 1, "hisp_people" -> 1, "MedRent" -> 1),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     var df = spark.read.option("header", true).option("inferSchema", true)
       .option("nullValue", "?").csv(path)
       .drop("state", "county", "community", "communityname", "fold", "OtherPerCap")
@@ -240,9 +245,6 @@ object Datasets {
       .withColumn("hisp_people", (col("racePctHisp") > -0.4).cast("int"))
       .drop("racepctblack", "racePctHisp")
 
-    var group = resolveGroup(
-      Seq("black_people" -> 1, "hisp_people" -> 1, "MedRent" -> 1),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "MedRent")) df = binarizeCol(df, "MedRent", 0.1)
     DatasetSpec(seal(df), "ViolentCrimesClass", 100.0, group.keys.toSeq, group, 41)
   }
@@ -255,6 +257,9 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("race" -> 1, "gender" -> 0, "age" -> 1),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     var df = spark.read.option("header", true).option("inferSchema", true).csv(path)
       .drop("yhat", "a")
       // gender is a z-scored constant pair +-0.48246 -> 1/0 (getdataset.py:228-229);
@@ -272,9 +277,6 @@ object Datasets {
     // drop remaining string columns (getdataset.py:237-238)
     val stringCols = df.schema.fields.collect { case StructField(n, StringType, _, _) => n }
     df = df.drop(stringCols.toSeq: _*)
-    var group = resolveGroup(
-      Seq("race" -> 1, "gender" -> 0, "age" -> 1),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "age")) df = binarizeCol(df, "age", 0)
     DatasetSpec(seal(df), "y", 0, group.keys.toSeq, group, 22)
   }
@@ -287,10 +289,10 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
-    var df = dropIndexCol(spark.read.option("header", true).option("inferSchema", true).csv(path))
-    var group = resolveGroup(
+    val group = resolveGroup(
       Seq("sex" -> 0, "age" -> 0, "investment_as_income_percentage" -> 0),
       numberOfFeatures, singleFeature, sensitiveFeature)
+    var df = dropIndexCol(spark.read.option("header", true).option("inferSchema", true).csv(path))
     if (needsThird(group, "investment_as_income_percentage"))
       df = binarizeCol(df, "investment_as_income_percentage", 3)
     DatasetSpec(seal(df), "credit", 1, group.keys.toSeq, group, 2)
@@ -304,6 +306,9 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("race" -> 1, "gender" -> 1, "age" -> 0),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     var df = dropIndexCol(spark.read.option("header", true).option("inferSchema", true).csv(path))
       .drop("ID", "decile1b", "decile3", "decile1", "cluster", "bar1", "bar2",
         "sex", "male", "race1", "race2", "other", "asian", "black", "hisp", "bar",
@@ -322,9 +327,6 @@ object Datasets {
     df = Recode.qcut(df, "gpa", 3, Seq("a", "b", "c"))
     df = df.drop("gpa").withColumnRenamed("gpa_bin", "gpa")
     df = Recode.labelEncode(df, "gpa")
-    var group = resolveGroup(
-      Seq("race" -> 1, "gender" -> 1, "age" -> 0),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "age")) df = binarizeCol(df, "age", 61)
     DatasetSpec(seal(df), "gpa", 2, group.keys.toSeq, group, 103)
   }
@@ -337,6 +339,9 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("Gender" -> 1, "Age" -> 1, "MTRANS" -> 1),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     var df = spark.read.option("header", true).option("inferSchema", true).csv(path)
       .drop("NObeyesdad", "weight_cat", "yhat", "a")
     for (c <- Seq("Gender", "family_history_with_overweight", "FAVC", "CAEC", "SMOKE", "SCC", "CALC", "MTRANS"))
@@ -348,9 +353,6 @@ object Datasets {
         .when(col("y") === "Obesity_Type_I", 3)
         .when(col("y") === "Insufficient_Weight", 4))
     df = binarizeCol(df, "Age", 22)
-    var group = resolveGroup(
-      Seq("Gender" -> 1, "Age" -> 1, "MTRANS" -> 1),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "MTRANS")) df = binarizeCol(df, "MTRANS", 3)
     DatasetSpec(seal(df), "y", 0, group.keys.toSeq, group, 10)
   }
@@ -368,6 +370,9 @@ object Datasets {
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None,
       seed: Long = 42L): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("age" -> 1, "sex" -> 0, "PPE" -> 0),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     var df = spark.read.option("header", true).option("inferSchema", true).csv(path)
       .drop("subject#", "a", "y", "yhat", "motor_UPDRS", "total_UPDRS", "test_time")
     df = binarizeCol(df, "age", 65)
@@ -385,9 +390,6 @@ object Datasets {
         when(col("age") === 1 && col("sex") === 1 && col("score_cut") === 1 && col("__rn") <= 200, 0)
           .otherwise(col("score_cut")))
       .drop("__rn")
-    var group = resolveGroup(
-      Seq("age" -> 1, "sex" -> 0, "PPE" -> 0),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "PPE")) df = binarizeCol(df, "PPE", 0.14)
     DatasetSpec(seal(df), "score_cut", 0, group.keys.toSeq, group, 34)
   }
@@ -401,6 +403,9 @@ object Datasets {
       numberOfFeatures: Int,
       singleFeature: Int = 1,
       sensitiveFeature: Option[Seq[String]] = None): DatasetSpec = {
+    val group = resolveGroup(
+      Seq("alcohol" -> 0, "type" -> 1, "density" -> 0),
+      numberOfFeatures, singleFeature, sensitiveFeature)
     def read(p: String) =
       spark.read.option("header", true).option("inferSchema", true).option("sep", ";").csv(p)
     var df = read(redPath).withColumn("type", lit(0))
@@ -408,9 +413,6 @@ object Datasets {
       .where(!col("quality").isin(3, 8, 9))
       // alcohol <= 10 -> 0; (> 10 and != 0) -> 1 (getdataset.py:501-502)
       .withColumn("alcohol", when(col("alcohol") <= 10, 0).otherwise(1))
-    var group = resolveGroup(
-      Seq("alcohol" -> 0, "type" -> 1, "density" -> 0),
-      numberOfFeatures, singleFeature, sensitiveFeature)
     if (needsThird(group, "density")) df = binarizeCol(df, "density", 1.1)
     DatasetSpec(seal(df), "quality", 6, group.keys.toSeq, group, 76)
   }

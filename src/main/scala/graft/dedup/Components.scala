@@ -103,7 +103,7 @@ object Components {
 
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .cache()
+      .transform(graft.etl.CacheTracker.persistTracked)
     try {
     var labels = vertices.select(col(idCol).as("id")).distinct()
       .withColumn("component", col("id"))
@@ -134,6 +134,8 @@ object Components {
       val next = contributions
         .groupBy(col("id")).agg(min(col("component")).as("component"))
         .transform(graft.etl.CacheTracker.checkpointTracked)
+      // the checkpoint is eager: nothing reads the superseded round again
+      graft.etl.CacheTracker.free(labels)
       val curSum = labelSum(next)
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
@@ -142,9 +144,9 @@ object Components {
     }
     require(converged, s"connected components did not converge in $maxIter rounds")
     labels
-    // unpersist on every exit path — a non-convergence throw must not
-    // leave the edge list pinned in the block manager
-    } finally edges.unpersist()
+    // free on every exit path — a non-convergence throw must not leave
+    // the edge list pinned in the block manager
+    } finally graft.etl.CacheTracker.free(edges)
   }
 
   /** Cluster summary: one row per component with its size and keeper

@@ -49,8 +49,8 @@ object ConfusionMatrices {
     }
     val featureCols = base.columns.filterNot(_ == spec.label).toSeq
     val allLabels = CrossVal.labelValues(base, spec.label)
-    val folded = CrossVal.withFolds(
-      CrossVal.indexLabel(base, spec.label, allLabels), k, seed).cache()
+    val folded = CacheTracker.persistTracked(CrossVal.withFolds(
+      CrossVal.indexLabel(base, spec.label, allLabels), k, seed))
     val oof =
       try {
         (0 until k).map { fold =>
@@ -72,7 +72,7 @@ object ConfusionMatrices {
           CrossVal.mapPredictionBack(pred, allLabels)
             .select((featureCols.map(col) :+ col(spec.label).as("y_true") :+ col("prediction")): _*)
         }.reduce(_ unionByName _)
-      } finally folded.unpersist()
+      } finally CacheTracker.free(folded)
     debiaser match {
       case Some("blackbox") =>
         PostProcess.blackbox(oof, spec.unprivGroup.toSeq, "prediction", seed)

@@ -176,7 +176,7 @@ object CrossVal {
       seed: Long = 2L): Seq[MetricRow] = {
     val labelCol = spec.label
     val featureCols = spec.df.columns.filterNot(_ == labelCol).toSeq
-    val folded = withFolds(spec.df, k, seed).cache()
+    val folded = CacheTracker.persistTracked(withFolds(spec.df, k, seed))
     val sc = spec.df.sparkSession.sparkContext
     try {
       // this job fills `folded`'s cache (and any lazy checkpoint of
@@ -239,15 +239,14 @@ object CrossVal {
                   // minutes of pure driver plan-transform CPU). The fit
                   // materializes the frame anyway — truncate the lineage first,
                   // and release the checkpoint once the fold is scored.
-                  val train = balanced.localCheckpoint()
-                  val blocks = CacheTracker.checkpointRdd(train)
-                  try fitAndScore(train) finally CacheTracker.release(blocks)
+                  val train = CacheTracker.checkpointTracked(balanced)
+                  try fitAndScore(train) finally CacheTracker.free(train)
                 }
             }
           }
         } finally sc.setJobDescription(null)
       }.flatten
-    } finally folded.unpersist()
+    } finally CacheTracker.free(folded)
   }
 
   /** `body(0) .. body(n - 1)` on `threads` daemon threads made for this

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.etl.CacheTracker
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`), Spark-first.
   *
@@ -270,7 +272,7 @@ object Similarity {
       .select(array_to_vector(
         slice(concat(col(vecCol).cast("array<double>"),
           array_repeat(lit(0.0), lit(dim))), 1, dim)).as("features"))
-      .cache()
+      .transform(CacheTracker.persistTracked)
     try {
       val m = feats.count()
       require(m > 0, "hash-filter sample selected no rows")
@@ -289,7 +291,7 @@ object Similarity {
         .setInitMode(if (k > 1024) "random" else "k-means||")
         .fit(feats)
       model.clusterCenters.flatMap(_.toArray).toSeq.padTo(nLists * dim, 0.0)
-    } finally feats.unpersist()
+    } finally CacheTracker.free(feats)
   }
 
   // ---- the driver-side training blocks shared with Pq and Opq ----
@@ -848,23 +850,18 @@ object Similarity {
           (0, s0.getLong(0), None))
         def distToLit(c: Array[Double]): Column =
           dist2(col("v"), typedLit(c.toSeq))
-        val first = base
-          .withColumn("d", distToLit(s0.getAs[scala.collection.Seq[Double]]("v").toArray))
-          .persist()
-        var cur = first
-        // frees `cur`'s blocks: a localCheckpoint keeps them on its
-        // LogicalRDD, so unpersisting the checkpointed frame frees nothing
-        var releaseCur: () => Unit = () => first.unpersist(false)
+        var cur = CacheTracker.persistTracked(base
+          .withColumn("d", distToLit(s0.getAs[scala.collection.Seq[Double]]("v").toArray)))
         // the previous batch's cache is freed only AFTER the next
-        // batch's fetch has materialized its child — unpersisting
+        // batch's fetch has materialized its child — freeing it
         // earlier would recompute the whole least(...) chain
-        var toFree: () => Unit = null
+        var toFree: DataFrame = null
         var batches = 0
         final class Cand(val id: Long, val vec: Array[Double], var d: Double)
         while (picked.length < k) {
           val top = cur.orderBy(col("d").desc, col("id").asc)
             .limit(batchFetch).collect()
-          if (toFree != null) { toFree(); toFree = null }
+          if (toFree != null) { CacheTracker.free(toFree); toFree = null }
           // a short fetch saw EVERY point: no unfetched candidate exists
           // and the whole remaining selection resolves on the driver
           val complete = top.length < batchFetch
@@ -910,20 +907,16 @@ object Similarity {
             if (batches % checkpointEvery == 0) {
               // bound the least(...) chain's plan depth: materialize and
               // cut lineage, then the parent cache is immediately free
-              val cp = withNew.localCheckpoint(true)
-              releaseCur()
-              val blocks = graft.etl.CacheTracker.checkpointRdd(cp)
+              val cp = CacheTracker.checkpointTracked(withNew)
+              CacheTracker.free(cur)
               cur = cp
-              releaseCur = () => graft.etl.CacheTracker.release(blocks)
             } else {
-              val next = withNew.persist()
-              toFree = releaseCur
-              cur = next
-              releaseCur = () => next.unpersist(false)
+              toFree = cur
+              cur = CacheTracker.persistTracked(withNew)
             }
           }
         }
-        releaseCur()
+        CacheTracker.free(cur)
         picked.toSeq.toDF("rank", "vec_id", "radius")
           .select(col("rank"), col("vec_id"),
             round(sqrt(col("radius")), 6).as("radius"))

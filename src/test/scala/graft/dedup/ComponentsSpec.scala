@@ -100,4 +100,25 @@ class ComponentsSpec extends SparkSpec {
       .collect().map(r => r.getLong(1)).toSet
     assert(labels === Set(0L))
   }
+
+  test("the distributed path leaves only its final label checkpoint behind") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val pairs = (0 until 20).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
+    val verts = (0 to 20).map(_.toLong).toDF("id")
+    def run(maxIter: Int) = Components.connectedComponents(pairs, "a", "b", verts, "id",
+      maxIter = maxIter, driverEdgeThreshold = 0)
+    // the path needs at least 3 rounds
+    intercept[IllegalArgumentException](run(2))
+    graft.etl.CacheTracker.unpersistCaches(blocking = true)
+    val baseline = persisted
+    val labels = run(25)
+    // the edges and every superseded round are freed; the returned labels
+    // stay until the drain
+    assert((persisted -- baseline).size === 1)
+    assert(labels.collect().map(_.getLong(1)).toSet === Set(0L))
+    graft.etl.CacheTracker.unpersistCaches(blocking = true)
+    assert((persisted -- baseline).isEmpty)
+  }
 }

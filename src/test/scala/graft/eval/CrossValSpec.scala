@@ -80,8 +80,9 @@ class CrossValSpec extends SparkSpec {
     try (0 until k).map { fold =>
       val test = folded.where(col("__fold") === fold).drop("__fold")
       val trainBase = folded.where(col("__fold") =!= fold).drop("__fold")
-      val train = new DEMV(spec.sensitiveVars, seed = seed + fold * 31, shuffleOutput = false)
-        .fitTransform(trainBase, labelCol).localCheckpoint()
+      val train = CacheTracker.checkpointTracked(
+        new DEMV(spec.sensitiveVars, seed = seed + fold * 31, shuffleOutput = false)
+          .fitTransform(trainBase, labelCol))
       try {
         val model = CrossVal.pipeline("logistic", featureCols, "__y", allLabels.length)
           .fit(CrossVal.indexLabel(train, labelCol, allLabels))
@@ -91,7 +92,7 @@ class CrossValSpec extends SparkSpec {
           GroupCondition(spec.unprivGroup), "prediction", labelCol, spec.positiveLabel)
         MetricRow(fold, 10000L, m.statisticalParity, m.equalizedOdds, m.zeroOneLossDiff,
           m.disparateImpact, m.accuracy)
-      } finally CacheTracker.checkpointRdd(train).unpersist()
+      } finally CacheTracker.free(train)
     } finally folded.unpersist()
   }
 
@@ -133,7 +134,8 @@ class CrossValSpec extends SparkSpec {
     // an empty DEMV cell
     val base = spec.df.drop("s2")
     val one = base.where(col("s1") === 1 && col("y") === 1).limit(1)
-    val df = base.where(!(col("s1") === 1 && col("y") === 1)).unionByName(one).localCheckpoint()
+    val df = CacheTracker.checkpointTracked(
+      base.where(!(col("s1") === 1 && col("y") === 1)).unionByName(one))
     val lone = DatasetSpec(df, "y", 1, Seq("s1"), Map("s1" -> 0), 10)
     try {
       val before = persistentRdds
@@ -143,7 +145,7 @@ class CrossValSpec extends SparkSpec {
       assert(e.getMessage.contains("(s1=1, y=1)"), e.getMessage)
       assert(foldThreadsAlive.isEmpty, s"alive: $foldThreadsAlive")
       assert(persistentRdds === before)
-    } finally CacheTracker.checkpointRdd(df).unpersist()
+    } finally CacheTracker.free(df)
   }
 
   test("pipeline stages have the same uids on every call") {
