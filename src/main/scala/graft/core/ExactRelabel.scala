@@ -39,8 +39,7 @@ object ExactRelabel {
     val spark = df.sparkSession
 
     val saltCol = "__graft_salt"
-    val salted = df.withColumn(
-      saltCol, pmod(xxhash64(df.columns.map(col) :+ lit(seed): _*), lit(saltBuckets)).cast("int"))
+    val salted = df.withColumn(saltCol, ExactSampler.salt(df.columns.toSeq, seed, saltBuckets))
 
     // tiny: per-(cell, salt) occupancy
     val occ: Map[(Seq[Any], Int), Long] = salted

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Columns.quoted
 import graft.functions.OpaqueLiteral
 
 /** Distributed exact-N per-group resampling.
@@ -130,62 +131,53 @@ object ExactSampler {
       .withColumn("__graft_copies", copies)
       .where(col("__graft_copies") > 0)
       .withColumn("__graft_dup", explode(expr("sequence(1, __graft_copies)")))
-      .select(originalCols.map(col): _*)
+      .select(originalCols.map(quoted): _*)
   }
 
   /** The sampling salt in [0, saltBuckets): `xxhash64(saltCols..., seed)`.
     * The seed enters as an [[graft.functions.OpaqueLiteral]], so that
     * samplers that differ only in their seed (the folds of a
     * cross-validation) share their generated code; the hash is the same
-    * as with `lit(seed)`.
+    * as with `lit(seed)`. Each name is one top-level column, taken at its
+    * word (a dot or a backtick in it is part of the name).
     */
-  private[core] def salt(saltCols: Seq[String], seed: Long, saltBuckets: Int): Column =
-    pmod(xxhash64(saltCols.map(col) :+ OpaqueLiteral.lit(seed): _*), lit(saltBuckets)).cast("int")
+  private[graft] def salt(saltCols: Seq[String], seed: Long, saltBuckets: Int): Column =
+    pmod(xxhash64(saltCols.map(quoted) :+ OpaqueLiteral.lit(seed): _*), lit(saltBuckets)).cast("int")
 
   /** Largest-remainder allocation of `total` over buckets proportionally to
     * `weights`, each share capped at its weight (downsample feasibility).
     * Requires total <= sum(weights).
     */
   private[core] def allocate(total: Long, weights: Array[Long]): Array[Long] = {
-    val sum = weights.sum
-    require(total <= sum, s"cannot keep $total rows out of $sum")
-    if (sum == 0) return weights.map(_ => 0L)
-    val shares = weights.map(w => w.toDouble * total / sum)
-    val floors = shares.map(math.floor(_).toLong).zip(weights).map { case (f, w) => math.min(f, w) }
-    var remaining = total - floors.sum
-    // hand out the remainder by largest fractional part, respecting caps
-    val order = shares.zipWithIndex
-      .map { case (s, i) => (s - math.floor(s), i) }
-      .sortBy(-_._1)
-      .map(_._2)
-    val out = floors.clone()
-    var idx = 0
-    while (remaining > 0) {
-      val i = order(idx % order.length)
-      if (out(i) < weights(i)) { out(i) += 1; remaining -= 1 }
-      idx += 1
-    }
-    out
+    require(total <= weights.sum, s"cannot keep $total rows out of ${weights.sum}")
+    largestRemainder(total, weights, capped = true)
   }
 
   /** Proportional allocation without caps (upsample extras can exceed bucket
     * occupancy — rows are replicated).
     */
-  private[core] def allocateUncapped(total: Long, weights: Array[Long]): Array[Long] = {
+  private[core] def allocateUncapped(total: Long, weights: Array[Long]): Array[Long] =
+    largestRemainder(total, weights, capped = false)
+
+  /** Floors of the proportional shares, then the remainder one unit at a
+    * time by largest fractional part (ties in bucket order), skipping a
+    * bucket at its weight when `capped`.
+    */
+  private def largestRemainder(total: Long, weights: Array[Long], capped: Boolean): Array[Long] = {
     val sum = weights.sum
     if (sum == 0) return weights.map(_ => 0L)
+    val cap: Int => Long = if (capped) weights(_) else _ => Long.MaxValue
     val shares = weights.map(w => w.toDouble * total / sum)
-    val floors = shares.map(math.floor(_).toLong)
-    var remaining = total - floors.sum
+    val out = shares.indices.map(i => math.min(math.floor(shares(i)).toLong, cap(i))).toArray
+    var remaining = total - out.sum
     val order = shares.zipWithIndex
       .map { case (s, i) => (s - math.floor(s), i) }
       .sortBy(-_._1)
       .map(_._2)
-    val out = floors.clone()
     var idx = 0
     while (remaining > 0) {
-      out(order(idx % order.length)) += 1
-      remaining -= 1
+      val i = order(idx % order.length)
+      if (out(i) < cap(i)) { out(i) += 1; remaining -= 1 }
       idx += 1
     }
     out

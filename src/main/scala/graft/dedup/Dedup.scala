@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Kernels, TextFunctions}
+import graft.functions.Columns.quoted
 
 /** Document deduplication at corpus scale.
   *
@@ -79,11 +80,6 @@ object Dedup {
         struct(isnull(quoted(idCol)), quoted(idCol))).as("__graft_row"))
       .select(cols.map(c => col("__graft_row").getField(c).as(c)): _*)
   }
-
-  /** A top-level column by its exact name: backtick-quoted, so a name
-    * holding a dot or a backtick is never parsed as a nested path.
-    */
-  private def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Duplicate-set sizes by fingerprint: (fingerprint, n_docs, min_id). */
   def exactGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =

@@ -81,7 +81,7 @@ object GroupPercentiles {
     // NOT persisted (measured, r11): caching this tag-union tripled the
     // q48 bench time — the three passes over it are cheap columnar
     // parquet scans, and the in-memory columnar build costs more than it
-    // saves (the cacheBeforeSort criterion needs an EXPENSIVE kernel).
+    // saves (a cache pays off only over an EXPENSIVE kernel).
     val tagged = tags.map { vc =>
       df.filter(col(vc).isNotNull)
         .select(lit(vc).as("__tag") +: groupCols.map(col) :+

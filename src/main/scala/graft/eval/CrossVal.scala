@@ -6,7 +6,7 @@ import org.apache.spark.ml.{Pipeline, PipelineStage}
 import org.apache.spark.ml.classification.{Classifier, GBTClassifier, LinearSVC, LogisticRegression, MultilayerPerceptronClassifier, OneVsRest}
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 
-import graft.core.DEMV
+import graft.core.{DEMV, ExactSampler}
 import graft.data.DatasetSpec
 import graft.etl.CacheTracker
 import graft.functions.OpaqueLiteral
@@ -50,11 +50,8 @@ object CrossVal {
     * independently and to prune the hash input on wide tables.
     */
   def withFolds(df: DataFrame, k: Int, seed: Long = 2L,
-      idCols: Option[Seq[String]] = None): DataFrame = {
-    val cols = idCols.getOrElse(df.columns.toSeq)
-    df.withColumn("__fold",
-      pmod(xxhash64(cols.map(col) :+ lit(seed): _*), lit(k)).cast("int"))
-  }
+      idCols: Option[Seq[String]] = None): DataFrame =
+    df.withColumn("__fold", ExactSampler.salt(idCols.getOrElse(df.columns.toSeq), seed, k))
 
   /** spark.ml classifiers require labels in [0, numClasses) — the reference
     * datasets use arbitrary label values (cmc {1,2,3}, wine {4..7}, crime

@@ -95,9 +95,8 @@ object DedupQueries {
     // production path; this is its cross-engine verification twin).
     // ASCII corpus assumption: the JVM kernel lowercases A-Z only.
     Query.fixed("q58_winnowing_portable", (s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
+      t(s, dir, "documents").repartitionByRange(col("doc_id")).select(col("doc_id"),
         explode(TextFunctions.winnowingFingerprintsPortable(col("text"), 8, 4)).as("fp"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"), col("fp")),
       """WITH norm AS (SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t FROM documents),
         |h AS (SELECT doc_id, pos,

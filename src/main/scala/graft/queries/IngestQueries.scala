@@ -47,10 +47,9 @@ object IngestQueries {
     // is a codegen'd regexp/replace chain over shared Java/RE2 syntax,
     // so the oracle replays extraction byte-for-byte.
     Query.fixed("q88_html_extract", (s, dir) =>
-      // rangeBeforeKernel (r12), NOT cacheBeforeSort: the output is the
-      // full cleaned text, so the cache held the whole corpus — the
-      // pre-kernel range exchange gives the same single kernel
-      // evaluation (boundary sample reads only the scan) with no cache
+      // range-partitioned before the kernel (Shared): one kernel
+      // evaluation and no cache, where a cache of the output would
+      // have held the whole cleaned corpus
       t(s, dir, "documents")
         .repartitionByRange(col("doc_id"))
         .select(col("doc_id"),
@@ -233,10 +232,8 @@ object IngestQueries {
     // codec breaks the hash); the quarantine/zip-bomb semantics are
     // spec-covered (GzipSpec) and fuzz-covered (fz_gzip).
     Query.fixed("q93_gzip_roundtrip", (s, dir) =>
-      // rangeBeforeKernel (r12), NOT cacheBeforeSort: text_rt IS the
-      // full round-tripped text, so the cache held the whole corpus —
-      // the pre-kernel range exchange keeps one codec evaluation
-      // (boundary sample reads only the scan) with no cache
+      // range-partitioned before the codec (Shared): one evaluation and
+      // no cache, where a cache of text_rt would have held the corpus
       t(s, dir, "documents")
         .repartitionByRange(col("doc_id"))
         .select(col("doc_id"),
@@ -280,13 +277,13 @@ object IngestQueries {
       // inlining the synthesized-URL derivation at every ladder
       // reference would blow the 64 KB codegen limit)
       t(s, dir, "documents")
+        .repartitionByRange(col("doc_id"))
         .select(col("doc_id"), graft.functions.Url.urlParts(url).as("u"))
         .select(col("doc_id"), col("u.scheme").as("scheme"),
           col("u.host").as("host"), col("u.port").as("port"),
           col("u.path").as("path"), col("u.query").as("query"),
           col("u.domain").as("domain"),
           graft.functions.Url.registrableDomainOfHost(col("u.host")).as("etld1"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       // URL parse replay: identical construction, identical regexes (the
@@ -677,7 +674,6 @@ object IngestQueries {
         .select(regexp_extract(col("target_uri"), "doc/([0-9]+)", 1)
             .cast("bigint").as("doc_id"),
           col("target_uri"), col("n_chars"), col("text"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       // q130: the WET roundtrip oracle is the pre-compression truth —

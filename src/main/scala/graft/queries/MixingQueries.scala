@@ -80,9 +80,12 @@ object MixingQueries {
     Query.fixed("q64_token_budget", (s, dir) => {
       // persisted: the running-total machinery (boundary sample, range
       // counts, final pass) plus the corpus-total aggregate evaluate this
-      // map-only scored frame FOUR times — the cacheBeforeSort rationale,
-      // one action wider (r11); cached rows are the three slim fields
-      val scored = cacheBeforeSort(t(s, dir, "documents").select(
+      // map-only frame four times, and its sort key is a kernel output.
+      // Measured (4 cores, 5 alternating pairs, BENCHNOTES "One pre-sort
+      // rule"): with no cache, 2.29 s against 1.43 s at sf0.1 (parent
+      // spread 0.06 s) and 6.19 s against 3.19 s at 10x sf0.1 (0.16 s).
+      // The cached rows are the three slim fields.
+      val scored = graft.etl.CacheTracker.persistTracked(t(s, dir, "documents").select(
         col("doc_id"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
         TextFunctions.qualityScore(col("text")).as("quality")))
@@ -153,10 +156,12 @@ object MixingQueries {
     // fraction-literal drift.
     Query.fixed("q67_token_mix", (s, dir) => {
       import s.implicits._
-      // persisted: grouped-running-total machinery + the corpus-total
-      // aggregate re-evaluate this map-only frame several times (the q64
-      // rationale, r11); cached rows are the four slim fields
-      val scored = cacheBeforeSort(t(s, dir, "documents").select(
+      // persisted: the grouped running total and the corpus-total
+      // aggregate evaluate this map-only frame several times (as in q64).
+      // Measured: with no cache, 1.47 s against 1.43 s at sf0.1 (parent
+      // spread 0.16 s, a tie) but 2.98 s against 2.27 s at 10x sf0.1
+      // (0.17 s). The cached rows are the four slim fields.
+      val scored = graft.etl.CacheTracker.persistTracked(t(s, dir, "documents").select(
         col("doc_id"), col("lang"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
         graft.etl.Stratified.md5Rank(col("doc_id")).as("__rk")))

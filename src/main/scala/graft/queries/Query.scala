@@ -90,7 +90,8 @@ object Scratch {
   def release(): Unit =
     Iterator.continually(handedOut.poll()).takeWhile(_ != null).foreach(delete)
 
-  private def delete(p: Path): Unit = {
+  /** Deletes `p` and everything under it. */
+  private[graft] def delete(p: Path): Unit = {
     val kids = p.toFile.listFiles()
     if (kids != null) kids.foreach(k => delete(k.toPath))
     p.toFile.delete(): Unit

@@ -4,32 +4,23 @@ package queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** What more than one query area uses: the table reader, the pre-sort
-  * cache, the captured-LM trainer and oracle SQL fragments (the
-  * differential fuzz harness replays some of the fragments too).
+/** What more than one query area uses: the table reader, the
+  * captured-LM trainer and oracle SQL fragments (the differential fuzz
+  * harness replays some of the fragments too).
+  *
+  * One pre-sort rule holds in every area: a query that globally sorts a
+  * map-only kernel chain on a leading input key (`doc_id`) calls
+  * `repartitionByRange` on that key after its input filters and before
+  * the first kernel. The range exchange then satisfies the sort, its
+  * boundary sample reads only the scan, and the kernel runs once, with
+  * no cache. A sort with no input key to range on was measured instead:
+  * q130 caches nothing, and q64 and q67 persist their scored frame (each
+  * comment gives its numbers).
   */
 object Shared {
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Persist a slim projected frame before a global ORDER BY when the
-    * projection is expensive and MAP-ONLY: the range sort's boundary
-    * sample is a full extra evaluation of the exchange child — with no
-    * upstream shuffle stage for AQE to reuse, such a query pays its
-    * whole kernel chain twice (measured on q101: two back-to-back
-    * ~1.4 s single-stage jobs, r11). Guide §5's exact caching
-    * criterion: reused (sample + exchange) AND expensive to recompute.
-    * The cached rows are exactly the query's OUTPUT columns — slim for
-    * most call sites, but text-bearing where text IS an output field
-    * (q93's round-tripped text, q130's WET text): those are the
-    * heaviest session-lifetime caches and the reason harnesses must
-    * drain [[graft.etl.CacheTracker]] between queries (Bench/Verify do).
-    * Queries with an aggregation/join exchange before the sort do NOT
-    * need this — the sample reads the materialized shuffle output.
-    */
-  private[graft] def cacheBeforeSort(df: DataFrame): DataFrame =
-    graft.etl.CacheTracker.persistTracked(df)
 
   /** DuckDB replay of [[graft.functions.TextFunctions.sentencesAbbrevGuard]]'s
     * mask fold — generated from the SAME

@@ -19,13 +19,12 @@ object TextQueries {
   val all: Seq[Query] = Seq(
     // q20: text statistics — token counts, punctuation ratio (SURVEY+: text)
     Query.fixed("q20_text_stats", (s, dir) =>
-      t(s, dir, "documents").select(
+      t(s, dir, "documents").repartitionByRange(col("doc_id")).select(
         col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("n_tokens"),
         length(col("text")).as("n_chars_computed"),
         round(TextFunctions.punctRatio(col("text")), 6).as("punct_ratio"),
         round(TextFunctions.stopwordRatio(col("text")), 6).as("stopword_ratio"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id")),
       """SELECT doc_id,
         |  len(list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '')) AS n_tokens,
@@ -139,11 +138,10 @@ object TextQueries {
     // quality signal corpus cleaning thresholds on (compiled kernel;
     // DuckDB replays the exact n-gram construction via list comprehension)
     Query.fixed("q40_repetition", (s, dir) =>
-      t(s, dir, "documents").select(
+      t(s, dir, "documents").repartitionByRange(col("doc_id")).select(
         col("doc_id"),
         round(TextFunctions.dupNgramFraction(col("text"), 3), 6).as("dup3"),
         round(TextFunctions.dupNgramFraction(col("text"), 5), 6).as("dup5"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id")),
       """WITH w AS (SELECT doc_id,
         |  list_filter(string_split_regex(text, '[\s\x0b]+'), w -> w <> '') AS w
@@ -207,12 +205,12 @@ object TextQueries {
       val textExpr = concat(col("text"), lit(" contact user"),
         col("doc_id").cast("string"), lit("@example.com node 10.0."),
         (col("doc_id") % 256).cast("string"), lit(".7 call 555-123-4567"))
-      val withText = t(s, dir, "documents").select(col("doc_id"), textExpr.as("txt"))
+      val withText = t(s, dir, "documents").repartitionByRange(col("doc_id"))
+        .select(col("doc_id"), textExpr.as("txt"))
       val (ne, ni, np) = TextFunctions.piiCounts(col("txt"))
       withText.select(col("doc_id"),
         ne.as("n_email"), ni.as("n_ip"), np.as("n_phone"),
         md5(TextFunctions.redactPii(col("txt"))).as("redacted_md5"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       """WITH t AS (SELECT doc_id,
@@ -527,6 +525,7 @@ object TextQueries {
       val sent = graft.functions.TextFunctions.sentences(decorated)
       t(s, dir, "documents")
         .where(col("text").isNotNull)
+        .repartitionByRange(col("doc_id"))
         .select(col("doc_id"), sent.as("s"))
         .select(col("doc_id"),
           size(col("s")).as("n_sentences"),
@@ -536,7 +535,6 @@ object TextQueries {
           // the q101 note (r11)
           round(length(concat_ws("", col("s"))).cast("double") /
             greatest(size(col("s")), lit(1)), 4).as("avg_chars"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       // sentence-segmentation replay: same decoration, same piece regex,
@@ -580,6 +578,7 @@ object TextQueries {
       val sent = graft.functions.TextFunctions.sentencesAbbrevGuard(decorated)
       t(s, dir, "documents")
         .where(col("text").isNotNull)
+        .repartitionByRange(col("doc_id"))
         .select(col("doc_id"), sent.as("s"))
         .select(col("doc_id"),
           size(col("s")).as("n_sentences"),
@@ -592,7 +591,6 @@ object TextQueries {
           // interpreted eval (guide §4.1: prefer built-ins; r11)
           round(length(concat_ws("", col("s"))).cast("double") /
             greatest(size(col("s")), lit(1)), 4).as("avg_chars"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       // abbreviation-guard replay: decoration, the generated mask fold
@@ -689,6 +687,7 @@ object TextQueries {
         when(id % 11 === 0, lit("This sentence mentions BadWord99 unfortunately today."))
           .otherwise(lit("This sentence mentions nothing objectionable at all.")))
       t(s, dir, "documents").where(col("text").isNotNull)
+        .repartitionByRange(col("doc_id"))
         .select(col("doc_id"),
           TextFunctions.c4Flags(page, minWords = 5, minKeptLines = 3,
             blocklist = Seq("badword99")).as("f"))
@@ -700,7 +699,6 @@ object TextQueries {
           col("f.has_brace").as("has_brace"),
           col("f.has_blocked").as("has_blocked"),
           col("f.pass").as("pass"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       // C4 replay: same decoration, line rules via list_filter over the
@@ -908,14 +906,13 @@ object TextQueries {
       val docs = t(s, dir, "documents").where(col("text").isNotNull)
       val model = graft.text.ByteBpe.train(docs, "text", numMerges = 32,
         specials = Seq("<|endoftext|>"))
-      docs.select(col("doc_id"),
+      docs.repartitionByRange(col("doc_id")).select(col("doc_id"),
           graft.text.ByteBpe.encodeIds(
             concat(col("text"), lit("<|endoftext|>")), model).as("ids"))
         .select(col("doc_id"), size(col("ids")).as("n_tokens"),
           try_element_at(col("ids"), lit(1)).as("id1"),
           try_element_at(col("ids"), lit(2)).as("id2"),
           try_element_at(col("ids"), lit(3)).as("id3"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     }),
 
@@ -934,13 +931,12 @@ object TextQueries {
       val docs = t(s, dir, "documents").where(col("text").isNotNull)
       val model = graft.text.SentencePiece.train(
         docs.where(col("doc_id") < 400), "text", vocabSize = 400)
-      docs.select(col("doc_id"),
+      docs.repartitionByRange(col("doc_id")).select(col("doc_id"),
           graft.text.SentencePiece.encodePieces(col("text"), model).as("p"))
         .select(col("doc_id"), size(col("p")).as("n_pieces"),
           try_element_at(col("p"), lit(1)).as("p1"),
           try_element_at(col("p"), lit(2)).as("p2"),
           try_element_at(col("p"), lit(3)).as("p3"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     }),
 
@@ -958,6 +954,7 @@ object TextQueries {
       val cjkFull = "^" + graft.functions.TextAlgo.CjkClass + "$"
       t(s, dir, "documents")
         .where(col("text").isNotNull)
+        .repartitionByRange(col("doc_id"))
         .select(col("doc_id"),
           graft.functions.TextFunctions.unicodeTokens(decorated).as("toks"))
         .select(col("doc_id"),
@@ -966,7 +963,6 @@ object TextQueries {
           size(filter(col("toks"), x => x.rlike("^[a-z0-9]+$"))).as("n_ascii"),
           concat_ws(" ", slice(col("toks"), 1, 10)).as("head_tokens"),
           element_at(col("toks"), -1).as("last_token"))
-        .transform(cacheBeforeSort)
         .orderBy(col("doc_id"))
     },
       ("WITH d AS (SELECT doc_id, " + MultilingualSnippetSql +

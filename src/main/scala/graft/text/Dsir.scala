@@ -112,8 +112,8 @@ object Dsir {
     // persisted (tracked — graft.etl.CacheTracker.unpersistCaches): the
     // final range sort's boundary sample would otherwise re-evaluate the
     // whole map-only scoring chain a second time (no upstream shuffle
-    // stage exists for AQE to reuse — the queries.Shared.cacheBeforeSort
-    // rationale, r11); the cached rows are the three slim output fields
+    // stage exists for AQE to reuse, r11); the cached rows are the three
+    // slim output fields
     graft.etl.CacheTracker.persistTracked(
       df.select(col(idCol).as("doc_id"), buckets.as("__bs"))
         .where(size(col("__bs")) > 0)

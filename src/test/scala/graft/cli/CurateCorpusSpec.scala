@@ -1,6 +1,5 @@
 package graft.cli
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -9,7 +8,7 @@ class CurateCorpusSpec extends SparkSpec {
 
   test("curation pipeline runs end-to-end on the sf0.001 fixture") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = Files.createTempDirectory("graft_curate").toString
+    val out = tempDir("graft_curate").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val stats = CurateCorpus.run(docs, out,
       minQuality = 0.5, chunkWords = 10, benchMod = 17, ngram = 5,
@@ -55,10 +54,10 @@ class CurateCorpusSpec extends SparkSpec {
       val t = if (i == 20L) text(16L) + "补" else text(i)
       (i, t, "src" + (i % 3), "zh", t.length.toLong)
     }.toDF("doc_id", "text", "source", "lang", "n_chars")
-    val outA = Files.createTempDirectory("graft_curate_a").toString
+    val outA = tempDir("graft_curate_a").toString
     val ascii = CurateCorpus.run(docs, outA, minQuality = 0.7).toMap
     assert(ascii("quality") === 0L, s"ascii tier should gate out every CJK doc: $ascii")
-    val outU = Files.createTempDirectory("graft_curate_u").toString
+    val outU = tempDir("graft_curate_u").toString
     val uni = CurateCorpus.run(docs, outU, minQuality = 0.7, unicode = true).toMap
     assert(uni("quality") === 50L, s"unicode tier should admit every CJK doc: $uni")
     assert(uni("decontaminated") === uni("span_dedup") - 3,
@@ -72,7 +71,7 @@ class CurateCorpusSpec extends SparkSpec {
 
   test("per-source cap stage bounds every source and stays monotone") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = Files.createTempDirectory("graft_curate_cap").toString
+    val out = tempDir("graft_curate_cap").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val stats = CurateCorpus.run(docs, out,
       minQuality = 0.5, maxPerFile = 1000, maxPerSource = 5).toMap

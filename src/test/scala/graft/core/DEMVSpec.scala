@@ -146,6 +146,17 @@ class DEMVSpec extends SparkSpec {
       narrow.getCellPlans.map(p => (p.combo, p.label, p.targetSize)))
   }
 
+  test("feature columns named x.1 and y`z balance and keep the schema") {
+    val odd = fixture.withColumnRenamed("f1", "x.1").withColumnRenamed("f2", "y`z")
+    val demv = new DEMV(Seq("s1", "s2"))
+    val out = demv.fitTransform(odd, "y")
+    assert(out.schema === odd.schema)
+    val actual = out.groupBy("s1", "s2", "y").count().collect()
+      .map(r => (Seq(r.getInt(0), r.getInt(1)), r.getInt(2)) -> r.getLong(3)).toMap
+    assert(actual === demv.getCellPlans.map(p =>
+      (p.combo, p.label.asInstanceOf[Int]) -> p.targetSize).toMap)
+  }
+
   test("missing column raises") {
     val e = intercept[IllegalArgumentException] {
       new DEMV(Seq("nope")).fitTransform(fixture, "y")

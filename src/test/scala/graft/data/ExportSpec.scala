@@ -1,6 +1,5 @@
 package graft.data
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -11,7 +10,7 @@ class ExportSpec extends SparkSpec {
     val rng = new scala.util.Random(3)
     val rows = (0 until 2000).map(i => (i.toLong, s"lang${rng.nextInt(3)}", s"doc $i"))
     val df = rows.toDF("doc_id", "lang", "text").repartition(13)
-    val out = Files.createTempDirectory("graft_export").toString
+    val out = tempDir("graft_export").toString
     Export.writeSharded(df, out, Seq("lang"), Seq(col("doc_id")), maxRecordsPerFile = 150)
 
     // hive-style partition directories
@@ -42,7 +41,7 @@ class ExportSpec extends SparkSpec {
   test("shardsPerPartition spreads a hot partition over parallel writers") {
     // one hot partition value holding everything
     val df = (0 until 1200).map(i => (i.toLong, "hot", s"doc $i")).toDF("doc_id", "lang", "text")
-    val out = Files.createTempDirectory("graft_export_hot").toString
+    val out = tempDir("graft_export_hot").toString
     // explicit numWriters: AQE would otherwise coalesce these tiny test
     // shuffle partitions back into one writer, which is exactly the
     // behavior numWriters exists to override

@@ -13,7 +13,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("roundtrip is lossless including newlines, escapes, and unicode") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_jsonl_rt").toString
+    val out = tempDir("graft_jsonl_rt").toString
     val rows = Seq(
       (0L, "plain ascii"),
       (1L, "line one\nline two\ttabbed"),
@@ -34,7 +34,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("partitioned write: directory layout, file bounds, in-file order") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_jsonl_part").toString
+    val out = tempDir("graft_jsonl_part").toString
     val df = (0 until 300).map(i => (i.toLong, if (i % 2 == 0) "a" else "b", s"doc $i"))
       .toDF("id", "grp", "body")
     JsonLines.writeSharded(df, out, partitionCols = Seq("grp"),
@@ -61,7 +61,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("unpartitioned export keeps writer parallelism (no single-task funnel)") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_jsonl_par").toString
+    val out = tempDir("graft_jsonl_par").toString
     val df = (0 until 90).map(i => (i.toLong, s"doc $i")).toDF("id", "body")
     JsonLines.writeSharded(df, out, partitionCols = Seq.empty,
       orderCols = Seq(col("id")), maxRecordsPerFile = 1000, numWriters = 3)
@@ -71,7 +71,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("malformed lines are quarantined in PERMISSIVE, fatal in strict") {
-    val out = Files.createTempDirectory("graft_jsonl_bad").toString
+    val out = tempDir("graft_jsonl_bad").toString
     Files.write(Paths.get(out, "data.jsonl"),
       java.util.Arrays.asList(
         """{"id": 1, "body": "ok"}""",

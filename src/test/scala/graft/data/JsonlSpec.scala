@@ -1,6 +1,5 @@
 package graft.data
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -19,7 +18,7 @@ class JsonlSpec extends SparkSpec {
 
   test("documents round-trip through JSONL with schema pinned") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = Files.createTempDirectory("graft_jsonl").toString + "/docs"
+    val out = tempDir("graft_jsonl").toString + "/docs"
     docs.write.json(out)
     // schema pinned on read: inference would widen/reorder and is a full
     // extra pass at scale
@@ -30,7 +29,7 @@ class JsonlSpec extends SparkSpec {
 
   test("gzipped JSONL round-trips identically") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = Files.createTempDirectory("graft_jsonl_gz").toString + "/docs"
+    val out = tempDir("graft_jsonl_gz").toString + "/docs"
     docs.write.option("compression", "gzip").json(out)
     val files = new java.io.File(out).listFiles().map(_.getName)
     assert(files.exists(_.endsWith(".json.gz")), s"expected .json.gz parts, got ${files.toSeq}")
@@ -39,7 +38,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("corrupt lines are quarantined, not silently dropped") {
-    val dir = Files.createTempDirectory("graft_jsonl_bad").toString
+    val dir = tempDir("graft_jsonl_bad").toString
     val f = new java.io.PrintWriter(s"$dir/part-0.json")
     f.println("""{"doc_id": 1, "text": "good line"}""")
     f.println("""{"doc_id": oops not json""")

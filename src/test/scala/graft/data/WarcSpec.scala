@@ -107,7 +107,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("writeShards: negative sort keys land in a non-negative shard file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wshard")
+    val dir = tempDir("graft_wshard")
     graft.data.WarcFiles.writeShards(
       Seq(-3L -> rec("response", "u-3", "a"), 2L -> rec("response", "u2", "b")),
       dir, nShards = 4)

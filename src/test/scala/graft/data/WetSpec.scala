@@ -7,7 +7,7 @@ class WetSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_wet_spec")
+    tempDir("graft_wet_spec")
 
   test("WET roundtrip through real gzipped shards: byte-exact, warcinfo skipped") {
     val docsIn = Seq(
@@ -46,9 +46,9 @@ class WetSpec extends SparkSpec {
 
   test("WET FILE stream: new shards arrive exactly-once across restart; stream == batch") {
     import org.apache.spark.sql.streaming.OutputMode
-    val src = java.nio.file.Files.createTempDirectory("graft_wet_src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_wet_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_wet_ckpt").toString
+    val src = tempDir("graft_wet_src").toString
+    val out = tempDir("graft_wet_out").toString
+    val ckpt = tempDir("graft_wet_ckpt").toString
 
     def writeShard(shard: Long, rows: Seq[(Long, String)]): Unit =
       WarcFiles.writeShards(

@@ -115,7 +115,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, String, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dedup_ckpt").toString
+    val ckpt = tempDir("graft_dedup_ckpt").toString
     val t0 = 1000000000L
     val stream = source.toDF().toDF("doc_id", "text", "ts_ms")
       .withColumn("ts", timestamp_millis(col("ts_ms")))
@@ -140,7 +140,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, String, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_snd_ckpt").toString
+    val ckpt = tempDir("graft_snd_ckpt").toString
     val t0 = 1000000000L
     val base = "the quick brown fox jumps over the lazy dog again and again in the morning light"
     val stream = source.toDF().toDF("doc_id", "text", "ts_ms")

@@ -6,10 +6,7 @@ import org.apache.spark.sql.functions._
 class DedupStateSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
-    d
-  }
+  private def tmpDir(name: String): String = tempDir(s"graft_$name").toString
 
   // crawl 1 (ids 0..9) and crawl 2 (ids 100..109) with duplicates both
   // WITHIN crawl 2 and ACROSS the crawls (same normalized content)

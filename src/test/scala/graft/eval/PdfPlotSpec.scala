@@ -17,7 +17,7 @@ class PdfPlotSpec extends SparkSpec {
 
   test("writes a structurally valid, deterministic PDF with the reference filename") {
     val cm = ConfusionMatrices.perGroup(predDF, GroupCondition(Map("sex" -> 0)))
-    val out = Files.createTempDirectory("graft_pdf").toString
+    val out = tempDir("graft_pdf").toString
     val path = PdfPlot.writeDoubleConfusionMatrixPdf(
       cm, classes = Seq(0, 1).map(_.toString), dataset = "cmc",
       debiaser = "demv", sensitiveNames = Seq("wife_religion", "wife_work"), outDir = out)
@@ -55,7 +55,7 @@ class PdfPlotSpec extends SparkSpec {
   test("no sensitive names -> reference's short filename; missing cells render as 0") {
     val cm = ConfusionMatrices.perGroup(
       predDF.where($"y_true" === 1), GroupCondition(Map("sex" -> 0)))
-    val out = Files.createTempDirectory("graft_pdf2").toString
+    val out = tempDir("graft_pdf2").toString
     val path = PdfPlot.writeDoubleConfusionMatrixPdf(
       cm, Seq("0", "1"), "adult", "biased", Nil, out)
     assert(path.getFileName.toString === "cm_biased_adult.pdf")

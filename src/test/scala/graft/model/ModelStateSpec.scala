@@ -13,9 +13,7 @@ class ModelStateSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_modelstate_$name").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath + "/artifact"
+    tempDir(s"graft_modelstate_$name").toString + "/artifact"
   }
 
   // ---- LM ----

@@ -307,7 +307,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, Seq[Double], Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd_ckpt").toString
+    val ckpt = tempDir("graft_scd_ckpt").toString
     val t0 = 1000000000L
     val vecA = Seq(1.0, 0.2, 0.1, 0.0)
     val vecFar = Seq(-1.0, 0.5, -0.3, 0.9)

@@ -23,8 +23,8 @@ class EventPipelineSpec extends SparkSpec {
 
   test("streaming end-to-end: file source -> watermarked agg -> memory sink") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_stream").toString
+    val ckpt = tempDir("graft_ckpt").toString
     Seq(
       ("2024-01-01 10:05:00", "click", 1L, 2.0, "{}"),
       ("2024-01-01 10:45:00", "click", 2L, 3.0, "{}"),
@@ -48,7 +48,7 @@ class EventPipelineSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, Long, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sess_ckpt").toString
+    val ckpt = tempDir("graft_sess_ckpt").toString
     val gap = 1000L
     // keep event times well above epoch 0: the initial watermark is 0 and
     // an event AT the watermark is dropped as late

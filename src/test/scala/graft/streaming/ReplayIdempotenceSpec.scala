@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.OutputMode
 class ReplayIdempotenceSpec extends SparkSpec {
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   /** Delete the checkpoint commit marker of the latest batch, simulating a
     * crash after the sink committed but before the checkpoint did.

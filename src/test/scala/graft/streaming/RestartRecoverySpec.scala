@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.OutputMode
 class RestartRecoverySpec extends SparkSpec {
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("sessionize recovers flatMapGroupsWithState state across a kill/restart") {
     import spark.implicits._

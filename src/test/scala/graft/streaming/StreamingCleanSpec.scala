@@ -17,7 +17,7 @@ class StreamingCleanSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_clean_ckpt").toString
+    val ckpt = tempDir("graft_clean_ckpt").toString
     val cleaned = source.toDS().toDF("doc_id", "text")
       .select(col("doc_id"),
         TextFunctions.redactPii(col("text")).as("clean"),

@@ -17,7 +17,7 @@ class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   /** One syntactically-valid WARC response record around an HTML page. */
   private def warcBlob(uri: String, html: String): String = {
