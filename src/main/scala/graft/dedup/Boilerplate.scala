@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.TextAlgo
 
 /** Per-domain boilerplate line removal — the CCNet/OSCAR-family trick:
   * a line occurring in a large fraction of a DOMAIN's pages is site
@@ -53,17 +54,11 @@ object Boilerplate {
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
-  /** md5-60 of a line (same derivation as the other portable kernels:
-    * first 60 bits of md5 == first 15 hex digits as a long).
+  /** md5-60 of a line: [[TextAlgo.md5Hash60]], the hash of the other
+    * portable kernels.
     */
-  private[graft] def lineFp60(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var h = 0L
-    var i = 0
-    while (i < 8) { h = (h << 8) | (d(i) & 0xFFL); i += 1 }
-    h >>> 4
-  }
+  private[graft] def lineFp60(s: String): Long =
+    TextAlgo.md5Hash60(java.security.MessageDigest.getInstance("MD5"), s)
 
   /** Binary search over the ArrayData in place — no materialization. */
   @inline private def containsFp(fps: ArrayData, n: Int, key: Long): Boolean = {
@@ -104,6 +99,7 @@ object Boilerplate {
       if (sortedIn) null
       else { val a = fps.toLongArray(); java.util.Arrays.sort(a); a }
     val lines = text.toString.split("\n", -1)
+    val md = java.security.MessageDigest.getInstance("MD5")
     val kept = new StringBuilder
     var removed = 0
     var first = true
@@ -111,8 +107,8 @@ object Boilerplate {
     while (i < lines.length) {
       val sl = stripAscii(lines(i))
       val drop = sl.nonEmpty && nFps > 0 &&
-        (if (sortedIn) containsFp(fps, nFps, lineFp60(sl))
-         else java.util.Arrays.binarySearch(fallback, lineFp60(sl)) >= 0)
+        (if (sortedIn) containsFp(fps, nFps, TextAlgo.md5Hash60(md, sl))
+         else java.util.Arrays.binarySearch(fallback, TextAlgo.md5Hash60(md, sl)) >= 0)
       if (drop) removed += 1
       else {
         if (!first) kept.append('\n')

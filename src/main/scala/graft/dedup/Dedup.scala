@@ -23,23 +23,59 @@ import graft.functions.Columns.quoted
   */
 object Dedup {
 
-  /** Drop rows whose `keys` tuple occurs more than `cap` times — the skew
-    * guard for LSH-style candidate joins. The hot-key set is a partial-
-    * aggregated groupBy (map-side combined, and tiny by construction: a key
-    * survives only if > cap rows share it — pathological boilerplate, rare
-    * by definition) broadcast LEFT ANTI against the stream. The round-2
-    * version counted via `count().over(Window.partitionBy(keys))`, which
-    * re-shuffled the FULL exploded (id, fingerprint) stream once more
-    * before the candidate join; the anti-join adds no shuffle of the
-    * stream, and the two self-join sides still collapse into one
-    * ReusedExchange downstream.
+  /** The candidate join of every LSH-style blocking here: `df` (an `id`
+    * column plus the blocking `keys`) joined with itself on equal `keys`
+    * and `l.id < r.id`, the two sides aliased `l` and `r`, after dropping
+    * the rows whose `keys` tuple occurs more than `cap` times.
+    *
+    * That skew guard's hot-key set is a partial-aggregated groupBy
+    * (map-side combined, and tiny by construction: a key survives only if
+    * > cap rows share it — pathological boilerplate, rare by definition)
+    * broadcast LEFT ANTI against the stream. The round-2 version counted
+    * via `count().over(Window.partitionBy(keys))`, which re-shuffled the
+    * FULL exploded (id, fingerprint) stream once more before the
+    * candidate join; the anti-join adds no shuffle of the stream, and the
+    * two self-join sides still collapse into one ReusedExchange
+    * downstream. The count projects the keys only, so a payload column
+    * (a signature) never enters the occupancy aggregate's shuffle.
     */
-  private def dropHotKeys(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+  private def guardedSelfJoin(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
     val hot = df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .where(col("__n") > cap)
       .select(keys.map(col): _*)
-    df.join(broadcast(hot), keys, "left_anti")
+    val trimmed = df.join(broadcast(hot), keys, "left_anti")
+    trimmed.alias("l").join(trimmed.alias("r"),
+      keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) && col("l.id") < col("r.id"))
+  }
+
+  /** The LSH band keys of a `sig` column of `bands * rowsPerBand`
+    * minhashes, to explode: one struct(band, bucket) per band, bucket =
+    * `xxhash64` of the band's slice of the signature and the band index.
+    * [[bandBucket]] is its JVM twin.
+    */
+  private[dedup] def bandKeys(bands: Int, rowsPerBand: Int): Column =
+    explode(transform(sequence(lit(0), lit(bands - 1)), b =>
+      struct(b.as("band"),
+        xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b).as("bucket"))))
+
+  /** JVM twin of the Catalyst band key [[bandKeys]],
+    * `xxhash64(slice(sig, band*rowsPerBand+1, rowsPerBand), band)`:
+    * XXH64-fold the band's signature rows from Catalyst's fixed seed 42,
+    * then fold the band index as an int — byte-identical to
+    * `XxHash64(Seq(array<bigint>, int))` interpretation/codegen, which
+    * hashes children left-to-right chaining the accumulator as the seed
+    * (array elements first, element-wise). Lockstep is spec-enforced
+    * (`DedupSpec` "bandBucket lockstep"); drift would silently drop
+    * canonical-band emissions.
+    */
+  private[dedup] def bandBucket(sig: Seq[Long], band: Int, rowsPerBand: Int): Long = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    var h = 42L
+    var i = band * rowsPerBand
+    val end = math.min(i + rowsPerBand, sig.length)
+    while (i < end) { h = XXH64.hashLong(sig(i), h); i += 1 }
+    XXH64.hashInt(band, h)
   }
 
   /** Exact dedup on a normalized content fingerprint; keeps the row with the
@@ -169,19 +205,9 @@ object Dedup {
     val sig = TextFunctions.minhashSignature(col(textCol), shingleSize, numHashes, seed)
     val withSig = df.select(col(idCol).as("id"), sig.as("sig"))
       .where(size(col("sig")) > 0)
-    // band key = hash of the band's slice of the signature + band index
-    val bandKeys = explode(
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"), xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b).as("bucket"))))
-    val buckets = withSig.select(col("id"), bandKeys.as("bk"))
+    val buckets = withSig.select(col("id"), bandKeys(bands, rowsPerBand).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.bucket"))
-    val trimmed = dropHotKeys(buckets, Seq("band", "bucket"), maxBucketSize)
-    val l = trimmed.alias("l")
-    val r = trimmed.alias("r")
-    l.join(r,
-        col("l.band") === col("r.band") &&
-          col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
+    guardedSelfJoin(buckets, Seq("band", "bucket"), maxBucketSize)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()
   }
@@ -253,28 +279,18 @@ object Dedup {
     val minMatches = math.ceil(floor * numHashes).toInt
     val withSig = df.select(col(idCol).as("id"), sig.as("sig"))
       .where(size(col("sig")) > 0)
-    val bandKeys = explode(
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"), xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b).as("bucket"))))
-    val buckets = withSig.select(col("id"), col("sig"), bandKeys.as("bk"))
+    val buckets = withSig.select(col("id"), col("sig"), bandKeys(bands, rowsPerBand).as("bk"))
       .select(col("id"), col("sig"), col("bk.band"), col("bk.bucket"))
-    // hot-key counting projects (band, bucket) only — the sig payload
-    // never enters the occupancy aggregate's shuffle
-    val trimmed = dropHotKeys(buckets, Seq("band", "bucket"), maxBucketSize)
-    val l = trimmed.alias("l")
-    val r = trimmed.alias("r")
-    val matches = {
-      Kernels.sigMatchCount(col("l.sig"), col("r.sig"))
-    }
     // checkpointed (tracked — see CacheTracker.unpersistCaches): the
-    // candidate-id prune reads the survivors twice
-    val cands = graft.etl.CacheTracker.checkpointTracked(l.join(r,
-        col("l.band") === col("r.band") &&
-          col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
-      .where(matches >= minMatches)
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct())
+    // candidate-id prune reads the survivors twice. Without it (Bench,
+    // best of 2, local[4] on 4 cores, 5 alternating pairs) q23 took
+    // 2.72 s against 2.47 s at sf0.1 (1/5 pairs faster) and 7.36 s
+    // against 6.64 s on a 10x ScaleUp of its documents (0/5); q59 tied
+    val cands = graft.etl.CacheTracker.checkpointTracked(
+      guardedSelfJoin(buckets, Seq("band", "bucket"), maxBucketSize)
+        .where(Kernels.sigMatchCount(col("l.sig"), col("r.sig")) >= minMatches)
+        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+        .distinct())
     val candIds = broadcast(
       cands.select(col("id_a").as("id"))
         .union(cands.select(col("id_b").as("id"))).distinct())
@@ -330,11 +346,8 @@ object Dedup {
       maxBucketSize: Int = 1000): DataFrame = {
     val fps = df.select(col(idCol).as("id"),
       explode(TextFunctions.winnowingFingerprints(col(textCol), shingleSize, window)).as("fp"))
-    val trimmed = dropHotKeys(fps, Seq("fp"), maxBucketSize)
-    val l = trimmed.alias("wl")
-    val r = trimmed.alias("wr")
-    l.join(r, col("wl.fp") === col("wr.fp") && col("wl.id") < col("wr.id"))
-      .groupBy(col("wl.id").as("id_a"), col("wr.id").as("id_b"))
+    guardedSelfJoin(fps, Seq("fp"), maxBucketSize)
+      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .agg(count(lit(1)).as("shared_fingerprints"))
       .where(col("shared_fingerprints") >= minShared)
   }
@@ -451,14 +464,9 @@ object Dedup {
       }
     // skew guard: templated corpora can put thousands of docs in one
     // block bucket -> quadratic pair blowup; cap like minhash LSH
-    val capped = dropHotKeys(keyed, Seq("blk", "key"), maxBucketSize)
-    val l = capped.alias("hl")
-    val r = capped.alias("hr")
-    l.join(r,
-        col("hl.blk") === col("hr.blk") && col("hl.key") === col("hr.key") &&
-          col("hl.id") < col("hr.id"))
-      .select(col("hl.id").as("id_a"), col("hr.id").as("id_b"),
-        bit_count(col("hl.sim").bitwiseXOR(col("hr.sim"))).as("hamming"))
+    guardedSelfJoin(keyed, Seq("blk", "key"), maxBucketSize)
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+        bit_count(col("l.sim").bitwiseXOR(col("r.sim"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
@@ -498,25 +506,6 @@ object Dedup {
     * execution the same call degrades to per-bucket within-batch pairing
     * (no state, no timeouts).
     */
-  /** JVM twin of [[streamingNearDupPairs]]'s Catalyst band key
-    * `xxhash64(slice(sig, band*rowsPerBand+1, rowsPerBand), band)`:
-    * XXH64-fold the band's signature rows from Catalyst's fixed seed 42,
-    * then fold the band index as an int — byte-identical to
-    * `XxHash64(Seq(array<bigint>, int))` interpretation/codegen, which
-    * hashes children left-to-right chaining the accumulator as the seed
-    * (array elements first, element-wise). Lockstep is spec-enforced
-    * (`DedupSpec` "bandBucket lockstep"); drift would silently drop
-    * canonical-band emissions.
-    */
-  private[dedup] def bandBucket(sig: Seq[Long], band: Int, rowsPerBand: Int): Long = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    var h = 42L
-    var i = band * rowsPerBand
-    val end = math.min(i + rowsPerBand, sig.length)
-    while (i < end) { h = XXH64.hashLong(sig(i), h); i += 1 }
-    XXH64.hashInt(band, h)
-  }
-
   def streamingNearDupPairs(
       df: DataFrame,
       textCol: String,
@@ -538,13 +527,9 @@ object Dedup {
       .select(col(idCol).cast("long").as("id"), sig.as("sig"), col(eventTimeCol).as("__et"))
       .where(size(col("sig")) > 0)
       .withWatermark("__et", s"$delayMs milliseconds")
-    val bandKeys = explode(
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"),
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b).as("bucket"))))
     val exploded = withSig
       .select(col("id"), col("sig"), unix_millis(col("__et")).as("ts_ms"),
-        bandKeys.as("bk"), col("__et"))
+        bandKeys(bands, rowsPerBand).as("bk"), col("__et"))
       .select(col("id"), col("sig"), col("ts_ms"),
         col("bk.band").as("band"), col("bk.bucket").as("bucket"), col("__et"))
       .as[(Long, Seq[Long], Long, Int, Long, java.sql.Timestamp)]
@@ -693,7 +678,10 @@ object Dedup {
       .where(col("__rk") <= blockCap).drop("__rk")
     // checkpointed (tracked — see CacheTracker.unpersistCaches): the
     // candidate-id prune below reads the candidate set twice (the
-    // blocking self-join is the expensive half)
+    // blocking self-join is the expensive half). Without it (Bench, best
+    // of 2, local[4] on 4 cores, 5 alternating pairs) q41 took 2.18 s
+    // against 1.89 s and q69 2.88 s against 2.60 s at sf0.1; q96 tied,
+    // and all three tied on a 10x ScaleUp of the documents
     val cand = graft.etl.CacheTracker.checkpointTracked(ex.alias("ja")
       .join(ex.alias("jb"),
         col("ja.__b8") === col("jb.__b8") &&

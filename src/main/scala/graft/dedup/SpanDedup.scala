@@ -96,10 +96,12 @@ object SpanDedup {
     // PERSIST the positional-gram stream: it feeds BOTH the document-
     // frequency agg and the dup-gram join below, and without the cache
     // each leg re-runs the full tokenize+hash scan (the portable md5
-    // tier pays an md5 per token position — measured as the two ~0.8 s
-    // twin map jobs in the r11 q84 profile). Slim (id, pos, 8-byte g)
-    // rows, MEMORY_AND_DISK via the shared tracker (guide §5: reused
-    // AND expensive to recompute).
+    // tier pays an md5 per token position). Without it (Bench, best of
+    // 2, local[4] on 4 cores, 5 alternating pairs) q84 took 3.39 s
+    // against 3.04 s and q85 3.25 s against 2.38 s at sf0.1, and 12.89 s
+    // against 9.07 s and 12.03 s against 9.42 s on a 10x ScaleUp of the
+    // documents (at most 1/5 pairs faster). Slim (id, pos, 8-byte g)
+    // rows, MEMORY_AND_DISK via the shared tracker.
     val pos = graft.etl.CacheTracker.persistTracked(
       positionalGramHashes(df, idCol, textCol, n, hash))
     // document frequency >= minDocs, no countDistinct: (g, id) -> g.

@@ -70,6 +70,37 @@ object TextAlgo {
     out
   }
 
+  /** md5-60 of a string: the first 60 bits of the md5 of its UTF-8
+    * bytes, i.e. its first 15 hex digits as a non-negative long — the
+    * portable hash every engine replays as
+    * `CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT)`. Resets `md`,
+    * so one digest serves a whole document.
+    */
+  private[graft] def md5Hash60(md: java.security.MessageDigest, s: String): Long = {
+    md.reset()
+    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var h = 0L
+    var b = 0
+    while (b < 8) { h = (h << 8) | (d(b) & 0xFFL); b += 1 }
+    h >>> 4
+  }
+
+  /** md5-60 hashes ([[md5Hash60]]) of every k-char shingle of the
+    * normalized text, in order — the portable twin of [[shingleHashes]]
+    * behind the portable winnowing, MinHash and set kernels. Empty when
+    * the normalized text is shorter than k.
+    */
+  def portableShingleHashes(text: String, k: Int): Array[Long] = {
+    val t = normalize(text)
+    val n = t.length - k + 1
+    if (n <= 0) return Array.emptyLongArray
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hs = new Array[Long](n)
+    var i = 0
+    while (i < n) { hs(i) = md5Hash60(md, t.substring(i, i + k)); i += 1 }
+    hs
+  }
+
   /** MinHash signature: slot j keeps the minimum over shingles of an
     * independent remix of the shingle hash (j- and seed-keyed). Values are
     * masked to 63 bits (non-negative). Empty array when no shingles.
@@ -100,8 +131,13 @@ object TextAlgo {
     * Jaccard by merge-intersection ([[jaccardSorted]]). 64-bit hashes make
     * collision error negligible (~n^2/2^64).
     */
-  def shingleHashSet(text: String, k: Int): Array[Long] = {
-    val hs = shingleHashes(text, k)
+  def shingleHashSet(text: String, k: Int): Array[Long] =
+    sortedDistinct(shingleHashes(text, k))
+
+  /** The distinct values of `hs`, ascending. Sorts `hs` in place and
+    * returns it when nothing repeats.
+    */
+  private def sortedDistinct(hs: Array[Long]): Array[Long] = {
     if (hs.length <= 1) return hs
     java.util.Arrays.sort(hs)
     var w = 1
@@ -151,61 +187,23 @@ object TextAlgo {
       }
       i += 1
     }
-    val arr = out.toArray
-    java.util.Arrays.sort(arr)
-    // dedupe after sort (non-adjacent repeats)
-    var wIdx = 1
-    i = 1
-    while (i < arr.length) {
-      if (arr(i) != arr(wIdx - 1)) { arr(wIdx) = arr(i); wIdx += 1 }
-      i += 1
-    }
-    if (wIdx == arr.length) arr else java.util.Arrays.copyOf(arr, wIdx)
+    sortedDistinct(out.toArray)
   }
 
-  /** Portable winnowing: identical selection, but shingle hashes are the
-    * first 60 bits of md5(shingle) — computable in any engine with md5 +
-    * hex arithmetic, so the whole fingerprint set is oracle-checkable
-    * (`CAST(concat('0x', substr(md5(sh), 1, 15)) AS BIGINT)` in DuckDB).
-    * ~10x the hashing cost of the rolling-hash [[winnowing]]; use that one
-    * in production, this one where cross-engine verification matters.
+  /** Portable winnowing: identical selection over the md5-60 shingle
+    * hashes of [[portableShingleHashes]] — computable in any engine with
+    * md5 + hex arithmetic, so the whole fingerprint set is
+    * oracle-checkable. ~10x the hashing cost of the rolling-hash
+    * [[winnowing]]; use that one in production, this one where
+    * cross-engine verification matters.
     */
-  def winnowingPortable(text: String, k: Int, w: Int): Array[Long] = {
-    val t = normalize(text)
-    val n = t.length - k + 1
-    if (n <= 0) return Array.emptyLongArray
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hs = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      md.reset()
-      val d = md.digest(t.substring(i, i + k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 15 hex digits = top 60 bits of the first 8 bytes, big-endian
-      var h = 0L
-      var b = 0
-      while (b < 8) { h = (h << 8) | (d(b) & 0xFFL); b += 1 }
-      hs(i) = h >>> 4
-      i += 1
-    }
-    winnowSelect(hs, w)
-  }
+  def winnowingPortable(text: String, k: Int, w: Int): Array[Long] =
+    winnowSelect(portableShingleHashes(text, k), w)
 
   def winnowingPortableData(s: UTF8String, k: Int, w: Int): ArrayData =
     new GenericArrayData(winnowingPortable(s.toString, k, w))
 
   private val MersennePrime31 = 2147483647L // 2^31 - 1
-
-  /** md5-derived 60-bit hash of one shingle (same derivation as
-    * [[winnowingPortable]]): first 15 hex digits as a non-negative long.
-    */
-  private def md5Shingle60(md: java.security.MessageDigest, sh: String): Long = {
-    md.reset()
-    val d = md.digest(sh.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var h = 0L
-    var b = 0
-    while (b < 8) { h = (h << 8) | (d(b) & 0xFFL); b += 1 }
-    h >>> 4
-  }
 
   /** Portable MinHash signature: per hash function i, the minimum over all
     * k-shingles of `(a_i * (md5_60(shingle) mod p) + b_i) mod p` with
@@ -217,16 +215,14 @@ object TextAlgo {
     * splitmix64 path, which remains the production kernel.
     */
   def minhashPortableSig(text: String, k: Int, numHashes: Int, seed: Long): Array[Long] = {
-    val t = normalize(text)
-    val n = t.length - k + 1
-    if (n <= 0) return Array.emptyLongArray
+    val hs = portableShingleHashes(text, k)
+    if (hs.isEmpty) return hs
     val p = MersennePrime31
     val (as, bs) = minhashPortableConsts(numHashes, seed)
     val mins = Array.fill(numHashes)(Long.MaxValue)
-    val md = java.security.MessageDigest.getInstance("MD5")
     var i = 0
-    while (i < n) {
-      val hp = md5Shingle60(md, t.substring(i, i + k)) % p
+    while (i < hs.length) {
+      val hp = hs(i) % p
       var j = 0
       while (j < numHashes) {
         val v = (as(j) * hp + bs(j)) % p
@@ -253,23 +249,8 @@ object TextAlgo {
     * [[shingleHashSet]] for exact-Jaccard verification that an oracle can
     * replay.
     */
-  def shingleHashSetPortable(text: String, k: Int): Array[Long] = {
-    val t = normalize(text)
-    val n = t.length - k + 1
-    if (n <= 0) return Array.emptyLongArray
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val set = new java.util.TreeSet[java.lang.Long]()
-    var i = 0
-    while (i < n) {
-      set.add(md5Shingle60(md, t.substring(i, i + k)))
-      i += 1
-    }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    out
-  }
+  def shingleHashSetPortable(text: String, k: Int): Array[Long] =
+    sortedDistinct(portableShingleHashes(text, k))
 
   def minhashPortableSigData(s: UTF8String, k: Int, numHashes: Int, seed: Long): ArrayData =
     new GenericArrayData(minhashPortableSig(s.toString, k, numHashes, seed))
@@ -299,7 +280,7 @@ object TextAlgo {
         sb.append(if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
         j += 1
       }
-      val h = md5Shingle60(md, sb.toString)
+      val h = md5Hash60(md, sb.toString)
       var b = 0
       while (b < 60) {
         if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
@@ -462,6 +443,22 @@ object TextAlgo {
       if (i > start) words += str.substring(start, i)
     }
     words
+  }
+
+  /** `toks(from until until)` joined with single spaces — the one window
+    * join of the n-gram, chunk, passage and DSIR bigram kernels.
+    * Unambiguous because no tokenizer here emits a token with a space.
+    */
+  private def joinTokens(
+      toks: scala.collection.mutable.ArrayBuffer[String], from: Int, until: Int): String = {
+    val sb = new java.lang.StringBuilder(16 * (until - from))
+    var j = from
+    while (j < until) {
+      if (j > from) sb.append(' ')
+      sb.append(toks(j))
+      j += 1
+    }
+    sb.toString
   }
 
   // --- Unicode tokenization tier -----------------------------------------
@@ -637,19 +634,8 @@ object TextAlgo {
     val total = words.length - n + 1
     if (total <= 0) return 0.0
     val seen = new java.util.HashSet[String](total * 2)
-    val sb = new java.lang.StringBuilder(64)
     var p = 0
-    while (p < total) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(p + j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      p += 1
-    }
+    while (p < total) { seen.add(joinTokens(words, p, p + n)); p += 1 }
     1.0 - seen.size.toDouble / total
   }
 
@@ -665,19 +651,8 @@ object TextAlgo {
     val total = words.length - n + 1
     if (total <= 0) return ArrayData.toArrayData(Array.empty[UTF8String])
     val seen = new java.util.LinkedHashSet[String](total * 2)
-    val sb = new java.lang.StringBuilder(64)
     var p = 0
-    while (p < total) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(p + j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      p += 1
-    }
+    while (p < total) { seen.add(joinTokens(words, p, p + n)); p += 1 }
     val out = new Array[AnyRef](seen.size)
     val it = seen.iterator()
     var k = 0
@@ -695,18 +670,10 @@ object TextAlgo {
     if (words.isEmpty) return ArrayData.toArrayData(Array.empty[UTF8String])
     val nChunks = (words.length + n - 1) / n
     val out = new Array[AnyRef](nChunks)
-    val sb = new java.lang.StringBuilder(64)
     var c = 0
     while (c < nChunks) {
-      sb.setLength(0)
-      var j = c * n
-      val end = math.min(j + n, words.length)
-      while (j < end) {
-        if (j > c * n) sb.append(' ')
-        sb.append(words(j))
-        j += 1
-      }
-      out(c) = UTF8String.fromString(sb.toString)
+      out(c) = UTF8String.fromString(
+        joinTokens(words, c * n, math.min(c * n + n, words.length)))
       c += 1
     }
     ArrayData.toArrayData(out)
@@ -804,14 +771,7 @@ object TextAlgo {
     val out = new Array[AnyRef](toks.length - n + 1)
     var j = 0
     while (j < out.length) {
-      val sb = new java.lang.StringBuilder
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(toks(j + k))
-        k += 1
-      }
-      out(j) = UTF8String.fromString(sb.toString)
+      out(j) = UTF8String.fromString(joinTokens(toks, j, j + n))
       j += 1
     }
     ArrayData.toArrayData(out)
@@ -842,15 +802,8 @@ object TextAlgo {
     while (i < nChunks) {
       val start = i * stride
       val end = math.min(start + window, n)
-      val sb = new java.lang.StringBuilder(16 * (end - start))
-      var j = start
-      while (j < end) {
-        if (j > start) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
       out(i) = org.apache.spark.sql.catalyst.InternalRow(
-        (end - start).toLong, UTF8String.fromString(sb.toString))
+        (end - start).toLong, UTF8String.fromString(joinTokens(toks, start, end)))
       i += 1
     }
     new GenericArrayData(out)
@@ -862,9 +815,8 @@ object TextAlgo {
     * interpreted `transform(concat(asciiTokens, bigram stream), md5…)`
     * higher-order chain (CodegenFallback) with a single compiled pass.
     * Element order (unigrams first, then bigrams) and the md5-60 value
-    * (first 15 hex digits = first-8-bytes >>> 4, [[md5Shingle60]]) are
-    * bit-identical to the Column chain it replaces, so q82's oracle is
-    * untouched.
+    * ([[md5Hash60]]) are bit-identical to the Column chain it replaces,
+    * so q82's oracle is untouched.
     */
   def dsirBuckets(s: UTF8String, numBuckets: Int): ArrayData = {
     val toks = asciiTokenize(s.toString)
@@ -872,10 +824,10 @@ object TextAlgo {
     val n = toks.length
     val out = new Array[Long](if (n < 2) n else 2 * n - 1)
     var j = 0
-    while (j < n) { out(j) = md5Shingle60(md, toks(j)) % numBuckets; j += 1 }
+    while (j < n) { out(j) = md5Hash60(md, toks(j)) % numBuckets; j += 1 }
     var k = 0
     while (k < n - 1) {
-      out(n + k) = md5Shingle60(md, toks(k) + " " + toks(k + 1)) % numBuckets
+      out(n + k) = md5Hash60(md, joinTokens(toks, k, k + 2)) % numBuckets
       k += 1
     }
     ArrayData.toArrayData(out)

@@ -275,9 +275,13 @@ object IngestQueries {
       // two projections: parts first, suffix ladder over the
       // materialized host attribute (registrableDomainOfHost scaladoc —
       // inlining the synthesized-URL derivation at every ladder
-      // reference would blow the 64 KB codegen limit)
+      // reference would blow the 64 KB codegen limit). The range
+      // exchange carries only doc_id, so AQE would coalesce a default
+      // range repartition into one partition and run the kernel in one
+      // task; an explicit count (the session's shuffle partitions) is
+      // not coalesced
       t(s, dir, "documents")
-        .repartitionByRange(col("doc_id"))
+        .repartitionByRange(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
         .select(col("doc_id"), graft.functions.Url.urlParts(url).as("u"))
         .select(col("doc_id"), col("u.scheme").as("scheme"),
           col("u.host").as("host"), col("u.port").as("port"),

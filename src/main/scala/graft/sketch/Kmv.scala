@@ -39,7 +39,7 @@ import org.apache.spark.sql.types._
   *    tracks per-key distinct estimates across micro-batches
   *    (spec-verified under update mode);
   *  - portable: over the md5-60 hash convention shared with the portable
-  *    dedup twins (TextAlgo.md5Shingle60 / `CAST(concat('0x',
+  *    dedup twins (TextAlgo.md5Hash60 / `CAST(concat('0x',
   *    substr(md5(x),1,15)) AS BIGINT)`), any engine replays the sketch
   *    bit-for-bit — the whole pipeline is DuckDB-oracle-checkable (q70).
   *

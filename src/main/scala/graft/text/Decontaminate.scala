@@ -116,8 +116,11 @@ object Decontaminate {
     val benchBands = banded(bench.select(col(idCol).as("__bench_id"), col(textCol)), "__bench_id")
     val benchSets = bench.select(col(idCol).as("__bench_id"), setOf(col(textCol)).as("__bsh"))
     // persisted (tracked — see graft.etl.CacheTracker.unpersistCaches):
-    // read twice, for the
-    // candidate-id prune and the verify join
+    // read twice, for the candidate-id prune and the verify join. The
+    // persist loses at sf0.1 and wins at 10x: without it (Bench, best of
+    // 2, local[4] on 4 cores, 5 alternating pairs) q106 took 2.25 s
+    // against 2.88 s at sf0.1 (5/5 pairs faster) and 7.68 s against
+    // 5.79 s on a 10x ScaleUp of the documents (0/5)
     val cands = graft.etl.CacheTracker.persistTracked(banded(train, idCol)
       .join(broadcast(benchBands), Seq("__band", "__key"))
       .select(col(idCol), col("__bench_id"))

@@ -25,12 +25,8 @@ class DedupSpec extends SparkSpec {
     val rowsPerBand = 4
     val bands = 8
     val sigs = Seq.fill(50)(Seq.fill(bands * rowsPerBand)(rnd.nextLong()))
-    val bandKeys = explode(
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"),
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b).as("bucket"))))
     val catalyst = sigs.toDF("sig")
-      .select(col("sig"), bandKeys.as("bk"))
+      .select(col("sig"), Dedup.bandKeys(bands, rowsPerBand).as("bk"))
       .select(col("sig"), col("bk.band"), col("bk.bucket"))
       .collect()
     assert(catalyst.length === 50 * bands)
